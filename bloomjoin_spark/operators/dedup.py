@@ -1086,7 +1086,14 @@ def simhash_dedup(
 # ---------------------------------------------------------------------------
 
 class IncrementalDedupReport:
-    """Counters from one :func:`incremental_dedup` call."""
+    """Counters from one :func:`incremental_dedup` call.
+
+    ``n_candidates`` counts the within-batch representatives sent to
+    the exact verify join: filter hits when a history filter is given
+    (``history_filter=`` or ``checkpoint_dir=``), every representative
+    in the in-call lane.  ``n_definite_new`` counts the representatives
+    that skipped the verify join as filter misses (always 0 in the
+    in-call lane)."""
 
     __slots__ = (
         "n_batch", "n_within_dups", "n_definite_new",
@@ -1101,13 +1108,14 @@ class IncrementalDedupReport:
         self.n_candidates = 0
         self.n_cross_dups = 0
         self.filter_provided = False
-        #: 'native' (all-JVM history filter + codegen probe) or 'bloom'
-        #: (mergeable BloomSketch + vectorized Arrow probe)
+        #: in-call lane: the verify join's engine ('native' all-JVM
+        #: filter + codegen probe, or 'bloom' sketch); filter lanes:
+        #: 'bloom' (broadcast BloomSketch + vectorized Arrow probe)
         self.engine = ""
-        #: why auto dispatch degraded to the sketch engine (None if the
-        #: native path was taken or never applicable) — the same
+        #: in-call lane: why the verify join's auto dispatch degraded to
+        #: the sketch engine (None if it ran native) — the same
         #: observable-degradation contract as BloomJoinReport /
-        #: DecontamReport (VERDICT r4 #3)
+        #: DecontamReport (VERDICT r4 #3); None in the filter lanes
         self.engine_fallback_reason = None
 
     def __repr__(self):
@@ -1154,9 +1162,12 @@ def build_history_filter(
         # jobs contract as bloom_join's sizing, bloom_join.py:276-292)
         fps = fps.persist()
         persisted = True
-        n_hint = fps.agg(
-            F.approx_count_distinct("__fp").alias("d")
+        d = fps.agg(
+            F.approx_count_distinct("__fp", 0.02).alias("d")
         ).first()["d"]
+        # 1.05 margin absorbs the ±2% rsd: an estimate that runs low
+        # would undersize m and raise the effective fpp
+        n_hint = int(d * 1.05)
     try:
         n = max(int(n_hint), 16)
         if int(n_hint) == 0:
@@ -1195,124 +1206,60 @@ def incremental_dedup(
     1. fingerprint both sides (md5 of lower/trim — same fingerprint as
        ``exact_dedup``, so the tiers compose);
     2. within-batch keep = min id per fingerprint (one shuffle of
-       16-byte keys at |batch| scale);
-    3. probe the batch's unique fingerprints against a Bloom filter of
-       history fingerprints (``history_filter`` if provided — built
-       once via :func:`build_history_filter`, possibly resumed from its
-       lineage checkpoint — else built here; the in-call build with no
-       ``checkpoint_dir`` uses the all-JVM native engine — treeAggregate
-       build + codegen probe, no Python stages — falling back to the
-       mergeable sketch engine on private-API drift, observable via
-       ``report.engine`` / ``engine_fallback_reason``).  Misses are
-       DEFINITELY new (Bloom has no false negatives) and skip the join
-       entirely;
-    4. only filter HITS (≈ true cross-dups + fpp·|batch| false
-       positives) take the exact anti join — issued through
-       ``bloom_join(how="anti", force_prefilter=True)``, whose planner
-       prefilters the HISTORY side by the candidates' filter
-       (``plans/planner.py`` anti → filter y), so history contributes
-       ~|candidates| rows to the verify shuffle instead of its full
-       size.
+       16-byte keys at |batch| scale), materialized once together with
+       the report counters;
+    3. with a history filter — ``history_filter`` built once via
+       :func:`build_history_filter`, or built here when
+       ``checkpoint_dir`` asks for a resumable build — probe the
+       representatives against it.  Misses are DEFINITELY new (Bloom
+       has no false negatives) and skip the join entirely; only hits
+       (≈ true cross-dups + fpp·|batch| false positives) are
+       candidates.  With neither, no history filter is built: every
+       representative is a candidate;
+    4. verify the candidates with an exact anti join issued through
+       ``bloom_join(how="anti", force_prefilter=True)``: it builds its
+       filter over the candidates (batch-sized) and prefilters the
+       HISTORY side with it (``plans/planner.py`` anti → filter y), so
+       history contributes ~|candidates ∩ history| rows to the verify
+       shuffle instead of its full size.  In the in-call lane that is
+       the call's only history scan.
 
-    Cost at scale: one history scan amortized over all future batches
-    (with ``checkpoint_dir``), plus per-ingest work proportional to
-    |batch| + |true duplicates|.
+    The in-call lane (no ``history_filter``, no ``checkpoint_dir``)
+    builds its filter over the batch, so it assumes |batch| ≤ |history|
+    — the ingest shape above.  For a batch much larger than its
+    history, build the filter over the history with
+    :func:`build_history_filter` and pass it as ``history_filter``.
+
+    Cost at scale: with a reused filter, one history scan amortized over
+    all future batches plus per-ingest work proportional to |batch| +
+    |true duplicates|; in the in-call lane, one filtered history scan
+    per ingest and no history-sized filter.
     """
-    from .bloom_join import (
-        _NATIVE_FILTER_CAP_BYTES,
-        _native_build_filter,
-        _native_might_contain,
-        bloom_join,
-    )
+    from .bloom_join import bloom_join
 
     fp_expr = content_fingerprint(text_col).alias("__fp")
-    bfp = batch.select(fp_expr, F.col(id_col))
-    # within-batch: representative (min id) per distinct fingerprint
-    reps = bfp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
+    # within-batch: representative (min id) per distinct fingerprint,
+    # carrying its group size so the batch row count needs no extra job
+    reps = (
+        batch.select(fp_expr, F.col(id_col))
+        .groupBy("__fp")
+        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("__n"))
+    )
 
     if history_filter is not None and report is not None:
         report.filter_provided = True
 
-    spark = batch.sparkSession
-
-    # ---- native lane: when the filter is built IN-CALL and no resumable
-    # checkpoint is requested, nothing needs the mergeable BloomSketch —
-    # build Spark's own JVM filter over the history fingerprints (one
-    # treeAggregate, no Python) and probe with the codegen
-    # BloomFilterMightContain expression, removing both Python stages
-    # (sketch build + ArrowEvalPython probe) from the ingest path.  The
-    # filter engines differ only in WHICH ~fpp false positives they
-    # admit; hits are exact-verified by the anti join below and misses
-    # are definite news under any correct Bloom filter, so the output is
-    # engine-invariant.  Same dispatch/cap/fallback contract as
-    # bloom_join engine='auto' and decontam (_gram_candidate_pred).
-    hit_pred = None
-    if history_filter is None and checkpoint_dir is None:
-        try:
-            hk = history.select(
-                F.xxhash64(content_fingerprint(text_col)).alias("__bj_key64")
-            ).persist()
-            try:
-                n_hist = int(
-                    hk.agg(F.approx_count_distinct("__bj_key64").alias("d"))
-                    .first()["d"]
-                )
-                if n_hist == 0:
-                    # empty history: everything is definitely new (the
-                    # empty-build short-circuit, O26) — no filter job
-                    hit_pred = F.lit(False)
-                else:
-                    # 1.05 margin absorbs approx_count_distinct's ±2% rsd
-                    blob = _native_build_filter(
-                        hk, max(16, int(n_hist * 1.05)), fpp
-                    )
-                    if len(blob) > _NATIVE_FILTER_CAP_BYTES:
-                        raise RuntimeError(
-                            f"serialized native filter is {len(blob) >> 20} "
-                            f"MiB, above the {_NATIVE_FILTER_CAP_BYTES >> 20} "
-                            "MiB plan-literal cap"
-                        )
-                    hit_pred = _native_might_contain(
-                        spark, blob, F.xxhash64(F.col("__fp"))
-                    )
-                    # force analysis NOW so probe-side private-API drift
-                    # falls back here instead of failing at action time
-                    reps.where(hit_pred).schema
-            finally:
-                hk.unpersist()
-        except Exception as ex:  # private-API drift / size gate → sketch
-            hit_pred = None
-            if report is not None:
-                report.engine_fallback_reason = repr(ex)
-            import importlib
-
-            _bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
-            if not _bj._native_fallback_warned:
-                _bj._native_fallback_warned = True
-                import warnings
-
-                warnings.warn(
-                    f"native bloom engine unavailable ({ex!r}); falling back "
-                    "to the sketch engine (warning once per session; every "
-                    "affected IncrementalDedupReport carries "
-                    "engine_fallback_reason)",
-                    stacklevel=2,
-                )
-    if hit_pred is not None:
-        if report is not None:
-            report.engine = "native"
-    else:
+    filtered = history_filter is not None or checkpoint_dir is not None
+    if filtered:
         if history_filter is None:
             history_filter = build_history_filter(
                 history, text_col, fpp=fpp, checkpoint_dir=checkpoint_dir
             )
-        if report is not None:
-            report.engine = "bloom"
         # seal() densifies BEFORE the broadcast: an unsealed (sparse)
         # filter ships as its pooled hash list and every Python worker
         # re-densifies it on first probe — seconds per worker at 1M
         # history keys
-        bc = spark.sparkContext.broadcast(history_filter.seal())
+        bc = batch.sparkSession.sparkContext.broadcast(history_filter.seal())
 
         @F.pandas_udf("boolean")
         def _probe(s: pd.Series) -> pd.Series:
@@ -1320,58 +1267,50 @@ def incremental_dedup(
 
             return pd.Series(bc.value.contains_hashes(hash_series(s)))
 
-        hit_pred = _probe.asNondeterministic()(F.col("__fp"))
+        reps = reps.withColumn("__hit", _probe.asNondeterministic()(F.col("__fp")))
+    else:
+        reps = reps.withColumn("__hit", F.lit(True))
 
-    probed = reps.withColumn("__hit", hit_pred)
     # one materialization (batch-sized: one 16-byte fingerprint + id per
-    # distinct batch doc) serves every consumer: the hit branch feeds
-    # the verify join AND its bloom_join sizing jobs, the miss branch
-    # feeds the union, and the report counters re-aggregate it — without
-    # it each of those jobs re-runs the groupBy + probe chain,
-    # multiplying the call's cost ~4× (measured: the reuse-filter cell
-    # re-evaluated the 0.9 s reps aggregate + probe three times; a
-    # checkpoint-free native-lane variant re-measured 5.5-6.9 s vs
-    # 3.8 s — the re-serialized filter literal and re-run probe scans
-    # cost more than the one checkpoint job they avoid)
-    probed = probed.localCheckpoint(eager=False)
-    # materialize the checkpoint NOW and keep the count: it upper-bounds
-    # |candidates|, so passing it as the verify join's n_hint skips
-    # bloom_join's own sizing pass (persist + count/approx-distinct job)
-    # — the filter is sized for all reps instead of just hits, a few ×
-    # larger m at the same fpp, which only loosens nothing (results and
-    # guarantees unchanged, one fewer job per ingest)
-    n_reps_total = probed.count()
-    # hit fingerprints might be in history (or are Bloom false
-    # positives): verify with an exact anti join whose history scan is
-    # itself bloom-prefiltered down to ~|candidates| rows
-    cand = probed.filter(F.col("__hit")).drop("__hit")
+    # distinct batch doc) serves every consumer: the candidate branch
+    # feeds the verify join, the miss branch feeds the union, and the
+    # counters below re-aggregate it — without it each of those jobs
+    # re-runs the groupBy + probe chain
+    probed = reps.localCheckpoint(eager=False)
+    # one job materializes the checkpoint AND yields every counter; the
+    # exact candidate count is the verify join's n_hint, which skips
+    # bloom_join's own sizing pass
+    agg = probed.agg(
+        F.count(F.lit(1)).alias("n_reps"),
+        F.sum("__n").alias("n_batch"),
+        F.count(F.when(F.col("__hit"), 1)).alias("n_cand"),
+    ).first()
+    n_cand = agg["n_cand"]
+    cand = probed.filter(F.col("__hit")).drop("__hit", "__n")
     hfp = history.select(fp_expr)
-    verified_new = bloom_join(
+    verified_new, jrep = bloom_join(
         cand, hfp, on="__fp", how="anti",
         fpp=fpp, force_prefilter=True, collect_metrics=False,
-        n_hint={"x": max(int(n_reps_total), 16)},
+        n_hint={"x": max(n_cand, 16)}, return_report=True,
     )
     if report is not None:
         verified_new = verified_new.localCheckpoint(eager=False)
-    new_ids = (
-        probed.filter(~F.col("__hit")).drop("__hit")
-        .unionByName(verified_new)
-        .select(id_col)
-    )
+    new_ids = verified_new.select(id_col)
+    if filtered:
+        new_ids = probed.filter(~F.col("__hit")).select(id_col).unionByName(new_ids)
     out = batch.join(new_ids, on=id_col, how="left_semi")
 
     if report is not None:
-        n_batch = batch.count()
-        agg = probed.agg(
-            F.count(F.lit(1)).alias("n_reps"),
-            F.sum(F.col("__hit").cast("long")).alias("n_cand"),
-        ).collect()[0]
+        if filtered:
+            report.engine = "bloom"
+        else:
+            report.engine = jrep.engine
+            report.engine_fallback_reason = jrep.engine_fallback_reason
+        n_batch = agg["n_batch"] or 0  # sum over an empty batch is null
         n_reps = agg["n_reps"]
-        n_cand = int(agg["n_cand"] or 0)
-        n_new_cand = verified_new.count()
         report.n_batch = n_batch
         report.n_within_dups = n_batch - n_reps
         report.n_candidates = n_cand
-        report.n_cross_dups = n_cand - n_new_cand
+        report.n_cross_dups = n_cand - verified_new.count()
         report.n_definite_new = n_reps - n_cand
     return out

@@ -197,10 +197,12 @@ def prepare_corpus(
       giving ``history`` enables the stage, which runs FIRST (content
       already in the corpus should not pay for any later stage).  Pass
       ``history_filter=`` (from ``build_history_filter``, possibly
-      checkpoint-resumed) to skip rebuilding the history Bloom filter
-      per ingest.  The stage also keeps only the min-id representative
-      per fingerprint within the batch, so ``dedup_exact`` afterwards
-      is a no-op on the same fingerprint domain.
+      checkpoint-resumed) so filter misses skip the exact history
+      verify; without one, every batch representative is verified
+      against history.  The stage also keeps only the min-id
+      representative per fingerprint within the batch, so
+      ``dedup_exact`` afterwards is a no-op on the same fingerprint
+      domain.
     - ``dedup_exact``: bool — exact content dedup (md5 of
       lower/trim, min-id representative).
     - ``minhash``: True or kwargs for ``minhash_dedup``

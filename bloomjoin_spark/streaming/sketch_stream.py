@@ -593,7 +593,9 @@ def incremental_dedup_stream(
     if history_filter is None:
         history_filter = build_history_filter(history, text_col, fpp=fpp)
 
-    bc = stream.sparkSession.sparkContext.broadcast(history_filter)
+    # seal() densifies before the broadcast so workers receive the m/8-byte
+    # bitmap, not a sparse hash list each one re-densifies on first probe
+    bc = stream.sparkSession.sparkContext.broadcast(history_filter.seal())
 
     @F.pandas_udf("boolean")
     def _probe(s: pd.Series) -> pd.Series:

@@ -398,15 +398,54 @@ def test_incremental_dedup_keeps_only_new(hist_and_batch):
     assert rep.n_within_dups == 1
     assert rep.n_cross_dups == n_cross
     assert rep.n_definite_new + rep.n_candidates == rep.n_batch - rep.n_within_dups
+    # in-call lane: no history filter, every representative is verified
+    assert rep.n_candidates == rep.n_batch - rep.n_within_dups
     assert not rep.filter_provided
 
 
+def test_incremental_dedup_job_count(spark, docs):
+    """An in-call ingest builds no history filter: the representatives'
+    checkpoint + counters, the verify join's candidate-side filter and
+    one action fit in 11 Spark jobs (20 with a history-side filter).
+    The batch avoids ``limit``, whose single-partition exchange would
+    add a job of its own."""
+    from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
+
+    history = docs.filter(F.col("doc_id") % 10 != 0)
+    fresh = docs.filter(F.col("doc_id") % 10 == 0)
+    cross = (
+        docs.filter(F.col("doc_id") % 10 == 1)
+        .withColumn("doc_id", F.col("doc_id") + 2_000_000)
+    )
+    within = (
+        fresh.filter(F.col("doc_id") % 100 == 0)
+        .withColumn("doc_id", F.col("doc_id") + 3_000_000)
+    )
+    batch = fresh.unionByName(cross).unionByName(within)
+    sc = spark.sparkContext
+    group = "incremental_dedup_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        rep = IncrementalDedupReport()
+        kept = incremental_dedup(batch, history, report=rep).select("doc_id").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 11, n_jobs
+    assert len(kept) == fresh.count()
+    assert rep.n_within_dups == within.count()
+    assert rep.n_candidates == rep.n_batch - rep.n_within_dups
+    assert rep.n_cross_dups == cross.count()
+
+
 def test_incremental_dedup_engine_dispatch(hist_and_batch):
-    """In-call build with no checkpoint_dir takes the all-JVM native
-    lane (r6 optimization: no Python sketch build, no ArrowEvalPython
-    probe); a provided filter keeps the mergeable sketch engine.  Both
-    lanes produce identical output (the verify join removes every
-    filter false positive; misses are exact under any Bloom filter)."""
+    """With no history filter the report carries the verify join's
+    engine, which is the all-JVM native one (no Python sketch build, no
+    ArrowEvalPython probe); a provided filter keeps the mergeable
+    sketch engine.  Both lanes produce identical output (the verify
+    join removes every filter false positive; misses are exact under
+    any Bloom filter)."""
     from bloomjoin_spark.operators import (
         IncrementalDedupReport,
         build_history_filter,
@@ -444,6 +483,25 @@ def test_incremental_dedup_with_prebuilt_checkpointed_filter(hist_and_batch, tmp
     out = incremental_dedup(batch, history, history_filter=bf, report=rep)
     assert out.count() == fresh.count()
     assert rep.filter_provided
+
+
+def test_build_history_filter_sizing_covers_exact_distinct(spark):
+    """The unhinted sizing pass must not undersize the filter: m is at
+    least the closed-form size for the EXACT distinct fingerprint count,
+    so an approx_count_distinct estimate that runs low cannot raise the
+    effective fpp.  On these 2000 fingerprints the default-rsd estimate
+    reads 6% low, which at these fpp targets halves m without the
+    rsd=0.02 estimate and its 1.05 margin."""
+    from bloomjoin_spark.operators import build_history_filter
+    from bloomjoin_spark.sketches.bloom import bloom_sizing
+
+    n = 2000
+    history = spark.range(n).select(
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text")
+    )
+    for fpp in (0.016, 3e-4):
+        bf = build_history_filter(history, fpp=fpp)
+        assert bf.m >= bloom_sizing(n, fpp)[0], fpp
 
 
 def test_incremental_dedup_empty_history(docs):

@@ -329,10 +329,15 @@ def test_incremental_dedup_stream_filter_only_and_validation(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     history = docs.filter(F.col("doc_id") % 10 != 0)
-    bf = build_history_filter(history)
+    # an n_hint well above the history size keeps the filter sparse
+    bf = build_history_filter(history, n_hint=10_000)
+    assert bf._sparse is not None
     out_df = incremental_dedup_stream(
         documents_stream(spark, sf_dir), history_filter=bf
     )
+    # sealed before the broadcast: workers get the bitmap, not a hash
+    # list each one re-densifies
+    assert bf._sparse is None
     name = run_stream_to_memory(
         out_df.select("doc_id"), "q_incr_dedup_stream_fo", output_mode="append"
     )
