@@ -10,9 +10,11 @@ pipeline, ``R/bloomjoin.R:62-124``):
 1. keys are canonicalised with explicit casts (Catalyst's own coercion
    rules) and hashed JVM-side with ``F.xxhash64`` — whole-stage codegen,
    nothing leaves the JVM on the hot path;
-2. the build side streams once through ``mapInPandas`` producing one
-   Bloom partial per partition (numpy, Arrow batches), partials
-   tree-merge (OR) — never a flat driver collect;
+2. a build side of at most ``_SMALL_BUILD_ROWS`` rows comes back as
+   hashes in ONE bounded collect: exact distinct count, filter built on
+   the driver (the reference's one pass, ``src/BloomFilter.cpp:102-118``).
+   A larger one streams once through ``mapInArrow`` producing one Bloom
+   partial per partition; partials tree-merge (OR);
 3. the merged filter is broadcast; the probe side is filtered by a
    vectorized pandas UDF BEFORE the join exchange, so dropped rows are
    never shuffled — that is the whole point at 100 TB: the shuffle is
@@ -31,6 +33,7 @@ parity: ``R/bloomjoin.R:266-322``).
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
@@ -65,6 +68,15 @@ _BROADCAST_BUDGET_BYTES = 512 << 20
 #: Above this cap the native path falls back to the two-phase sketch
 #: engine, whose filter is broadcast once per executor.
 _NATIVE_FILTER_CAP_BYTES = 16 << 20
+
+#: exact-sizing bound: an unhinted build side of at most this many rows
+#: comes back as 8-byte key hashes (≤ 32 MiB) in one bounded collect
+#: instead of a persist + approximate-distinct pass + distributed build
+_SMALL_BUILD_ROWS = 1 << 22
+
+#: that collect runs in ONE task: a build side whose plan size estimate
+#: is unknown or over one default input split keeps the parallel lane
+_SMALL_BUILD_SCAN_BYTES = 128 << 20
 
 #: once-per-session latch for the native→sketch fallback warning (the
 #: per-call record lives in BloomJoinReport.engine_fallback_reason)
@@ -264,32 +276,19 @@ def bloom_join(
         xt, yt = dict(x.dtypes), dict(y.dtypes)
         casts = [_common_cast(xt[xc], yt[yc]) for xc, yc in pairs]
 
-        # ---- sizing input: one aggregation over the BUILD side yields
-        # both the row count and an approximate distinct-key count
-        # (partial-aggregated JVM-side HLL — no wide shuffle). The filter
-        # is sized by DISTINCT keys, the reference's right-sizing step
-        # (src/BloomFilter.cpp:102-118 shrinks to exact unique count):
-        # sizing by raw rows over-allocates m and bloats the broadcast
-        # when the build side repeats keys. The hashed key projection is
-        # persisted so sizing and sketch build share ONE evaluation of
-        # the build side's lineage (8 bytes/row).
+        # ---- sizing by DISTINCT keys, the reference's right-sizing step
+        # (src/BloomFilter.cpp:102-118): sizing by raw rows bloats the
+        # broadcast when the build side repeats keys
         build_keyed = build_df.select(
             _key64(build_df, build_cols, casts).alias("__bj_key64")
         )
         n_build = n_hints.get(build_name)
-        persisted = False
+        small = None  # unique key hashes of a small unhinted build side
         if n_build is None:
-            build_keyed = build_keyed.persist()
-            persisted = True
-            stats = build_keyed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("__bj_key64", 0.02).alias("d"),
-            ).first()
-            report.n_build = int(stats["n"])
-            build_distinct = int(stats["d"])
+            build_keyed, report.n_build, build_distinct, n_build, small = _size_build(
+                build_df, build_keyed, exact=checkpoint_dir is None
+            )
             report.build_distinct_estimate = build_distinct
-            # 1.05 margin absorbs the ±2% rsd so the fpp target holds
-            n_build = max(16, int(build_distinct * 1.05))
         else:
             report.n_build = n_build
             build_distinct = n_build
@@ -302,7 +301,7 @@ def bloom_join(
         if force_prefilter:
             skip_reasons = []
         use_prefilter = not skip_reasons
-        if not use_prefilter and persisted:
+        if not use_prefilter and build_keyed.is_cached:
             build_keyed.unpersist()  # skip path must release the cache
 
     if not use_prefilter:
@@ -337,40 +336,24 @@ def bloom_join(
         probe_hash = _key64(probe_df, probe_cols, casts)
         probe_filter_col = None
         try:
+            # n is known: check the cap before building, and after
+            _check_native_cap(
+                _native_filter_bytes(n_build, fpp), _NATIVE_FILTER_CAP_BYTES, "predicted"
+            )
             blob = _native_build_filter(build_keyed, n_build, fpp)
-            if len(blob) > _NATIVE_FILTER_CAP_BYTES:
-                raise RuntimeError(
-                    f"serialized native filter is {len(blob) >> 20} MiB, above "
-                    f"the {_NATIVE_FILTER_CAP_BYTES >> 20} MiB plan-literal cap "
-                    "(it would be re-serialized into every task binary)"
-                )
+            _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
             # build the probe Column HERE so private-API drift on the
             # probe side also degrades to the sketch engine instead of
             # raising out of bloom_join (the build and probe lean on the
             # same classic-mode ExpressionUtils helpers)
             probe_filter_col = _native_might_contain(spark, blob, probe_hash)
         except Exception as ex:  # private-API drift / size gate → sketch engine
-            # observable degradation (VERDICT r4 #3): record the reason on
-            # the report ALWAYS, warn once per session — auto mode must
-            # not lose the 2.6× native path silently across a Spark
-            # upgrade, but per-call warnings would spam a pipeline that
-            # calls bloom_join thousands of times
-            report.engine_fallback_reason = repr(ex)
-            global _native_fallback_warned
-            if not _native_fallback_warned:
-                _native_fallback_warned = True
-                warnings.warn(
-                    f"native bloom engine unavailable ({ex!r}); falling back "
-                    "to the two-phase sketch engine (warning once per "
-                    "session; every affected BloomJoinReport carries "
-                    "engine_fallback_reason)",
-                    stacklevel=2,
-                )
+            _note_native_fallback(report, ex, forced=False)
             engine = "bloom"
         if probe_filter_col is not None:
             report.engine = "native"
             report.filter_bits = len(blob) * 8  # serialized size (≈ m)
-            if persisted:
+            if build_keyed.is_cached:
                 build_keyed.unpersist()
             if selectivity_check and not force_prefilter:
                 hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
@@ -410,16 +393,11 @@ def bloom_join(
                 )
             return (out, report) if return_report else out
 
-    # ---- distributed build: one pass, partial per partition, OR-merge
-    result = build_sketch(
-        build_keyed,
-        factory=lambda n=n_build, p=fpp: BloomSketch(n, p),
-        cols=["__bj_key64"],
-        prehashed=True,
-        fanin=fanin,
-        checkpoint_dir=checkpoint_dir,
+    # ---- sketch build: on the driver from a small build side's hashes,
+    # else one distributed pass, partial per partition, OR-merge
+    sketch, n_parts, rounds = _bloom_sketch(
+        build_keyed, small, n_build, fpp, fanin, checkpoint_dir
     )
-    sketch: BloomSketch = result.sketch
     # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap of
     # the reference becomes a practical broadcast warning — a filter
     # bigger than ~512 MB should be rethought (higher fpp, or let the
@@ -432,8 +410,8 @@ def bloom_join(
             "consider a larger fpp, an n_hint, or skipping the prefilter",
             stacklevel=2,
         )
-    report.build_partitions = result.n_partitions
-    report.merge_rounds = result.merge_rounds
+    report.build_partitions = n_parts
+    report.merge_rounds = rounds
     report.filter_bits = sketch.m
     report.filter_hashes = sketch.k
     fill = sketch.fill_ratio()
@@ -441,9 +419,6 @@ def bloom_join(
     # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
     if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
         report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
-
-    if persisted:
-        build_keyed.unpersist()
 
     probe_hash = _key64(probe_df, probe_cols, casts)
 
@@ -494,8 +469,8 @@ def bloom_join(
     if verbose:
         print(
             f"bloom_join: prefiltering {target} with m={sketch.m} bits k={sketch.k} "
-            f"fill={fill:.3f} (build n={n_build}, {result.n_partitions} partials, "
-            f"{result.merge_rounds} merge rounds)"
+            f"fill={fill:.3f} (build n={n_build}, {n_parts} partials, "
+            f"{rounds} merge rounds)"
         )
     return (out, report) if return_report else out
 
@@ -518,6 +493,96 @@ def _native_might_contain(spark, filter_bytes: bytes, value_col: Column) -> Colu
         lit_expr, val_expr
     )
     return PyColumn(eu.column(mc))
+
+
+def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
+    """Record on ``report`` why the native engine did not run; warn on
+    every ``forced`` call, else once per session (observable, VERDICT r4
+    #3, without spamming a pipeline that calls thousands of times)."""
+    global _native_fallback_warned
+    report.engine_fallback_reason = repr(ex)
+    if forced or not _native_fallback_warned:
+        _native_fallback_warned = _native_fallback_warned or not forced
+        warnings.warn(
+            f"native bloom engine unavailable ({ex!r}); falling back to the "
+            "sketch engine" + ("" if forced else " (warning once per session; "
+            "every affected report carries engine_fallback_reason)"),
+            stacklevel=3,
+        )
+
+
+def _native_filter_bytes(n: int, fpp: float) -> int:
+    """Serialized size of Spark's ``BloomFilter.create(n, fpp)``, known
+    before the build: ``optimalNumOfBits`` in 64-bit words plus Spark
+    4's 16-byte header."""
+    bits = int(-n * math.log(fpp) / (math.log(2) ** 2))
+    return 8 * -(-bits // 64) + 16
+
+
+def _check_native_cap(n_bytes: int, cap: int, what: str) -> None:
+    """Raise when a native filter is over the plan-literal ``cap``;
+    callers fall back to the sketch engine and record the reason."""
+    if n_bytes > cap:
+        raise RuntimeError(
+            f"{what} native filter is {n_bytes:,} bytes, above the {cap:,}-byte "
+            "plan-literal cap (it would be re-serialized into every task binary)"
+        )
+
+
+def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True):
+    """``(keyed, rows, distinct, n, hashes)`` of an unhinted build side,
+    ``n`` sizing the filter.  A small one (when ``exact``) comes back in
+    ONE early-terminating collect (one job, one JVM task) whose unique
+    ``hashes`` count its keys exactly.  Otherwise ``keyed`` is persisted
+    for the distributed build and one aggregate (partial-aggregated HLL,
+    no wide shuffle) estimates the distinct count."""
+    try:  # free plan stats, no job
+        st = build_df._jdf.queryExecution().optimizedPlan().stats()
+        rows = int(st.rowCount().get()) if st.rowCount().isDefined() else 0
+        small = exact and rows <= _SMALL_BUILD_ROWS and (
+            int(st.sizeInBytes()) <= _SMALL_BUILD_SCAN_BYTES
+        )
+    except Exception:
+        small = False
+    if small:
+        tbl = build_keyed.coalesce(1).limit(_SMALL_BUILD_ROWS + 1).toArrow()
+        if tbl.num_rows <= _SMALL_BUILD_ROWS:
+            uniq = np.unique(tbl.column(0).to_numpy().view(np.uint64))
+            return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
+    keyed = build_keyed.persist()
+    try:
+        stats = keyed.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("__bj_key64", 0.02).alias("d"),
+        ).first()
+    except BaseException:
+        keyed.unpersist()
+        raise
+    d = int(stats["d"])
+    # 1.05 margin absorbs the ±2% rsd so the fpp target holds
+    return keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
+
+
+def _bloom_sketch(
+    build_keyed: DataFrame, hashes: np.ndarray | None, n: int, fpp: float,
+    fanin: int = 64, checkpoint_dir: str | None = None,
+) -> tuple[BloomSketch, int, int]:
+    """The sketch engine's filter, partial count and merge rounds: built
+    on the driver from a small build side's ``hashes``, else one
+    partial per partition, tree OR-merged.  Releases the sizing persist."""
+    if hashes is not None:
+        sketch = BloomSketch(n, fpp)
+        sketch.update_hashes(hashes)
+        return sketch, 1, 0
+    try:
+        res = build_sketch(
+            build_keyed, factory=lambda: BloomSketch(n, fpp), cols=["__bj_key64"],
+            prehashed=True, fanin=fanin, checkpoint_dir=checkpoint_dir,
+        )
+    finally:
+        if build_keyed.is_cached:
+            build_keyed.unpersist()
+    return res.sketch, res.n_partitions, res.merge_rounds
 
 
 def _native_build_filter(build_keyed: DataFrame, n_build: int, fpp: float) -> bytes:

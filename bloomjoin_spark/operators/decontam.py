@@ -30,7 +30,6 @@ exactly what keeps that shuffle contamination-sized.
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -42,8 +41,11 @@ from ..aggregate import build_sketch
 from ..sketches.bloom import BloomSketch
 from .bloom_join import (
     _NATIVE_FILTER_CAP_BYTES,
+    _check_native_cap,
     _native_build_filter,
+    _native_filter_bytes,
     _native_might_contain,
+    _note_native_fallback,
 )
 from .text import words_col  # canonical tokenization (re-exported)
 
@@ -206,17 +208,16 @@ def _gram_candidate_pred(
     cand_pred: Column | None = None
     if engine in ("auto", "native"):
         try:
+            # same plan-literal cap as bloom_join, checked on the
+            # predicted size BEFORE the build: a huge eval suite belongs
+            # on the sketch engine (broadcast once)
+            _check_native_cap(
+                _native_filter_bytes(n_bench, fpp), _NATIVE_FILTER_CAP_BYTES, "predicted"
+            )
             blob = _native_build_filter(
                 keyed.select(F.col(_H).alias("__bj_key64")), n_bench, fpp
             )
-            if len(blob) > _NATIVE_FILTER_CAP_BYTES:
-                # same plan-literal cap as bloom_join: the blob is
-                # re-serialized into every task binary; a huge eval
-                # suite belongs on the sketch engine (broadcast once)
-                raise RuntimeError(
-                    f"serialized native filter is {len(blob) >> 20} MiB, above "
-                    f"the {_NATIVE_FILTER_CAP_BYTES >> 20} MiB plan-literal cap"
-                )
+            _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
             cand_pred = F.exists(
                 doc_hashes, lambda h: _native_might_contain(spark, blob, h)
             )
@@ -227,31 +228,7 @@ def _gram_candidate_pred(
             report.filter_bits = len(blob) * 8
         except Exception as ex:  # private-API drift / size gate → sketch engine
             cand_pred = None
-            report.engine_fallback_reason = repr(ex)
-            if engine == "native":
-                warnings.warn(
-                    f"native bloom engine unavailable ({ex!r}); falling back "
-                    "to the sketch engine",
-                    stacklevel=2,
-                )
-            else:
-                # importlib, not `from . import bloom_join`: the package
-                # __init__ re-exports the bloom_join FUNCTION, shadowing
-                # the submodule attribute
-                import importlib
-
-                _bj = importlib.import_module(
-                    "bloomjoin_spark.operators.bloom_join"
-                )
-                if not _bj._native_fallback_warned:
-                    _bj._native_fallback_warned = True
-                    warnings.warn(
-                        f"native bloom engine unavailable ({ex!r}); falling "
-                        "back to the sketch engine (warning once per session; "
-                        "every affected DecontamReport/BloomJoinReport "
-                        "carries engine_fallback_reason)",
-                        stacklevel=2,
-                    )
+            _note_native_fallback(report, ex, forced=engine == "native")
             engine = "bloom"
     if cand_pred is None:
         res = build_sketch(

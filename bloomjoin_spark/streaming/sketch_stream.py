@@ -163,15 +163,15 @@ def bloom_join_stream(
     genuinely static dimensions, or rebuild (re-call) on static-side
     updates; exact-equality holds for the snapshot the filter was built
     from."""
-    from ..aggregate import build_sketch
     from ..operators.bloom_join import (
+        _bloom_sketch,
         _common_cast,
         _key64,
         _make_probe_udf,
+        _size_build,
         _standard_join,
     )
     from ..plans.planner import normalize_how, resolve_join_columns
-    from ..sketches.bloom import BloomSketch
 
     how = normalize_how(how)
     if how not in ("inner", "semi"):
@@ -185,23 +185,11 @@ def bloom_join_stream(
     build_keyed = static.select(
         _key64(static, [p[1] for p in pairs], casts).alias("__bj_key64")
     )
+    small = None  # a small static side is sized exactly, built on the driver
     if n_hint is None:
-        n_hint = max(
-            16,
-            int(
-                build_keyed.agg(
-                    F.approx_count_distinct("__bj_key64", 0.02)
-                ).first()[0]
-                * 1.05
-            ),
-        )
-    result = build_sketch(
-        build_keyed,
-        factory=lambda n=n_hint, p=fpp: BloomSketch(n, p),
-        cols=["__bj_key64"],
-        prehashed=True,
-    )
-    bc = stream.sparkSession.sparkContext.broadcast(result.sketch.seal())
+        build_keyed, _, _, n_hint, small = _size_build(static, build_keyed)
+    sketch = _bloom_sketch(build_keyed, small, n_hint, fpp)[0]
+    bc = stream.sparkSession.sparkContext.broadcast(sketch.seal())
     probe_udf = _make_probe_udf(bc)
     filtered = stream.filter(
         probe_udf(_key64(stream, [p[0] for p in pairs], casts))

@@ -628,3 +628,126 @@ def test_native_engine_rejects_checkpoint(spark):
     y = spark.range(0, 10)
     with pytest.raises(ValueError, match="checkpoint_dir"):
         bloom_join(x, y, on="id", engine="native", checkpoint_dir="/tmp/nope")
+
+
+def _bj_module():
+    # importlib, not `from bloomjoin_spark.operators import bloom_join`:
+    # the package re-exports the bloom_join FUNCTION under that name
+    import importlib
+
+    return importlib.import_module("bloomjoin_spark.operators.bloom_join")
+
+
+def test_small_build_side_sizes_in_one_job(spark):
+    """An unhinted sketch-engine call over a small build side runs ONE
+    Spark job before it returns: the bounded collect both sizes the
+    filter exactly and feeds its driver-side build (no cache job, no
+    approximate-distinct pass, no per-partition Python build stage)."""
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    sc = spark.sparkContext
+    group = "small_build_side_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got, rep = bloom_join(
+            x, y, on="id", engine="bloom", force_prefilter=True,
+            return_report=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert rep.engine == "bloom" and rep.used_prefilter
+    assert (rep.build_partitions, rep.merge_rounds) == (1, 0)
+    assert rep.n_build == rep.build_distinct_estimate == 800
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+@pytest.mark.parametrize("stats_known", [True, False])
+def test_large_build_side_keeps_distributed_lane(spark, monkeypatch, stats_known):
+    """Above ``_SMALL_BUILD_ROWS`` the distributed lane runs: skipped for
+    free when plan stats know the row count, after the bounded collect
+    overflows when they do not.  Output stays the plain join."""
+    bj = _bj_module()
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 100)
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800, 1, 3)  # a bare Range knows its row count
+    if not stats_known:
+        y = y.filter(F.col("id") % 2 == 0)
+    got, rep = bloom_join(
+        x, y, on="id", engine="bloom", force_prefilter=True, return_report=True
+    )
+    assert rep.build_partitions == y.rdd.getNumPartitions() == 3
+    assert rep.n_build == y.count()
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+@pytest.mark.parametrize("n_keys", [100, 30_000])
+def test_small_build_side_distinct_count_is_exact(spark, n_keys):
+    """100k build rows over ``n_keys`` keys: the bounded collect counts
+    the distinct keys exactly (an HLL estimate is off at 30k keys), so
+    the filter is sized for exactly ``n_keys``."""
+    x = spark.range(0, 5000).withColumn("vx", F.col("id"))
+    y = spark.range(0, 100_000).select((F.col("id") % n_keys).alias("id"))
+    _, rep = bloom_join(
+        x, y, on="id", how="inner", force_prefilter=True, return_report=True,
+        prefilter_side="x",
+    )
+    assert rep.n_build == 100_000
+    assert rep.build_distinct_estimate == n_keys
+
+
+def test_native_cap_checked_before_build(spark, monkeypatch):
+    """A filter predicted above the plan-literal cap never runs the
+    native build: the call goes straight to the sketch engine and
+    records the prediction."""
+    bj = _bj_module()
+    calls = []
+    real_build = bj._native_build_filter
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return real_build(*a, **kw)
+
+    monkeypatch.setattr(bj, "_native_build_filter", spy)
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 64)
+    monkeypatch.setattr(bj, "_native_fallback_warned", False)
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    with pytest.warns(UserWarning, match="plan-literal cap"):
+        got, rep = bloom_join(
+            x, y, on="id", engine="native", force_prefilter=True,
+            return_report=True,
+        )
+    assert calls == []
+    assert rep.engine == "bloom" and rep.used_prefilter
+    assert "predicted native filter" in rep.engine_fallback_reason
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+def test_native_filter_size_prediction_matches_spark(spark):
+    """The pre-build prediction is the serialized size Spark produces."""
+    bj = _bj_module()
+    keyed = spark.range(0, 1_000).select(F.xxhash64("id").alias("__bj_key64"))
+    for n, fpp in [(16, 0.01), (1_000, 0.01), (50_000, 1e-4)]:
+        blob = bj._native_build_filter(keyed, n, fpp)
+        assert bj._native_filter_bytes(n, fpp) == len(blob)
+
+
+def test_sizing_persist_released_when_build_raises(spark, monkeypatch):
+    """The distributed lane's sizing persist is released even when the
+    sketch build raises."""
+    bj = _bj_module()
+
+    def boom(*a, **kw):
+        raise RuntimeError("build failed")
+
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 100)
+    monkeypatch.setattr(bj, "build_sketch", boom)
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="build failed"):
+        bloom_join(x, y, on="id", engine="bloom", force_prefilter=True)
+    assert jsc.getPersistentRDDs().size() == before

@@ -379,3 +379,23 @@ def test_decontaminate_many_drops_any_suite_hit(spark):
     kept, rep = decontaminate_many(corpus, benches, n=3, return_report=True)
     assert sorted(r.doc_id for r in kept.collect()) == [3]
     assert rep.n_bench_ngrams == 3  # union of distinct grams
+
+
+def test_decontam_native_cap_checked_before_build(spark, monkeypatch):
+    """An eval suite predicted above the plan-literal cap never runs the
+    native build; the output is unchanged."""
+    import importlib
+
+    dc = importlib.import_module("bloomjoin_spark.operators.decontam")
+    calls = []
+    monkeypatch.setattr(dc, "_native_build_filter", lambda *a: calls.append(a))
+    monkeypatch.setattr(dc, "_NATIVE_FILTER_CAP_BYTES", 8)
+    corpus = _docs(spark, [(1, [1, 2, 3, 4]), (2, [9, 9, 9])])
+    bench = _docs(spark, [(900, [2, 3, 4])])
+    flagged, rep = contaminated_docs(
+        corpus, bench, n=3, engine="auto", return_report=True
+    )
+    assert calls == []
+    assert rep.engine == "bloom"
+    assert "predicted native filter" in rep.engine_fallback_reason
+    assert sorted(r.doc_id for r in flagged.collect()) == [1]
