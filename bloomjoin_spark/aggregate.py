@@ -44,6 +44,7 @@ from .hashing import (
     hash_utf8_arrow,
 )
 from .sketches.base import Sketch
+from .sketches.bloom import BloomSketch
 
 PARTIAL_SCHEMA = (
     "partition_id long, n_partials long, n_rows long, fingerprint long, blob binary"
@@ -913,11 +914,7 @@ def build_sketches(
     done_ids: frozenset[int] = frozenset()
     stamp = True  # fresh dirs get stamped; see marker_present note below
     if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
-        stamp = _check_checkpoint_hash_format(spark, checkpoint_dir)
-        existing = spark.read.parquet(checkpoint_dir)
-        done_ids = frozenset(
-            r[0] for r in existing.select("partition_id").distinct().collect()
-        )
+        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
     fn = make_multi_partial_fn_arrow(factories, token_col, done_ids)
     partials = df.select(token_col).mapInArrow(fn, schema=MULTI_PARTIAL_SCHEMA)
     if checkpoint_dir:
@@ -1074,14 +1071,9 @@ def build_sketch(
     """
     done_ids: frozenset[int] = frozenset()
     spark = df.sparkSession
-    existing: DataFrame | None = None
     stamp = True  # fresh dirs get stamped; see marker_present note below
     if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
-        stamp = _check_checkpoint_hash_format(spark, checkpoint_dir)
-        existing = spark.read.parquet(checkpoint_dir)
-        done_ids = frozenset(
-            r["partition_id"] for r in existing.select("partition_id").distinct().collect()
-        )
+        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
     partials = sketch_partials(df, factory, cols, token_col, prehashed, done_ids)
     if checkpoint_dir:
         if done_ids:
@@ -1205,7 +1197,7 @@ def _check_checkpoint_hash_format(spark: SparkSession, path: str) -> bool:
             "changed hashes of >16 KiB string rows vs v1 — if the keyed "
             "column can contain such rows, rebuild the sketch fresh instead "
             "of resuming",
-            stacklevel=2,
+            stacklevel=3,
         )
         return False
     if recorded != HASH_FORMAT:
@@ -1216,6 +1208,31 @@ def _check_checkpoint_hash_format(spark: SparkSession, path: str) -> bool:
             "checkpoint dir) or finish the run with the matching version."
         )
     return True
+
+
+def _resume_ids(spark: SparkSession, path: str) -> tuple[bool, frozenset[int]]:
+    """``(marker present, done partition ids)`` of an existing checkpoint
+    dir, after the hash-format check.  Bloom partials of an older bit
+    layout (``BloomSketch.LEGACY_KINDS``) cannot merge with fresh ones:
+    such a dir resumes nothing, so every partition is rebuilt and the
+    dir overwritten."""
+    stamp = _check_checkpoint_hash_format(spark, path)
+    rows = (
+        spark.read.parquet(path)
+        .select("partition_id", F.substring("blob", 5, 4).alias("kind"))
+        .distinct()
+        .collect()
+    )
+    stale = {bytes(r["kind"]) for r in rows} & set(BloomSketch.LEGACY_KINDS)
+    if stale:
+        warnings.warn(
+            f"checkpoint {path!r} holds Bloom partials of an older bit layout "
+            f"({', '.join(sorted(k.decode() for k in stale))}); rebuilding every "
+            "partition instead of merging them",
+            stacklevel=3,
+        )
+        return stamp, frozenset()
+    return stamp, frozenset(r["partition_id"] for r in rows)
 
 
 def _checkpoint_exists(spark: SparkSession, path: str) -> bool:

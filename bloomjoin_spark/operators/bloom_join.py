@@ -12,14 +12,20 @@ pipeline, ``R/bloomjoin.R:62-124``):
    nothing leaves the JVM on the hot path;
 2. a build side of at most ``_SMALL_BUILD_ROWS`` rows comes back as
    hashes in ONE bounded collect: exact distinct count, filter built on
-   the driver (the reference's one pass, ``src/BloomFilter.cpp:102-118``).
-   A larger one streams once through ``mapInArrow`` producing one Bloom
-   partial per partition; partials tree-merge (OR);
-3. the merged filter is broadcast; the probe side is filtered by a
-   vectorized pandas UDF BEFORE the join exchange, so dropped rows are
-   never shuffled — that is the whole point at 100 TB: the shuffle is
-   the bottleneck, and the filter costs ~10 bits/key of broadcast
-   instead of shuffling the full probe side;
+   the driver (the reference's one pass, ``src/BloomFilter.cpp:102-118``),
+   under either engine and with or without ``n_hint``.  A larger one is
+   built by Spark's ``stat.bloomFilter`` (native engine) or streams once
+   through ``mapInArrow``, one Bloom partial per partition, partials
+   tree-merged by OR (sketch engine);
+3. every filter is in Spark's own bit layout (``sketches/bloom.py``),
+   so one under ``_NATIVE_FILTER_CAP_BYTES`` probes as the JVM's
+   ``BloomFilterMightContain`` inside whole-stage codegen, whatever the
+   engine; a larger one is broadcast and probed by a vectorized pandas
+   UDF.  Either way the probe runs BEFORE the join exchange, so dropped
+   rows are never shuffled — that is the whole point at 100 TB: the
+   shuffle is the bottleneck, and the filter costs ~10 bits/key
+   instead of shuffling the full probe side.  Row metrics come from
+   one ``Observation`` on the probe side;
 4. the surviving rows feed a completely ordinary ``df.join`` — Catalyst
    still picks broadcast/SMJ/SHJ, AQE still handles skew.
 
@@ -38,7 +44,7 @@ import warnings
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..aggregate import build_sketch
@@ -52,7 +58,7 @@ from ..plans.planner import (
     spark_how,
     validate_join_inputs,
 )
-from ..sketches.bloom import BloomSketch
+from ..sketches.bloom import BloomSketch, bloom_sizing
 
 #: probe-side sample size for the selectivity estimate — the reference's
 #: probe_limit (R/bloomjoin.R:240-257 uses 5000)
@@ -61,12 +67,12 @@ _SELECTIVITY_SAMPLE = 5000
 #: practical per-executor broadcast budget for the filter itself
 _BROADCAST_BUDGET_BYTES = 512 << 20
 
-#: size gate for the native engine's probe expression: the serialized
-#: JVM filter rides the plan as a literal, so it is re-serialized into
-#: EVERY task binary (a per-task cost Spark's own runtime-filter rule
-#: avoids via ScalarSubquery, which is not constructible from PySpark).
-#: Above this cap the native path falls back to the two-phase sketch
-#: engine, whose filter is broadcast once per executor.
+#: size cap of the codegen probe, for both engines: the serialized
+#: filter rides the plan as a literal, so it is re-serialized into EVERY
+#: task binary (Spark's own runtime-filter rule ships it once, as the
+#: result of a subquery its optimizer plans, which no public API can
+#: build).  Above this cap the filter is broadcast once per executor
+#: and probed by a pandas UDF.
 _NATIVE_FILTER_CAP_BYTES = 16 << 20
 
 #: exact-sizing bound: an unhinted build side of at most this many rows
@@ -132,19 +138,15 @@ def _key64(df: DataFrame, cols: list[str], casts: list[str | None]) -> Column:
     return F.xxhash64(*exprs)
 
 
-def _make_probe_udf(bc, acc_in=None, acc_out=None):
-    """Vectorized membership probe over the broadcast filter.
-    ``bc.value`` unpickles the BloomSketch once per executor process."""
+def _make_probe_udf(bc):
+    """Vectorized membership probe over the broadcast filter — the
+    fallback for a filter above the codegen cap.  ``bc.value``
+    unpickles the BloomSketch once per executor process."""
 
     @F.pandas_udf("boolean")
     def probe(h: pd.Series) -> pd.Series:
         bf: BloomSketch = bc.value
-        arr = h.to_numpy(dtype=np.int64).view(np.uint64)
-        mask = bf.contains_hashes(arr)
-        if acc_in is not None:
-            acc_in.add(len(arr))
-            acc_out.add(int(mask.sum()))
-        return pd.Series(mask)
+        return pd.Series(bf.contains_hashes(h.to_numpy(dtype=np.int64).view(np.uint64)))
 
     # nondeterministic stops Catalyst's constraint propagation from
     # copying the probe onto the BUILD side through the join condition —
@@ -187,14 +189,24 @@ def bloom_join(
     (``plans.planner.MIN_PROBE_BYTES``); ``0`` disables the floor.
     ``force_prefilter=True`` bypasses it like every other gate.
 
-    Memory-starved executors + ``engine="bloom"``: the sketch probe is
-    an ArrowEvalPython stage that queues FULL-WIDTH probe rows while
+    ``engine``: ``"native"`` builds a large build side with Spark's
+    ``stat.bloomFilter``; ``"bloom"`` builds it as mergeable per-partition
+    partials (required for ``checkpoint_dir``); ``"auto"`` is native
+    unless ``checkpoint_dir`` is set.  Small build sides are built on the
+    driver and every filter under ``_NATIVE_FILTER_CAP_BYTES`` probes in
+    the JVM under either engine.
+
+    Memory-starved executors + a filter above the cap: the pandas probe
+    is an ArrowEvalPython stage that queues FULL-WIDTH probe rows while
     their hashes round-trip through Python; on small heaps that queue
     is the bottleneck.  Cap
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~16384 there
     (measured at a 3 GiB heap over 8 M wide rows: 65536→7.3 s,
-    16384→6.4 s, 4096→7.5 s — BENCH.md).  ``engine="auto"`` sidesteps
-    this entirely by dispatching the all-JVM native probe.
+    16384→6.4 s, 4096→7.5 s — BENCH.md).
+
+    ``collect_metrics``: observe the probe side (rows in, rows that hit)
+    with one ``Observation``; ``report.finalize()`` reads it after an
+    action.
 
     Returns the joined DataFrame (identical to ``x.join(y, on, how)``),
     or ``(df, BloomJoinReport)`` when ``return_report=True``.
@@ -213,7 +225,7 @@ def bloom_join(
     validate_join_inputs(x, y, how, fpp)
     how = normalize_how(how)
     pairs = resolve_join_columns(x, y, on)
-    report = BloomJoinReport(join_type=how, engine="bloom", fpr=fpp)
+    report = BloomJoinReport(join_type=how, fpr=fpp)
 
     # ---- side guard (O18) -------------------------------------------
     # inner + auto: filter the LARGER side by Catalyst plan stats (free,
@@ -231,7 +243,6 @@ def bloom_join(
 
     use_prefilter = target is not None
     skip_reasons: list[str] = []
-    n_build = None
     if use_prefilter:
         build_df = y if target == "x" else x
         build_cols = [p[1] for p in pairs] if target == "x" else [p[0] for p in pairs]
@@ -278,24 +289,19 @@ def bloom_join(
 
         # ---- sizing by DISTINCT keys, the reference's right-sizing step
         # (src/BloomFilter.cpp:102-118): sizing by raw rows bloats the
-        # broadcast when the build side repeats keys
+        # filter when the build side repeats keys
         build_keyed = build_df.select(
             _key64(build_df, build_cols, casts).alias("__bj_key64")
         )
-        n_build = n_hints.get(build_name)
-        small = None  # unique key hashes of a small unhinted build side
-        if n_build is None:
-            build_keyed, report.n_build, build_distinct, n_build, small = _size_build(
-                build_df, build_keyed, exact=checkpoint_dir is None
-            )
-            report.build_distinct_estimate = build_distinct
-        else:
-            report.n_build = n_build
-            build_distinct = n_build
+        build_keyed, report.n_build, build_distinct, n_build, small = _size_build(
+            build_df, build_keyed, exact=checkpoint_dir is None,
+            n_hint=n_hints.get(build_name),
+        )
+        report.build_distinct_estimate = build_distinct
 
         skip_reasons = should_skip_prefilter(
             n_probe=n_hints.get("probe"),
-            build_distinct=build_distinct,
+            build_distinct=n_build if build_distinct is None else build_distinct,
             expected_reduction=None,
         )
         if force_prefilter:
@@ -311,114 +317,70 @@ def bloom_join(
         out = _standard_join(x, y, pairs, how)
         return (out, report) if return_report else out
 
-    report.used_prefilter = True
-    report.prefilter_side = target
-    report.build_side = build_name
+    # ---- engine='auto' is the native engine unless checkpointed resume
+    # (mergeable partials) needs the sketch engine.  Both engines probe
+    # any filter under the cap with the codegen expression, and a small
+    # build side is built on the driver either way; they differ only in
+    # how a large build side is built.  Failures below fall back to the
+    # sketch engine with a warning.
+    if engine == "auto":
+        engine = "bloom" if checkpoint_dir else "native"
 
-    # ---- engine='auto' prefers the native all-JVM path when nothing
-    # requires the sketch engine: row metrics (Python accumulators) and
-    # checkpointed resume (mergeable partials) are sketch-only, but a
-    # plain prefiltered join is strictly faster all-JVM — the probe
-    # stays inside whole-stage codegen instead of an ArrowEvalPython
-    # stage (measured 1.6× at the 2M-row bench cell, and the gap widens
-    # under executor memory pressure, where the Arrow probe pipeline
-    # thrashes GC — BENCH.md "engine choice under memory pressure").
-    # Failures below fall back to the sketch engine with a warning.
-    if engine == "auto" and not collect_metrics and checkpoint_dir is None:
-        engine = "native"
-
-    # ---- engine='native': all-JVM build (stat.bloomFilter, one
-    # treeAggregate) + codegen probe (BloomFilterMightContain) over the
-    # SAME canonical xxhash64 keys — fastest wall-clock path when you
-    # don't need mergeable partials / checkpointed resume / row metrics.
+    # ---- engine='native', large build side: all-JVM build
+    # (stat.bloomFilter, one treeAggregate) over the SAME canonical
+    # xxhash64 keys; a small one is built on the driver like the sketch
+    # engine's
+    blob = None  # Spark's serialized filter, the codegen probe's literal
     if engine == "native":
-        spark = x.sparkSession
-        probe_hash = _key64(probe_df, probe_cols, casts)
-        probe_filter_col = None
         try:
             # n is known: check the cap before building, and after
             _check_native_cap(
-                _native_filter_bytes(n_build, fpp), _NATIVE_FILTER_CAP_BYTES, "predicted"
+                _native_filter_bytes(n_build, fpp) if small is None
+                else _spark_blob_bytes(bloom_sizing(n_build, fpp)[0]),
+                _NATIVE_FILTER_CAP_BYTES, "predicted",
             )
-            blob = _native_build_filter(build_keyed, n_build, fpp)
-            _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
-            # build the probe Column HERE so private-API drift on the
-            # probe side also degrades to the sketch engine instead of
-            # raising out of bloom_join (the build and probe lean on the
-            # same classic-mode ExpressionUtils helpers)
-            probe_filter_col = _native_might_contain(spark, blob, probe_hash)
+            if small is None:
+                blob = _native_build_filter(build_keyed, n_build, fpp)
+                _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
         except Exception as ex:  # private-API drift / size gate → sketch engine
             _note_native_fallback(report, ex, forced=False)
             engine = "bloom"
-        if probe_filter_col is not None:
-            report.engine = "native"
-            report.filter_bits = len(blob) * 8  # serialized size (≈ m)
-            if build_keyed.is_cached:
-                build_keyed.unpersist()
-            if selectivity_check and not force_prefilter:
-                hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
-                if len(hs):
-                    # Arrow-path createDataFrame: the row-by-row py4j
-                    # reflection version costs ~0.5-1 s for 5k rows and
-                    # dominated auto-mode's fixed overhead in the grid
-                    sample_df = spark.createDataFrame(
-                        pd.DataFrame({"h": hs.view(np.int64)})
-                    )
-                    passed = sample_df.filter(
-                        _native_might_contain(spark, blob, F.col("h"))
-                    ).count()
-                    pass_rate = passed / len(hs)
-                    report.selectivity_estimate = max(
-                        0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
-                    )
-                    report.expected_reduction = 1.0 - pass_rate
-                    if report.expected_reduction <= MIN_EXPECTED_REDUCTION:
-                        report.used_prefilter = False
-                        report.prefilter_side = None
-                        report.skip_reasons = [
-                            f"expected reduction {report.expected_reduction:.3f} "
-                            f"≤ {MIN_EXPECTED_REDUCTION}"
-                        ]
-                        out = _standard_join(x, y, pairs, how)
-                        return (out, report) if return_report else out
-            filtered = probe_df.filter(probe_filter_col)
-            if target == "x":
-                out = _standard_join(filtered, y, pairs, how)
-            else:
-                out = _standard_join(x, filtered, pairs, how)
-            if verbose:
-                print(
-                    f"bloom_join[native]: prefiltering {target} with a "
-                    f"{len(blob) >> 10} KiB JVM filter (build n={n_build})"
-                )
-            return (out, report) if return_report else out
+            blob = None
+    report.engine = engine
 
     # ---- sketch build: on the driver from a small build side's hashes,
     # else one distributed pass, partial per partition, OR-merge
-    sketch, n_parts, rounds = _bloom_sketch(
-        build_keyed, small, n_build, fpp, fanin, checkpoint_dir
-    )
-    # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap of
-    # the reference becomes a practical broadcast warning — a filter
-    # bigger than ~512 MB should be rethought (higher fpp, or let the
-    # join shuffle), not silently shipped to every executor
-    filter_bytes = sketch.m // 8
-    if filter_bytes > _BROADCAST_BUDGET_BYTES:
-        warnings.warn(
-            f"bloom filter is {filter_bytes >> 20} MiB (n={n_build}, fpp={fpp}) — "
-            f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast budget; "
-            "consider a larger fpp, an n_hint, or skipping the prefilter",
-            stacklevel=2,
+    sketch = None  # the driver-held filter, when there is one
+    if blob is None:
+        sketch, n_parts, rounds = _bloom_sketch(
+            build_keyed, small, n_build, fpp, fanin, checkpoint_dir
         )
-    report.build_partitions = n_parts
-    report.merge_rounds = rounds
-    report.filter_bits = sketch.m
-    report.filter_hashes = sketch.k
-    fill = sketch.fill_ratio()
-    report.filter_fill_ratio = fill
-    # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
-    if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
-        report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
+        blob = _spark_blob(sketch)
+        # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap
+        # of the reference becomes a practical broadcast warning — a
+        # filter bigger than ~512 MB should be rethought (higher fpp, or
+        # let the join shuffle), not silently shipped to every executor
+        filter_bytes = sketch.m // 8
+        if filter_bytes > _BROADCAST_BUDGET_BYTES:
+            warnings.warn(
+                f"bloom filter is {filter_bytes >> 20} MiB (n={n_build}, fpp={fpp}) — "
+                f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast budget; "
+                "consider a larger fpp, an n_hint, or skipping the prefilter",
+                stacklevel=2,
+            )
+        report.build_partitions = n_parts
+        report.merge_rounds = rounds
+        report.filter_bits = sketch.m
+        report.filter_hashes = sketch.k
+        fill = sketch.fill_ratio()
+        report.filter_fill_ratio = fill
+        # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
+        if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
+            report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
+    else:
+        report.filter_bits = len(blob) * 8  # serialized size (≈ m)
+        if build_keyed.is_cached:
+            build_keyed.unpersist()
 
     probe_hash = _key64(probe_df, probe_cols, casts)
 
@@ -429,6 +391,8 @@ def bloom_join(
     if selectivity_check and not force_prefilter:
         hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
         if len(hs):
+            if sketch is None:
+                sketch = BloomSketch.from_spark_bytes(blob)
             pass_rate = float(sketch.contains_hashes(hs).mean())
             report.selectivity_estimate = max(
                 0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
@@ -436,7 +400,7 @@ def bloom_join(
             report.expected_reduction = 1.0 - pass_rate
             if report.expected_reduction <= MIN_EXPECTED_REDUCTION:
                 report.used_prefilter = False
-                report.prefilter_side = None
+                report.engine = "none"
                 report.skip_reasons = [
                     f"expected reduction {report.expected_reduction:.3f} "
                     f"≤ {MIN_EXPECTED_REDUCTION} (sampled pass rate "
@@ -450,17 +414,24 @@ def bloom_join(
                 out = _standard_join(x, y, pairs, how)
                 return (out, report) if return_report else out
 
+    report.used_prefilter = True
+    report.prefilter_side = target
+    report.build_side = build_name
     spark = x.sparkSession
-    sc = spark.sparkContext
-    bc = sc.broadcast(sketch.seal())
-    acc_in = sc.accumulator(0) if collect_metrics else None
-    acc_out = sc.accumulator(0) if collect_metrics else None
-    probe_udf = _make_probe_udf(bc, acc_in, acc_out)
-
-    filtered = probe_df.filter(probe_udf(probe_hash))
+    hit = _probe_column(spark, sketch, blob, probe_hash, report)
     if collect_metrics:
         # row metrics land after an action via report.finalize()
-        report._acc_in, report._acc_out = acc_in, acc_out
+        obs = Observation()
+        filtered = (
+            probe_df.withColumn("__bj_hit", hit)
+            .observe(obs, F.count(F.lit(1)).alias("rows_in"),
+                     F.count_if("__bj_hit").alias("rows_hit"))
+            .filter("__bj_hit")
+            .drop("__bj_hit")
+        )
+        report._observation = obs
+    else:
+        filtered = probe_df.filter(hit)
 
     if target == "x":
         out = _standard_join(filtered, y, pairs, how)
@@ -468,11 +439,41 @@ def bloom_join(
         out = _standard_join(x, filtered, pairs, how)
     if verbose:
         print(
-            f"bloom_join: prefiltering {target} with m={sketch.m} bits k={sketch.k} "
-            f"fill={fill:.3f} (build n={n_build}, {n_parts} partials, "
-            f"{rounds} merge rounds)"
+            f"bloom_join[{report.engine}]: prefiltering {target} with a "
+            f"{report.filter_bits >> 13} KiB filter (build n={n_build})"
         )
     return (out, report) if return_report else out
+
+
+def _spark_blob_bytes(m: int) -> int:
+    """Serialized size of an m-bit Spark filter (16-byte V2 header)."""
+    return m // 8 + 16
+
+
+def _spark_blob(sketch: BloomSketch) -> bytes | None:
+    """The sketch as a codegen-probe literal, or None above the cap."""
+    if _spark_blob_bytes(sketch.m) > _NATIVE_FILTER_CAP_BYTES:
+        return None
+    return sketch.to_spark_bytes()
+
+
+def _probe_column(spark, sketch: BloomSketch | None, blob: bytes | None,
+                  probe_hash: Column, report=None) -> Column:
+    """Membership predicate over ``probe_hash``: the codegen probe of
+    ``blob`` when there is one, else (a filter above the cap, or
+    private-API drift) the broadcast pandas probe of ``sketch`` — or of
+    ``blob`` loaded back when only Spark built the filter."""
+    if blob is not None:
+        try:
+            return _native_might_contain(spark, blob, probe_hash)
+        except Exception as ex:  # private-API drift → pandas probe
+            _note_native_fallback(report, ex, forced=False)
+            if report is not None:
+                report.engine = "bloom"
+    if sketch is None:
+        sketch = BloomSketch.from_spark_bytes(blob)
+    bc = spark.sparkContext.broadcast(sketch.seal())
+    return _make_probe_udf(bc)(probe_hash)
 
 
 def _native_might_contain(spark, filter_bytes: bytes, value_col: Column) -> Column:
@@ -500,7 +501,8 @@ def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
     every ``forced`` call, else once per session (observable, VERDICT r4
     #3, without spamming a pipeline that calls thousands of times)."""
     global _native_fallback_warned
-    report.engine_fallback_reason = repr(ex)
+    if report is not None:
+        report.engine_fallback_reason = repr(ex)
     if forced or not _native_fallback_warned:
         _native_fallback_warned = _native_fallback_warned or not forced
         warnings.warn(
@@ -529,13 +531,16 @@ def _check_native_cap(n_bytes: int, cap: int, what: str) -> None:
         )
 
 
-def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True):
-    """``(keyed, rows, distinct, n, hashes)`` of an unhinted build side,
-    ``n`` sizing the filter.  A small one (when ``exact``) comes back in
-    ONE early-terminating collect (one job, one JVM task) whose unique
-    ``hashes`` count its keys exactly.  Otherwise ``keyed`` is persisted
-    for the distributed build and one aggregate (partial-aggregated HLL,
-    no wide shuffle) estimates the distinct count."""
+def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
+                n_hint: int | None = None):
+    """``(keyed, rows, distinct, n, hashes)`` of a build side, ``n``
+    sizing the filter.  A small one (when ``exact``) comes back in ONE
+    early-terminating collect (one job, one JVM task) whose unique
+    ``hashes`` count its keys exactly, hinted or not.  Otherwise an
+    ``n_hint`` sizes it (``rows`` = the hint, ``distinct`` None), or
+    ``keyed`` is persisted for the distributed build and one aggregate
+    (partial-aggregated HLL, no wide shuffle) estimates the distinct
+    count."""
     try:  # free plan stats, no job
         st = build_df._jdf.queryExecution().optimizedPlan().stats()
         rows = int(st.rowCount().get()) if st.rowCount().isDefined() else 0
@@ -549,6 +554,8 @@ def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True)
         if tbl.num_rows <= _SMALL_BUILD_ROWS:
             uniq = np.unique(tbl.column(0).to_numpy().view(np.uint64))
             return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
+    if n_hint is not None:
+        return build_keyed, n_hint, None, n_hint, None
     keyed = build_keyed.persist()
     try:
         stats = keyed.agg(

@@ -253,7 +253,9 @@ class BloomJoinReport:
     bloom_metadata (R/bloomjoin.R:266-322,395-433) so tests can pin it."""
 
     join_type: str = "inner"
-    engine: str = "bloom"
+    #: 'native' or 'bloom' (the engine that built the filter), 'none'
+    #: when the prefilter was skipped
+    engine: str = "none"
     used_prefilter: bool = False
     prefilter_side: str | None = None
     build_side: str | None = None
@@ -273,29 +275,39 @@ class BloomJoinReport:
     skip_reasons: list[str] = field(default_factory=list)
     override_requested_side: bool = False
     #: why the all-JVM native engine was NOT used after being selected
-    #: (auto dispatch or engine='native'): private-API drift or the
-    #: plan-literal size cap.  None when native ran or was never tried.
+    #: (auto dispatch or engine='native'), or why a filter under the
+    #: cap got the pandas probe: private-API drift or the plan-literal
+    #: size cap.  None when neither happened.
     #: VERDICT r4 #3: without this field a Spark upgrade that kills the
     #: native path degrades auto mode silently.
     engine_fallback_reason: str | None = None
-    #: probe accumulators (set by bloom_join when collect_metrics=True);
-    #: read via finalize() after an action
-    _acc_in: object = field(default=None, repr=False, compare=False)
-    _acc_out: object = field(default=None, repr=False, compare=False)
+    #: probe-side Observation (rows in, rows that hit), set by
+    #: bloom_join when collect_metrics=True; read via finalize()
+    _observation: object = field(default=None, repr=False, compare=False)
 
     def finalize(self) -> "BloomJoinReport":
         """Populate the row metrics (probe_rows_before/after,
         reduction_ratio — reference bloom_metadata fields
         ``filtered_rows``/``retained_rows``/``reduction_ratio``,
-        R/bloomjoin.R:410-433) from the probe accumulators.
+        R/bloomjoin.R:410-433) from the probe-side Observation.
 
-        Call AFTER an action has materialized the joined DataFrame.
-        Accumulators are task-level telemetry: Spark may re-evaluate the
-        probe (task retries, AQE re-execution), so the counts bound the
-        logical row counts from above; the ratio is still exact under
-        re-evaluation because both counters inflate together."""
-        if self._acc_in is not None and self._acc_in.value:
-            self.probe_rows_before = int(self._acc_in.value)
-            self.probe_rows_after = int(self._acc_out.value)
-            self.reduction_ratio = 1.0 - self.probe_rows_after / self.probe_rows_before
+        Call AFTER an action has materialized the joined DataFrame; the
+        counts are those of the first action that ran it.  Never waits
+        for an action: before any, it leaves the fields unset.  After
+        one, the Observation lands from Spark's listener bus, so an
+        incomplete one first waits for the bus to drain its queue."""
+        obs = self._observation
+        if obs is None:
+            return self
+        done = obs._jo.future().isCompleted
+        if not done():
+            from pyspark import SparkContext
+
+            SparkContext._active_spark_context._jsc.sc().listenerBus().waitUntilEmpty()
+        if done():
+            row = obs.get
+            if row["rows_in"]:
+                self.probe_rows_before = int(row["rows_in"])
+                self.probe_rows_after = int(row["rows_hit"])
+                self.reduction_ratio = 1.0 - self.probe_rows_after / self.probe_rows_before
         return self

@@ -4,11 +4,10 @@
 
 Parity points (re-derived, not ported — all numpy, no per-row work):
 
-- bit-packed uint64 words, power-of-two size so addressing is a mask,
-  not a modulo (reference ``src/BloomFilter.h:98-100``);
-- Kirsch–Mitzenmacher double hashing: two 64-bit hashes expand to k
-  probe positions, h2 forced odd (``src/BloomFilter.cpp:25-36``,
-  ``src/BloomFilter.h:70``);
+- bit-packed uint64 words, power-of-two size (reference
+  ``src/BloomFilter.h:98-100``);
+- double hashing: two hashes per key expand to k probe positions
+  (``src/BloomFilter.cpp:25-36``);
 - sizing: ``m = 2^ceil(log2(-n ln p / ln²2))``, ``k = round(m/n · ln2)``,
   escalate m until the achieved fpr meets the target, hard caps on m
   and k (``src/BloomFilter.h:81-128``);
@@ -17,12 +16,28 @@ Parity points (re-derived, not ported — all numpy, no per-row work):
 - merge = bitwise OR of equal-shaped filters — insertion order and
   partition grouping can never change the final bitset.
 
+Bit layout (kind tag ``BLM3``): exactly the one of Spark 4's
+``BloomFilterImplV2``.  A key hash ``h`` gives ``hi = Murmur3_x86_32.
+hashLong(h, 0)`` and ``lo = hashLong(h, hi)``; probe i sets bit
+``c mod m`` of ``c = hi·(2³¹−1) + (i+1)·lo``, replaced by ``~c`` when
+negative.  Why Spark's: a sealed sketch then IS a Spark filter
+(``to_spark_bytes``), so the join probe runs as the JVM's
+``BloomFilterMightContain`` inside whole-stage codegen instead of a
+Python UDF, and a filter Spark built (``DataFrame.stat.bloomFilter``)
+loads here (``from_spark_bytes``) for driver-side tests.  The sizing
+above is unchanged: m stays a power of two, so ``c mod m`` is a mask.
+
+Legacy kinds still read: ``BLM1`` and ``BLM2`` (splitmix64 double
+hashing, the layout before ``BLM3``) load from skipping indexes, sketch
+stores, checkpoint partials and saved filters, and a dense one probes
+with its original positions.  A sparse one carries its key hashes, not
+bit positions, so it loads into the current layout.  Merging two
+different layouts raises.
+
 Scale notes (100 TB / 1000 executors): the filter is built once from
-the *small* side of a join and broadcast; the cap (default 2^33 bits =
-1 GiB) is a broadcast-budget guard, stricter than the reference's 2^40
-because Spark broadcasts must stay well under driver/executor memory.
-The probe is a vectorized gather over the local broadcast copy — no
-shuffle, no Python loop.
+the *small* side of a join; the cap (default 2^33 bits = 1 GiB) is a
+broadcast-budget guard, stricter than the reference's 2^40 because
+Spark broadcasts must stay well under driver/executor memory.
 """
 
 from __future__ import annotations
@@ -37,14 +52,22 @@ from ..hashing import splitmix64
 from .base import Sketch
 
 _U64 = np.uint64
+_U32 = np.uint32
 _LN2 = math.log(2.0)
 
 #: broadcast-budget cap (bits). 2^33 bits = 1 GiB of filter.
 MAX_BITS = 1 << 33
 MAX_K = 64
 
+# seeds of the legacy (BLM1/BLM2) splitmix64 layout
 _SEED1 = 0xA076_1D64_78BD_642F
 _SEED2 = 0xE703_7ED1_A0B4_28DB
+
+#: Spark's BloomFilterImplV2 scrambles hi into the upper bits with this
+_INT_MAX = np.int64((1 << 31) - 1)
+
+#: Spark's serialized BloomFilter header: version, k, seed, word count
+_SPARK_HEAD = struct.Struct(">iiii")
 
 
 def bloom_sizing(n: int, p: float) -> tuple[int, int]:
@@ -120,21 +143,75 @@ def _popcount(words: np.ndarray) -> int:
     return int(_POP8[words.view(np.uint8)].sum(dtype=np.int64))
 
 
-def _probe_matrix(h: np.ndarray, k: int, mask: np.uint64) -> np.ndarray:
-    """(len(h), k) uint64 probe positions via KM double hashing."""
+def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
+    """In-place 32-bit rotate left of a uint32 array."""
+    t = x >> _U32(32 - r)
+    x <<= _U32(r)
+    x |= t
+    return x
+
+
+def _murmur3_blocks(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The seed-independent half of Spark's ``Murmur3_x86_32.hashLong``:
+    ``mixK1`` of the low and the high 32 bits of a uint64 array."""
+    out = []
     with np.errstate(over="ignore"):
-        h1 = splitmix64(h ^ _U64(_SEED1))
-        h2 = splitmix64(h ^ _U64(_SEED2)) | _U64(1)  # odd → full-cycle stride
-        ks = np.arange(k, dtype=np.uint64)
-        return (h1[:, None] + ks[None, :] * h2[:, None]) & mask
+        for half in (x.astype(_U32), (x >> _U64(32)).astype(_U32)):
+            half *= _U32(0xCC9E2D51)
+            half = _rotl32(half, 15)
+            half *= _U32(0x1B873593)
+            out.append(half)
+    return out[0], out[1]
+
+
+def _murmur3_long(blocks: tuple[np.ndarray, np.ndarray], seed) -> np.ndarray:
+    """Spark's ``Murmur3_x86_32.hashLong(x, seed)`` from
+    ``_murmur3_blocks(x)``: both blocks mixed into ``seed`` (a uint32
+    scalar or array), then the length-8 finalizer.  uint32 result (the
+    bits of the JVM int)."""
+    with np.errstate(over="ignore"):
+        h = seed
+        for block in blocks:
+            h = _rotl32(h ^ block, 13)
+            h *= _U32(5)
+            h += _U32(0xE6546B64)
+        h ^= _U32(8)
+        h ^= h >> _U32(16)
+        h *= _U32(0x85EBCA6B)
+        h ^= h >> _U32(13)
+        h *= _U32(0xC2B2AE35)
+        h ^= h >> _U32(16)
+    return h
+
+
+def _spark_pair(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(hi·(2³¹−1), lo)`` as int64 — the BloomFilterImplV2 hash pair:
+    ``hi = hashLong(h, 0)``, ``lo = hashLong(h, hi)``."""
+    blocks = _murmur3_blocks(h)
+    hi = _murmur3_long(blocks, _U32(0))
+    lo = _murmur3_long(blocks, hi)
+    return (
+        hi.view(np.int32).astype(np.int64) * _INT_MAX,
+        lo.view(np.int32).astype(np.int64),
+    )
+
+
+def _probe_matrix(h: np.ndarray, k: int, m: int) -> np.ndarray:
+    """(len(h), k) uint64 positions of Spark's BloomFilterImplV2, in
+    the plain matrix form — the reference the loops below must match."""
+    base, lo = _spark_pair(h.astype(np.uint64, copy=False))
+    c = base[:, None] + np.arange(1, k + 1, dtype=np.int64)[None, :] * lo[:, None]
+    return (np.where(c < 0, ~c, c) % m).astype(np.uint64)
 
 
 class BloomSketch(Sketch):
-    # BLM2: payload gained a mode byte (dense bitmap vs sparse hash
-    # list).  BLM1 (dense-only, no mode byte) still deserializes via
-    # _from_payload_legacy so pre-upgrade checkpoint_dir partials resume.
-    KIND = b"BLM2"
-    LEGACY_KINDS = (b"BLM1",)
+    # BLM3: Spark's BloomFilterImplV2 bit layout (module docstring).
+    # BLM2 (mode byte: dense bitmap vs sparse hash list) and BLM1
+    # (dense-only, no mode byte) used splitmix64 positions; they still
+    # load via _from_payload_legacy, and a dense one keeps its layout
+    # through the instance's KIND.
+    KIND = b"BLM3"
+    LEGACY_KINDS = (b"BLM1", b"BLM2")
     CONSUMES = "hashes"
     #: membership insert is idempotent (update_hashes dedups anyway)
     SET_SEMANTICS = True
@@ -142,8 +219,7 @@ class BloomSketch(Sketch):
     def __init__(self, n: int, fpp: float = 0.01, _words: np.ndarray | None = None):
         self.n_hint = int(n)
         self.fpp = float(fpp)
-        self.m, self.k = bloom_sizing(n, fpp)
-        self.mask = _U64(self.m - 1)
+        self._shape(*bloom_sizing(n, fpp))
         self._words = (
             _words
             if _words is not None
@@ -158,6 +234,52 @@ class BloomSketch(Sketch):
         # between collecting terabytes of partial bitmaps and megabytes
         # of hash lists. Dropped (None) once past the breakeven n = m/64.
         self._sparse: list[np.ndarray] | None = []
+
+    def _shape(self, m: int, k: int) -> None:
+        self.m, self.k = int(m), int(k)
+        # m is a power of two except for filters Spark sized
+        self._pow2 = self.m & (self.m - 1) == 0
+        self.mask = _U64(self.m - 1)
+
+    @classmethod
+    def _blank(cls, m: int, k: int, fpp: float, n_added: int, has_null: bool,
+               kind: bytes = KIND) -> "BloomSketch":
+        obj = cls.__new__(cls)
+        obj.n_hint = obj.n_added = int(n_added)
+        obj.fpp = float(fpp)
+        obj._shape(m, k)
+        obj.has_null = bool(has_null)
+        obj._words = None
+        obj._sparse = None
+        if kind != cls.KIND:
+            obj.KIND = kind
+        return obj
+
+    # -- positions -----------------------------------------------------
+    # probe i's position is a function of c_i = c_0 + (i+1)·step, so
+    # the loops below advance c by step in place: one add per probe
+    def _pair(self, h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """``(c_0, step)`` per key, advanced and indexed by ``_index``."""
+        if self.KIND == BloomSketch.KIND:
+            return _spark_pair(h)
+        with np.errstate(over="ignore"):
+            h1 = splitmix64(h ^ _U64(_SEED1))
+            h2 = splitmix64(h ^ _U64(_SEED2)) | _U64(1)  # odd → full-cycle stride
+            return h1 - h2, h2  # legacy probe i: (h1 + i·h2) mod m
+
+    def _index(self, c: np.ndarray, out: np.ndarray) -> np.ndarray:
+        """uint64 bit positions of the advanced ``c``, written into
+        ``out`` (a reused buffer shaped like ``c``)."""
+        if self.KIND != BloomSketch.KIND:
+            return np.bitwise_and(c, self.mask, out=out)
+        # c = hi·(2³¹−1) + (i+1)·lo never overflows int64; ~c when
+        # negative is c XOR its arithmetic sign
+        np.right_shift(c, 63, out=out)
+        np.bitwise_xor(out, c, out=out)
+        p = out.view(np.uint64)
+        if self._pow2:
+            return np.bitwise_and(p, self.mask, out=p)
+        return np.remainder(p, _U64(self.m), out=p)
 
     # -- build ---------------------------------------------------------
     @property
@@ -180,34 +302,26 @@ class BloomSketch(Sketch):
         # faults on this class of (oversubscribed) host run at ~50 MB/s:
         # measured 27 s for the matrix form vs 0.3 s for this loop, with
         # identical positions
-        with np.errstate(over="ignore"):
-            h1 = splitmix64(h.astype(np.uint64, copy=False) ^ _U64(_SEED1))
-            h2 = splitmix64(h.astype(np.uint64, copy=False) ^ _U64(_SEED2)) | _U64(1)
-        p = np.empty_like(h1)
+        c, step = self._pair(h.astype(np.uint64, copy=False))
+        buf = np.empty_like(c)
         if self.m <= (1 << 28) and h.size * self.k >= 4096:
             # duplicate-safe scatter-STORE into a bool plane + packbits:
             # O(n) stores + O(m/8) pack, ~30× faster than the unbuffered
             # np.bitwise_or.at scatter (measured 1.7s → 0.06s for 6M
             # probe positions into a 2^23-bit filter)
             bools = np.zeros(self.m, dtype=bool)
-            with np.errstate(over="ignore"):
-                for i in range(self.k):
-                    np.multiply(h2, _U64(i), out=p)
-                    np.add(p, h1, out=p)
-                    np.bitwise_and(p, self.mask, out=p)
-                    bools[p] = True
+            for _ in range(self.k):
+                np.add(c, step, out=c)
+                bools[self._index(c, buf)] = True
             packed = np.packbits(bools, bitorder="little")
             np.bitwise_or(self._words, packed.view(np.uint64), out=self._words)
             return
-        bit = np.empty_like(h1)
-        with np.errstate(over="ignore"):
-            for i in range(self.k):
-                np.multiply(h2, _U64(i), out=p)
-                np.add(p, h1, out=p)
-                np.bitwise_and(p, self.mask, out=p)
-                np.left_shift(_U64(1), np.bitwise_and(p, _U64(63)), out=bit)
-                np.right_shift(p, _U64(6), out=p)
-                np.bitwise_or.at(self._words, p, bit)
+        bit = np.empty(h.size, dtype=np.uint64)
+        for _ in range(self.k):
+            np.add(c, step, out=c)
+            p = self._index(c, buf)
+            np.left_shift(_U64(1), p & _U64(63), out=bit)
+            np.bitwise_or.at(self._words, p >> _U64(6), bit)
 
     def update_hashes(self, h: np.ndarray) -> None:
         """Insert a batch of canonical uint64 hashes (dedup first — the
@@ -243,21 +357,18 @@ class BloomSketch(Sketch):
         per-key early exit, src/BloomFilter.cpp:39-51): probe i only
         tests the keys still alive after probe i−1, so for non-members
         the expected gather work is n/(1−fill) ≈ 2n instead of k·n —
-        the probe is the per-row hot path of bloom_join, this is ~4×
-        less memory traffic at fill ≈ 0.5."""
+        ~4× less memory traffic at fill ≈ 0.5."""
         if h.size == 0:
             return np.empty(0, dtype=bool)
         words = self.words
-        hh = h.astype(np.uint64, copy=False)
-        with np.errstate(over="ignore"):
-            h1 = splitmix64(hh ^ _U64(_SEED1))
-            h2 = splitmix64(hh ^ _U64(_SEED2)) | _U64(1)
+        c, step = self._pair(h.astype(np.uint64, copy=False))
+        buf = np.empty_like(c)
         alive = np.arange(h.size)
-        for i in range(self.k):
-            with np.errstate(over="ignore"):
-                p = (h1[alive] + _U64(i) * h2[alive]) & self.mask
-            hit = (words[p >> _U64(6)] >> (p & _U64(63))) & _U64(1)
-            alive = alive[hit.astype(bool)]
+        for _ in range(self.k):
+            np.add(c, step, out=c)
+            p = self._index(c, buf[: c.size])
+            hit = ((words[p >> _U64(6)] >> (p & _U64(63))) & _U64(1)).astype(bool)
+            alive, c, step = alive[hit], c[hit], step[hit]
             if alive.size == 0:
                 break
         out = np.zeros(h.size, dtype=bool)
@@ -266,6 +377,12 @@ class BloomSketch(Sketch):
 
     # -- merge ---------------------------------------------------------
     def merge(self, other: "BloomSketch") -> "BloomSketch":
+        if other.KIND != self.KIND:
+            raise ValueError(
+                f"cannot OR-merge bloom filters of different bit layouts "
+                f"({self.KIND.decode()} vs {other.KIND.decode()}); rebuild "
+                "the older one"
+            )
         if other.m != self.m or other.k != self.k:
             raise ValueError("cannot OR-merge differently sized bloom filters")
         self.has_null |= other.has_null
@@ -290,6 +407,36 @@ class BloomSketch(Sketch):
         """fpr implied by the actual fill ratio: fill^k."""
         return self.fill_ratio() ** self.k
 
+    # -- Spark interop ---------------------------------------------------
+    def to_spark_bytes(self) -> bytes:
+        """Spark's serialized ``BloomFilterImplV2`` (version 2, k, seed
+        0, word count, big-endian words) of this filter — the literal
+        ``BloomFilterMightContain`` probes.  Null tracking does not
+        travel: Spark's filter has none."""
+        if self.KIND != BloomSketch.KIND:
+            raise ValueError(
+                f"a {self.KIND.decode()} filter has no Spark bit layout; rebuild it"
+            )
+        words = self.words
+        return _SPARK_HEAD.pack(2, self.k, 0, words.size) + words.astype(">u8").tobytes()
+
+    @classmethod
+    def from_spark_bytes(cls, blob: bytes) -> "BloomSketch":
+        """Load a serialized Spark ``BloomFilterImplV2`` (for example
+        from ``DataFrame.stat.bloomFilter``); its m need not be a power
+        of two.  Spark's V1 layout and non-zero seeds are refused."""
+        version, k, seed, n_words = _SPARK_HEAD.unpack_from(blob, 0)
+        if version != 2 or seed != 0:
+            raise ValueError(
+                f"only Spark's V2 Bloom layout with seed 0 loads here, got "
+                f"version {version}, seed {seed}"
+            )
+        obj = cls._blank(64 * n_words, k, float("nan"), 0, False)
+        obj._words = np.frombuffer(
+            blob, dtype=">u8", count=n_words, offset=_SPARK_HEAD.size
+        ).astype(np.uint64)
+        return obj
+
     # -- serialization ---------------------------------------------------
     # payload = header + mode byte + body.  mode 0: dense bitmap words
     # (m/8 bytes); mode 1: sparse unique-hash list (8·n bytes) — chosen
@@ -310,58 +457,41 @@ class BloomSketch(Sketch):
         return head + b"\x00" + self.words.tobytes()
 
     @classmethod
-    def _from_payload(cls, payload: bytes) -> "BloomSketch":
+    def _from_payload(cls, payload: bytes, dense_kind: bytes = KIND) -> "BloomSketch":
+        """``dense_kind``: the layout a dense body was written in; a
+        sparse body holds key hashes and always loads as ``KIND``."""
         m, k, fpp, has_null, n_added = struct.unpack_from("<QIdBq", payload, 0)
         off = struct.calcsize("<QIdBq")
-        mode = payload[off]
-        off += 1
-        obj = cls.__new__(cls)
-        obj.n_hint = n_added
-        obj.fpp = fpp
-        obj.m, obj.k = m, k
-        obj.mask = _U64(m - 1)
-        obj.has_null = bool(has_null)
-        obj.n_added = n_added
-        if mode == 1:
-            h = np.frombuffer(payload, dtype=np.uint64, offset=off).copy()
-            obj._words = None  # lazy: densify on first probe/dense merge
-            obj._sparse = [h] if h.size else []
+        body = np.frombuffer(payload, dtype=np.uint64, offset=off + 1).copy()
+        if payload[off] == 1:
+            obj = cls._blank(m, k, fpp, n_added, has_null)
+            obj._sparse = [body] if body.size else []  # lazy densify
         else:
-            obj._words = np.frombuffer(payload, dtype=np.uint64, offset=off).copy()
-            obj._sparse = None
+            obj = cls._blank(m, k, fpp, n_added, has_null, dense_kind)
+            obj._words = body
         return obj
 
     @classmethod
     def _from_payload_legacy(cls, payload: bytes) -> "BloomSketch":
-        """BLM1 blobs exist in TWO layouts: the original dense-only one
-        (header + words, no mode byte) and the later one that added the
-        mode byte WITHOUT bumping the tag — byte-identical to the BLM2
-        payload.  Disambiguate by length: the dense-no-mode body is
-        exactly m/8 bytes (a multiple of 8); with the mode byte a dense
-        body is m/8+1 and a sparse body is 8·n+1 — neither can equal
-        m/8."""
+        """BLM1/BLM2 (splitmix64 layout).  BLM1 blobs exist in TWO
+        layouts: the original dense-only one (header + words, no mode
+        byte) and the later one that added the mode byte WITHOUT
+        bumping the tag — byte-identical to the BLM2 payload.
+        Disambiguate by length: the dense-no-mode body is exactly m/8
+        bytes (a multiple of 8); with the mode byte a dense body is
+        m/8+1 and a sparse body is 8·n+1 — neither can equal m/8."""
         m, k, fpp, has_null, n_added = struct.unpack_from("<QIdBq", payload, 0)
         off = struct.calcsize("<QIdBq")
         if len(payload) - off != m // 8:
-            return cls._from_payload(payload)  # mode-byte layout, old tag
-        obj = cls.__new__(cls)
-        obj.n_hint = n_added
-        obj.fpp = fpp
-        obj.m, obj.k = m, k
-        obj.mask = _U64(m - 1)
-        obj.has_null = bool(has_null)
-        obj.n_added = n_added
+            return cls._from_payload(payload, dense_kind=b"BLM2")
+        obj = cls._blank(m, k, fpp, n_added, has_null, b"BLM2")
         obj._words = np.frombuffer(payload, dtype=np.uint64, offset=off).copy()
-        obj._sparse = None
         return obj
 
     @classmethod
     def empty_like(cls, proto: "BloomSketch") -> "BloomSketch":
-        obj = cls.__new__(cls)
-        obj.n_hint, obj.fpp, obj.m, obj.k = proto.n_hint, proto.fpp, proto.m, proto.k
-        obj.mask = _U64(proto.m - 1)
+        obj = cls._blank(proto.m, proto.k, proto.fpp, 0, False, proto.KIND)
+        obj.n_hint = proto.n_hint
         obj._words = np.zeros(proto.m // 64, dtype=np.uint64)
-        obj.has_null = False
-        obj.n_added = 0
         obj._sparse = []
         return obj

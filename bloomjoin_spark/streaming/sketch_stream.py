@@ -144,8 +144,9 @@ def bloom_join_stream(
     n_hint: int | None = None,
 ) -> DataFrame:
     """Bloom-prefiltered STREAM-static join: the filter is built ONCE
-    from the static side (a batch job at call time), broadcast, and the
-    vectorized probe runs inside every micro-batch's plan — stream rows
+    from the static side (a batch job at call time), and the probe — the
+    JVM codegen one under the batch join's cap, else a broadcast pandas
+    UDF — runs inside every micro-batch's plan — stream rows
     that cannot match are dropped BEFORE the stream-static join, so at
     scale they never reach the join's shuffle/state machinery.  Output
     is exactly equal to ``stream.join(static, on, how)`` (false
@@ -167,8 +168,9 @@ def bloom_join_stream(
         _bloom_sketch,
         _common_cast,
         _key64,
-        _make_probe_udf,
+        _probe_column,
         _size_build,
+        _spark_blob,
         _standard_join,
     )
     from ..plans.planner import normalize_how, resolve_join_columns
@@ -185,16 +187,15 @@ def bloom_join_stream(
     build_keyed = static.select(
         _key64(static, [p[1] for p in pairs], casts).alias("__bj_key64")
     )
-    small = None  # a small static side is sized exactly, built on the driver
-    if n_hint is None:
-        build_keyed, _, _, n_hint, small = _size_build(static, build_keyed)
-    sketch = _bloom_sketch(build_keyed, small, n_hint, fpp)[0]
-    bc = stream.sparkSession.sparkContext.broadcast(sketch.seal())
-    probe_udf = _make_probe_udf(bc)
-    filtered = stream.filter(
-        probe_udf(_key64(stream, [p[0] for p in pairs], casts))
+    # a small static side is sized exactly and built on the driver
+    build_keyed, _, _, n, small = _size_build(static, build_keyed, n_hint=n_hint)
+    sketch = _bloom_sketch(build_keyed, small, n, fpp)[0]
+    # under the cap the probe is the JVM codegen expression
+    hit = _probe_column(
+        stream.sparkSession, sketch, _spark_blob(sketch),
+        _key64(stream, [p[0] for p in pairs], casts),
     )
-    return _standard_join(filtered, static, pairs, how)
+    return _standard_join(stream.filter(hit), static, pairs, how)
 
 
 class StreamingSketchCollector:

@@ -145,6 +145,42 @@ def test_checkpoint_hash_format_guard(spark, tmp_path):
                      checkpoint_dir=ckpt)
 
 
+def test_checkpoint_with_legacy_bloom_partials_is_rebuilt(spark, tmp_path):
+    """A checkpoint dir holding Bloom partials of the previous bit layout
+    (BLM2, splitmix64 positions) is rebuilt, never merged: the resumed
+    sketch equals a fresh build and every stored partial is rewritten in
+    the current layout."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    n = 8000
+    ckpt = str(tmp_path / "legacy_ckpt")
+    df = spark.range(0, n).repartition(2).select(F.col("id").alias("k"))
+    factory = lambda: BloomSketch(1000, 0.01)  # noqa: E731 — dense partials
+    build_sketch(df, factory, cols=["k"], checkpoint_dir=ckpt)
+    pdf = spark.read.parquet(ckpt).toPandas()
+    assert {bytes(b)[4:8] for b in pdf["blob"]} == {b"BLM3"}
+    assert all(bytes(b)[4 + 4 + 8 + 29] == 0 for b in pdf["blob"])  # dense
+    # the same partials as the previous release tagged them (marker kept)
+    pdf["blob"] = [b"BJSKBLM2" + bytes(b)[8:] for b in pdf["blob"]]
+    for f in glob.glob(os.path.join(ckpt, "*.parquet")):
+        os.remove(f)
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                   os.path.join(ckpt, "part-legacy.parquet"))
+
+    with pytest.warns(UserWarning, match="older bit layout"):
+        res = build_sketch(df, factory, cols=["k"], checkpoint_dir=ckpt)
+    fresh = build_sketch(df, factory, cols=["k"])
+    assert res.sketch.KIND == b"BLM3" and res.n_rows == n
+    assert np.array_equal(res.sketch.words, fresh.sketch.words)
+    kinds = {bytes(b)[4:8] for b in spark.read.parquet(ckpt).toPandas()["blob"]}
+    assert kinds == {b"BLM3"}
+
+
 def test_token_array_ingestion(spark):
     # build over exploded-free array<int> column
     rows = [(i, list(range(i % 5))) for i in range(1000)]

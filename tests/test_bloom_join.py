@@ -193,8 +193,9 @@ def test_engine_dispatch(spark, xy):
 
 
 def test_auto_engine_prefers_native_without_metrics(spark):
-    """auto → native when nothing needs the sketch engine; auto → bloom
-    whenever row metrics (default) or checkpointed resume are requested."""
+    """auto → native unless checkpointed resume is requested: row
+    metrics come from an Observation, which the native engine carries
+    as well, and land after an action."""
     x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
     y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
     _, rep = bloom_join(
@@ -202,8 +203,13 @@ def test_auto_engine_prefers_native_without_metrics(spark):
         return_report=True,
     )
     assert rep.engine == "native"
-    _, rep2 = bloom_join(x, y, on="id", force_prefilter=True, return_report=True)
-    assert rep2.engine == "bloom"
+    got, rep2 = bloom_join(x, y, on="id", force_prefilter=True, return_report=True)
+    assert rep2.engine == "native"
+    assert rep2.finalize().probe_rows_before is None  # no action yet
+    assert got.count() == 800
+    rep2.finalize()
+    assert rep2.probe_rows_before == 8_000
+    assert 800 <= rep2.probe_rows_after < 8_000
 
 
 def test_validation_errors(spark, xy):
@@ -591,6 +597,8 @@ def test_auto_mode_native_fallback_is_observable(spark, monkeypatch):
 
     monkeypatch.setattr(bj, "_native_build_filter", boom)
     monkeypatch.setattr(bj, "_native_fallback_warned", False)
+    # a large build side: only there does the native engine build in Spark
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 100)
     x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
     y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
 
@@ -751,3 +759,128 @@ def test_sizing_persist_released_when_build_raises(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="build failed"):
         bloom_join(x, y, on="id", engine="bloom", force_prefilter=True)
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_spark_bytes_match_jvm_bloom_filter(spark):
+    """The sketch layout IS Spark's BloomFilterImplV2: a sketch's
+    ``to_spark_bytes`` equals the JVM ``BloomFilter.create(n, m)`` +
+    ``putLong`` bytes over the same keys, and ``contains_hashes`` equals
+    ``mightContainLong``."""
+    import numpy as np
+
+    from bloomjoin_spark.sketches import BloomSketch
+
+    rng = np.random.default_rng(11)
+    keys = rng.integers(-(2**63), 2**63 - 1, 2_000, dtype=np.int64)
+    bf = BloomSketch(2_000, 0.01)
+    bf.update_hashes(keys.view(np.uint64))
+    jbf = spark.sparkContext._jvm.org.apache.spark.util.sketch.BloomFilter.create(
+        2_000, bf.m
+    )
+    for k in keys.tolist():
+        jbf.putLong(k)
+    bos = spark.sparkContext._jvm.java.io.ByteArrayOutputStream()
+    jbf.writeTo(bos)
+    assert bytes(bos.toByteArray()) == bf.to_spark_bytes()
+    probe = np.concatenate([keys[:200], rng.integers(-(2**63), 2**63 - 1, 800)])
+    got = bf.contains_hashes(probe.view(np.uint64))
+    assert got.tolist() == [jbf.mightContainLong(v) for v in probe.tolist()]
+
+
+def test_hinted_small_native_call_runs_one_job(spark):
+    """A hinted native call over a small build side runs exactly ONE job
+    before it returns: the bounded collect, then a driver build — no
+    two-job stat.bloomFilter."""
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    sc = spark.sparkContext
+    group = "hinted_small_native_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got, rep = bloom_join(
+            x, y, on="id", force_prefilter=True, collect_metrics=False,
+            n_hint={"y": 800}, return_report=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert rep.engine == "native" and rep.used_prefilter
+    assert (rep.n_build, rep.build_distinct_estimate) == (800, 800)
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+def test_native_large_lane_selectivity_check_on_driver(spark, monkeypatch):
+    """A Spark-built filter (stat.bloomFilter, m not a power of two) is
+    loaded on the driver for the sampled selectivity check; full overlap
+    still skips the prefilter, and the skipped call reports no engine."""
+    bj = _bj_module()
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 100)
+    calls = []
+    real = bj.BloomSketch.from_spark_bytes
+
+    def spy(blob):
+        calls.append(len(blob))
+        return real(blob)
+
+    monkeypatch.setattr(bj.BloomSketch, "from_spark_bytes", spy)
+    x = spark.range(0, 20_000).withColumn("vx", F.col("id"))
+    y = spark.range(0, 20_000).withColumn("vy", F.col("id"))
+    with _no_broadcast_gate(spark):
+        got, rep = bloom_join(
+            x, y, on="id", how="inner", engine="native", return_report=True
+        )
+    assert len(calls) == 1
+    assert not rep.used_prefilter and rep.engine == "none"
+    assert any("expected reduction" in r for r in rep.skip_reasons)
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
+def test_skipped_prefilter_reports_engine_none(spark):
+    """No filter ran, so no engine is reported."""
+    x = spark.range(0, 200_000).withColumn("vx", F.col("id"))
+    y = spark.range(0, 1000).withColumn("vy", F.col("id"))
+    _, rep = bloom_join(x, y, on="id", how="inner", return_report=True)
+    assert not rep.used_prefilter and rep.engine == "none"
+
+
+def test_observation_state_does_not_grow(spark):
+    """20 metric-collecting calls, each consumed and finalized, leave no
+    pending Observation in the session and add no listener (earlier
+    tests may leave both counts above zero, or drop a listener)."""
+    jsess = spark._jsparkSession
+    om = jsess.observationManager()
+    field = om.getClass().getDeclaredField("observations")
+    field.setAccessible(True)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    x = spark.range(0, 4_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(1_000, 1_400).withColumn("vy", F.col("id") * 3)
+    before = (field.get(om).size(), bus.listeners().size())
+    for _ in range(20):
+        got, rep = bloom_join(x, y, on="id", force_prefilter=True, return_report=True)
+        assert got.count() == 400
+        assert rep.finalize().probe_rows_before == 4_000
+    assert field.get(om).size() <= before[0]
+    assert bus.listeners().size() <= before[1]
+
+
+def test_sketch_engine_probe_drift_uses_pandas_probe(spark, monkeypatch):
+    """Private-API drift in the codegen probe also degrades the sketch
+    engine, to the broadcast pandas probe, and the report records it."""
+    bj = _bj_module()
+
+    def boom(*a, **kw):
+        raise RuntimeError("ExpressionUtils moved")
+
+    monkeypatch.setattr(bj, "_native_might_contain", boom)
+    monkeypatch.setattr(bj, "_native_fallback_warned", True)  # already warned
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    got, rep = bloom_join(
+        x, y, on="id", engine="bloom", force_prefilter=True, return_report=True
+    )
+    assert rep.engine == "bloom" and rep.used_prefilter
+    assert "ExpressionUtils moved" in rep.engine_fallback_reason
+    assert "ArrowEvalPython" in got._jdf.queryExecution().executedPlan().toString()
+    assert_df_equal(got, x.join(y, "id", "inner"))
+    assert rep.finalize().probe_rows_before == 8_000

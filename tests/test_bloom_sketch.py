@@ -246,3 +246,62 @@ def test_format_bloom_params():
     s = format_bloom_params(p)
     assert "n (expected keys): 1,000,000" in s
     assert "hashes (k):" in s and "achieved FPR:" in s and "bits per key:" in s
+
+
+# a dense BLM2 blob (splitmix64 layout) written by the previous release:
+# BloomSketch(200, 0.01) over hash_int64(arange(200)); m=2048, k=7.  Its
+# false positives over hash_int64(arange(200, 20200)) numbered 155.
+_BLM2_HEX = (
+    "424a534b424c4d321e010000000000000008000000000000070000007b14ae47e17a843f"
+    "00c800000000000000008af6325da3d7f501d6c2bfa8839d78a9cb1480b68c077d7558cb"
+    "0e0219c69c84493bc725718f1acc1b0ed1dbebecbf409836d368319298269b339d814772"
+    "d689650ebc324fdbe3e2729566cc7e3f4af12f6e1a9ef54f2f07c3d157eca43477e03a3a"
+    "1cad4d531de9f4a6a98599b15a7a25f45088cbdf93f43ba531a426c86b1fe29199e3d6fa"
+    "18256e214b512d8ffc18279a46005056c4647115c71eeffe073131ab83d4b143a99d76b3"
+    "58736dac2c275738f936aef33812e647c5b22baf30a95873f9e478216b507ca32b361a0b"
+    "3c27fe119445c883497f426f49ee020c6c1825eaaf6e50c0d57b02c00220561d6410a790"
+    "0e48679c79bed6a703361ecd09a1"
+)
+
+
+def test_blm2_blob_keeps_its_layout():
+    """A dense BLM2 blob loads, probes with its original positions (zero
+    false negatives, the same false positives as when it was written),
+    re-serializes as BLM2, and refuses to merge with a BLM3 sketch."""
+    old = Sketch.from_bytes(bytes.fromhex(_BLM2_HEX))
+    assert isinstance(old, BloomSketch) and (old.m, old.k) == (2048, 7)
+    assert old.contains_hashes(_hashes(0, 200)).all()
+    assert int(old.contains_hashes(_hashes(200, 20_200)).sum()) == 155
+    assert old.to_bytes()[4:8] == b"BLM2"
+    assert np.array_equal(Sketch.from_bytes(old.to_bytes()).words, old.words)
+    new = BloomSketch(200, 0.01)
+    new.update_hashes(_hashes(0, 200))
+    assert (new.m, new.k) == (old.m, old.k)
+    with pytest.raises(ValueError, match="bit layouts"):
+        new.merge(old)
+    with pytest.raises(ValueError, match="bit layouts"):
+        BloomSketch.empty_like(old).merge(new)
+    with pytest.raises(ValueError, match="no Spark bit layout"):
+        old.to_spark_bytes()
+
+
+def test_spark_bytes_roundtrip_and_header():
+    """``to_spark_bytes`` writes Spark's V2 header (version 2, k, seed 0,
+    word count) then big-endian words; ``from_spark_bytes`` reads it
+    back, also for Spark's non-power-of-two m."""
+    import struct
+
+    bf = BloomSketch(5000, 0.01)
+    bf.update_hashes(_hashes(0, 5000))
+    blob = bf.to_spark_bytes()
+    assert struct.unpack(">iiii", blob[:16]) == (2, bf.k, 0, bf.m // 64)
+    assert len(blob) == 16 + bf.m // 8
+    back = BloomSketch.from_spark_bytes(blob)
+    assert np.array_equal(back.words, bf.words)
+    probe = _hashes(2500, 7500)
+    assert np.array_equal(back.contains_hashes(probe), bf.contains_hashes(probe))
+    # a 3-word filter (m = 192, not a power of two): positions are c mod m
+    odd = BloomSketch.from_spark_bytes(blob[:12] + struct.pack(">i", 3) + blob[16:40])
+    assert odd.m == 192 and not odd._pow2
+    with pytest.raises(ValueError, match="V2"):
+        BloomSketch.from_spark_bytes(struct.pack(">ii", 1, 3) + blob[8:])

@@ -7,7 +7,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, assert_df_equal
 
 
 def _plan(df) -> str:
@@ -17,9 +17,7 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_probe_is_vectorized_and_pre_exchange(spark):
-    from bloomjoin_spark import bloom_join
-
+def _lineitem_and_sub(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
@@ -28,25 +26,69 @@ def test_probe_is_vectorized_and_pre_exchange(spark):
         .filter(F.col("p_partkey") % 10 == 0)
         .select("p_partkey", "p_name")
     )
-    plan = _plan(
-        bloom_join(
-            li, sub, on={"l_partkey": "p_partkey"}, how="inner",
-            force_prefilter=True, collect_metrics=False, engine="bloom",
-        )
+    return li, sub
+
+
+def _no_exchange_below(tree: list[str], node_idx: int) -> bool:
+    """No Exchange between the tree line ``node_idx`` and the first
+    probe-side parquet scan below it."""
+    scan_idx = next(
+        i for i, l in enumerate(tree[node_idx:], node_idx) if "Scan parquet" in l
     )
+    return "Exchange" not in "\n".join(tree[node_idx:scan_idx])
+
+
+def test_probe_is_vectorized_and_pre_exchange(spark, monkeypatch):
+    """A filter above the codegen cap gets the broadcast pandas probe:
+    vectorized, and in the same pre-exchange block as the probe scan."""
+    import importlib
+
+    from bloomjoin_spark import bloom_join
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 16)  # header only
+    li, sub = _lineitem_and_sub(spark)
+    out = bloom_join(
+        li, sub, on={"l_partkey": "p_partkey"}, how="inner",
+        force_prefilter=True, collect_metrics=False, engine="bloom",
+    )
+    plan = _plan(out)
     # vectorized Arrow probe, never row-at-a-time Python
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
-    # the probe runs in the same pre-exchange block as the probe scan:
     # in the tree section the ArrowEvalPython line is below the join and
     # above the probe-side Scan, with no Exchange between them
     tree = plan.split("\n\n")[0].splitlines()
     probe_idx = next(i for i, l in enumerate(tree) if "ArrowEvalPython" in l)
-    scan_idx = next(
-        i for i, l in enumerate(tree[probe_idx:], probe_idx) if "Scan parquet" in l
+    assert _no_exchange_below(tree, probe_idx)
+    assert_df_equal(out, li.join(sub, li.l_partkey == sub.p_partkey, "inner"))
+
+
+def test_under_cap_probe_is_codegen_and_pre_exchange(spark):
+    """engine='bloom' with a filter under the cap: the probe is the
+    codegen BloomFilterMightContain over the sketch's Spark bytes — zero
+    Python operators — still before the exchange, and the output exact."""
+    from bloomjoin_spark import bloom_join
+    from bloomjoin_spark.plans import plan_audit
+
+    li, sub = _lineitem_and_sub(spark)
+    out, rep = bloom_join(
+        li, sub, on={"l_partkey": "p_partkey"}, how="inner",
+        force_prefilter=True, collect_metrics=False, engine="bloom",
+        return_report=True,
     )
-    between = "\n".join(tree[probe_idx:scan_idx])
-    assert "Exchange" not in between
+    assert rep.engine == "bloom" and rep.engine_fallback_reason is None
+    assert plan_audit(out).python_operators == []
+    plan = _plan(out)
+    # the Filter node whose condition is the probe, located in the tree
+    node = next(
+        b.split()[0] for b in plan.split("\n\n")
+        if b.split()[1:2] == ["Filter"] and "might_contain" in b
+    )
+    tree = plan.split("\n\n")[0].splitlines()
+    probe_idx = next(i for i, l in enumerate(tree) if f"Filter {node}" in l)
+    assert _no_exchange_below(tree, probe_idx)
+    assert_df_equal(out, li.join(sub, li.l_partkey == sub.p_partkey, "inner"))
 
 
 def test_auto_engine_is_all_jvm_without_metrics(spark):

@@ -153,7 +153,7 @@ def test_set_bits_matches_probe_matrix(n, nh):
     new.seal()
     ref = BloomSketch(n, 0.01)
     ref._sparse = None
-    idx = _probe_matrix(np.unique(h), ref.k, ref.mask)
+    idx = _probe_matrix(np.unique(h), ref.k, ref.m)
     bools = np.zeros(ref.m, dtype=bool)
     bools[idx.ravel()] = True
     packed = np.packbits(bools, bitorder="little")
