@@ -1,9 +1,18 @@
 """Two-phase distributed sketch aggregation.
 
 Phase 1 (executors): one sketch partial per input partition, built
-inside ``mapInPandas`` — Arrow batches in, numpy hashing, zero per-row
-Python. Each partial travels as one row ``(partition_id, n_rows,
-fingerprint, blob)``.
+inside ``mapInArrow`` / ``mapInPandas`` — Arrow batches in, numpy
+hashing, zero per-row Python. Each partial travels as one row
+``(partition_id, n_rows, fingerprint, blob)``. Every partial stage
+goes through :func:`partial_stage`. A cached input is narrowed
+(``coalesce``, no shuffle) to ⌈plan bytes / ``_PY_TASK_BYTES``⌉ Python
+tasks, because a Python task costs a fixed ~0.25 CPU-s before any
+hashing; its input partition id rides in as a leading ``__pid``
+column, and each task streams its input partitions one after another
+and builds one partial per run of equal ``__pid``, so partials,
+fingerprints and blobs are the same as with one task per partition.
+Any other input (file scans, whose size is only estimated) runs one
+task per input partition.
 
 Phase 2 (tree merge): while more partials remain than ``fanin``, group
 them ``pmod(partition_id, ngroups)`` and OR/max/add-merge each group in
@@ -13,8 +22,9 @@ treeAggregate shape — at 100k input partitions the driver never holds
 
 Lineage / resume: partials can be checkpointed to parquet keyed by
 partition id + content fingerprint; a re-run recomputes ONLY missing
-partition ids (tasks for done partitions yield without consuming their
-input iterator, so the columnar scan for them is never materialized).
+partition ids (a resume runs one task per input partition, and tasks
+for done partitions yield without consuming their input iterator, so
+the columnar scan for them is never materialized).
 
 Reference analog: ``rcpp_filter_keys`` builds one global filter in one
 pass (``/root/reference/src/BloomFilter.cpp:85-165``); merge-order
@@ -23,11 +33,13 @@ invariance of our partials is what guarantees the same global sketch.
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import warnings
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -62,6 +74,188 @@ _ARROW_NUMERIC = {
     "float", "double", "short", "byte",
 }
 _ARROW_FAST = _ARROW_NUMERIC | {"string"}
+
+#: plan bytes one partial-building Python task covers: a task costs
+#: ~0.25 CPU-s before any hashing and the token lanes ~0.19 CPU-s per
+#: plan-MB, so a full task's fixed cost would be ~2% of its work
+#: (extrapolated from 4-15 MB inputs, docs/PLANS.md §33).  Applied to
+#: cached inputs only, the one traffic it was measured on.
+_PY_TASK_BYTES = 64 << 20
+
+#: Catalyst's "unknown" sizeInBytes (Long.MaxValue) and anything above it
+_UNKNOWN_SIZE = (1 << 63) - 1
+
+
+def _input_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df``'s physical plan, read without a job;
+    None for an adaptive plan, whose count only running it would tell."""
+    try:
+        if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+            return None
+        return df.rdd.getNumPartitions()
+    except Exception:
+        return None
+
+
+def _python_tasks(df: DataFrame, n_in: int) -> int:
+    """``min(n_in, ⌈plan sizeInBytes / _PY_TASK_BYTES⌉)`` for a plan
+    that reads only cached relations; ``n_in`` for any other plan and
+    when the stats are unknown or overflow.  A file scan's size is an
+    estimate from default column widths, and merging its splits would
+    merge the scan itself, so it keeps one task per partition."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        if any(
+            leaves.apply(i).nodeName() != "InMemoryRelation"
+            for i in range(leaves.size())
+        ):
+            return n_in
+        size = int(plan.stats().sizeInBytes())
+    except Exception:
+        return n_in
+    if size >= _UNKNOWN_SIZE:
+        return n_in
+    return min(n_in, max(1, -(-size // _PY_TASK_BYTES)))
+
+
+def _cut(chunk, lo: int, hi: int, pandas: bool):
+    return chunk.iloc[lo:hi] if pandas else chunk.slice(lo, hi - lo)
+
+
+def _concat(parts: list, pandas: bool):
+    if len(parts) == 1:
+        return parts[0]
+    if pandas:
+        return pd.concat(parts, ignore_index=True)
+    import pyarrow as pa
+
+    return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+
+
+def _pid_runs(it, pandas: bool, batch_rows: int):
+    """``(pid, chunk)`` pairs of a ``__pid``-led Arrow or pandas stream;
+    each chunk holds one pid's rows without the ``__pid`` column.
+
+    A coalesced task's batches straddle partition boundaries, so a
+    partition's rows are re-cut into ``batch_rows``-row chunks counted
+    from its first row: the batches it arrives in with a task of its
+    own, which keeps batch-dependent sketch state (Bloom ``n_added``,
+    t-digest and KLL compaction) identical.  At most two incoming
+    batches are held; when they do not add up to ``batch_rows`` (Spark
+    cut them by bytes, or the partition ended) they go out as one."""
+    cur, pend, n_pend = None, [], 0
+    for chunk in it:
+        if len(chunk) == 0:
+            continue
+        pids = (chunk["__pid"] if pandas else chunk.column(0)).to_numpy()
+        data = chunk.iloc[:, 1:] if pandas else chunk.drop_columns(["__pid"])
+        cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
+        for lo, hi in zip([0, *cuts], [*cuts, len(pids)]):
+            if pids[lo] != cur:
+                if pend:
+                    yield cur, _concat(pend, pandas)
+                cur, pend, n_pend = int(pids[lo]), [], 0
+            pend.append(_cut(data, lo, hi, pandas))
+            n_pend += hi - lo
+            while 0 < batch_rows <= n_pend:
+                whole = _concat(pend, pandas)
+                yield cur, _cut(whole, 0, batch_rows, pandas)
+                n_pend -= batch_rows
+                pend = [_cut(whole, batch_rows, len(whole), pandas)] if n_pend else []
+            if len(pend) > 1:
+                yield cur, _concat(pend, pandas)
+                pend, n_pend = [], 0
+    if pend:
+        yield cur, _concat(pend, pandas)
+
+
+def _uncounted(out, pandas: bool):
+    """``out`` with ``n_partials`` 0: a marker, not an input partition."""
+    if pandas:
+        return out.assign(n_partials=0)
+    import pyarrow as pa
+
+    i = out.schema.get_field_index("n_partials")
+    return out.set_column(i, "n_partials", pa.array([0] * out.num_rows, pa.int64()))
+
+
+def _per_partition(
+    build, pandas: bool, batch_rows: int, done_ids: frozenset[int], coalesced: bool
+):
+    """The ``mapInArrow`` / ``mapInPandas`` function around
+    ``build(pid, chunks)``.
+
+    One task per input partition: ``build`` runs once with the task's
+    partition id, also on a partition without rows, and a partition in
+    ``done_ids`` returns before pulling its input, so a resume never
+    scans the done partitions.
+
+    Coalesced: ``build`` runs once per run of equal ``__pid``.  A
+    coalesced task reads its input partitions one after another, so
+    each run is contiguous and streams through without buffering.  An
+    input partition without rows leaves no partial; a task that saw no
+    rows at all emits one empty partial under the negative id
+    ``-1 - task`` with ``n_partials`` 0, so every call writes at least
+    one partial row (a store snapshot re-ingested empty is replaced)
+    and no input partition is counted twice."""
+
+    def fn(it):
+        tc = TaskContext.get()
+        task = tc.partitionId() if tc is not None else -1
+        if not coalesced:
+            if task not in done_ids:
+                yield from build(task, it)
+            return
+        seen = False
+        runs = _pid_runs(it, pandas, batch_rows)
+        for pid, run in itertools.groupby(runs, key=itemgetter(0)):
+            seen = True
+            yield from build(pid, (chunk for _, chunk in run))
+        if not seen:
+            for out in build(-1 - task, iter(())):
+                yield _uncounted(out, pandas)
+
+    return fn
+
+
+def partial_stage(
+    df: DataFrame,
+    keep: list[str],
+    build: Callable,
+    schema: str,
+    pandas: bool = False,
+    done_ids: frozenset[int] = frozenset(),
+) -> tuple[DataFrame, int | None]:
+    """The one Python stage every sketch-partial build goes through;
+    ``build(pid, chunks)`` yields one input partition's partial rows.
+
+    A cached input of ``P`` partitions (and no ``done_ids``) is
+    narrowed (``coalesce``: no shuffle, no extra job) to ``min(P,
+    ⌈plan bytes / _PY_TASK_BYTES⌉)`` Python tasks, with the input
+    partition id riding in as a leading ``__pid`` column; every other
+    input runs one task per partition, and a resume skips the
+    partitions in ``done_ids`` without scanning them.  See
+    :func:`_per_partition` for the partials each lane emits.
+
+    Returns ``(partials, P)``; ``P`` is None for an adaptive plan, which
+    keeps one task per partition."""
+    staged = df.select(*keep)
+    n_in = _input_partitions(staged)
+    n_tasks = n_in
+    if n_in and not done_ids:
+        n_tasks = _python_tasks(staged, n_in)
+    coalesced = n_tasks is not None and n_tasks < n_in
+    if coalesced:
+        staged = df.select(F.spark_partition_id().alias("__pid"), *keep)
+        staged = staged.coalesce(n_tasks)
+    batch_rows = int(
+        df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    fn = _per_partition(build, pandas, batch_rows, done_ids, coalesced)
+    if pandas:
+        return staged.mapInPandas(fn, schema=schema), n_in
+    return staged.mapInArrow(fn, schema=schema), n_in
 
 
 @dataclass
@@ -98,18 +292,13 @@ def make_partial_fn(
     cols: list[str] | None = None,
     token_col: str | None = None,
     prehashed: bool = False,
-    done_ids: frozenset[int] = frozenset(),
     drop_nulls: bool = True,
 ):
-    """Build the mapInPandas function producing one partial row per
-    partition. Top-level so cloudpickle ships only small state."""
+    """Build the pandas-lane builder ``(pid, batches)`` → one partial
+    row for :func:`partial_stage`. Top-level so cloudpickle ships only
+    small state."""
 
-    def partial_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        if pid in done_ids:
-            # resume fast-path: yield nothing, never consume the scan
-            return
+    def partial_fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sk = factory()
         consumes = getattr(sk, "CONSUMES", "hashes")
         n = 0
@@ -169,7 +358,6 @@ def make_partial_fn_arrow(
     factory: Callable[[], Sketch],
     token_col: str | None = None,
     prehashed: bool = False,
-    done_ids: frozenset[int] = frozenset(),
 ):
     """Arrow-native partial builder (``mapInArrow``) for the hot cases:
     prehashed int64 keys, ``array<int>`` token columns, single numeric
@@ -180,11 +368,7 @@ def make_partial_fn_arrow(
     concurrent workers)."""
     import pyarrow as pa
 
-    def partial_fn(it):
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        if pid in done_ids:
-            return
+    def partial_fn(pid, it):
         sk = factory()
         consumes = getattr(sk, "CONSUMES", "hashes")
         n = 0
@@ -394,9 +578,7 @@ def make_grouped_partial_fn(
     each row's item counts ``weight`` times instead of once; rows whose
     weight is NULL are skipped (a NULL weight carries no mass)."""
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
+    def fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sks: dict = {}
         counts: dict = {}
         fps: dict = {}
@@ -453,9 +635,7 @@ def make_grouped_partial_fn_arrow(
 
     consumes = getattr(factory(), "CONSUMES", "hashes")
 
-    def fn(it):
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
+    def fn(pid, it):
         sks: dict = {}
         counts: dict = {}
         fps: dict = {}
@@ -630,10 +810,10 @@ def grouped_sketch_partials(
         )
     )
     if arrow_ok:
-        afn = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col)
-        return df.select(*keep).mapInArrow(afn, schema=schema)
-    fn = make_grouped_partial_fn(factory, group_col, cols, token_col, weight_col)
-    return df.select(*keep).mapInPandas(fn, schema=schema)
+        build = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col)
+    else:
+        build = make_grouped_partial_fn(factory, group_col, cols, token_col, weight_col)
+    return partial_stage(df, keep, build, schema, pandas=not arrow_ok)[0]
 
 
 def grouped_sketch_estimates(
@@ -768,7 +948,6 @@ MULTI_PARTIAL_SCHEMA = (
 def make_multi_partial_fn_arrow(
     factories: dict[str, Callable[[], Sketch]],
     token_col: str,
-    done_ids: frozenset[int] = frozenset(),
 ):
     """One pass, MANY sketches (mapInArrow): the token column is
     flattened once, bincount-preaggregated once, and every sketch
@@ -777,11 +956,7 @@ def make_multi_partial_fn_arrow(
     math) dominates a 100 TB build."""
     import pyarrow as pa
 
-    def partial_fn(it):
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        if pid in done_ids:
-            return
+    def partial_fn(pid, it):
         sks = {name: f() for name, f in factories.items()}
         n = 0
         fp = np.uint64(0)
@@ -859,13 +1034,17 @@ def tree_merge_multi(
     column) and ``operators.profile.profile_table`` (one sketch set per
     COLUMN) — the driver never holds more than ~fanin blobs per name.
 
-    ``n_parts`` is the number of DISTINCT ``partition_id`` values (=
-    partials per name).  Callers whose partials come straight from the
-    source scan may omit it (the RDD partition count IS that number);
-    callers reading partials back from storage (checkpoint restore)
-    MUST pass it — there the RDD partition count reflects the parquet
-    layout, not the partial count, and under-counting would funnel
-    thousands of blobs into one merge task."""
+    ``n_parts`` is the number of input partitions (≥ the DISTINCT
+    ``partition_id`` values, = partials per name plus the empty
+    partitions that left none).  Callers whose partials come straight
+    from a one-task-per-partition scan may omit it (the RDD partition
+    count IS that number); callers of :func:`partial_stage`, whose
+    tasks are coalesced, and callers reading partials back from storage
+    (checkpoint restore) MUST pass it — there the RDD partition count
+    reflects the task or parquet layout, not the partial count, and
+    under-counting would funnel thousands of blobs into one merge task.
+    Each result's ``n_partitions`` is at least a given ``n_parts``."""
+    counted = n_parts or 0
     if n_parts is None:
         n_parts = partials.rdd.getNumPartitions()
     n_parts = max(1, n_parts)
@@ -882,7 +1061,7 @@ def tree_merge_multi(
         rounds += 1
     out: dict[str, BuildResult] = {}
     acc: dict[str, list] = {}
-    for r in cur.collect():
+    for r in sorted(cur.collect(), key=itemgetter("partition_id")):
         acc.setdefault(r["name"], []).append(r)
     for name, rows in acc.items():
         sk = None
@@ -894,7 +1073,8 @@ def tree_merge_multi(
             n_rows += r["n_rows"]
             orig += r["n_partials"]
         out[name] = BuildResult(
-            sketch=sk, n_partitions=orig, n_rows=n_rows, merge_rounds=rounds
+            sketch=sk, n_partitions=max(orig, counted), n_rows=n_rows,
+            merge_rounds=rounds,
         )
     return out, rounds
 
@@ -915,8 +1095,12 @@ def build_sketches(
     stamp = True  # fresh dirs get stamped; see marker_present note below
     if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
         stamp, done_ids = _resume_ids(spark, checkpoint_dir)
-    fn = make_multi_partial_fn_arrow(factories, token_col, done_ids)
-    partials = df.select(token_col).mapInArrow(fn, schema=MULTI_PARTIAL_SCHEMA)
+    partials, n_parts = partial_stage(
+        df, [token_col], make_multi_partial_fn_arrow(factories, token_col),
+        MULTI_PARTIAL_SCHEMA, done_ids=done_ids,
+    )
+    if n_parts is None:
+        n_parts = partials.rdd.getNumPartitions()
     if checkpoint_dir:
         partials.write.mode("append" if done_ids else "overwrite").parquet(
             checkpoint_dir
@@ -932,16 +1116,16 @@ def build_sketches(
         partials = spark.read.parquet(checkpoint_dir).dropDuplicates(
             ["name", "partition_id"]
         )
-    if checkpoint_dir:
         # restored partials: the parquet RDD layout says nothing about
         # how many partials exist per name — count the real ids (cheap
-        # distinct over KB-scale lineage rows)
-        true_parts = partials.select("partition_id").distinct().count()
-        out, rounds = tree_merge_multi(partials, fanin, n_parts=true_parts)
-    else:
-        out, rounds = tree_merge_multi(
-            partials, fanin, n_parts=df.rdd.getNumPartitions()
+        # distinct over KB-scale lineage rows; a negative id is an empty
+        # task's marker, not an input partition)
+        true_parts = (
+            partials.where(F.col("partition_id") >= 0)
+            .select("partition_id").distinct().count()
         )
+        n_parts = max(n_parts, true_parts)
+    out, rounds = tree_merge_multi(partials, fanin, n_parts=n_parts)
     # an input that produced no partial rows still yields every requested
     # sketch (empty), never a missing key
     for name, f in factories.items():
@@ -979,12 +1163,27 @@ def sketch_partials(
     prehashed: bool = False,
     done_ids: frozenset[int] = frozenset(),
 ) -> DataFrame:
-    """Phase 1: DataFrame of one partial row per input partition.
+    """Phase 1: DataFrame of one partial row per input partition (per
+    input partition that has rows when :func:`partial_stage` coalesces
+    a cached input); partitions in ``done_ids`` are skipped unscanned.
 
     Projects to only the key/token columns first so the parquet scan
     stays pruned (check ``ReadSchema`` in .explain).  Hot cases
     (prehashed keys, token arrays, one numeric column) run on the
     Arrow-native path — flat buffers, no per-row materialization."""
+    return _sketch_partials(df, factory, cols, token_col, prehashed, done_ids)[0]
+
+
+def _sketch_partials(
+    df: DataFrame,
+    factory: Callable[[], Sketch],
+    cols: list[str] | str | None,
+    token_col: str | None,
+    prehashed: bool,
+    done_ids: frozenset[int] = frozenset(),
+) -> tuple[DataFrame, int | None]:
+    """:func:`sketch_partials` plus the input partition count of
+    :func:`partial_stage`."""
     if isinstance(cols, str):
         cols = [cols]
     keep = list(cols) if cols else [token_col]
@@ -1001,8 +1200,8 @@ def sketch_partials(
                 f"vector-consuming sketches need an array<float> column; "
                 f"{cols[0]!r} is {dtypes.get(cols[0])!r}"
             )
-        afn = make_partial_fn_arrow(factory, None, False, done_ids)
-        return df.select(*keep).mapInArrow(afn, schema=PARTIAL_SCHEMA)
+        build = make_partial_fn_arrow(factory, None, False)
+        return partial_stage(df, keep, build, PARTIAL_SCHEMA, done_ids=done_ids)
     arrow_ok = (
         prehashed
         or token_col is not None
@@ -1013,21 +1212,32 @@ def sketch_partials(
         )
     )
     if arrow_ok:
-        afn = make_partial_fn_arrow(factory, token_col, prehashed, done_ids)
-        return df.select(*keep).mapInArrow(afn, schema=PARTIAL_SCHEMA)
-    fn = make_partial_fn(factory, cols, token_col, prehashed, done_ids)
-    return df.select(*keep).mapInPandas(fn, schema=PARTIAL_SCHEMA)
+        build = make_partial_fn_arrow(factory, token_col, prehashed)
+    else:
+        build = make_partial_fn(factory, cols, token_col, prehashed)
+    return partial_stage(
+        df, keep, build, PARTIAL_SCHEMA, pandas=not arrow_ok, done_ids=done_ids
+    )
 
 
-def tree_merge(partials: DataFrame, fanin: int = 64) -> tuple[Sketch, int, int, int]:
+def tree_merge(
+    partials: DataFrame,
+    fanin: int = 64,
+    n_parts: int | None = None,
+) -> tuple[Sketch, int, int, int]:
     """Phase 2. Returns (sketch, n_partitions, n_rows, rounds).
 
-    The round count is planned from PARTITION METADATA (one partial row
-    per input partition), not a count() action — the whole merge tree
-    plus the final collect executes as ONE Spark job, so the input is
-    scanned exactly once and no persist of the partials is needed.
-    Exact partial accounting rides in the ``n_partials`` column."""
-    n_parts = max(1, partials.rdd.getNumPartitions())  # metadata, no job
+    The round count is planned from PARTITION METADATA, not a count()
+    action — the whole merge tree plus the final collect executes as
+    ONE Spark job, so the input is scanned exactly once and no persist
+    of the partials is needed.  ``n_parts`` is the input partition
+    count (see :func:`tree_merge_multi`; default: the partials' own
+    partition count); ``n_partitions`` is at least a given ``n_parts``,
+    and exact partial accounting rides in the ``n_partials`` column."""
+    counted = n_parts or 0
+    if n_parts is None:
+        n_parts = partials.rdd.getNumPartitions()  # metadata, no job
+    n_parts = max(1, n_parts)
     cur = partials
     rounds = 0
     while n_parts > fanin:
@@ -1040,7 +1250,7 @@ def tree_merge(partials: DataFrame, fanin: int = 64) -> tuple[Sketch, int, int, 
         # localCheckpoint would cut lineage on long chains; rounds are few
         n_parts = ngroups
         rounds += 1
-    rows = cur.collect()
+    rows = sorted(cur.collect(), key=itemgetter("partition_id"))
     if not rows:
         raise ValueError("no partials produced (empty input with 0 partitions?)")
     acc: Sketch | None = None
@@ -1051,7 +1261,7 @@ def tree_merge(partials: DataFrame, fanin: int = 64) -> tuple[Sketch, int, int, 
         acc = s if acc is None else acc.merge(s)
         n_rows += r["n_rows"]
         orig_parts += r["n_partials"]
-    return acc, orig_parts, n_rows, rounds
+    return acc, max(orig_parts, counted), n_rows, rounds
 
 
 def build_sketch(
@@ -1074,7 +1284,9 @@ def build_sketch(
     stamp = True  # fresh dirs get stamped; see marker_present note below
     if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
         stamp, done_ids = _resume_ids(spark, checkpoint_dir)
-    partials = sketch_partials(df, factory, cols, token_col, prehashed, done_ids)
+    partials, n_in = _sketch_partials(
+        df, factory, cols, token_col, prehashed, done_ids
+    )
     if checkpoint_dir:
         if done_ids:
             partials.write.mode("append").parquet(checkpoint_dir)
@@ -1085,7 +1297,7 @@ def build_sketch(
         if stamp or not done_ids:
             _write_checkpoint_hash_format(spark, checkpoint_dir)
         partials = spark.read.parquet(checkpoint_dir).dropDuplicates(["partition_id"])
-    sketch, n_parts, n_rows, rounds = tree_merge(partials, fanin)
+    sketch, n_parts, n_rows, rounds = tree_merge(partials, fanin, n_in)
     return BuildResult(sketch=sketch, n_partitions=n_parts, n_rows=n_rows, merge_rounds=rounds)
 
 

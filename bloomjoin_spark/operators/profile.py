@@ -7,7 +7,9 @@ Two column-pruned scans, both distributed:
 1. exact counters (rows, nulls, min, max) in ONE whole-stage-codegen
    aggregation — these are cheap JVM aggregates, not worth moving into
    Python;
-2. ONE ``mapInArrow`` pass building an HLL per column and a t-digest
+2. ONE ``mapInArrow`` pass (``aggregate.partial_stage``: one partial
+   per input partition; a cached input runs ⌈plan bytes / target⌉
+   Python tasks) building an HLL per column and a t-digest
    per numeric column (shared per-batch arrays, canonical hash kernels
    from ``hashing`` — the same domains every other sketch consumer
    uses), whose partials ride the SAME ``MULTI_PARTIAL_SCHEMA`` tree
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, StringType
 
-from ..aggregate import MULTI_PARTIAL_SCHEMA, tree_merge_multi
+from ..aggregate import MULTI_PARTIAL_SCHEMA, partial_stage, tree_merge_multi
 from ..hashing import hash_numeric_array, hash_utf8_arrow
 from ..sketches import HllSketch, TDigestSketch
 
@@ -35,11 +37,7 @@ _SEP = "\x1f"  # name = column SEP kind inside the shared partial rows
 
 def _make_profile_partial_fn(cols: list[str], numeric: set[str], hll_p: int,
                              delta: int):
-    from pyspark import TaskContext
-
-    def fn(it):
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
+    def fn(pid, it):
         sks: dict[str, object] = {}
         for c in cols:
             sks[f"{c}{_SEP}hll"] = HllSketch(hll_p)
@@ -131,12 +129,9 @@ def profile_table(
     exact = df.agg(*aggs).first()
 
     # pass 2: sketches, one Arrow stage + shared tree merge
-    fn = _make_profile_partial_fn(cols, numeric, hll_p, delta)
-    pruned = df.select(*cols)
-    partials = pruned.mapInArrow(fn, schema=MULTI_PARTIAL_SCHEMA)
-    merged, _ = tree_merge_multi(
-        partials, fanin, n_parts=pruned.rdd.getNumPartitions()
-    )
+    build = _make_profile_partial_fn(cols, numeric, hll_p, delta)
+    partials, n_parts = partial_stage(df, cols, build, MULTI_PARTIAL_SCHEMA)
+    merged, _ = tree_merge_multi(partials, fanin, n_parts=n_parts)
 
     rows = []
     for c in cols:

@@ -40,6 +40,7 @@ from .aggregate import (
     PARTIAL_SCHEMA,
     grouped_sketch_partials,
     make_multi_partial_fn_arrow,
+    partial_stage,
     sketch_partials,
     tree_merge,
 )
@@ -62,7 +63,11 @@ def append_sketch_snapshot(
     """Scan ``df`` (the NEW rows only — never re-feed history) into
     sketch partials and write them under ``path`` as the ``snapshot``
     partition.  One partial row per (group,) input partition; with no
-    ``group_col`` the store is global.
+    ``group_col`` the store is global.  A cached ``df`` builds its
+    partials in fewer Python tasks (``aggregate.partial_stage``): there
+    an input partition without rows writes no row, and a task that saw
+    no rows writes one empty partial with a negative ``partition_id``
+    and ``n_partials`` 0, so an ungrouped ingest always writes a row.
 
     Idempotent per snapshot: dynamic partition overwrite replaces only
     ``snapshot=<snapshot>``, so a killed ingest is safely re-run and a
@@ -86,8 +91,8 @@ def append_sketch_snapshot(
                 "multi-sketch ingest over token_col — group_col is not "
                 "supported with it and token_col is required"
             )
-        fn = make_multi_partial_fn_arrow(dict(factory), token_col)
-        partials = df.select(token_col).mapInArrow(fn, schema=MULTI_PARTIAL_SCHEMA)
+        build = make_multi_partial_fn_arrow(dict(factory), token_col)
+        partials, _ = partial_stage(df, [token_col], build, MULTI_PARTIAL_SCHEMA)
     elif group_col is None:
         partials = sketch_partials(df, factory, cols, token_col)
     else:

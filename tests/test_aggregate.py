@@ -581,3 +581,202 @@ def test_grouped_topk_weighted_validation(spark):
     # weight_col without an item column is rejected up front
     with pytest.raises(ValueError, match="weight_col"):
         grouped_topk(df, "src", k=2, token_col="v", weight_col="w")
+
+
+# ---------------------------------------------------------------------------
+# partial_stage: one partial per input partition from ⌈bytes / target⌉
+# Python tasks
+# ---------------------------------------------------------------------------
+
+def _jobs_and_tasks(spark, group, fn):
+    """``(fn(), jobs, tasks per stage)`` of the Spark work ``fn`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    tasks = [
+        st.getStageInfo(s).numTasks
+        for j in jobs
+        for s in sorted(st.getJobInfo(j).stageIds)
+    ]
+    return out, len(jobs), tasks
+
+
+@pytest.fixture(scope="module")
+def cached_tokens(spark):
+    from bloomjoin_spark.datagen import token_table
+
+    toks = token_table(spark, 5_000, vocab=300, max_tok=16, num_partitions=4)
+    toks = toks.persist()
+    toks.count()
+    yield toks
+    toks.unpersist()
+
+
+def test_small_build_runs_one_python_task_per_call(spark, cached_tokens, monkeypatch):
+    """A 4-partition input far under ``_PY_TASK_BYTES`` builds in one
+    job whose one stage runs ONE Python task, on the Arrow lane
+    (``build_sketches``), the pandas lane (two key columns) and a
+    grouped lane — and still returns one partial per input partition,
+    with the same blobs as one task per partition."""
+    import bloomjoin_spark.aggregate as agg
+    from bloomjoin_spark import CmsSketch, HllSketch, build_sketches
+
+    facs = {
+        "hll": lambda: HllSketch(12),
+        "cms": lambda: CmsSketch(eps=1e-3, delta=1e-3),
+    }
+    calls = {
+        "suite": lambda: build_sketches(cached_tokens, facs, token_col="tokens"),
+        "pandas": lambda: build_sketch(
+            cached_tokens, lambda: HllSketch(12), cols=["source", "n_tok"]
+        ),
+        "grouped": lambda: agg.grouped_sketch_partials(
+            cached_tokens, lambda: HllSketch(10), "source", token_col="tokens"
+        ).collect(),
+    }
+
+    def blobs(name, out):
+        if name == "suite":
+            return {k: (r.n_partitions, r.n_rows, r.sketch.to_bytes())
+                    for k, r in out.items()}
+        if name == "pandas":
+            return out.n_partitions, out.n_rows, out.sketch.to_bytes()
+        return sorted((r["source"], r["partition_id"], r["n_rows"],
+                       r["fingerprint"], bytes(r["blob"])) for r in out)
+
+    got = {}
+    for name, call in calls.items():
+        out, n_jobs, tasks = _jobs_and_tasks(spark, f"one_task_{name}", call)
+        assert (n_jobs, tasks) == (1, [1]), (name, n_jobs, tasks)
+        got[name] = blobs(name, out)
+    assert got["suite"]["hll"][0] == got["suite"]["cms"][0] == 4
+    assert got["pandas"][0] == 4
+    assert {r[1] for r in got["grouped"]} == {0, 1, 2, 3}
+
+    monkeypatch.setattr(agg, "_PY_TASK_BYTES", 1)
+    for name, call in calls.items():
+        out, n_jobs, tasks = _jobs_and_tasks(spark, f"per_part_{name}", call)
+        assert (n_jobs, tasks) == (1, [4]), (name, n_jobs, tasks)
+        assert blobs(name, out) == got[name], name
+
+
+def test_empty_input_partitions_still_count(spark):
+    """``n_partitions`` counts input partitions without rows, and rows
+    and sketch bytes equal the sketch built locally from the same keys:
+    with one task per partition (an adaptive and a plain input, where
+    an empty partition emits an empty partial) and with one task for
+    all eight (a cached input, where it emits none)."""
+    import pandas as pd
+
+    from bloomjoin_spark import CmsSketch, HllSketch, build_sketches
+    from bloomjoin_spark.hashing import hash_series
+
+    keys = np.arange(3, dtype=np.int64)
+    factories = {
+        "hll": lambda: HllSketch(12),
+        "cms": lambda: CmsSketch(eps=1e-2, delta=1e-2),
+        "bloom": lambda: BloomSketch(16, 0.01),
+    }
+    want = {}
+    for name, f in factories.items():
+        sk = f()
+        for h in hash_series(pd.Series(keys)):
+            sk.update_hashes(np.array([h], dtype=np.uint64))
+        want[name] = sk.to_bytes()
+    cached = spark.range(0, 3, 1, 8).persist()
+    cached.count()
+    inputs = {
+        "adaptive": spark.range(0, 3).repartition(8),
+        "plain": spark.range(0, 3, 1, 8),
+        "cached": cached,
+    }
+    for how, base in inputs.items():
+        df = base.select(F.col("id").alias("k"))
+        for name, f in factories.items():
+            res = build_sketch(df, f, cols=["k"])
+            assert (res.n_partitions, res.n_rows) == (8, 3), (how, name)
+            assert res.sketch.to_bytes() == want[name], (how, name)
+        toks = base.select(F.array(F.col("id").cast("int")).alias("tokens"))
+        multi = build_sketches(toks, factories, token_col="tokens")
+        for name, r in multi.items():
+            assert (r.n_partitions, r.n_rows) == (8, 3), (how, name)
+            assert r.sketch.to_bytes() == want[name], (how, name)
+    # no rows at all (adaptive execution would prune an empty shuffle
+    # to zero partitions, so only the other plans have eight)
+    for how in ("plain", "cached"):
+        none = build_sketch(
+            inputs[how].select(F.col("id").alias("k")).where(F.col("k") < 0),
+            factories["hll"], cols=["k"],
+        )
+        assert (none.n_partitions, none.n_rows) == (8, 0), how
+        assert none.sketch.to_bytes() == factories["hll"]().to_bytes(), how
+    cached.unpersist()
+
+
+def test_file_scan_keeps_one_python_task_per_partition(spark, tmp_path):
+    """Only cached inputs are coalesced: a parquet scan far under
+    ``_PY_TASK_BYTES`` still runs one Python task per input split."""
+    from bloomjoin_spark import HllSketch
+
+    path = str(tmp_path / "keys")
+    spark.range(0, 4_000, 1, 4).write.parquet(path)
+    keys = spark.read.parquet(path)
+    n_in = keys.rdd.getNumPartitions()
+    res, n_jobs, tasks = _jobs_and_tasks(
+        spark, "file_scan", lambda: build_sketch(keys, lambda: HllSketch(12), cols=["id"])
+    )
+    assert (n_jobs, tasks) == (1, [n_in])
+    assert (res.n_partitions, res.n_rows) == (n_in, 4_000)
+
+
+@pytest.mark.parametrize("cached", [False, True])
+def test_partial_resume_across_file_layouts(spark, tmp_path, cached):
+    """A checkpoint of 6 partitions pruned to ids {0, 1, 2} and
+    rewritten one file per partition id (the one-task-per-partition
+    layout) resumes by computing exactly ids 3–5, and the result is
+    byte-identical to a fresh build for Bloom, HLL and CMS — also when
+    the fresh build ran all six partitions in one coalesced task."""
+    import shutil
+
+    from bloomjoin_spark import CmsSketch, HllSketch, build_sketches
+    from bloomjoin_spark.aggregate import _HASH_FORMAT_MARKER
+
+    toks = spark.range(0, 6_000, 1, 6).select(
+        F.array((F.col("id") % 701).cast("int"), (F.col("id") % 13).cast("int"))
+        .alias("tokens")
+    )
+    if cached:
+        toks = toks.persist()
+        toks.count()
+    facs = {
+        "bloom": lambda: BloomSketch(2_000, 0.01),
+        "hll": lambda: HllSketch(12),
+        "cms": lambda: CmsSketch(eps=1e-3, delta=1e-3),
+    }
+    full, pruned = str(tmp_path / "full"), str(tmp_path / "pruned")
+    build_sketches(toks, facs, token_col="tokens", checkpoint_dir=full)
+    lineage = spark.read.parquet(full)
+    assert lineage.count() == 18
+    for pid in (0, 1, 2):
+        (lineage.where(F.col("partition_id") == pid).coalesce(1)
+         .write.mode("append").parquet(pruned))
+    shutil.copy(f"{full}/{_HASH_FORMAT_MARKER}", pruned)
+
+    resumed = build_sketches(toks, facs, token_col="tokens", checkpoint_dir=pruned)
+    after = spark.read.parquet(pruned)
+    per_pid = {r["partition_id"]: r["count"]
+               for r in after.groupBy("partition_id").count().collect()}
+    assert per_pid == {pid: 3 for pid in range(6)}  # ids 3-5 appended once
+    fresh = build_sketches(toks, facs, token_col="tokens")
+    for name in facs:
+        assert resumed[name].sketch.to_bytes() == fresh[name].sketch.to_bytes(), name
+        assert resumed[name].n_partitions == fresh[name].n_partitions == 6
+        assert resumed[name].n_rows == fresh[name].n_rows == 6_000
+    if cached:
+        toks.unpersist()

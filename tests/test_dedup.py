@@ -446,7 +446,13 @@ def test_incremental_dedup_engine_dispatch(hist_and_batch):
     ArrowEvalPython probe); a provided filter keeps the mergeable
     sketch engine.  Both lanes produce identical output (the verify
     join removes every filter false positive; misses are exact under
-    any Bloom filter)."""
+    any Bloom filter).
+
+    The ``rep.engine == "native"`` assertion is an intentional canary:
+    the native probe needs Spark's private ``BloomFilterMightContain``
+    API, and when a Spark upgrade drifts that API the library degrades
+    to the sketch engine by design — this test is what makes the drift
+    visible."""
     from bloomjoin_spark.operators import (
         IncrementalDedupReport,
         build_history_filter,

@@ -97,6 +97,7 @@ def test_grouped_arrow_partials_match_pandas(spark, case):
     from bloomjoin_spark.aggregate import (
         grouped_sketch_partials,
         make_grouped_partial_fn,
+        partial_stage,
         PARTIAL_SCHEMA,
     )
     from bloomjoin_spark.sketches import CmsSketch, HllSketch, KllSketch
@@ -127,9 +128,9 @@ def test_grouped_arrow_partials_match_pandas(spark, case):
     token_col = kw.get("token_col")
     keep = ["g"] + (list(cols) if cols else [token_col])
     gtype = dict(df.dtypes)["g"]
-    pandas = df.select(*keep).mapInPandas(
-        make_grouped_partial_fn(factory, "g", cols, token_col, None),
-        schema=f"`g` {gtype}, {PARTIAL_SCHEMA}",
+    pandas, _ = partial_stage(
+        df, keep, make_grouped_partial_fn(factory, "g", cols, token_col, None),
+        f"`g` {gtype}, {PARTIAL_SCHEMA}", pandas=True,
     )
     am, pm = _partials_map(arrow), _partials_map(pandas)
     assert set(am) == set(pm)

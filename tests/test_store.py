@@ -92,6 +92,46 @@ def test_snapshot_rewrite_is_idempotent(spark, tmp_path):
     assert store.agg(F.sum("n_rows")).first()[0] == 1500
 
 
+@pytest.mark.parametrize("cached", [False, True])
+def test_empty_reingest_replaces_snapshot(spark, tmp_path, cached):
+    """Re-ingesting a snapshot with no rows replaces its partials — also
+    for a cached input, whose ingest runs fewer Python tasks than input
+    partitions — and the snapshot then merges to an empty sketch, for
+    the single- and the multi-sketch ingest."""
+    from bloomjoin_spark import CmsSketch
+
+    # four partitions without rows (an empty range or shuffle has zero
+    # partitions, and zero tasks write nothing at all)
+    empty = spark.range(0, 4, 1, 4).where(F.col("id") < 0).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.array(F.lit(1)).alias("tokens"),
+    )
+    full = _docs(spark, 0, 3000).select(
+        "doc_id", F.array(F.length("doc_id")).alias("tokens")
+    )
+    if cached:
+        empty, full = empty.persist(), full.persist()
+        empty.count(), full.count()
+    facs = {"hll": lambda: HllSketch(12), "cms": lambda: CmsSketch(0.01, 0.01)}
+    for kind, factory, kw in (
+        ("single", lambda: HllSketch(12), {"cols": ["doc_id"]}),
+        ("multi", facs, {"token_col": "tokens"}),
+    ):
+        path = str(tmp_path / kind)
+        append_sketch_snapshot(full, factory, path, "day1", **kw)
+        append_sketch_snapshot(empty, factory, path, "day1", **kw)
+        store = read_sketch_store(spark, path)
+        assert store.agg(F.sum("n_rows")).first()[0] == 0, kind
+        names = ["hll", "cms"] if kind == "multi" else [None]
+        for name in names:
+            part = store if name is None else store.where(F.col("name") == name)
+            want = (HllSketch(12) if name != "cms" else facs["cms"]()).to_bytes()
+            assert store_sketch(part).to_bytes() == want, (kind, name)
+    if cached:
+        empty.unpersist()
+        full.unpersist()
+
+
 def test_snapshot_filter(spark, tmp_path):
     path = str(tmp_path / "fstore")
     append_sketch_snapshot(
