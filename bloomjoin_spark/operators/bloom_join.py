@@ -17,15 +17,17 @@ pipeline, ``R/bloomjoin.R:62-124``):
    built by Spark's ``stat.bloomFilter`` (native engine) or streams once
    through ``mapInArrow``, one Bloom partial per partition, partials
    tree-merged by OR (sketch engine);
-3. every filter is in Spark's own bit layout (``sketches/bloom.py``),
+3. ``membership_filter`` — the one build-and-probe dispatch this
+   operator shares with ``bloom_join_stream``, decontam and spans —
+   keeps every filter in Spark's own bit layout (``sketches/bloom.py``),
    so one under ``_NATIVE_FILTER_CAP_BYTES`` probes as the JVM's
    ``BloomFilterMightContain`` inside whole-stage codegen, whatever the
-   engine; a larger one is broadcast and probed by a vectorized pandas
-   UDF.  Either way the probe runs BEFORE the join exchange, so dropped
-   rows are never shuffled — that is the whole point at 100 TB: the
-   shuffle is the bottleneck, and the filter costs ~10 bits/key
-   instead of shuffling the full probe side.  Row metrics come from
-   one ``Observation`` on the probe side;
+   engine built it, with no Python stage; only a larger one is broadcast
+   and probed by a pandas UDF.  Either way the probe runs BEFORE the
+   join exchange, so dropped rows are never shuffled — that is the
+   whole point at 100 TB: the shuffle is the bottleneck, and the filter
+   costs ~10 bits/key instead of shuffling the full probe side.  Row
+   metrics come from one ``Observation`` on the probe side;
 4. the surviving rows feed a completely ordinary ``df.join`` — Catalyst
    still picks broadcast/SMJ/SHJ, AQE still handles skew.
 
@@ -138,14 +140,38 @@ def _key64(df: DataFrame, cols: list[str], casts: list[str | None]) -> Column:
     return F.xxhash64(*exprs)
 
 
-def _make_probe_udf(bc):
+def segmented_any(hs: pd.Series, hit_fn) -> pd.Series:
+    """Per-row ANY over a batch of ``array<bigint>`` hash rows: flatten
+    the batch, run ``hit_fn(flat_int64) -> bool[]`` ONCE, then
+    segment-ANY via cumsum — the shared scaffolding of every vectorized
+    array membership probe (the above-cap Bloom probe here, the exact
+    hash-set probe in ``streaming.decontaminate_stream``).  NULL/empty
+    rows → False."""
+    lens = np.fromiter(
+        (0 if v is None else len(v) for v in hs), dtype=np.int64, count=len(hs)
+    )
+    if int(lens.sum()) == 0:
+        return pd.Series(np.zeros(len(hs), dtype=bool))
+    flat = np.concatenate(
+        [np.asarray(v, dtype=np.int64) for v in hs if v is not None and len(v)]
+    )
+    hit = np.asarray(hit_fn(flat), dtype=bool)
+    cs = np.concatenate([[0], np.cumsum(hit)])
+    ends = np.cumsum(lens)
+    return pd.Series(cs[ends] > cs[ends - lens])
+
+
+def _make_probe_udf(bc, array: bool = False):
     """Vectorized membership probe over the broadcast filter — the
-    fallback for a filter above the codegen cap.  ``bc.value``
-    unpickles the BloomSketch once per executor process."""
+    fallback for a filter above the codegen cap.  ``array=True`` probes
+    an ``array<bigint>`` column: True when ANY element hits.
+    ``bc.value`` unpickles the BloomSketch once per executor process."""
 
     @F.pandas_udf("boolean")
     def probe(h: pd.Series) -> pd.Series:
         bf: BloomSketch = bc.value
+        if array:
+            return segmented_any(h, lambda flat: bf.contains_hashes(flat.view(np.uint64)))
         return pd.Series(bf.contains_hashes(h.to_numpy(dtype=np.int64).view(np.uint64)))
 
     # nondeterministic stops Catalyst's constraint propagation from
@@ -153,6 +179,135 @@ def _make_probe_udf(bc):
     # the filter was built from those very keys, so it passes 100% there
     # and is pure wasted Python time
     return probe.asNondeterministic()
+
+
+class MembershipFilter:
+    """A built Bloom filter and its two probe predicates (see
+    :func:`membership_filter`): ``contains(col)`` over a bigint hash
+    column, ``any_in(arr)`` over an ``array<bigint>`` one (True when any
+    element may be a member).  Under ``_NATIVE_FILTER_CAP_BYTES`` both
+    are the codegen ``BloomFilterMightContain`` over ``blob``; above it,
+    or on private-API drift, both are the broadcast pandas probe."""
+
+    def __init__(self, spark, sketch: BloomSketch | None, blob: bytes | None,
+                 report, forced: bool, partitions: int, rounds: int):
+        #: the driver-held filter; None when Spark built it
+        self.sketch = sketch
+        #: Spark's serialized filter, the codegen literal; None above the cap
+        self.blob = blob
+        self.bits = sketch.m if sketch is not None else len(blob) * 8
+        self.partitions, self.rounds = partitions, rounds
+        self._spark, self._report, self._forced = spark, report, forced
+        self._bc = None
+
+    def driver_sketch(self) -> BloomSketch:
+        """The filter on the driver, loaded from ``blob`` when Spark
+        built it."""
+        if self.sketch is None:
+            self.sketch = BloomSketch.from_spark_bytes(self.blob)
+        return self.sketch
+
+    def contains(self, col: Column) -> Column:
+        return self._probe(col, array=False)
+
+    def any_in(self, arr: Column) -> Column:
+        return self._probe(arr, array=True)
+
+    def _probe(self, col: Column, array: bool) -> Column:
+        # a broadcast exists once the pandas probe is in use: after a
+        # drift fallback the codegen probe is not retried
+        if self.blob is not None and self._bc is None:
+            try:
+                if array:
+                    return F.exists(
+                        col, lambda h: _native_might_contain(self._spark, self.blob, h)
+                    )
+                return _native_might_contain(self._spark, self.blob, col)
+            except Exception as ex:  # private-API drift → pandas probe
+                _note_native_fallback(self._report, ex, self._forced)
+        if self._bc is None:
+            self._bc = self._spark.sparkContext.broadcast(self.driver_sketch().seal())
+        return _make_probe_udf(self._bc, array)(col)
+
+
+def membership_filter(
+    keyed: DataFrame, n: int, fpp: float, engine: str, report, *,
+    hashes: np.ndarray | None = None, fanin: int = 64,
+    checkpoint_dir: str | None = None,
+) -> MembershipFilter:
+    """Build a Bloom filter over the int64 ``__bj_key64`` column of
+    ``keyed``, sized for ``n`` distinct keys at ``fpp`` — the one
+    build-and-probe dispatch behind ``bloom_join``, ``bloom_join_stream``,
+    decontam and spans (the reference's single ``BloomFilter`` class,
+    ``src/BloomFilter.h:15-51``).
+
+    ``engine``: ``"auto"`` is ``"native"`` unless ``checkpoint_dir`` is
+    set.  ``"native"`` builds in Spark (``stat.bloomFilter``, one
+    treeAggregate, no Python); ``"bloom"`` builds one mergeable partial
+    per partition, tree OR-merged (the lane ``checkpoint_dir`` resumes).
+    A small build side's distinct key ``hashes`` are built on the driver
+    under either engine.  A native filter predicted or serialized above
+    ``_NATIVE_FILTER_CAP_BYTES``, or a native build that fails on
+    private-API drift, falls back to the sketch engine.  The fallback
+    warns on every call that asked for ``"native"``, once per session
+    under ``"auto"``.
+
+    Sets ``report.engine``, ``report.filter_bits`` and, on a fallback,
+    ``report.engine_fallback_reason`` (``report`` may be None), and
+    releases ``keyed`` if it is cached."""
+    forced = engine == "native"
+    if engine == "auto":
+        engine = "bloom" if checkpoint_dir else "native"
+    sketch = blob = None
+    parts, rounds = 1, 0
+    try:
+        if engine == "native":
+            try:
+                # n is known: check the cap before building, and after
+                _check_native_cap(
+                    _native_filter_bytes(n, fpp) if hashes is None
+                    else _spark_blob_bytes(bloom_sizing(n, fpp)[0]),
+                    "predicted",
+                )
+                if hashes is None:
+                    blob = _native_build_filter(keyed, n, fpp)
+                    _check_native_cap(len(blob), "serialized")
+            except Exception as ex:  # private-API drift / size gate → sketch engine
+                _note_native_fallback(report, ex, forced)
+                engine, blob = "bloom", None
+        if blob is None:
+            if hashes is not None:
+                sketch = BloomSketch(n, fpp)
+                sketch.update_hashes(hashes)
+            else:
+                res = build_sketch(
+                    keyed, factory=lambda: BloomSketch(n, fpp), cols=["__bj_key64"],
+                    prehashed=True, fanin=fanin, checkpoint_dir=checkpoint_dir,
+                )
+                sketch, parts, rounds = res.sketch, res.n_partitions, res.merge_rounds
+            if _spark_blob_bytes(sketch.m) <= _NATIVE_FILTER_CAP_BYTES:
+                blob = sketch.to_spark_bytes()
+            # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit
+            # cap of the reference becomes a practical broadcast warning —
+            # a filter bigger than ~512 MB should be rethought (higher
+            # fpp, or let the join shuffle), not silently shipped to
+            # every executor
+            if sketch.m // 8 > _BROADCAST_BUDGET_BYTES:
+                warnings.warn(
+                    f"bloom filter is {sketch.m >> 23} MiB (n={n}, fpp={fpp}) — "
+                    f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast "
+                    "budget; consider a larger fpp, an n_hint, or skipping the "
+                    "prefilter",
+                    stacklevel=3,
+                )
+    finally:
+        if keyed.is_cached:
+            keyed.unpersist()
+    mf = MembershipFilter(keyed.sparkSession, sketch, blob, report, forced, parts, rounds)
+    if report is not None:
+        report.engine = engine
+        report.filter_bits = mf.bits
+    return mf
 
 
 def bloom_join(
@@ -194,7 +349,9 @@ def bloom_join(
     partials (required for ``checkpoint_dir``); ``"auto"`` is native
     unless ``checkpoint_dir`` is set.  Small build sides are built on the
     driver and every filter under ``_NATIVE_FILTER_CAP_BYTES`` probes in
-    the JVM under either engine.
+    the JVM under either engine (``membership_filter``).  A native
+    filter that falls back to the sketch engine warns on every
+    ``"native"`` call and once per session under ``"auto"``.
 
     Memory-starved executors + a filter above the cap: the pandas probe
     is an ArrowEvalPython stage that queues FULL-WIDTH probe rows while
@@ -317,70 +474,22 @@ def bloom_join(
         out = _standard_join(x, y, pairs, how)
         return (out, report) if return_report else out
 
-    # ---- engine='auto' is the native engine unless checkpointed resume
-    # (mergeable partials) needs the sketch engine.  Both engines probe
-    # any filter under the cap with the codegen expression, and a small
-    # build side is built on the driver either way; they differ only in
-    # how a large build side is built.  Failures below fall back to the
-    # sketch engine with a warning.
-    if engine == "auto":
-        engine = "bloom" if checkpoint_dir else "native"
-
-    # ---- engine='native', large build side: all-JVM build
-    # (stat.bloomFilter, one treeAggregate) over the SAME canonical
-    # xxhash64 keys; a small one is built on the driver like the sketch
-    # engine's
-    blob = None  # Spark's serialized filter, the codegen probe's literal
-    if engine == "native":
-        try:
-            # n is known: check the cap before building, and after
-            _check_native_cap(
-                _native_filter_bytes(n_build, fpp) if small is None
-                else _spark_blob_bytes(bloom_sizing(n_build, fpp)[0]),
-                _NATIVE_FILTER_CAP_BYTES, "predicted",
-            )
-            if small is None:
-                blob = _native_build_filter(build_keyed, n_build, fpp)
-                _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
-        except Exception as ex:  # private-API drift / size gate → sketch engine
-            _note_native_fallback(report, ex, forced=False)
-            engine = "bloom"
-            blob = None
-    report.engine = engine
-
-    # ---- sketch build: on the driver from a small build side's hashes,
-    # else one distributed pass, partial per partition, OR-merge
-    sketch = None  # the driver-held filter, when there is one
-    if blob is None:
-        sketch, n_parts, rounds = _bloom_sketch(
-            build_keyed, small, n_build, fpp, fanin, checkpoint_dir
-        )
-        blob = _spark_blob(sketch)
-        # broadcast-budget guard (SURVEY §7 hard parts): the 2^40-bit cap
-        # of the reference becomes a practical broadcast warning — a
-        # filter bigger than ~512 MB should be rethought (higher fpp, or
-        # let the join shuffle), not silently shipped to every executor
-        filter_bytes = sketch.m // 8
-        if filter_bytes > _BROADCAST_BUDGET_BYTES:
-            warnings.warn(
-                f"bloom filter is {filter_bytes >> 20} MiB (n={n_build}, fpp={fpp}) — "
-                f"above the {_BROADCAST_BUDGET_BYTES >> 20} MiB broadcast budget; "
-                "consider a larger fpp, an n_hint, or skipping the prefilter",
-                stacklevel=2,
-            )
-        report.build_partitions = n_parts
-        report.merge_rounds = rounds
-        report.filter_bits = sketch.m
+    # ---- one filter, either engine; a small build side is built on the
+    # driver, and any filter under the cap probes in codegen
+    mf = membership_filter(
+        build_keyed, n_build, fpp, engine, report, hashes=small, fanin=fanin,
+        checkpoint_dir=checkpoint_dir,
+    )
+    sketch = mf.sketch
+    if sketch is not None:
+        report.build_partitions = mf.partitions
+        report.merge_rounds = mf.rounds
         report.filter_hashes = sketch.k
         fill = sketch.fill_ratio()
         report.filter_fill_ratio = fill
         # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
         if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
             report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
-    else:
-        report.filter_bits = len(blob) * 8  # serialized size (≈ m)
-        if build_keyed.is_cached:
-            build_keyed.unpersist()
 
     probe_hash = _key64(probe_df, probe_cols, casts)
 
@@ -391,9 +500,7 @@ def bloom_join(
     if selectivity_check and not force_prefilter:
         hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
         if len(hs):
-            if sketch is None:
-                sketch = BloomSketch.from_spark_bytes(blob)
-            pass_rate = float(sketch.contains_hashes(hs).mean())
+            pass_rate = float(mf.driver_sketch().contains_hashes(hs).mean())
             report.selectivity_estimate = max(
                 0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
             )
@@ -417,8 +524,7 @@ def bloom_join(
     report.used_prefilter = True
     report.prefilter_side = target
     report.build_side = build_name
-    spark = x.sparkSession
-    hit = _probe_column(spark, sketch, blob, probe_hash, report)
+    hit = mf.contains(probe_hash)
     if collect_metrics:
         # row metrics land after an action via report.finalize()
         obs = Observation()
@@ -450,32 +556,6 @@ def _spark_blob_bytes(m: int) -> int:
     return m // 8 + 16
 
 
-def _spark_blob(sketch: BloomSketch) -> bytes | None:
-    """The sketch as a codegen-probe literal, or None above the cap."""
-    if _spark_blob_bytes(sketch.m) > _NATIVE_FILTER_CAP_BYTES:
-        return None
-    return sketch.to_spark_bytes()
-
-
-def _probe_column(spark, sketch: BloomSketch | None, blob: bytes | None,
-                  probe_hash: Column, report=None) -> Column:
-    """Membership predicate over ``probe_hash``: the codegen probe of
-    ``blob`` when there is one, else (a filter above the cap, or
-    private-API drift) the broadcast pandas probe of ``sketch`` — or of
-    ``blob`` loaded back when only Spark built the filter."""
-    if blob is not None:
-        try:
-            return _native_might_contain(spark, blob, probe_hash)
-        except Exception as ex:  # private-API drift → pandas probe
-            _note_native_fallback(report, ex, forced=False)
-            if report is not None:
-                report.engine = "bloom"
-    if sketch is None:
-        sketch = BloomSketch.from_spark_bytes(blob)
-    bc = spark.sparkContext.broadcast(sketch.seal())
-    return _make_probe_udf(bc)(probe_hash)
-
-
 def _native_might_contain(spark, filter_bytes: bytes, value_col: Column) -> Column:
     """JVM-codegen Bloom probe: a ``BloomFilterMightContain`` expression
     over a binary literal holding Spark's own ``BloomFilterImpl`` —
@@ -497,11 +577,13 @@ def _native_might_contain(spark, filter_bytes: bytes, value_col: Column) -> Colu
 
 
 def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
-    """Record on ``report`` why the native engine did not run; warn on
-    every ``forced`` call, else once per session (observable, VERDICT r4
-    #3, without spamming a pipeline that calls thousands of times)."""
+    """Record on ``report`` that the sketch engine ran and why the
+    native one did not; warn on every ``forced`` call, else once per
+    session (observable, VERDICT r4 #3, without spamming a pipeline that
+    calls thousands of times)."""
     global _native_fallback_warned
     if report is not None:
+        report.engine = "bloom"
         report.engine_fallback_reason = repr(ex)
     if forced or not _native_fallback_warned:
         _native_fallback_warned = _native_fallback_warned or not forced
@@ -509,7 +591,7 @@ def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
             f"native bloom engine unavailable ({ex!r}); falling back to the "
             "sketch engine" + ("" if forced else " (warning once per session; "
             "every affected report carries engine_fallback_reason)"),
-            stacklevel=3,
+            stacklevel=4,
         )
 
 
@@ -521,9 +603,10 @@ def _native_filter_bytes(n: int, fpp: float) -> int:
     return 8 * -(-bits // 64) + 16
 
 
-def _check_native_cap(n_bytes: int, cap: int, what: str) -> None:
-    """Raise when a native filter is over the plan-literal ``cap``;
-    callers fall back to the sketch engine and record the reason."""
+def _check_native_cap(n_bytes: int, what: str) -> None:
+    """Raise when a native filter is over the plan-literal cap; the
+    caller falls back to the sketch engine and records the reason."""
+    cap = _NATIVE_FILTER_CAP_BYTES
     if n_bytes > cap:
         raise RuntimeError(
             f"{what} native filter is {n_bytes:,} bytes, above the {cap:,}-byte "
@@ -568,28 +651,6 @@ def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
     d = int(stats["d"])
     # 1.05 margin absorbs the ±2% rsd so the fpp target holds
     return keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
-
-
-def _bloom_sketch(
-    build_keyed: DataFrame, hashes: np.ndarray | None, n: int, fpp: float,
-    fanin: int = 64, checkpoint_dir: str | None = None,
-) -> tuple[BloomSketch, int, int]:
-    """The sketch engine's filter, partial count and merge rounds: built
-    on the driver from a small build side's ``hashes``, else one
-    partial per partition, tree OR-merged.  Releases the sizing persist."""
-    if hashes is not None:
-        sketch = BloomSketch(n, fpp)
-        sketch.update_hashes(hashes)
-        return sketch, 1, 0
-    try:
-        res = build_sketch(
-            build_keyed, factory=lambda: BloomSketch(n, fpp), cols=["__bj_key64"],
-            prehashed=True, fanin=fanin, checkpoint_dir=checkpoint_dir,
-        )
-    finally:
-        if build_keyed.is_cached:
-            build_keyed.unpersist()
-    return res.sketch, res.n_partitions, res.merge_rounds
 
 
 def _native_build_filter(build_keyed: DataFrame, n_build: int, fpp: float) -> bytes:

@@ -32,25 +32,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..aggregate import build_sketch
-from ..sketches.bloom import BloomSketch
-from .bloom_join import (
-    _NATIVE_FILTER_CAP_BYTES,
-    _check_native_cap,
-    _native_build_filter,
-    _native_filter_bytes,
-    _native_might_contain,
-    _note_native_fallback,
-)
+from .bloom_join import membership_filter
 from .text import words_col  # canonical tokenization (re-exported)
 
 _NG = "__bj_ng"
-_H = "__bj_ngh"
 
 __all__ = [
     "ngram_hashes_col",
@@ -159,89 +147,6 @@ def _resolve_col(df: DataFrame, col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def segmented_any(hs: pd.Series, hit_fn) -> pd.Series:
-    """Per-document ANY over a batch of ``array<bigint>`` hash rows:
-    flatten the batch, run ``hit_fn(flat_int64) -> bool[]`` ONCE, then
-    segment-ANY via cumsum — the shared scaffolding of every vectorized
-    membership probe (batch sketch engine here, exact hash-set probe in
-    ``streaming.decontaminate_stream``).  NULL/empty rows → False."""
-    lens = np.fromiter(
-        (0 if v is None else len(v) for v in hs), dtype=np.int64, count=len(hs)
-    )
-    if int(lens.sum()) == 0:
-        return pd.Series(np.zeros(len(hs), dtype=bool))
-    flat = np.concatenate(
-        [np.asarray(v, dtype=np.int64) for v in hs if v is not None and len(v)]
-    )
-    hit = np.asarray(hit_fn(flat), dtype=bool)
-    cs = np.concatenate([[0], np.cumsum(hit)])
-    ends = np.cumsum(lens)
-    return pd.Series(cs[ends] > cs[ends - lens])
-
-
-def _any_in_bloom_udf(bc):
-    """Vectorized per-document ANY-gram-in-filter probe over an
-    ``array<bigint>`` hash column (sketch engine) — ``segmented_any``
-    with a Bloom membership test.  ``asNondeterministic`` for the same
-    constraint-propagation reason as ``bloom_join._make_probe_udf``."""
-
-    @F.pandas_udf("boolean")
-    def probe(hs: pd.Series) -> pd.Series:
-        bf = bc.value
-        return segmented_any(hs, lambda flat: bf.contains_hashes(flat.view(np.uint64)))
-
-    return probe.asNondeterministic()
-
-
-def _gram_candidate_pred(
-    spark, keyed: DataFrame, n_bench: int, fpp: float, engine: str,
-    report: "DecontamReport", doc_hashes: Column, base: DataFrame,
-) -> Column:
-    """Engine-dispatched per-document ANY-gram membership predicate,
-    shared by the single-suite and multi-suite decontam operators.
-    ``keyed`` must carry the prehashed int64 gram column ``_H``;
-    ``base`` is the probe frame used only to force analysis NOW so
-    probe-side private-API drift falls back instead of failing at
-    action time.  Sets ``report.engine`` / ``filter_bits`` /
-    ``engine_fallback_reason`` (the observable-degradation contract of
-    ``bloom_join`` engine dispatch, VERDICT r4 #3)."""
-    cand_pred: Column | None = None
-    if engine in ("auto", "native"):
-        try:
-            # same plan-literal cap as bloom_join, checked on the
-            # predicted size BEFORE the build: a huge eval suite belongs
-            # on the sketch engine (broadcast once)
-            _check_native_cap(
-                _native_filter_bytes(n_bench, fpp), _NATIVE_FILTER_CAP_BYTES, "predicted"
-            )
-            blob = _native_build_filter(
-                keyed.select(F.col(_H).alias("__bj_key64")), n_bench, fpp
-            )
-            _check_native_cap(len(blob), _NATIVE_FILTER_CAP_BYTES, "serialized")
-            cand_pred = F.exists(
-                doc_hashes, lambda h: _native_might_contain(spark, blob, h)
-            )
-            # force analysis NOW so probe-side private-API drift also
-            # falls back instead of failing at action time
-            base.where(cand_pred).schema
-            report.engine = "native"
-            report.filter_bits = len(blob) * 8
-        except Exception as ex:  # private-API drift / size gate → sketch engine
-            cand_pred = None
-            _note_native_fallback(report, ex, forced=engine == "native")
-            engine = "bloom"
-    if cand_pred is None:
-        res = build_sketch(
-            keyed.select(_H), lambda: BloomSketch(n=n_bench, fpp=fpp), cols=[_H],
-            prehashed=True,
-        )
-        bc = spark.sparkContext.broadcast(res.sketch.seal())
-        cand_pred = _any_in_bloom_udf(bc)(doc_hashes)
-        report.engine = "bloom"
-        report.filter_bits = res.sketch.m
-    return cand_pred
-
-
 def contaminated_docs(
     corpus: DataFrame,
     bench: DataFrame,
@@ -264,17 +169,19 @@ def contaminated_docs(
     ``corpus_tokens`` / ``bench_tokens`` may be a column name or an
     arbitrary Column expression producing an array (e.g.
     ``words_col(F.col("text"))`` for word-level n-grams over raw text).
-    ``engine``: ``'native'`` (all-JVM ``stat.bloomFilter`` +
-    ``BloomFilterMightContain`` codegen probe), ``'bloom'`` (mergeable
-    BloomSketch + vectorized Arrow probe), ``'auto'`` (native, falling
-    back to sketch on private-API drift — same contract as
-    ``bloom_join`` engine dispatch, ``bloom_join.py:315-326``).
+    ``engine``: ``'native'`` builds the filter in Spark
+    (``stat.bloomFilter``), ``'bloom'`` as mergeable per-partition
+    BloomSketch partials, ``'auto'`` is native, falling back to the
+    sketch engine above the plan-literal cap or on private-API drift —
+    the dispatch ``bloom_join`` uses (``bloom_join.membership_filter``).
+    Under either engine a filter under the cap probes each document as a
+    codegen ``exists(hashes, might_contain)`` with no Python stage; only
+    a larger one takes the broadcast pandas probe.
     """
     if engine not in ("auto", "native", "bloom"):
         raise ValueError(f"unknown engine {engine!r}")
     bcol = _resolve_col(bench, bench_tokens if bench_tokens is not None else corpus_tokens)
     ccol = _resolve_col(corpus, corpus_tokens)
-    spark = corpus.sparkSession
     report = DecontamReport(n=n)
 
     # benchmark n-gram set: distinct, consumed three times (sizing
@@ -298,8 +205,8 @@ def contaminated_docs(
     # the ladder hash of a single n-gram array == the doc-ladder hash
     # at that gram's position, so the build side hashes its (distinct,
     # small) gram set while the corpus never materializes a gram
-    keyed = bench_ngs.withColumn(
-        _H, F.element_at(ngram_hashes_col(F.col(_NG), n), 1)
+    keyed = bench_ngs.select(
+        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
     )
 
     # corpus side: ONE rolling-hash ladder per document (O(n·L) long
@@ -310,8 +217,8 @@ def contaminated_docs(
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
     doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
 
-    cand_pred = _gram_candidate_pred(
-        spark, keyed, n_bench, fpp, engine, report, doc_hashes, base
+    cand_pred = membership_filter(keyed, n_bench, fpp, engine, report).any_in(
+        doc_hashes
     )
 
     # candidate docs ≈ contaminated + per-DOC false positives (each doc
@@ -373,7 +280,6 @@ def contaminated_docs_many(
             "with an output column"
         )
     ccol = _resolve_col(corpus, corpus_tokens)
-    spark = corpus.sparkSession
     report = DecontamReport(n=n)
 
     tagged = None
@@ -430,13 +336,13 @@ def contaminated_docs_many(
         empty = out_schema_src.where(F.lit(False))
         return (empty, report) if return_report else empty
 
-    keyed = tagged.withColumn(
-        _H, F.element_at(ngram_hashes_col(F.col(_NG), n), 1)
+    keyed = tagged.select(
+        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
     )
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
     doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
-    cand_pred = _gram_candidate_pred(
-        spark, keyed, n_union, fpp, engine, report, doc_hashes, base
+    cand_pred = membership_filter(keyed, n_union, fpp, engine, report).any_in(
+        doc_hashes
     )
     cand = base.where(cand_pred)
     hits = cand.select(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..hashing import splitmix64
 
@@ -1108,9 +1108,10 @@ class IncrementalDedupReport:
         self.n_candidates = 0
         self.n_cross_dups = 0
         self.filter_provided = False
-        #: in-call lane: the verify join's engine ('native' all-JVM
-        #: filter + codegen probe, or 'bloom' sketch); filter lanes:
-        #: 'bloom' (broadcast BloomSketch + vectorized Arrow probe)
+        #: in-call lane: the verify join's engine ('native' Spark-built
+        #: or 'bloom' sketch-built filter, probed in codegen under the
+        #: cap either way); filter lanes: 'bloom' (the history filter,
+        #: broadcast and probed by a pandas UDF — ``_history_filter_hit``)
         self.engine = ""
         #: in-call lane: why the verify join's auto dispatch degraded to
         #: the sketch engine (None if it ran native) — the same
@@ -1181,6 +1182,30 @@ def build_history_filter(
     finally:
         if persisted:
             fps.unpersist()
+
+
+def _history_filter_hit(spark, history_filter, fp: Column) -> Column:
+    """Broadcast pandas probe of a :func:`build_history_filter` filter
+    over a content-fingerprint column, shared by ``incremental_dedup``
+    and ``incremental_dedup_stream``.
+
+    It stays in Python, unlike ``bloom_join.membership_filter``'s
+    codegen probe: ``build_history_filter`` hashes the md5 strings in
+    the Python ``HASH_FORMAT = 2`` domain, callers may persist those
+    filters, and a codegen probe of this lane waits for one JVM hash
+    domain (ROADMAP item 1)."""
+    # seal() densifies BEFORE the broadcast: an unsealed (sparse) filter
+    # ships as its pooled hash list and every Python worker re-densifies
+    # it on first probe — seconds per worker at 1M history keys
+    bc = spark.sparkContext.broadcast(history_filter.seal())
+
+    @F.pandas_udf("boolean")
+    def probe(s: pd.Series) -> pd.Series:
+        from ..hashing import hash_series
+
+        return pd.Series(bc.value.contains_hashes(hash_series(s)))
+
+    return probe.asNondeterministic()(fp)
 
 
 def incremental_dedup(
@@ -1255,19 +1280,9 @@ def incremental_dedup(
             history_filter = build_history_filter(
                 history, text_col, fpp=fpp, checkpoint_dir=checkpoint_dir
             )
-        # seal() densifies BEFORE the broadcast: an unsealed (sparse)
-        # filter ships as its pooled hash list and every Python worker
-        # re-densifies it on first probe — seconds per worker at 1M
-        # history keys
-        bc = batch.sparkSession.sparkContext.broadcast(history_filter.seal())
-
-        @F.pandas_udf("boolean")
-        def _probe(s: pd.Series) -> pd.Series:
-            from ..hashing import hash_series
-
-            return pd.Series(bc.value.contains_hashes(hash_series(s)))
-
-        reps = reps.withColumn("__hit", _probe.asNondeterministic()(F.col("__fp")))
+        reps = reps.withColumn(
+            "__hit", _history_filter_hit(batch.sparkSession, history_filter, F.col("__fp"))
+        )
     else:
         reps = reps.withColumn("__hit", F.lit(True))
 

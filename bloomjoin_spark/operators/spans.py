@@ -22,13 +22,15 @@ ladder per document, no gram arrays, no corpus explode):
    per hash (same row-shape as ``boilerplate_lines``); hashes in
    ``>= min_docs`` docs form the duplicated set *D*.  This is the one
    corpus-proportional shuffle, and it moves hashes, never tokens.
-2. **prefilter** — a Bloom filter over *D* (mergeable ``BloomSketch``,
-   one tree-merged build job) probes each document with a
-   short-circuiting per-document ANY, so clean documents never explode
-   positions.  The filter build is gated on its own size: if *D* is so
-   large the filter would not broadcast (``max_filter_bytes``), the
-   prefilter is skipped and every document takes the exact path —
-   degraded, never wrong, and never a driver/executor OOM.
+2. **prefilter** — a Bloom filter over *D* (``membership_filter``:
+   built in Spark, one JVM job) probes each document with a
+   short-circuiting per-document ANY — a codegen
+   ``exists(hashes, might_contain)`` under the plan-literal cap, no
+   Python stage — so clean documents never explode positions.  The
+   filter build is gated on its own size: if *D* is so large the filter
+   would not broadcast (``max_filter_bytes``), the prefilter is skipped
+   and every document takes the exact path — degraded, never wrong, and
+   never a driver/executor OOM.
 3. **locate** — only candidate documents ``posexplode`` their hash
    ladder and semi-join *D* on the hash: the located (doc, start)
    volume is proportional to TRUE duplicated positions (+ the Bloom
@@ -62,9 +64,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..aggregate import build_sketch
-from ..sketches.bloom import BloomSketch, bloom_sizing
-from .decontam import _any_in_bloom_udf, ngram_hashes_col
+from ..sketches.bloom import bloom_sizing
+from .bloom_join import membership_filter
+from .decontam import ngram_hashes_col
 
 __all__ = [
     "SpanDedupReport",
@@ -143,7 +145,6 @@ def duplicate_span_starts(
         raise ValueError(f"verify must be 'exact' or 'hash', got {verify!r}")
     _check_columns(df)
     report = SpanDedupReport(n=n, min_docs=min_docs, verify=verify)
-    spark = df.sparkSession
 
     # materialize the token column as an ATTRIBUTE before the hash
     # ladder references it n times per element (decontam's O(L^2) note)
@@ -191,13 +192,12 @@ def duplicate_span_starts(
     m_bits, _k = bloom_sizing(n_dup, fpp)
     cand = lad
     if m_bits // 8 <= max_filter_bytes:
-        res = build_sketch(
-            dup, lambda: BloomSketch(n=n_dup, fpp=fpp), cols=[_H], prehashed=True
+        mf = membership_filter(
+            dup.select(F.col(_H).alias("__bj_key64")), n_dup, fpp, "auto", None
         )
-        bc = spark.sparkContext.broadcast(res.sketch.seal())
-        cand = lad.where(_any_in_bloom_udf(bc)(h_arr))
+        cand = lad.where(mf.any_in(h_arr))
         report.prefilter = "bloom"
-        report.filter_bits = res.sketch.m
+        report.filter_bits = mf.bits
     else:
         report.notes.append(
             f"duplicated-hash set needs a {m_bits >> 23} MiB filter, above "

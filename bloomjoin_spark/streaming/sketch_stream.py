@@ -165,13 +165,11 @@ def bloom_join_stream(
     updates; exact-equality holds for the snapshot the filter was built
     from."""
     from ..operators.bloom_join import (
-        _bloom_sketch,
         _common_cast,
         _key64,
-        _probe_column,
         _size_build,
-        _spark_blob,
         _standard_join,
+        membership_filter,
     )
     from ..plans.planner import normalize_how, resolve_join_columns
 
@@ -189,12 +187,8 @@ def bloom_join_stream(
     )
     # a small static side is sized exactly and built on the driver
     build_keyed, _, _, n, small = _size_build(static, build_keyed, n_hint=n_hint)
-    sketch = _bloom_sketch(build_keyed, small, n, fpp)[0]
-    # under the cap the probe is the JVM codegen expression
-    hit = _probe_column(
-        stream.sparkSession, sketch, _spark_blob(sketch),
-        _key64(stream, [p[0] for p in pairs], casts),
-    )
+    mf = membership_filter(build_keyed, n, fpp, "bloom", None, hashes=small)
+    hit = mf.contains(_key64(stream, [p[0] for p in pairs], casts))
     return _standard_join(stream.filter(hit), static, pairs, how)
 
 
@@ -477,7 +471,7 @@ def decontaminate_stream(
     bh = np.unique(bh_pdf["h"].to_numpy(dtype=np.int64))
     bc = stream.sparkSession.sparkContext.broadcast(bh)
 
-    from ..operators.decontam import segmented_any
+    from ..operators.bloom_join import segmented_any
 
     @F.pandas_udf("boolean")
     def any_hit(hs: pd.Series) -> pd.Series:
@@ -567,7 +561,11 @@ def incremental_dedup_stream(
     same caveat as ``bloom_join_stream``; re-create the query to pick
     up a newer filter.
     """
-    from ..operators.dedup import build_history_filter, content_fingerprint
+    from ..operators.dedup import (
+        _history_filter_hit,
+        build_history_filter,
+        content_fingerprint,
+    )
     from ..operators.text import add_fingerprint
 
     if history is None and history_filter is None:
@@ -582,18 +580,8 @@ def incremental_dedup_stream(
     if history_filter is None:
         history_filter = build_history_filter(history, text_col, fpp=fpp)
 
-    # seal() densifies before the broadcast so workers receive the m/8-byte
-    # bitmap, not a sparse hash list each one re-densifies on first probe
-    bc = stream.sparkSession.sparkContext.broadcast(history_filter.seal())
-
-    @F.pandas_udf("boolean")
-    def _probe(s: pd.Series) -> pd.Series:
-        from ..hashing import hash_series
-
-        return pd.Series(bc.value.contains_hashes(hash_series(s)))
-
     df = add_fingerprint(stream, text_col)
-    hit = _probe.asNondeterministic()(F.col("content_fp"))
+    hit = _history_filter_hit(stream.sparkSession, history_filter, F.col("content_fp"))
     if history is not None:
         hfp = history.select(
             content_fingerprint(text_col).alias("content_fp")

@@ -555,6 +555,11 @@ def test_native_engine_size_gate_falls_back(spark, monkeypatch):
         assert_df_equal(got, x.join(y, "id", "inner"))
     assert rep.engine == "bloom" and rep.used_prefilter
     assert "plan-literal cap" in rep.engine_fallback_reason
+    # the caller asked for "native": every such call warns, not once
+    with pytest.warns(UserWarning, match="plan-literal cap"):
+        bloom_join(
+            x, y, on="id", how="inner", engine="native", force_prefilter=True,
+        )
 
 
 def test_native_engine_probe_drift_falls_back(spark, monkeypatch):

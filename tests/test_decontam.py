@@ -209,7 +209,7 @@ def test_over_cap_auto_dispatches_sketch_engine_same_output(spark, monkeypatch):
     explode-join)."""
     import importlib
 
-    dc = importlib.import_module("bloomjoin_spark.operators.decontam")
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
 
     corpus = _docs(
         spark,
@@ -221,12 +221,15 @@ def test_over_cap_auto_dispatches_sketch_engine_same_output(spark, monkeypatch):
     native = contaminated_docs(corpus, bench, n=3, engine="native")
     native_rows = sorted(tuple(r) for r in native.collect())
 
-    monkeypatch.setattr(dc, "_NATIVE_FILTER_CAP_BYTES", 8)
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 8)
     capped, rep = contaminated_docs(
         corpus, bench, n=3, engine="auto", return_report=True
     )
     assert rep.engine == "bloom"  # the cap pushed auto off the native path
     assert "plan-literal cap" in rep.engine_fallback_reason
+    # above the cap the per-document probe is the one remaining array
+    # pandas probe
+    assert "ArrowEvalPython" in capped._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in capped.collect()) == native_rows
 
     exact_rows = sorted(tuple(r) for r in _exact(corpus, bench, 3).collect())
@@ -241,13 +244,12 @@ def test_auto_mode_decontam_fallback_is_observable(spark, monkeypatch):
     import importlib
     import warnings
 
-    dc = importlib.import_module("bloomjoin_spark.operators.decontam")
     bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
 
     def boom(*a, **kw):
         raise RuntimeError("ExpressionUtils moved")
 
-    monkeypatch.setattr(dc, "_native_build_filter", boom)
+    monkeypatch.setattr(bj, "_native_build_filter", boom)
     monkeypatch.setattr(bj, "_native_fallback_warned", False)
     corpus = _docs(spark, [(1, [1, 2, 3, 4]), (2, [9, 9, 9])])
     bench = _docs(spark, [(900, [2, 3, 4])])
@@ -386,10 +388,10 @@ def test_decontam_native_cap_checked_before_build(spark, monkeypatch):
     native build; the output is unchanged."""
     import importlib
 
-    dc = importlib.import_module("bloomjoin_spark.operators.decontam")
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
     calls = []
-    monkeypatch.setattr(dc, "_native_build_filter", lambda *a: calls.append(a))
-    monkeypatch.setattr(dc, "_NATIVE_FILTER_CAP_BYTES", 8)
+    monkeypatch.setattr(bj, "_native_build_filter", lambda *a: calls.append(a))
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", 8)
     corpus = _docs(spark, [(1, [1, 2, 3, 4]), (2, [9, 9, 9])])
     bench = _docs(spark, [(900, [2, 3, 4])])
     flagged, rep = contaminated_docs(

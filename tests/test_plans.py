@@ -5,6 +5,7 @@ These are the properties that survive (or die) at the 100 TB scale-up."""
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR, assert_df_equal
@@ -89,6 +90,65 @@ def test_under_cap_probe_is_codegen_and_pre_exchange(spark):
     probe_idx = next(i for i, l in enumerate(tree) if f"Filter {node}" in l)
     assert _no_exchange_below(tree, probe_idx)
     assert_df_equal(out, li.join(sub, li.l_partkey == sub.p_partkey, "inner"))
+
+
+def _membership_case(spark, case):
+    """``(out, exact)`` for one caller of ``bloom_join.membership_filter``:
+    its output under a filter below the cap, and the exact path its
+    module's tests compare against."""
+    from bloomjoin_spark.operators import contaminated_docs, contaminated_docs_many
+    from bloomjoin_spark.operators.decontam import ngrams_col
+    from bloomjoin_spark.operators.spans import duplicate_span_starts
+    from bloomjoin_spark.streaming import bloom_join_stream
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id bigint, tokens array<int>")
+
+    corpus = docs(
+        [(i, [i, i + 1, i + 2, 5, 6, 7]) for i in range(0, 40, 2)]
+        + [(i, [100 + i, 200 + i, 300 + i, 3, 4, 5]) for i in range(1, 40, 2)]
+    )
+    benches = {"a": docs([(900, [5, 6, 7])]), "b": docs([(901, [3, 4, 5, 6])])}
+
+    def exact_hits(bench):
+        c = corpus.select("doc_id", F.explode(ngrams_col(F.col("tokens"), 3)).alias("ng"))
+        b = bench.select(F.explode(ngrams_col(F.col("tokens"), 3)).alias("ng")).distinct()
+        return c.join(b, "ng").groupBy("doc_id").agg(F.count_distinct("ng").alias("n_hits"))
+
+    if case in ("decontam_bloom", "decontam_auto"):
+        engine = case.split("_")[1]
+        return (contaminated_docs(corpus, benches["a"], n=3, engine=engine),
+                exact_hits(benches["a"]))
+    if case == "decontam_many_bloom":
+        exact = None
+        for name, bench in benches.items():
+            e = exact_hits(bench).select("doc_id", F.lit(name).alias("suite"), "n_hits")
+            exact = e if exact is None else exact.unionByName(e)
+        return contaminated_docs_many(corpus, benches, n=3, engine="bloom"), exact
+    if case == "spans":
+        # max_filter_bytes=0 skips the prefilter: every document takes
+        # the exact locate path
+        return (duplicate_span_starts(corpus, n=3),
+                duplicate_span_starts(corpus, n=3, max_filter_bytes=0))
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    return bloom_join_stream(x, y, on="id"), x.join(y, "id", "inner")
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["decontam_bloom", "decontam_auto", "decontam_many_bloom", "spans",
+     "bloom_join_stream"],
+)
+def test_membership_filter_callers_probe_in_codegen(spark, case):
+    """Every caller of ``membership_filter`` probes a filter under the
+    cap in codegen, whichever engine built it: no Python operator in the
+    returned plan, and rows equal to the exact path."""
+    from bloomjoin_spark.plans import plan_audit
+
+    out, exact = _membership_case(spark, case)
+    assert plan_audit(out).python_operators == []
+    assert_df_equal(out, exact)
 
 
 def test_auto_engine_is_all_jvm_without_metrics(spark):
