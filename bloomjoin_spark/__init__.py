@@ -9,6 +9,7 @@ commutative two-phase aggregate built with vectorized pandas/Arrow
 UDFs, never per-row Python.
 """
 
+from . import _worker
 from .aggregate import (
     BuildResult,
     build_sketch,
@@ -51,6 +52,9 @@ from .sketches import (
     bloom_sizing,
     cms_params,
 )
+
+# in a PySpark worker: unchanged zips stop being re-read on every task
+_worker.install()
 
 __version__ = "0.1.0"
 

@@ -6,13 +6,21 @@ hashing, zero per-row Python. Each partial travels as one row
 ``(partition_id, n_rows, fingerprint, blob)``. Every partial stage
 goes through :func:`partial_stage`. A cached input is narrowed
 (``coalesce``, no shuffle) to ⌈plan bytes / ``_PY_TASK_BYTES``⌉ Python
-tasks, because a Python task costs a fixed ~0.25 CPU-s before any
-hashing; its input partition id rides in as a leading ``__pid``
+tasks, because every Python task pays a fixed cost before any
+hashing (the zips on the worker's import path are re-read once per
+worker process, not per task, see ``_worker``; docs/PLANS.md §35);
+its input partition id rides in as a leading ``__pid``
 column, and each task streams its input partitions one after another
 and builds one partial per run of equal ``__pid``, so partials,
 fingerprints and blobs are the same as with one task per partition.
 Any other input (file scans, whose size is only estimated) runs one
 task per input partition.
+
+Token columns (``token_col``) are flattened zero-copy and collapsed by
+one bincount per batch (:func:`_token_histogram`) into (distinct id,
+count) pairs: hash sketches hash the distinct ids only, CMS adds the
+counts, and t-digest ingests the histogram as weighted values. KLL
+still takes every token instance.
 
 Phase 2 (tree merge): while more partials remain than ``fanin``, group
 them ``pmod(partition_id, ngroups)`` and OR/max/add-merge each group in
@@ -66,6 +74,21 @@ PARTIAL_SCHEMA = (
 #: (typical LLM vocabs are ≤ a few hundred thousand)
 _BINCOUNT_MAX = 1 << 22
 
+
+def _token_histogram(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
+    """``(distinct ids as float64, counts)`` of a flat token-id array
+    whose ids are non-negative ints under ``_BINCOUNT_MAX``, else None
+    (float64: the canonical numeric hash and t-digest input). One sequential
+    bincount collapses millions of token instances to ≤ vocab distinct
+    ids, so hashing and the weighted sketches (CMS, t-digest) work on
+    O(vocab) values instead of O(n)."""
+    if arr.dtype.kind in "iu" and arr.size and 0 <= arr.min() and arr.max() < _BINCOUNT_MAX:
+        cnt = np.bincount(arr)
+        vals = np.nonzero(cnt)[0]
+        return vals.astype(np.float64), cnt[vals]
+    return None
+
+
 #: single-column dtypes eligible for the Arrow fast path — numerics
 #: (hash_numeric_array = the exact hash_series dispatch) and strings
 #: (hash_utf8_arrow over flat utf8 buffers = the hash_strings kernel)
@@ -75,11 +98,14 @@ _ARROW_NUMERIC = {
 }
 _ARROW_FAST = _ARROW_NUMERIC | {"string"}
 
-#: plan bytes one partial-building Python task covers: a task costs
-#: ~0.25 CPU-s before any hashing and the token lanes ~0.19 CPU-s per
-#: plan-MB, so a full task's fixed cost would be ~2% of its work
-#: (extrapolated from 4-15 MB inputs, docs/PLANS.md §33).  Applied to
-#: cached inputs only, the one traffic it was measured on.
+#: plan bytes one partial-building Python task covers, applied to
+#: cached inputs only, the one traffic it was measured on. Chosen when
+#: a task cost ~0.25 CPU-s before any hashing and the token lanes ~0.19
+#: CPU-s per plan-MB (extrapolated from 4-15 MB inputs, docs/PLANS.md
+#: §33). That premise no longer holds: with ``_worker`` a one-task no-op
+#: ``mapInArrow`` costs ~0.1 CPU-s, near a JVM count, and the token
+#: lanes' per-MB cost fell with the t-digest histogram (§35). Kept until
+#: it is re-derived from the verify skill's fixed-cost step.
 _PY_TASK_BYTES = 64 << 20
 
 #: Catalyst's "unknown" sizeInBytes (Long.MaxValue) and anything above it
@@ -427,7 +453,22 @@ def make_partial_fn_arrow(
                     n += batch.num_rows
                     continue
                 arr = col.to_numpy(zero_copy_only=False)
+            hist = None
+            if token_col is not None and not prehashed and (
+                consumes != "values" or getattr(sk, "SUPPORTS_WEIGHTS", False)
+            ):
+                hist = _token_histogram(arr)
             if consumes == "values":
+                if hist is not None:
+                    v, cnt = hist
+                    # the per-instance value-bit sum, from the histogram
+                    with np.errstate(over="ignore"):
+                        fp += (v.view(np.uint64) * cnt.astype(np.uint64)).sum(
+                            dtype=np.uint64
+                        )
+                    sk.update_values(v, weights=cnt)
+                    n += batch.num_rows
+                    continue
                 v = arr.astype(np.float64, copy=False)
                 nan_mask = np.isnan(v)
                 if nan_mask.any():
@@ -440,29 +481,20 @@ def make_partial_fn_arrow(
             else:
                 if prehashed:
                     h = arr.astype(np.int64, copy=False).view(np.uint64)
-                elif (
-                    token_col is not None
-                    and arr.dtype.kind in "iu"
-                    and arr.size
-                    and 0 <= arr.min() and arr.max() < _BINCOUNT_MAX
-                ):
-                    # token-id fast path: one sequential bincount collapses
-                    # millions of token instances to ≤vocab uniques BEFORE
-                    # hashing — the pass becomes O(n) reads + O(vocab) hashes
-                    cnt = np.bincount(arr)
-                    vals = np.nonzero(cnt)[0]
-                    h = hash_float64(vals.astype(np.float64))
+                elif hist is not None:
+                    vals, cnt = hist
+                    h = hash_float64(vals)
                     # fingerprint = wrapping sum of per-INSTANCE hashes
                     # (weight uniques by multiplicity) so the lineage
                     # fingerprint is identical across ingest paths
                     with np.errstate(over="ignore"):
-                        fp += (h * cnt[vals].astype(np.uint64)).sum(dtype=np.uint64)
+                        fp += (h * cnt.astype(np.uint64)).sum(dtype=np.uint64)
                     if getattr(sk, "SET_SEMANTICS", False):
                         sk.update_hashes(h)
                     elif getattr(sk, "SUPPORTS_WEIGHTS", False):
-                        sk.update_hashes(h, weights=cnt[vals])
+                        sk.update_hashes(h, weights=cnt)
                     else:
-                        sk.update_hashes(np.repeat(h, cnt[vals]))
+                        sk.update_hashes(np.repeat(h, cnt))
                     n += batch.num_rows
                     continue
                 else:
@@ -966,11 +998,10 @@ def make_multi_partial_fn_arrow(
             arr = batch.column(0).flatten().to_numpy(zero_copy_only=False)
             n += batch.num_rows
             vals = cnt = h = h_all = None
-            if arr.dtype.kind in "iu" and arr.size and 0 <= arr.min() and arr.max() < _BINCOUNT_MAX:
-                cnt_full = np.bincount(arr)
-                vals = np.nonzero(cnt_full)[0]
-                cnt = cnt_full[vals]
-                h = hash_float64(vals.astype(np.float64))
+            hist = _token_histogram(arr)
+            if hist is not None:
+                vals, cnt = hist
+                h = hash_float64(vals)
             else:
                 # hashed ONCE, shared by every hash-consuming sketch
                 h_all = hash_numeric_array(arr)
@@ -984,7 +1015,11 @@ def make_multi_partial_fn_arrow(
                 )
             for sk in sks.values():
                 consumes = getattr(sk, "CONSUMES", "hashes")
-                if consumes == "values":
+                if consumes == "values" and cnt is not None and getattr(
+                    sk, "SUPPORTS_WEIGHTS", False
+                ):
+                    sk.update_values(vals, weights=cnt)
+                elif consumes == "values":
                     v = arr.astype(np.float64, copy=False)
                     nan_mask = np.isnan(v)
                     if nan_mask.any():

@@ -666,6 +666,30 @@ def test_small_build_runs_one_python_task_per_call(spark, cached_tokens, monkeyp
         assert blobs(name, out) == got[name], name
 
 
+def test_tdigest_token_lanes_share_one_histogram(cached_tokens):
+    """``build_sketch`` and ``build_sketches`` feed the t-digest the same
+    per-batch token-id histogram: byte-identical blobs, the exact token
+    count, and quantiles within the benchmark's rank bound."""
+    from bloomjoin_spark import KllSketch, TDigestSketch, build_sketches
+
+    single = build_sketch(cached_tokens, lambda: TDigestSketch(200), token_col="tokens")
+    multi = build_sketches(
+        cached_tokens,
+        {"td": lambda: TDigestSketch(200), "kll": lambda: KllSketch(200)},
+        token_col="tokens",
+    )
+    assert single.sketch.to_bytes() == multi["td"].sketch.to_bytes()
+    toks = np.sort(np.concatenate(
+        [np.asarray(t) for t in cached_tokens.select("tokens").toPandas()["tokens"]]
+    ))
+    assert single.sketch.count == multi["kll"].sketch.count == toks.size
+    qs = np.array([0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99])
+    est = single.sketch.quantile(qs)
+    left = np.searchsorted(toks, est, "left") / toks.size
+    right = np.searchsorted(toks, est, "right") / toks.size
+    assert np.maximum(0.0, np.maximum(qs - right, left - qs)).max() <= 10 / 200
+
+
 def test_empty_input_partitions_still_count(spark):
     """``n_partitions`` counts input partitions without rows, and rows
     and sketch bytes equal the sketch built locally from the same keys:

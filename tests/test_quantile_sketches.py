@@ -95,6 +95,75 @@ class TestTDigestEdge:
             TDigestSketch(100).merge(TDigestSketch(200))
 
 
+class TestTDigestWeighted:
+    """``update_values(v, weights=w)``: the token lanes' histogram
+    ingest, held to the same bounds as per-instance ingest."""
+
+    @staticmethod
+    def _zipf_hist():
+        rng = np.random.default_rng(21)
+        data = (rng.zipf(1.3, 200_000) % 20_000).astype(np.float64)
+        vals, cnt = np.unique(data, return_counts=True)
+        return data, vals, cnt
+
+    def test_weights_match_repeat(self):
+        data, vals, cnt = self._zipf_hist()
+        weighted = TDigestSketch(200)
+        weighted.update_values(vals, weights=cnt)
+        repeated = TDigestSketch(200)
+        repeated.update_values(np.repeat(vals, cnt))
+        for td in (weighted, repeated):
+            assert (td.count, td.vmin, td.vmax) == (data.size, data.min(), data.max())
+            assert _rank_error(td, data) <= 0.01
+
+    def test_heavy_value_keeps_its_rank_run(self):
+        # one bin holding most of the mass is cut into several centroids
+        # of its exact value, so quantiles inside its rank run return it
+        td = TDigestSketch(100)
+        td.update_values(np.array([0.0, 1.0, 2.0]), weights=np.array([10, 10_000, 10]))
+        assert list(td.quantile([0.01, 0.25, 0.5, 0.75, 0.99])) == [1.0] * 5
+        assert td.means.size > 1
+
+    def test_nan_drops_its_weight(self):
+        td = TDigestSketch(100)
+        td.update_values(np.array([1.0, np.nan, 3.0]), weights=np.array([2, 5, 1]))
+        assert (td.count, td.vmin, td.vmax) == (3, 1.0, 3.0)
+        assert td.quantile(0.25) == 1.0
+
+    def test_zero_weight_is_not_a_value(self):
+        td = TDigestSketch(100)
+        td.update_values(np.array([-5.0, 2.0]), weights=np.array([0, 4]))
+        assert (td.count, td.vmin, td.vmax) == (4, 2.0, 2.0)
+
+    @pytest.mark.parametrize(
+        "weights",
+        [[1, -1, 1], [1, np.inf, 1], [1, np.nan, 1], [1, 1], [1, 1.5, 1]],
+        ids=["negative", "inf", "nan", "length", "fractional"],
+    )
+    def test_bad_weights_raise(self, weights):
+        td = TDigestSketch(100)
+        with pytest.raises(ValueError):
+            td.update_values(np.array([1.0, 2.0, 3.0]), weights=np.array(weights))
+        assert td.count == 0
+
+    def test_weighted_serde_and_merge_with_unweighted(self):
+        data, vals, cnt = self._zipf_hist()
+        weighted = TDigestSketch(200)
+        weighted.update_values(vals, weights=cnt)
+        back = Sketch.from_bytes(weighted.to_bytes())
+        assert back.to_bytes() == weighted.to_bytes()
+        assert back.count == data.size
+        more = np.random.default_rng(4).uniform(0, 30_000, 50_000)
+        plain = TDigestSketch(200)
+        plain.update_values(more)
+        merged = back.merge(plain)
+        both = np.concatenate([data, more])
+        assert (merged.count, merged.vmin, merged.vmax) == (
+            both.size, both.min(), both.max()
+        )
+        assert _rank_error(merged, both) <= 0.015
+
+
 @pytest.mark.parametrize("dist", ["uniform", "lognormal"])
 class TestKll:
     def _data(self, dist, n=200_000):
