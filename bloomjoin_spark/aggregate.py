@@ -3,7 +3,16 @@
 Phase 1 (executors): one sketch partial per input partition, built
 inside ``mapInArrow`` / ``mapInPandas`` — Arrow batches in, numpy
 hashing, zero per-row Python. Each partial travels as one row
-``(partition_id, n_rows, fingerprint, blob)``. Every partial stage
+``([key,] partition_id, n_partials, n_rows, fingerprint, blob)``,
+keyed by a group value or a sketch name where one pass builds many.
+Every builder keeps only its extraction (flatten a token column, hash
+a utf8 or numeric column, reshape vectors, slice groups) and hands
+each batch to the one ingest rule, :func:`ingest`, which owns null
+handling, the set / weighted / per-instance dispatch and the lineage
+fingerprint; :class:`PartialRows` writes every partial row, in Arrow
+or pandas form, and folds them again in the merge.
+
+Every partial stage
 goes through :func:`partial_stage`. A cached input is narrowed
 (``coalesce``, no shuffle) to ⌈plan bytes / ``_PY_TASK_BYTES``⌉ Python
 tasks, because every Python task pays a fixed cost before any
@@ -20,11 +29,12 @@ Token columns (``token_col``) are flattened zero-copy and collapsed by
 one bincount per batch (:func:`_token_histogram`) into (distinct id,
 count) pairs: hash sketches hash the distinct ids only, CMS adds the
 counts, and t-digest ingests the histogram as weighted values. KLL
-still takes every token instance.
+and TopK still take every token instance.
 
-Phase 2 (tree merge): while more partials remain than ``fanin``, group
-them ``pmod(partition_id, ngroups)`` and OR/max/add-merge each group in
-``applyInPandas``; final ≤fanin blobs merge on the driver.  This is the
+Phase 2 (:func:`tree_merge`, optionally per key): while more partials
+remain than ``fanin``, group them ``pmod(partition_id, ngroups)`` and
+OR/max/add-merge each group in ``applyInPandas``; final ≤fanin blobs
+merge on the driver.  This is the
 treeAggregate shape — at 100k input partitions the driver never holds
 100k blobs (a 1 MiB Bloom partial × 100k = 100 GiB if collected flat).
 
@@ -35,12 +45,15 @@ for done partitions yield without consuming their input iterator, so
 the columnar scan for them is never materialized).
 
 Reference analog: ``rcpp_filter_keys`` builds one global filter in one
-pass (``/root/reference/src/BloomFilter.cpp:85-165``); merge-order
-invariance of our partials is what guarantees the same global sketch.
+pass (the reference's ``src/BloomFilter.cpp:85-165``), and every key
+reaches it through one canonicalise-and-hash pipeline shared by build
+and probe (``src/hash_keys.cpp``); merge-order invariance of our
+partials is what guarantees the same global sketch.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import math
 import os
@@ -292,13 +305,185 @@ class BuildResult:
     merge_rounds: int
 
 
-def _extract_hashes(pdf: pd.DataFrame, cols, token_col, prehashed) -> np.ndarray:
-    if prehashed:
-        # single int64 column already hashed JVM-side (xxhash64)
-        return pdf[cols[0]].to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-    if token_col is not None:
-        return hash_tokens_flat(pdf[token_col])
-    return hash_columns(pdf, list(cols))
+def _wsum(x: np.ndarray, counts: np.ndarray | None = None) -> np.uint64:
+    """Wrapping uint64 sum of ``x`` (uint64 bits), each element taken
+    ``counts`` times: the lineage fingerprint of one batch."""
+    with np.errstate(over="ignore"):
+        if counts is None:
+            return x.sum(dtype=np.uint64)
+        return (x * counts.astype(np.int64).view(np.uint64)).sum(dtype=np.uint64)
+
+
+def ingest(
+    sk: Sketch,
+    x: np.ndarray,
+    counts: np.ndarray | None = None,
+    *,
+    had_nulls: bool = False,
+    null_marks: bool = True,
+) -> np.uint64:
+    """Feed ``sk`` one batch; return the batch's lineage fingerprint.
+    Every partial builder and stream reaches a sketch only through here.
+
+    ``x`` is what ``sk.CONSUMES``: canonical uint64 hashes, float64
+    values, or an ``(n, dim)`` float64 matrix; ``counts`` is each
+    element's multiplicity (a token histogram or a weight column).
+
+    Nulls: ``had_nulls`` records rows the extraction already dropped.
+    With ``null_marks`` a ``NULL_SENTINEL`` hash, a NaN value and a
+    null count are nulls too: dropped, and recorded with ``add_null``.
+    Prehashed keys pass ``null_marks=False`` (every hash is a key).
+
+    Dispatch: a set sketch (``SET_SEMANTICS``) takes the distinct
+    hashes; a weighted one (``SUPPORTS_WEIGHTS``) the hashes or values
+    with their counts; any other hash sketch every instance (a
+    histogram is ``np.repeat``-ed); other counted values go to
+    ``update_weighted`` (TopK).
+
+    Fingerprint: the wrapping sum of the per-instance bits, for hashes
+    before their null marks are dropped (a null hashes to a value), for
+    values and matrices after."""
+    consumes = getattr(sk, "CONSUMES", "hashes")
+    if consumes == "hashes":
+        fp = _wsum(x, counts)
+        null = x == NULL_SENTINEL if null_marks else None
+    elif consumes == "values" and null_marks:
+        null = np.isnan(x)
+        if counts is not None and counts.dtype.kind not in "iu":
+            null |= pd.isna(counts)
+    else:
+        null = None
+    if null is not None and null.any():
+        had_nulls = True
+        x = x[~null]
+        counts = None if counts is None else counts[~null]
+    if had_nulls and hasattr(sk, "add_null"):
+        sk.add_null()
+    if consumes == "hashes":
+        if getattr(sk, "SET_SEMANTICS", False):
+            sk.update_hashes(np.unique(x) if counts is None else x)
+        elif getattr(sk, "SUPPORTS_WEIGHTS", False):
+            if counts is None:  # one sort replaces an unbuffered scatter
+                x, counts = np.unique(x, return_counts=True)
+            sk.update_hashes(x, weights=counts)
+        else:
+            sk.update_hashes(x if counts is None else np.repeat(x, counts))
+        return fp
+    fp = _wsum(x.reshape(-1).view(np.uint64), counts)
+    if consumes == "vectors":
+        sk.update_matrix(x)
+    elif counts is None:
+        sk.update_values(x)
+    elif getattr(sk, "SUPPORTS_WEIGHTS", False):
+        sk.update_values(x, weights=counts)
+    else:
+        sk.update_weighted(x, counts)
+    return fp
+
+
+class _Tokens:
+    """One batch of flat token ids.  Its histogram and its hashes are
+    computed at most once, however many sketches read them."""
+
+    def __init__(self, arr: np.ndarray):
+        self.arr = arr
+
+    @functools.cached_property
+    def hist(self):
+        return _token_histogram(self.arr)
+
+    @functools.cached_property
+    def hashes(self) -> tuple[np.ndarray, np.ndarray | None]:
+        """``(hashes, counts)``: of the histogram's distinct ids, else of
+        every instance (``counts`` None)."""
+        if self.hist is None:
+            return hash_numeric_array(self.arr), None
+        return hash_float64(self.hist[0]), self.hist[1]
+
+    def input(self, sk: Sketch) -> tuple[np.ndarray, np.ndarray | None]:
+        """``(x, counts)`` for :func:`ingest`: hash sketches take the
+        hashes, a weighted value sketch (t-digest) the histogram, and
+        KLL and TopK every value."""
+        if getattr(sk, "CONSUMES", "hashes") != "values":
+            return self.hashes
+        if getattr(sk, "SUPPORTS_WEIGHTS", False) and self.hist is not None:
+            return self.hist
+        return self.arr.astype(np.float64, copy=False), None
+
+
+class PartialRows:
+    """The one writer of partial rows ``([key,] partition_id,
+    n_partials, n_rows, fingerprint, blob)``: per key (a group value, a
+    sketch name, or None for an ungrouped sketch) a sketch, its partial
+    count, its row count and its fingerprint.  Builders make sketches
+    with ``make(key)`` and count batches with :meth:`add`; merges fold
+    whole partial rows in with :meth:`merge`."""
+
+    def __init__(self, make: Callable[[object], Sketch] | None = None, keys=()):
+        self._make = make
+        self.sketches: dict = {}
+        self.n_partials: dict = {}
+        self.n_rows: dict = {}
+        self.fingerprint: dict = {}
+        for key in keys:
+            self[key]
+
+    def _new(self, key, sk: Sketch, n_partials: int) -> None:
+        self.sketches[key] = sk
+        self.n_partials[key], self.n_rows[key] = n_partials, 0
+        self.fingerprint[key] = np.uint64(0)
+
+    def __getitem__(self, key) -> Sketch:
+        """``key``'s sketch, made (as one partial) on first use."""
+        if key not in self.sketches:
+            self._new(key, self._make(key), 1)
+        return self.sketches[key]
+
+    def add(self, key, n_rows: int, fp: np.uint64 = np.uint64(0)) -> None:
+        self.n_rows[key] += int(n_rows)
+        with np.errstate(over="ignore"):
+            self.fingerprint[key] += fp
+
+    def merge(self, key, row) -> None:
+        """Fold one partial row (a ``Row`` or a dict) into ``key``'s."""
+        sk = Sketch.from_bytes(bytes(row["blob"]))
+        if key in self.sketches:
+            self.sketches[key] = self.sketches[key].merge(sk)
+        else:
+            self._new(key, sk, 0)
+        self.n_partials[key] += int(row["n_partials"])
+        self.add(key, row["n_rows"], np.int64(row["fingerprint"]).astype(np.uint64))
+
+    def rows(self, pid: int, key_col: str | None = None, key_type=None, pandas=False):
+        """Yield every key's row under ``partition_id`` ``pid``, as one
+        pandas frame or one Arrow batch (``key_col`` of ``key_type``);
+        nothing when no key was seen."""
+        keys = list(self.sketches)
+        if not keys:
+            return
+        cols = {
+            "partition_id": [pid] * len(keys),
+            "n_partials": [self.n_partials[k] for k in keys],
+            "n_rows": [self.n_rows[k] for k in keys],
+            "fingerprint": [int(self.fingerprint[k].astype(np.int64)) for k in keys],
+            "blob": [self.sketches[k].to_bytes() for k in keys],
+        }
+        if pandas:
+            yield pd.DataFrame({key_col: keys, **cols} if key_col else cols)
+            return
+        import pyarrow as pa
+
+        out = {c: pa.array(v, pa.binary() if c == "blob" else pa.int64()) for c, v in cols.items()}
+        if key_col:
+            out = {key_col: pa.array(keys, type=key_type), **out}
+        yield pa.RecordBatch.from_pydict(out)
+
+
+def _merge_blobs(blobs) -> Sketch:
+    """Left-to-right merge of serialized sketches."""
+    return functools.reduce(
+        lambda a, b: a.merge(b), (Sketch.from_bytes(bytes(b)) for b in blobs)
+    )
 
 
 def _extract_values(pdf: pd.DataFrame, cols, token_col) -> np.ndarray:
@@ -313,71 +498,74 @@ def _extract_values(pdf: pd.DataFrame, cols, token_col) -> np.ndarray:
     return pdf[cols[0]].to_numpy(dtype=np.float64, na_value=np.nan)
 
 
-def make_partial_fn(
+def _ingest_pdf(
+    sk: Sketch,
+    pdf: pd.DataFrame,
+    cols: list[str] | None,
+    token_col: str | None,
+    weight_col: str | None = None,
+) -> tuple[int, np.uint64]:
+    """The pandas lanes' extraction: ONE pandas batch into :func:`ingest`.
+    The pandas builder and both sketch streams (the stateful stream and
+    topk_stream) dispatch here, so batch/stream parity cannot drift.
+    Returns (rows_counted, fingerprint_delta): rows_counted is the batch
+    row count except on the vectors lane, where NULL vectors carry no
+    rows (matching the Arrow vectors lane's accounting)."""
+    consumes = getattr(sk, "CONSUMES", "hashes")
+    n, counts, had_nulls = len(pdf), None, False
+    if weight_col is not None:
+        x = pdf[cols[0]].to_numpy(dtype=np.float64, na_value=np.nan)
+        counts = pdf[weight_col].to_numpy()
+    elif consumes == "vectors":
+        vecs = [np.asarray(v, dtype=np.float64) for v in pdf[cols[0]] if v is not None]
+        had_nulls, n = len(vecs) < n, len(vecs)
+        bad = next((v.size for v in vecs if v.size != sk.dim), None)
+        if bad is not None:
+            raise ValueError(
+                f"vector column rows must all have length {sk.dim} "
+                f"(found a row of length {bad})"
+            )
+        x = np.stack(vecs) if vecs else np.empty((0, sk.dim))
+    elif consumes == "values":
+        x = _extract_values(pdf, cols, token_col)
+    elif token_col is not None:
+        x = hash_tokens_flat(pdf[token_col])
+    else:
+        x = hash_columns(pdf, list(cols))
+    return n, ingest(sk, x, counts, had_nulls=had_nulls)
+
+
+def make_pandas_partial_fn(
     factory: Callable[[], Sketch],
+    group_col: str | None = None,
     cols: list[str] | None = None,
     token_col: str | None = None,
-    prehashed: bool = False,
-    drop_nulls: bool = True,
+    weight_col: str | None = None,
 ):
-    """Build the pandas-lane builder ``(pid, batches)`` → one partial
-    row for :func:`partial_stage`. Top-level so cloudpickle ships only
-    small state."""
+    """mapInPandas builder ``(pid, batches)`` for :func:`partial_stage`:
+    ONE pass over each partition producing one partial row, or with
+    ``group_col`` one per (group key, partition).  Grouping happens
+    inside the batch (pandas C groupby), so a K-key input costs one scan
+    — not the K filtered passes of filtering the DataFrame per key.
 
-    def partial_fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = factory()
-        consumes = getattr(sk, "CONSUMES", "hashes")
-        n = 0
-        fp = np.uint64(0)
+    ``weight_col`` (weighted-frequency sketches only, e.g. TopKSketch):
+    each row's item counts ``weight`` times instead of once; rows whose
+    weight is NULL are skipped (a NULL weight carries no mass)."""
+
+    def fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = PartialRows(lambda _: factory(), () if group_col else (None,))
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            if consumes == "values":
-                v = _extract_values(pdf, cols, token_col)
-                nan_mask = np.isnan(v)
-                if nan_mask.any():
-                    if hasattr(sk, "add_null"):
-                        sk.add_null()
-                    v = v[~nan_mask]
-                with np.errstate(over="ignore"):
-                    fp += v.view(np.uint64).sum(dtype=np.uint64)
-                sk.update_values(v)
-                n += len(pdf)
-                continue
-            h = _extract_hashes(pdf, cols, token_col, prehashed)
-            with np.errstate(over="ignore"):
-                fp += h.sum(dtype=np.uint64)
-            _ingest_hashes(sk, h, drop_nulls=drop_nulls and not prehashed)
-            n += len(pdf)
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "n_partials": [1],
-                "n_rows": [n],
-                "fingerprint": [np.int64(fp.astype(np.int64))],
-                "blob": [sk.to_bytes()],
-            }
-        )
+            groups = (
+                pdf.groupby(group_col, dropna=False, sort=False)
+                if group_col else [(None, pdf)]
+            )
+            for key, sub in groups:
+                acc.add(key, *_ingest_pdf(acc[key], sub, cols, token_col, weight_col))
+        yield from acc.rows(pid, group_col, pandas=True)
 
-    return partial_fn
-
-
-def _ingest_hashes(sk: Sketch, h: np.ndarray, drop_nulls: bool = True) -> None:
-    """Shared batch-ingest for hash-consuming sketches: null handling +
-    set/weighted pre-aggregation (one sort replaces unbuffered scatter)."""
-    if drop_nulls:
-        null_mask = h == NULL_SENTINEL
-        if null_mask.any():
-            if hasattr(sk, "add_null"):
-                sk.add_null()
-            h = h[~null_mask]
-    if getattr(sk, "SET_SEMANTICS", False):
-        sk.update_hashes(np.unique(h))
-    elif getattr(sk, "SUPPORTS_WEIGHTS", False):
-        hu, hc = np.unique(h, return_counts=True)
-        sk.update_hashes(hu, weights=hc)
-    else:
-        sk.update_hashes(h)
+    return fn
 
 
 def make_partial_fn_arrow(
@@ -387,261 +575,71 @@ def make_partial_fn_arrow(
 ):
     """Arrow-native partial builder (``mapInArrow``) for the hot cases:
     prehashed int64 keys, ``array<int>`` token columns, single numeric
-    columns.  An Arrow list column is ONE flat values buffer + offsets —
-    flattening it is zero-copy, versus the Arrow→pandas conversion that
-    materializes a numpy object per ROW (millions of small allocations
-    per batch; measured 85-94% kernel time from allocator churn at 32
-    concurrent workers)."""
+    or string columns, vector columns.  An Arrow list column is ONE
+    flat values buffer + offsets — flattening it is zero-copy, versus
+    the Arrow→pandas conversion that materializes a numpy object per
+    ROW (millions of small allocations per batch; measured 85-94%
+    kernel time from allocator churn at 32 concurrent workers).  A key
+    column's nulls are dropped (and recorded) before hashing."""
     import pyarrow as pa
 
     def partial_fn(pid, it):
-        sk = factory()
+        acc = PartialRows(lambda _: factory(), (None,))
+        sk = acc[None]
         consumes = getattr(sk, "CONSUMES", "hashes")
-        n = 0
-        fp = np.uint64(0)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            col = batch.column(0)
+            col, n, counts = batch.column(0), batch.num_rows, None
+            had_nulls = token_col is None and col.null_count > 0
+            if had_nulls:
+                col = col.drop_null()
             if consumes == "vectors":
-                # matrix sketches (FrequentDirections): the embedding
-                # column is an Arrow list — ONE flat float buffer +
-                # offsets, so the (n, dim) matrix is a zero-copy
+                # matrix sketches (FrequentDirections): a zero-copy
                 # flatten + reshape, never a numpy object per row
-                if col.null_count:
-                    col = col.drop_null()
                 if len(col) == 0:
                     continue
-                dim = int(getattr(sk, "dim"))
-                lens = pa.compute.list_value_length(col).to_numpy(
-                    zero_copy_only=False
-                )
+                dim = sk.dim
+                lens = pa.compute.list_value_length(col).to_numpy(zero_copy_only=False)
                 if (lens != dim).any():
-                    bad = int(lens[lens != dim][0])
                     raise ValueError(
                         f"vector column rows must all have length {dim} "
-                        f"(found a row of length {bad})"
+                        f"(found a row of length {int(lens[lens != dim][0])})"
                     )
                 flat = col.flatten().to_numpy(zero_copy_only=False)
-                m = flat.astype(np.float64, copy=False).reshape(-1, dim)
-                with np.errstate(over="ignore"):
-                    fp += m.reshape(-1).view(np.uint64).sum(dtype=np.uint64)
-                sk.update_matrix(m)
-                n += m.shape[0]
-                continue
-            if token_col is not None:
-                flat = col.flatten()  # zero-copy: list values trimmed to batch
-                arr = flat.to_numpy(zero_copy_only=False)
-            else:
-                if col.null_count:
-                    if hasattr(sk, "add_null"):
-                        sk.add_null()
-                    col = col.drop_null()
-                if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
-                    # string keys (doc_id, source — THE common case):
-                    # hash the flat utf8 buffers directly, never an
-                    # object per row
-                    if consumes == "values":
-                        raise TypeError(
-                            "value-consuming sketches need a numeric column, "
-                            f"got string for {type(sk).__name__}"
-                        )
-                    h = hash_utf8_arrow(col)
-                    with np.errstate(over="ignore"):
-                        fp += h.sum(dtype=np.uint64)
-                    _ingest_hashes(sk, h, drop_nulls=False)
-                    n += batch.num_rows
-                    continue
-                arr = col.to_numpy(zero_copy_only=False)
-            hist = None
-            if token_col is not None and not prehashed and (
-                consumes != "values" or getattr(sk, "SUPPORTS_WEIGHTS", False)
-            ):
-                hist = _token_histogram(arr)
-            if consumes == "values":
-                if hist is not None:
-                    v, cnt = hist
-                    # the per-instance value-bit sum, from the histogram
-                    with np.errstate(over="ignore"):
-                        fp += (v.view(np.uint64) * cnt.astype(np.uint64)).sum(
-                            dtype=np.uint64
-                        )
-                    sk.update_values(v, weights=cnt)
-                    n += batch.num_rows
-                    continue
-                v = arr.astype(np.float64, copy=False)
-                nan_mask = np.isnan(v)
-                if nan_mask.any():
-                    if hasattr(sk, "add_null"):
-                        sk.add_null()
-                    v = v[~nan_mask]
-                with np.errstate(over="ignore"):
-                    fp += v.view(np.uint64).sum(dtype=np.uint64)
-                sk.update_values(v)
-            else:
+                x = flat.astype(np.float64, copy=False).reshape(-1, dim)
+                n = len(x)
+            elif token_col is not None:
+                arr = col.flatten().to_numpy(zero_copy_only=False)  # zero-copy
                 if prehashed:
-                    h = arr.astype(np.int64, copy=False).view(np.uint64)
-                elif hist is not None:
-                    vals, cnt = hist
-                    h = hash_float64(vals)
-                    # fingerprint = wrapping sum of per-INSTANCE hashes
-                    # (weight uniques by multiplicity) so the lineage
-                    # fingerprint is identical across ingest paths
-                    with np.errstate(over="ignore"):
-                        fp += (h * cnt.astype(np.uint64)).sum(dtype=np.uint64)
-                    if getattr(sk, "SET_SEMANTICS", False):
-                        sk.update_hashes(h)
-                    elif getattr(sk, "SUPPORTS_WEIGHTS", False):
-                        sk.update_hashes(h, weights=cnt)
-                    else:
-                        sk.update_hashes(np.repeat(h, cnt))
-                    n += batch.num_rows
-                    continue
+                    x = arr.astype(np.int64, copy=False).view(np.uint64)
+                else:
+                    x, counts = _Tokens(arr).input(sk)
+            elif pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+                # string keys (doc_id, source — THE common case): hash
+                # the flat utf8 buffers directly, never an object per row
+                if consumes == "values":
+                    raise TypeError(
+                        "value-consuming sketches need a numeric column, "
+                        f"got string for {type(sk).__name__}"
+                    )
+                x = hash_utf8_arrow(col)
+            else:
+                arr = col.to_numpy(zero_copy_only=False)
+                if consumes == "values":
+                    x = arr.astype(np.float64, copy=False)
+                elif prehashed:  # int64 already hashed JVM-side (xxhash64)
+                    x = arr.astype(np.int64, copy=False).view(np.uint64)
                 else:
                     # canonical numeric hash — hash_numeric_array keeps
                     # int64 beyond 2^53 exact, matching the query-side
                     # hash_series dispatch bit for bit
-                    h = hash_numeric_array(arr)
-                with np.errstate(over="ignore"):
-                    fp += h.sum(dtype=np.uint64)
-                _ingest_hashes(sk, h, drop_nulls=not prehashed)
-            n += batch.num_rows
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": pa.array([pid], pa.int64()),
-                "n_partials": pa.array([1], pa.int64()),
-                "n_rows": pa.array([n], pa.int64()),
-                "fingerprint": pa.array(
-                    [int(np.int64(fp.astype(np.int64)))], pa.int64()
-                ),
-                "blob": pa.array([sk.to_bytes()], pa.binary()),
-            }
-        )
+                    x = hash_numeric_array(arr)
+            fp = ingest(sk, x, counts, had_nulls=had_nulls, null_marks=not prehashed)
+            acc.add(None, n, fp)
+        yield from acc.rows(pid)
 
     return partial_fn
-
-
-def _ingest_pdf(
-    sk: Sketch,
-    pdf: pd.DataFrame,
-    cols: list[str] | None,
-    token_col: str | None,
-    weight_col: str | None = None,
-) -> tuple[int, np.uint64]:
-    """Feed ONE pandas batch into a sketch through the right lane —
-    weighted / vectors / values / hashes — with the null semantics every
-    caller must share (the grouped batch builder, the stateful stream,
-    and topk_stream all dispatch here, so batch/stream parity cannot
-    drift).  Returns (rows_counted, fingerprint_delta): rows_counted is
-    the batch row count except on the vectors lane, where NULL vectors
-    carry no rows (matching the Arrow vectors lane's accounting)."""
-    fp = np.uint64(0)
-    if weight_col is not None:
-        items = pdf[cols[0]].to_numpy()
-        w = pdf[weight_col].to_numpy()
-        keep = ~(pd.isna(items) | pd.isna(w))
-        if not keep.all():
-            if hasattr(sk, "add_null"):
-                sk.add_null()
-            items, w = items[keep], w[keep]
-        iv = items.astype(np.float64)
-        with np.errstate(over="ignore"):
-            fp += (
-                iv.view(np.uint64) * w.astype(np.int64).view(np.uint64)
-            ).sum(dtype=np.uint64)
-        sk.update_weighted(iv, w)
-        return len(pdf), fp
-    consumes = getattr(sk, "CONSUMES", "hashes")
-    if consumes == "vectors":
-        col = pdf[cols[0]]
-        vecs = [np.asarray(v, dtype=np.float64) for v in col if v is not None]
-        if len(vecs) < len(col) and hasattr(sk, "add_null"):
-            sk.add_null()
-        if not vecs:
-            return 0, fp
-        dim = getattr(sk, "dim", None)
-        if dim is not None:
-            bad = next((v.size for v in vecs if v.size != dim), None)
-            if bad is not None:
-                raise ValueError(
-                    f"vector column rows must all have length {dim} "
-                    f"(found a row of length {bad})"
-                )
-        m = np.stack(vecs)
-        with np.errstate(over="ignore"):
-            fp += m.reshape(-1).view(np.uint64).sum(dtype=np.uint64)
-        sk.update_matrix(m)
-        return len(vecs), fp
-    if consumes == "values":
-        v = _extract_values(pdf, cols, token_col)
-        nan_mask = np.isnan(v)
-        if nan_mask.any():
-            if hasattr(sk, "add_null"):
-                sk.add_null()
-            v = v[~nan_mask]
-        with np.errstate(over="ignore"):
-            fp += v.view(np.uint64).sum(dtype=np.uint64)
-        sk.update_values(v)
-        return len(pdf), fp
-    h = (
-        hash_tokens_flat(pdf[token_col])
-        if token_col is not None
-        else hash_columns(pdf, list(cols))
-    )
-    with np.errstate(over="ignore"):
-        fp += h.sum(dtype=np.uint64)
-    _ingest_hashes(sk, h)
-    return len(pdf), fp
-
-
-def make_grouped_partial_fn(
-    factory: Callable[[], Sketch],
-    group_col: str,
-    cols: list[str] | None = None,
-    token_col: str | None = None,
-    weight_col: str | None = None,
-):
-    """mapInPandas builder: ONE pass over each partition producing one
-    partial row per (group key, partition).  Grouping happens inside the
-    batch (pandas C groupby), so a K-key input costs one scan — not the
-    K filtered passes of filtering the DataFrame per key.
-
-    ``weight_col`` (weighted-frequency sketches only, e.g. TopKSketch):
-    each row's item counts ``weight`` times instead of once; rows whose
-    weight is NULL are skipped (a NULL weight carries no mass)."""
-
-    def fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sks: dict = {}
-        counts: dict = {}
-        fps: dict = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            for key, sub in pdf.groupby(group_col, dropna=False, sort=False):
-                sk = sks.get(key)
-                if sk is None:
-                    sk = sks[key] = factory()
-                    counts[key] = 0
-                    fps[key] = np.uint64(0)
-                n_in, fp_delta = _ingest_pdf(sk, sub, cols, token_col, weight_col)
-                with np.errstate(over="ignore"):
-                    fps[key] += fp_delta
-                counts[key] += n_in
-        if not sks:
-            return
-        keys = list(sks)
-        yield pd.DataFrame(
-            {
-                group_col: keys,
-                "partition_id": [pid] * len(keys),
-                "n_partials": [1] * len(keys),
-                "n_rows": [counts[k] for k in keys],
-                "fingerprint": [np.int64(fps[k].astype(np.int64)) for k in keys],
-                "blob": [sks[k].to_bytes() for k in keys],
-            }
-        )
-
-    return fn
 
 
 def make_grouped_partial_fn_arrow(
@@ -657,36 +655,25 @@ def make_grouped_partial_fn_arrow(
     groupby — at 2M rows that conversion alone dominated the scan
     (measured: grouped top-k partials 1.96 s of a 2.0 s cell).  Here
     the batch stays columnar: group codes come from one
-    ``dictionary_encode``, rows sort once (stable — within-group order
-    is preserved, so sketch update order matches the pandas builder),
-    and each group ingests a SLICE of the flat hash/value array.
+    ``dictionary_encode``, elements sort once by code (stable —
+    within-group order is preserved, so sketch update order matches the
+    pandas builder), and each group ingests a SLICE of the flat
+    hash/value array.
     Null group keys form their own group (pandas ``dropna=False``
     parity)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    consumes = getattr(factory(), "CONSUMES", "hashes")
+    values = getattr(factory(), "CONSUMES", "hashes") == "values"
 
     def fn(pid, it):
-        sks: dict = {}
-        counts: dict = {}
-        fps: dict = {}
-        gtype_pa = None
-
-        def group_sketch(key):
-            sk = sks.get(key)
-            if sk is None:
-                sk = sks[key] = factory()
-                counts[key] = 0
-                fps[key] = np.uint64(0)
-            return sk
-
+        acc = PartialRows(lambda _: factory())
+        gtype = None
         for batch in it:
             if batch.num_rows == 0:
                 continue
             gcol = batch.column(batch.schema.get_field_index(group_col))
-            if gtype_pa is None:
-                gtype_pa = gcol.type
+            gtype = gcol.type
             denc = pc.dictionary_encode(gcol)
             if isinstance(denc, pa.ChunkedArray):
                 denc = denc.combine_chunks()
@@ -694,106 +681,35 @@ def make_grouped_partial_fn_arrow(
             codes = pc.fill_null(
                 pc.cast(denc.indices, pa.int64()), len(keys)
             ).to_numpy(zero_copy_only=False)
-            has_null_key = bool(gcol.null_count)
-            if has_null_key:
-                keys = keys + [None]
-            dcol = batch.column(
-                batch.schema.get_field_index(
-                    token_col if token_col is not None else cols[0]
-                )
-            )
+            if gcol.null_count:
+                keys.append(None)
+            dcol = batch.column(batch.schema.get_field_index(token_col or cols[0]))
             if token_col is not None:
-                # token lane: flatten once (zero-copy), repeat codes by
-                # list length, stable-sort the FLAT codes → per-group
-                # contiguous token slices in original order
-                lens = pc.list_value_length(dcol).to_numpy(
-                    zero_copy_only=False
-                )
-                lens = np.nan_to_num(lens, nan=0).astype(np.int64)
+                # flatten once (zero-copy) and repeat each row's code by
+                # its list length: per-group token slices in row order
+                lens = pc.list_value_length(dcol).to_numpy(zero_copy_only=False)
                 flat = dcol.flatten().to_numpy(zero_copy_only=False)
-                if consumes == "values":
-                    x_all = flat.astype(np.float64, copy=False)
-                else:
-                    x_all = hash_numeric_array(
-                        flat.astype(np.int64, copy=False)
-                    )
-                flat_codes = np.repeat(codes, lens)
-                order = np.argsort(flat_codes, kind="stable")
-                sorted_codes = flat_codes[order]
-                bounds = np.searchsorted(
-                    sorted_codes, np.arange(len(keys) + 1)
+                x_all = (
+                    flat.astype(np.float64, copy=False) if values
+                    else hash_numeric_array(flat.astype(np.int64, copy=False))
                 )
-                row_counts = np.bincount(codes, minlength=len(keys))
-                for ci, key in enumerate(keys):
-                    if not row_counts[ci]:
-                        continue
-                    sk = group_sketch(key)
-                    x = x_all[order[bounds[ci]:bounds[ci + 1]]]
-                    if consumes == "values":
-                        nan_mask = np.isnan(x)
-                        if nan_mask.any():
-                            if hasattr(sk, "add_null"):
-                                sk.add_null()
-                            x = x[~nan_mask]
-                        with np.errstate(over="ignore"):
-                            fps[key] += x.view(np.uint64).sum(dtype=np.uint64)
-                        sk.update_values(x)
-                    else:
-                        with np.errstate(over="ignore"):
-                            fps[key] += x.sum(dtype=np.uint64)
-                        _ingest_hashes(sk, x)
-                    counts[key] += int(row_counts[ci])
-                continue
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            bounds = np.searchsorted(sorted_codes, np.arange(len(keys) + 1))
-            if consumes == "values":
-                v_all = dcol.to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )
+                elem_codes = np.repeat(codes, np.nan_to_num(lens, nan=0).astype(np.int64))
             else:
-                # single string column: flat-utf8 kernel, nulls →
-                # NULL_SENTINEL (dropped per group by _ingest_hashes,
-                # which also records add_null — hash_series parity)
-                h_all = hash_utf8_arrow(dcol)
-            for ci, key in enumerate(keys):
-                lo, hi = bounds[ci], bounds[ci + 1]
-                if lo == hi:
-                    continue
-                sk = group_sketch(key)
-                rows = order[lo:hi]
-                if consumes == "values":
-                    v = v_all[rows]
-                    nan_mask = np.isnan(v)
-                    if nan_mask.any():
-                        if hasattr(sk, "add_null"):
-                            sk.add_null()
-                        v = v[~nan_mask]
-                    with np.errstate(over="ignore"):
-                        fps[key] += v.view(np.uint64).sum(dtype=np.uint64)
-                    sk.update_values(v)
-                else:
-                    h = h_all[rows]
-                    with np.errstate(over="ignore"):
-                        fps[key] += h.sum(dtype=np.uint64)
-                    _ingest_hashes(sk, h)
-                counts[key] += int(hi - lo)
-        if not sks:
-            return
-        ks = list(sks)
-        yield pa.RecordBatch.from_pydict(
-            {
-                group_col: pa.array(ks, type=gtype_pa),
-                "partition_id": pa.array([pid] * len(ks), pa.int64()),
-                "n_partials": pa.array([1] * len(ks), pa.int64()),
-                "n_rows": pa.array([counts[k] for k in ks], pa.int64()),
-                "fingerprint": pa.array(
-                    [int(np.int64(fps[k].astype(np.int64))) for k in ks],
-                    pa.int64(),
-                ),
-                "blob": pa.array([sks[k].to_bytes() for k in ks], pa.binary()),
-            }
-        )
+                # one string column hashes by the flat-utf8 kernel,
+                # nulls → NULL_SENTINEL (hash_series parity)
+                x_all = (
+                    dcol.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+                    if values else hash_utf8_arrow(dcol)
+                )
+                elem_codes = codes
+            order = np.argsort(elem_codes, kind="stable")
+            bounds = np.searchsorted(elem_codes[order], np.arange(len(keys) + 1))
+            for ci, n in enumerate(np.bincount(codes, minlength=len(keys))):
+                if n:
+                    key = keys[ci]
+                    x = x_all[order[bounds[ci]:bounds[ci + 1]]]
+                    acc.add(key, n, ingest(acc[key], x))
+        yield from acc.rows(pid, group_col, gtype)
 
     return fn
 
@@ -844,7 +760,7 @@ def grouped_sketch_partials(
     if arrow_ok:
         build = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col)
     else:
-        build = make_grouped_partial_fn(factory, group_col, cols, token_col, weight_col)
+        build = make_pandas_partial_fn(factory, group_col, cols, token_col, weight_col)
     return partial_stage(df, keep, build, schema, pandas=not arrow_ok)[0]
 
 
@@ -874,10 +790,7 @@ def grouped_sketch_estimates(
     out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
 
     def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
+        acc = _merge_blobs(pdf["blob"])
         if extract is not None:
             est = extract(acc)
         elif hasattr(acc, "estimate"):
@@ -952,10 +865,7 @@ def grouped_topk(
     )
 
     def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
+        acc = _merge_blobs(pdf["blob"])
         rows = acc.topk()[:k]
         m = len(rows)
         return pd.DataFrame(
@@ -971,10 +881,7 @@ def grouped_topk(
     return partials.groupBy(group_col).applyInPandas(merge_fn, out_schema)
 
 
-MULTI_PARTIAL_SCHEMA = (
-    "name string, partition_id long, n_partials long, n_rows long, "
-    "fingerprint long, blob binary"
-)
+MULTI_PARTIAL_SCHEMA = f"name string, {PARTIAL_SCHEMA}"
 
 
 def make_multi_partial_fn_arrow(
@@ -985,209 +892,22 @@ def make_multi_partial_fn_arrow(
     flattened once, bincount-preaggregated once, and every sketch
     updates from the shared arrays.  At scale this is the difference
     between K scans of the table and one — the scan (not the sketch
-    math) dominates a 100 TB build."""
-    import pyarrow as pa
+    math) dominates a 100 TB build.  Every sketch's row carries the
+    fingerprint of the token hashes, whatever the sketch consumes."""
 
     def partial_fn(pid, it):
-        sks = {name: f() for name, f in factories.items()}
-        n = 0
-        fp = np.uint64(0)
+        acc = PartialRows(lambda name: factories[name](), factories)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            arr = batch.column(0).flatten().to_numpy(zero_copy_only=False)
-            n += batch.num_rows
-            vals = cnt = h = h_all = None
-            hist = _token_histogram(arr)
-            if hist is not None:
-                vals, cnt = hist
-                h = hash_float64(vals)
-            else:
-                # hashed ONCE, shared by every hash-consuming sketch
-                h_all = hash_numeric_array(arr)
-            # fingerprint = wrapping sum of per-instance canonical hashes
-            # on EVERY path, so lineage fingerprints stay comparable
-            with np.errstate(over="ignore"):
-                fp += (
-                    (h * cnt.astype(np.uint64)).sum(dtype=np.uint64)
-                    if h is not None
-                    else h_all.sum(dtype=np.uint64)
-                )
-            for sk in sks.values():
-                consumes = getattr(sk, "CONSUMES", "hashes")
-                if consumes == "values" and cnt is not None and getattr(
-                    sk, "SUPPORTS_WEIGHTS", False
-                ):
-                    sk.update_values(vals, weights=cnt)
-                elif consumes == "values":
-                    v = arr.astype(np.float64, copy=False)
-                    nan_mask = np.isnan(v)
-                    if nan_mask.any():
-                        if hasattr(sk, "add_null"):
-                            sk.add_null()
-                        v = v[~nan_mask]
-                    sk.update_values(v)
-                elif h is not None:
-                    if getattr(sk, "SET_SEMANTICS", False):
-                        sk.update_hashes(h)
-                    elif getattr(sk, "SUPPORTS_WEIGHTS", False):
-                        sk.update_hashes(h, weights=cnt)
-                    else:
-                        sk.update_hashes(np.repeat(h, cnt))
-                else:
-                    _ingest_hashes(sk, h_all)
-        names = list(sks)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": pa.array(names, pa.string()),
-                "partition_id": pa.array([pid] * len(names), pa.int64()),
-                "n_partials": pa.array([1] * len(names), pa.int64()),
-                "n_rows": pa.array([n] * len(names), pa.int64()),
-                "fingerprint": pa.array(
-                    [int(np.int64(fp.astype(np.int64)))] * len(names), pa.int64()
-                ),
-                "blob": pa.array([sks[nm].to_bytes() for nm in names], pa.binary()),
-            }
-        )
+            tokens = _Tokens(batch.column(0).flatten().to_numpy(zero_copy_only=False))
+            fp = _wsum(*tokens.hashes)
+            for name, sk in acc.sketches.items():
+                ingest(sk, *tokens.input(sk))
+                acc.add(name, batch.num_rows, fp)
+        yield from acc.rows(pid, "name")
 
     return partial_fn
-
-
-def _merge_group_multi_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = _merge_group_fn(pdf.drop(columns=["name"]))
-    out.insert(0, "name", pdf["name"].iloc[0])
-    return out
-
-
-def tree_merge_multi(
-    partials: DataFrame, fanin: int = 64, n_parts: int | None = None
-) -> tuple[dict[str, "BuildResult"], int]:
-    """Distributed tree merge of MULTI_PARTIAL_SCHEMA rows grouped by
-    ``name``: repeated fan-in-bounded ``applyInPandas`` merges until ≤
-    fanin partials per name remain, then one driver-side merge of the
-    survivors.  Shared by ``build_sketches`` (many sketches, one
-    column) and ``operators.profile.profile_table`` (one sketch set per
-    COLUMN) — the driver never holds more than ~fanin blobs per name.
-
-    ``n_parts`` is the number of input partitions (≥ the DISTINCT
-    ``partition_id`` values, = partials per name plus the empty
-    partitions that left none).  Callers whose partials come straight
-    from a one-task-per-partition scan may omit it (the RDD partition
-    count IS that number); callers of :func:`partial_stage`, whose
-    tasks are coalesced, and callers reading partials back from storage
-    (checkpoint restore) MUST pass it — there the RDD partition count
-    reflects the task or parquet layout, not the partial count, and
-    under-counting would funnel thousands of blobs into one merge task.
-    Each result's ``n_partitions`` is at least a given ``n_parts``."""
-    counted = n_parts or 0
-    if n_parts is None:
-        n_parts = partials.rdd.getNumPartitions()
-    n_parts = max(1, n_parts)
-    cur = partials
-    rounds = 0
-    while n_parts > fanin:
-        ngroups = math.ceil(n_parts / fanin)
-        cur = (
-            cur.withColumn("g", F.pmod(F.col("partition_id"), F.lit(ngroups)))
-            .groupBy("name", "g")
-            .applyInPandas(_merge_group_multi_fn, schema=MULTI_PARTIAL_SCHEMA)
-        )
-        n_parts = ngroups
-        rounds += 1
-    out: dict[str, BuildResult] = {}
-    acc: dict[str, list] = {}
-    for r in sorted(cur.collect(), key=itemgetter("partition_id")):
-        acc.setdefault(r["name"], []).append(r)
-    for name, rows in acc.items():
-        sk = None
-        n_rows = 0
-        orig = 0
-        for r in rows:
-            s = Sketch.from_bytes(bytes(r["blob"]))
-            sk = s if sk is None else sk.merge(s)
-            n_rows += r["n_rows"]
-            orig += r["n_partials"]
-        out[name] = BuildResult(
-            sketch=sk, n_partitions=max(orig, counted), n_rows=n_rows,
-            merge_rounds=rounds,
-        )
-    return out, rounds
-
-
-def build_sketches(
-    df: DataFrame,
-    factories: dict[str, Callable[[], Sketch]],
-    token_col: str,
-    fanin: int = 64,
-    checkpoint_dir: str | None = None,
-) -> dict[str, BuildResult]:
-    """Build several sketches over one token column in a SINGLE pass.
-    Returns {name: BuildResult}.  With ``checkpoint_dir``, partials for
-    all sketches persist as lineage rows keyed by (name, partition_id);
-    a killed job recomputes only missing partitions."""
-    spark = df.sparkSession
-    done_ids: frozenset[int] = frozenset()
-    stamp = True  # fresh dirs get stamped; see marker_present note below
-    if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
-        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
-    partials, n_parts = partial_stage(
-        df, [token_col], make_multi_partial_fn_arrow(factories, token_col),
-        MULTI_PARTIAL_SCHEMA, done_ids=done_ids,
-    )
-    if n_parts is None:
-        n_parts = partials.rdd.getNumPartitions()
-    if checkpoint_dir:
-        partials.write.mode("append" if done_ids else "overwrite").parquet(
-            checkpoint_dir
-        )
-        # overwrite mode replaces EVERY partial with current-version
-        # data, so the dir is pure-v{HASH_FORMAT} afterwards and must
-        # be stamped even when the pre-existing dir was unmarked (an
-        # unmarked dir with zero done ids carries nothing forward);
-        # append onto an unmarked dir stays unmarked so later resumes
-        # keep warning (ADVICE r4)
-        if stamp or not done_ids:
-            _write_checkpoint_hash_format(spark, checkpoint_dir)
-        partials = spark.read.parquet(checkpoint_dir).dropDuplicates(
-            ["name", "partition_id"]
-        )
-        # restored partials: the parquet RDD layout says nothing about
-        # how many partials exist per name — count the real ids (cheap
-        # distinct over KB-scale lineage rows; a negative id is an empty
-        # task's marker, not an input partition)
-        true_parts = (
-            partials.where(F.col("partition_id") >= 0)
-            .select("partition_id").distinct().count()
-        )
-        n_parts = max(n_parts, true_parts)
-    out, rounds = tree_merge_multi(partials, fanin, n_parts=n_parts)
-    # an input that produced no partial rows still yields every requested
-    # sketch (empty), never a missing key
-    for name, f in factories.items():
-        if name not in out:
-            out[name] = BuildResult(sketch=f(), n_partitions=0, n_rows=0,
-                                    merge_rounds=rounds)
-    return out
-
-
-def _merge_group_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas: merge every partial blob in one tree-merge group."""
-    acc: Sketch | None = None
-    with np.errstate(over="ignore"):
-        fp = np.uint64(0)
-        for b, f in zip(pdf["blob"], pdf["fingerprint"]):
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-            fp += np.uint64(np.int64(f).astype(np.uint64))
-    return pd.DataFrame(
-        {
-            "partition_id": [int(pdf["partition_id"].min())],
-            "n_partials": [int(pdf["n_partials"].sum())],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "fingerprint": [np.int64(fp.astype(np.int64))],
-            "blob": [acc.to_bytes()],
-        }
-    )
 
 
 def sketch_partials(
@@ -1249,54 +969,124 @@ def _sketch_partials(
     if arrow_ok:
         build = make_partial_fn_arrow(factory, token_col, prehashed)
     else:
-        build = make_partial_fn(factory, cols, token_col, prehashed)
+        build = make_pandas_partial_fn(factory, None, cols, token_col)
     return partial_stage(
         df, keep, build, PARTIAL_SCHEMA, pandas=not arrow_ok, done_ids=done_ids
     )
+
+
+def _merge_rows(key: str | None):
+    """applyInPandas function folding one tree-merge group's partial
+    rows into one, under the group's smallest ``partition_id``."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        acc = PartialRows()
+        k = None if key is None else pdf[key].iloc[0]
+        for row in pdf.to_dict("records"):
+            acc.merge(k, row)
+        return next(acc.rows(int(pdf["partition_id"].min()), key, pandas=True))
+
+    return fn
 
 
 def tree_merge(
     partials: DataFrame,
     fanin: int = 64,
     n_parts: int | None = None,
-) -> tuple[Sketch, int, int, int]:
-    """Phase 2. Returns (sketch, n_partitions, n_rows, rounds).
+    key: str | None = None,
+) -> tuple[dict, int]:
+    """Phase 2: merge partial rows into one :class:`BuildResult` per
+    value of the ``key`` column (``build_sketches``: one per sketch name;
+    ``profile_table``: one per column and sketch), or into one under
+    ``None`` without a key.  Returns ``(results, rounds)``.
 
-    The round count is planned from PARTITION METADATA, not a count()
-    action — the whole merge tree plus the final collect executes as
-    ONE Spark job, so the input is scanned exactly once and no persist
-    of the partials is needed.  ``n_parts`` is the input partition
-    count (see :func:`tree_merge_multi`; default: the partials' own
-    partition count); ``n_partitions`` is at least a given ``n_parts``,
-    and exact partial accounting rides in the ``n_partials`` column."""
+    While more than ``fanin`` partials remain per key, a round groups
+    them by key and ``pmod(partition_id, ngroups)`` and merges each
+    group in ``applyInPandas``; the survivors merge on the driver in
+    ``partition_id`` order, so the driver never holds more than ~fanin
+    blobs per key.  The rounds are planned from PARTITION METADATA, not
+    a count() action — the whole merge tree plus the final collect
+    executes as ONE Spark job, so the input is scanned exactly once and
+    no persist of the partials is needed.
+
+    ``n_parts`` is the number of input partitions (≥ the DISTINCT
+    ``partition_id`` values, = partials per key plus the empty
+    partitions that left none).  Callers whose partials come straight
+    from a one-task-per-partition scan may omit it (the RDD partition
+    count IS that number); callers of :func:`partial_stage`, whose
+    tasks are coalesced, and callers reading partials back from storage
+    (checkpoint restore) MUST pass it — there the RDD partition count
+    reflects the task or parquet layout, not the partial count, and
+    under-counting would funnel thousands of blobs into one merge task.
+    Each result's ``n_partitions`` is at least a given ``n_parts``.
+
+    Without a key, no partials at all raise ``ValueError``; with a key
+    they give no results."""
     counted = n_parts or 0
     if n_parts is None:
         n_parts = partials.rdd.getNumPartitions()  # metadata, no job
     n_parts = max(1, n_parts)
+    keys = [key] if key else []
+    schema = PARTIAL_SCHEMA
+    if key:
+        schema = f"`{key}` {dict(partials.dtypes)[key]}, {PARTIAL_SCHEMA}"
     cur = partials
     rounds = 0
     while n_parts > fanin:
         ngroups = math.ceil(n_parts / fanin)
         cur = (
             cur.withColumn("g", F.pmod(F.col("partition_id"), F.lit(ngroups)))
-            .groupBy("g")
-            .applyInPandas(_merge_group_fn, schema=PARTIAL_SCHEMA)
+            .groupBy(*keys, "g")
+            .applyInPandas(_merge_rows(key), schema=schema)
         )
-        # localCheckpoint would cut lineage on long chains; rounds are few
         n_parts = ngroups
         rounds += 1
-    rows = sorted(cur.collect(), key=itemgetter("partition_id"))
-    if not rows:
+    acc = PartialRows()
+    for r in sorted(cur.collect(), key=itemgetter("partition_id")):
+        acc.merge(r[key] if key else None, r)
+    if not key and not acc.sketches:
         raise ValueError("no partials produced (empty input with 0 partitions?)")
-    acc: Sketch | None = None
-    n_rows = 0
-    orig_parts = 0
-    for r in rows:
-        s = Sketch.from_bytes(bytes(r["blob"]))
-        acc = s if acc is None else acc.merge(s)
-        n_rows += r["n_rows"]
-        orig_parts += r["n_partials"]
-    return acc, max(orig_parts, counted), n_rows, rounds
+    out = {
+        k: BuildResult(sk, max(acc.n_partials[k], counted), acc.n_rows[k], rounds)
+        for k, sk in acc.sketches.items()
+    }
+    return out, rounds
+
+
+def _checkpointed(
+    df: DataFrame, checkpoint_dir: str | None, key: str | None, stage: Callable
+) -> tuple[DataFrame, int | None]:
+    """``stage(done_ids) -> (partials, n_parts)`` through an optional
+    checkpoint dir (north rule: per-partition sketch lineage +
+    checkpointed resumability); returns the partials to merge and their
+    input partition count.
+
+    A resume skips the dir's done partition ids (after the hash-format
+    and bit-layout checks of :func:`_resume_ids`), appends the rest and
+    leaves an unmarked dir unmarked, so every later resume keeps warning
+    (ADVICE r4).  A fresh build overwrites every partial with
+    current-version data, so the dir is stamped with ``HASH_FORMAT``
+    even when it was unmarked before.  The partials are then re-read
+    from the dir, one per (``key``, partition id).  Their parquet layout
+    says nothing about how many partitions they cover, so ``n_parts``
+    counts the distinct real ids (a cheap distinct over KB-scale lineage
+    rows; a negative id is an empty task's marker): an adaptive input's
+    merge keeps the fan-in bound of a build without checkpoint."""
+    if not checkpoint_dir:
+        return stage(frozenset())
+    spark = df.sparkSession
+    stamp, done_ids = True, frozenset()
+    if _checkpoint_exists(spark, checkpoint_dir):
+        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
+    partials, n_parts = stage(done_ids)
+    partials.write.mode("append" if done_ids else "overwrite").parquet(checkpoint_dir)
+    if stamp or not done_ids:
+        _write_checkpoint_hash_format(spark, checkpoint_dir)
+    partials = spark.read.parquet(checkpoint_dir).dropDuplicates(
+        [*([key] if key else []), "partition_id"]
+    )
+    real = partials.where(F.col("partition_id") >= 0).select("partition_id").distinct()
+    return partials, max(n_parts or 0, real.count())
 
 
 def build_sketch(
@@ -1311,29 +1101,40 @@ def build_sketch(
     """One-call build: partials → (checkpoint) → tree merge → Sketch.
 
     With ``checkpoint_dir``, partials are persisted per partition id and
-    a killed job resumes by recomputing only missing ids (north rule:
-    per-partition sketch lineage + checkpointed resumability).
-    """
-    done_ids: frozenset[int] = frozenset()
-    spark = df.sparkSession
-    stamp = True  # fresh dirs get stamped; see marker_present note below
-    if checkpoint_dir and _checkpoint_exists(spark, checkpoint_dir):
-        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
-    partials, n_in = _sketch_partials(
-        df, factory, cols, token_col, prehashed, done_ids
+    a killed job resumes by recomputing only missing ids."""
+    partials, n_parts = _checkpointed(
+        df, checkpoint_dir, None,
+        lambda done: _sketch_partials(df, factory, cols, token_col, prehashed, done),
     )
-    if checkpoint_dir:
-        if done_ids:
-            partials.write.mode("append").parquet(checkpoint_dir)
-        else:
-            partials.write.mode("overwrite").parquet(checkpoint_dir)
-        # see build_sketches: a zero-done-ids overwrite yields a pure
-        # current-version dir — stamp it even if it was unmarked before
-        if stamp or not done_ids:
-            _write_checkpoint_hash_format(spark, checkpoint_dir)
-        partials = spark.read.parquet(checkpoint_dir).dropDuplicates(["partition_id"])
-    sketch, n_parts, n_rows, rounds = tree_merge(partials, fanin, n_in)
-    return BuildResult(sketch=sketch, n_partitions=n_parts, n_rows=n_rows, merge_rounds=rounds)
+    return tree_merge(partials, fanin, n_parts)[0][None]
+
+
+def build_sketches(
+    df: DataFrame,
+    factories: dict[str, Callable[[], Sketch]],
+    token_col: str,
+    fanin: int = 64,
+    checkpoint_dir: str | None = None,
+) -> dict[str, BuildResult]:
+    """Build several sketches over one token column in a SINGLE pass.
+    Returns {name: BuildResult}.  With ``checkpoint_dir``, partials for
+    all sketches persist as lineage rows keyed by (name, partition_id);
+    a killed job recomputes only missing partitions."""
+    build = make_multi_partial_fn_arrow(factories, token_col)
+    partials, n_parts = _checkpointed(
+        df, checkpoint_dir, "name",
+        lambda done: partial_stage(
+            df, [token_col], build, MULTI_PARTIAL_SCHEMA, done_ids=done
+        ),
+    )
+    out, rounds = tree_merge(partials, fanin, n_parts, key="name")
+    # an input that produced no partial rows still yields every requested
+    # sketch (empty), never a missing key
+    for name, f in factories.items():
+        if name not in out:
+            out[name] = BuildResult(sketch=f(), n_partitions=0, n_rows=0,
+                                    merge_rounds=rounds)
+    return out
 
 
 #: marker file recording hashing.HASH_FORMAT inside a checkpoint dir

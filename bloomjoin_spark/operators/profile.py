@@ -13,20 +13,25 @@ Two column-pruned scans, both distributed:
    per numeric column (shared per-batch arrays, canonical hash kernels
    from ``hashing`` — the same domains every other sketch consumer
    uses), whose partials ride the SAME ``MULTI_PARTIAL_SCHEMA`` tree
-   merge as ``build_sketches`` (``aggregate.tree_merge_multi``): at
-   100k partitions × K columns the driver still only ever holds
-   fanin-bounded blob sets.
+   merge as ``build_sketches`` (``aggregate.tree_merge`` keyed by
+   ``name``): at 100k partitions × K columns the driver still only
+   ever holds fanin-bounded blob sets.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, StringType
 
-from ..aggregate import MULTI_PARTIAL_SCHEMA, partial_stage, tree_merge_multi
+from ..aggregate import (
+    MULTI_PARTIAL_SCHEMA,
+    PartialRows,
+    ingest,
+    partial_stage,
+    tree_merge,
+)
 from ..hashing import hash_numeric_array, hash_utf8_arrow
 from ..sketches import HllSketch, TDigestSketch
 
@@ -37,45 +42,36 @@ _SEP = "\x1f"  # name = column SEP kind inside the shared partial rows
 
 def _make_profile_partial_fn(cols: list[str], numeric: set[str], hll_p: int,
                              delta: int):
+    names = [f"{c}{_SEP}{kind}" for c in cols
+             for kind in ("hll", "td") if kind == "hll" or c in numeric]
+
+    def make(name):
+        return TDigestSketch(delta) if name.endswith(f"{_SEP}td") else HllSketch(hll_p)
+
     def fn(pid, it):
-        sks: dict[str, object] = {}
-        for c in cols:
-            sks[f"{c}{_SEP}hll"] = HllSketch(hll_p)
-            if c in numeric:
-                sks[f"{c}{_SEP}td"] = TDigestSketch(delta)
-        n = 0
+        acc = PartialRows(make, names)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            n += batch.num_rows
             for idx, c in enumerate(cols):
                 arr = batch.column(idx).drop_null()
                 if len(arr) == 0:
                     continue
+                # null_marks=False: a NaN is a distinct value here, as
+                # in Spark's count(DISTINCT)
                 if c in numeric:
                     # hash the RAW dtype (int64 beyond 2^53 must hash as
                     # exact integer bits — hashing.py:88-94); float64
                     # only for the t-digest value lane
                     raw = arr.to_numpy(zero_copy_only=False)
-                    sks[f"{c}{_SEP}hll"].update_hashes(hash_numeric_array(raw))
-                    sks[f"{c}{_SEP}td"].update_values(
-                        raw.astype(np.float64, copy=False)
-                    )
+                    ingest(acc[f"{c}{_SEP}hll"], hash_numeric_array(raw), null_marks=False)
+                    ingest(acc[f"{c}{_SEP}td"], raw.astype(np.float64, copy=False),
+                           null_marks=False)
                 else:
-                    sks[f"{c}{_SEP}hll"].update_hashes(hash_utf8_arrow(arr))
-        names = list(sks)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "name": pa.array(names, pa.string()),
-                "partition_id": pa.array([pid] * len(names), pa.int64()),
-                "n_partials": pa.array([1] * len(names), pa.int64()),
-                "n_rows": pa.array([n] * len(names), pa.int64()),
-                "fingerprint": pa.array([0] * len(names), pa.int64()),
-                "blob": pa.array(
-                    [sks[nm].to_bytes() for nm in names], pa.binary()
-                ),
-            }
-        )
+                    ingest(acc[f"{c}{_SEP}hll"], hash_utf8_arrow(arr), null_marks=False)
+            for name in names:
+                acc.add(name, batch.num_rows)
+        yield from acc.rows(pid, "name")
 
     return fn
 
@@ -131,7 +127,7 @@ def profile_table(
     # pass 2: sketches, one Arrow stage + shared tree merge
     build = _make_profile_partial_fn(cols, numeric, hll_p, delta)
     partials, n_parts = partial_stage(df, cols, build, MULTI_PARTIAL_SCHEMA)
-    merged, _ = tree_merge_multi(partials, fanin, n_parts=n_parts)
+    merged, _ = tree_merge(partials, fanin, n_parts, key="name")
 
     rows = []
     for c in cols:

@@ -399,11 +399,13 @@ def estimate_join_size(
 
     from pyspark import inheritable_thread_target
 
+    # the session makes both threads inherit the caller's job tags
+    inherit = inheritable_thread_target(left.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        lfut = pool.submit(inheritable_thread_target(
+        lfut = pool.submit(inherit(
             lambda: build_sketch(left.select(*lkeys), factory, cols=lkeys)
         ))
-        rfut = pool.submit(inheritable_thread_target(
+        rfut = pool.submit(inherit(
             lambda: build_sketch(right.select(*rkeys), factory, cols=rkeys)
         ))
         lsk = lfut.result().sketch

@@ -238,5 +238,4 @@ def store_sketch(store: DataFrame, fanin: int = 64) -> Sketch:
     tree merge — same fan-in-bounded reduction as ``build_sketch``, so
     a store of any size merges without a driver-side fan-in."""
     partial_cols = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
-    sketch, _, _, _ = tree_merge(store.select(*partial_cols), fanin)
-    return sketch
+    return tree_merge(store.select(*partial_cols), fanin)[0][None].sketch

@@ -804,3 +804,169 @@ def test_partial_resume_across_file_layouts(spark, tmp_path, cached):
         assert resumed[name].n_rows == fresh[name].n_rows == 6_000
     if cached:
         toks.unpersist()
+
+
+def test_checkpoint_keeps_merge_rounds_on_adaptive_input(spark, tmp_path):
+    """An adaptive input's partition count is known only once it runs,
+    and partials restored from a checkpoint sit in a parquet layout
+    that says nothing about it: the checkpointed build counts the
+    restored partition ids, so it plans the same fan-in-bounded merge
+    as the build without a checkpoint."""
+    from bloomjoin_spark import HllSketch
+    from bloomjoin_spark.aggregate import _input_partitions
+
+    df = spark.range(0, 4_000).repartition(8).select(F.col("id").alias("k"))
+    assert _input_partitions(df) is None
+    plain = build_sketch(df, lambda: HllSketch(10), cols=["k"], fanin=2)
+    ckpt = build_sketch(
+        df, lambda: HllSketch(10), cols=["k"], fanin=2,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert (plain.merge_rounds, plain.n_partitions, plain.n_rows) == (2, 8, 4_000)
+    assert (ckpt.merge_rounds, ckpt.n_partitions, ckpt.n_rows) == (2, 8, 4_000)
+    assert ckpt.sketch.to_bytes() == plain.sketch.to_bytes()
+
+
+# ---------------------------------------------------------------------------
+# partial rows pinned per lane: (key, partition_id, n_partials, n_rows,
+# fingerprint, blob) of every partial builder on one fixed input
+# ---------------------------------------------------------------------------
+
+_LANE_SCHEMA = (
+    "g string, s string, k long, x double, h long, toks array<int>, "
+    "w long, vec array<double>"
+)
+
+
+def _lane_rows():
+    """96 rows with nulls in every column, a NaN, empty token lists and
+    repeated keys; three partitions, seven-row Arrow batches."""
+    rows = []
+    for i in range(96):
+        rows.append((
+            None if i % 13 == 0 else "abc"[i % 3],
+            None if i % 9 == 4 else f"k{(i * 7) % 23}",
+            None if i % 10 == 7 else (i * 31) % 41 - 20,
+            None if i % 8 == 1 else float("nan") if i == 30 else (i * 0.37) % 5 - 1,
+            None if i % 15 == 14 else (i * 0x9E3779B97F4A7C15) % (1 << 64) - (1 << 63),
+            None if i % 12 == 6 else [(i * j) % 29 for j in range(i % 5)],
+            None if i % 14 == 9 else i % 4,
+            None if i % 10 == 2 else [i * 0.1, (i % 3) * 1.0, -i * 0.05],
+        ))
+    return rows
+
+
+def _lane_partials(spark, lane):
+    """The partial-row DataFrame one builder lane writes over the fixed
+    input; every row keeps a leading key (``None`` when ungrouped)."""
+    from bloomjoin_spark import (
+        CmsSketch,
+        FrequentDirectionsSketch,
+        HllSketch,
+        KllSketch,
+        TDigestSketch,
+        ThetaSketch,
+        TopKSketch,
+    )
+    from bloomjoin_spark.aggregate import (
+        MULTI_PARTIAL_SCHEMA,
+        grouped_sketch_partials,
+        make_multi_partial_fn_arrow,
+        partial_stage,
+        sketch_partials,
+    )
+    from bloomjoin_spark.operators.profile import _make_profile_partial_fn
+
+    df = spark.createDataFrame(spark.sparkContext.parallelize(_lane_rows(), 3), _LANE_SCHEMA)
+    single = {
+        "arrow_prehashed": (lambda: BloomSketch(200, 0.01), dict(cols=["h"], prehashed=True)),
+        "arrow_string": (lambda: HllSketch(10), dict(cols=["s"])),
+        "arrow_numeric_hashes": (lambda: CmsSketch(1e-2, 1e-2), dict(cols=["k"])),
+        "arrow_numeric_values": (lambda: KllSketch(16), dict(cols=["x"])),
+        "arrow_tokens_bloom": (lambda: BloomSketch(200, 0.01), dict(token_col="toks")),
+        "arrow_tokens_cms": (lambda: CmsSketch(1e-2, 1e-2), dict(token_col="toks")),
+        "arrow_tokens_kll": (lambda: KllSketch(16), dict(token_col="toks")),
+        "arrow_tokens_tdigest": (lambda: TDigestSketch(20), dict(token_col="toks")),
+        "arrow_vectors": (lambda: FrequentDirectionsSketch(2, 3), dict(cols=["vec"])),
+        "pandas_two_col_hll": (lambda: HllSketch(10), dict(cols=["s", "k"])),
+    }
+    grouped = {
+        "grouped_tokens_hashes": (lambda: CmsSketch(1e-2, 1e-2), dict(token_col="toks")),
+        "grouped_tokens_values": (lambda: TopKSketch(8), dict(token_col="toks")),
+        "grouped_string_hashes": (lambda: HllSketch(10), dict(cols=["s"])),
+        "grouped_numeric_values": (lambda: KllSketch(64), dict(cols=["x"])),
+        "grouped_weighted_topk": (lambda: TopKSketch(4), dict(cols=["k"], weight_col="w")),
+    }
+    if lane in single:
+        factory, kw = single[lane]
+        return sketch_partials(df, factory, **kw).select(F.lit(None).cast("string"), "*")
+    if lane in grouped:
+        factory, kw = grouped[lane]
+        return grouped_sketch_partials(df, factory, "g", **kw)
+    if lane == "multi":
+        facs = {
+            "hll": lambda: HllSketch(10),
+            "cms": lambda: CmsSketch(1e-2, 1e-2),
+            "bloom": lambda: BloomSketch(200, 0.01),
+            "theta": lambda: ThetaSketch(16),
+            "tdigest": lambda: TDigestSketch(20),
+            "kll": lambda: KllSketch(16),
+            "topk": lambda: TopKSketch(4),
+        }
+        build = make_multi_partial_fn_arrow(facs, "toks")
+        return partial_stage(df, ["toks"], build, MULTI_PARTIAL_SCHEMA)[0]
+    assert lane == "profile", lane
+    build = _make_profile_partial_fn(["s", "k", "x"], {"k", "x"}, 10, 20)
+    return partial_stage(df, ["s", "k", "x"], build, MULTI_PARTIAL_SCHEMA)[0]
+
+
+#: sha256 of each lane's sorted partial rows: a digest moves when any
+#: partition id, partial count, row count, fingerprint or blob moves
+PARTIAL_ROW_DIGESTS = {
+    "arrow_prehashed": "1ad755d99e22ab5de0b8b38ea3d9104429a95911ddd8b6caaf8f59ea77467828",
+    "arrow_string": "6e00de0cc0bf1205d398e6bf10ad869bb99e5a3239c63127bed03f21947c3e9e",
+    "arrow_numeric_hashes": "7070cf4d1366acb7c7dde7ba63518893ef4ecfa41231b99bfbcad22f3c228527",
+    "arrow_numeric_values": "b4ecf2270a0c49689a8883f11d476724139b59f9b6061b67830bba32db8ccc3a",
+    "arrow_tokens_bloom": "d18f1a6fc91743e551ddf850cf30bc0b1c5f86ef0ae5738ab4f0b5a746994d1b",
+    "arrow_tokens_cms": "829dae849905d389f506ac7aec759606813dd8b454a70392df71a5767c01b8ce",
+    "arrow_tokens_kll": "d2a26c11b1266aac3e716b13f012f55eda6b8667b2c89c231e5a9bef54a9b2a3",
+    "arrow_tokens_tdigest": "284478f6ff634776e7163eea8b769e3f40f79054143ac0085aee8fb4571ea3af",
+    "arrow_vectors": "6ea9021bddb4a9e3816ba49d5c95f1190d1e55d3ea0c0a1586dfdd0879aebba2",
+    "pandas_two_col_hll": "4e1df11531e87ed231cdcccaa2e2a1b3a7019e02d8a51ba79054ef7bb8405763",
+    "grouped_tokens_hashes": "76df88009993ac556cb37cdc2585ce23282c29745304b0bc956ef4598ea81eb3",
+    "grouped_tokens_values": "f3ddd4c59f47dbd76fa685e74931eeff4ae025cd52a721065e473528c7136de2",
+    "grouped_string_hashes": "35ef1deccdb89d433435ad24cc3e44df75706b22eeb9fbb489943bf7f6de951c",
+    "grouped_numeric_values": "39751197e0a0a2f2cba7835ed90f9485fe8b1574a8716c76462fac848658530f",
+    "grouped_weighted_topk": "56dbf339ec736c4ca89ec0f50b7ec6d9187cde9bd0f4d8194fbe1898a51faafc",
+    "multi": "8c0b0c0d5c2d083a3962e614f995c0a6e36f354c141a062d044efd8c05e8f942",
+    "profile": "0c4803701e2b30ae1ffb1683eecc0c124de75fba64ac44ce20c253654b85c71d",
+}
+
+
+def partial_row_digests(spark, lanes=tuple(PARTIAL_ROW_DIGESTS)):
+    """``{lane: sha256}`` of each lane's partial rows, sorted by (key,
+    partition_id), under seven-row Arrow batches."""
+    import hashlib
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        out = {}
+        for lane in lanes:
+            rows = sorted(
+                (tuple(r[:5]) + (bytes(r[5]),) for r in _lane_partials(spark, lane).collect()),
+                key=lambda t: (str(t[0]), t[1]),
+            )
+            out[lane] = hashlib.sha256(repr(rows).encode()).hexdigest()
+        return out
+    finally:
+        spark.conf.set(conf, old)
+
+
+@pytest.mark.parametrize("lane", list(PARTIAL_ROW_DIGESTS))
+def test_partial_rows_unchanged(spark, lane):
+    """Every builder lane writes the same partial rows, byte for byte:
+    partition ids, partial counts, row counts, lineage fingerprints and
+    blobs."""
+    assert partial_row_digests(spark, [lane]) == {lane: PARTIAL_ROW_DIGESTS[lane]}

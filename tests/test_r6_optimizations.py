@@ -96,7 +96,7 @@ def _partials_map(df):
 def test_grouped_arrow_partials_match_pandas(spark, case):
     from bloomjoin_spark.aggregate import (
         grouped_sketch_partials,
-        make_grouped_partial_fn,
+        make_pandas_partial_fn,
         partial_stage,
         PARTIAL_SCHEMA,
     )
@@ -129,7 +129,7 @@ def test_grouped_arrow_partials_match_pandas(spark, case):
     keep = ["g"] + (list(cols) if cols else [token_col])
     gtype = dict(df.dtypes)["g"]
     pandas, _ = partial_stage(
-        df, keep, make_grouped_partial_fn(factory, "g", cols, token_col, None),
+        df, keep, make_pandas_partial_fn(factory, "g", cols, token_col, None),
         f"`g` {gtype}, {PARTIAL_SCHEMA}", pandas=True,
     )
     am, pm = _partials_map(arrow), _partials_map(pandas)

@@ -259,3 +259,31 @@ def test_estimate_join_size_null_keys_dropped(spark):
     assert r["n_left"] == 3 and r["n_right"] == 1
     exact = 2  # two 'a' rows match the one right-side 'a'
     assert exact <= r["estimate"] <= exact + r["bound"]
+
+
+def test_estimate_join_size_builds_carry_caller_tag(spark):
+    """The two CMS builds run in driver threads that inherit the
+    caller's ``SparkSession.addTag`` tag: every job of the call
+    carries it, so tag-scoped job and stage attribution sees them."""
+    from bloomjoin_spark.operators import estimate_join_size
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        js = store.jobsList(None)
+        return {js.apply(i).jobId(): js.apply(i).jobTags().mkString(" ").split()
+                for i in range(js.size())}
+
+    left = spark.range(0, 2000).selectExpr("id % 50 AS k")
+    right = spark.range(0, 500).selectExpr("id % 70 AS k")
+    before = set(jobs())
+    spark.addTag("joinsize")
+    try:
+        estimate_join_size(left, right, on="k", eps=1e-2, delta=0.1)
+    finally:
+        spark.removeTag("joinsize")
+    call = {j: tags for j, tags in jobs().items() if j not in before}
+    assert len(call) >= 2
+    assert all(any(t.endswith("-joinsize") for t in tags) for tags in call.values()), call
