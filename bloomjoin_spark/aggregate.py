@@ -37,6 +37,8 @@ OR/max/add-merge each group in ``applyInPandas``; final ≤fanin blobs
 merge on the driver.  This is the
 treeAggregate shape — at 100k input partitions the driver never holds
 100k blobs (a 1 MiB Bloom partial × 100k = 100 GiB if collected flat).
+A per-group result is the same fold, :func:`_merge_rows`, handed to a
+*finisher* that writes the group's rows (:func:`_estimates`, :func:`_topk`).
 
 Lineage / resume: partials can be checkpointed to parquet keyed by
 partition id + content fingerprint; a re-run recomputes ONLY missing
@@ -457,7 +459,8 @@ class PartialRows:
     def rows(self, pid: int, key_col: str | None = None, key_type=None, pandas=False):
         """Yield every key's row under ``partition_id`` ``pid``, as one
         pandas frame or one Arrow batch (``key_col`` of ``key_type``);
-        nothing when no key was seen."""
+        nothing when no key was seen.  A None key (a staged bigint
+        group's null) makes the pandas key column ``object``: exact ints."""
         keys = list(self.sketches)
         if not keys:
             return
@@ -469,7 +472,9 @@ class PartialRows:
             "blob": [self.sketches[k].to_bytes() for k in keys],
         }
         if pandas:
-            yield pd.DataFrame({key_col: keys, **cols} if key_col else cols)
+            kdt = object if None in keys else None
+            kcol = {key_col: pd.Series(keys, dtype=kdt)} if key_col else {}
+            yield pd.DataFrame({**kcol, **cols})
             return
         import pyarrow as pa
 
@@ -477,13 +482,6 @@ class PartialRows:
         if key_col:
             out = {key_col: pa.array(keys, type=key_type), **out}
         yield pa.RecordBatch.from_pydict(out)
-
-
-def _merge_blobs(blobs) -> Sketch:
-    """Left-to-right merge of serialized sketches."""
-    return functools.reduce(
-        lambda a, b: a.merge(b), (Sketch.from_bytes(bytes(b)) for b in blobs)
-    )
 
 
 def _extract_values(pdf: pd.DataFrame, cols, token_col) -> np.ndarray:
@@ -535,6 +533,10 @@ def _ingest_pdf(
     return n, ingest(sk, x, counts, had_nulls=had_nulls)
 
 
+#: null flag beside a bigint group column staged as ``coalesce(g, 0)``
+_GNULL = "__gnull"
+
+
 def make_pandas_partial_fn(
     factory: Callable[[], Sketch],
     group_col: str | None = None,
@@ -547,6 +549,8 @@ def make_pandas_partial_fn(
     ``group_col`` one per (group key, partition).  Grouping happens
     inside the batch (pandas C groupby), so a K-key input costs one scan
     — not the K filtered passes of filtering the DataFrame per key.
+    A bigint group column comes as ``coalesce(g, 0)`` plus ``_GNULL``:
+    with a null beside them pandas rounds keys above 2^53 as float64.
 
     ``weight_col`` (weighted-frequency sketches only, e.g. TopKSketch):
     each row's item counts ``weight`` times instead of once; rows whose
@@ -557,10 +561,15 @@ def make_pandas_partial_fn(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            groups = (
-                pdf.groupby(group_col, dropna=False, sort=False)
-                if group_col else [(None, pdf)]
-            )
+            if group_col is None:
+                groups = [(None, pdf)]
+            elif _GNULL in pdf:
+                groups = (
+                    (None if null else key, sub)
+                    for (key, null), sub in pdf.groupby([group_col, _GNULL], sort=False)
+                )
+            else:
+                groups = pdf.groupby(group_col, dropna=False, sort=False)
             for key, sub in groups:
                 acc.add(key, *_ingest_pdf(acc[key], sub, cols, token_col, weight_col))
         yield from acc.rows(pid, group_col, pandas=True)
@@ -714,6 +723,19 @@ def make_grouped_partial_fn_arrow(
     return fn
 
 
+def _item_cols(cols, token_col=None, weight_col=None) -> list[str] | None:
+    """``cols`` as a list; a weighted lane reads its items from exactly
+    one ``cols`` column, never from ``token_col``."""
+    if isinstance(cols, str):
+        cols = [cols]
+    if weight_col is not None and (not cols or len(cols) != 1 or token_col is not None):
+        raise ValueError(
+            "weight_col needs exactly one item column in cols "
+            f"(got cols={cols!r}, token_col={token_col!r})"
+        )
+    return cols
+
+
 def grouped_sketch_partials(
     df: DataFrame,
     factory: Callable[[], Sketch],
@@ -730,20 +752,14 @@ def grouped_sketch_partials(
     numeric value column) run Arrow-native — flat buffers, one
     dictionary-encode + stable sort per batch, never a numpy object per
     row; weighted / multi-column / other-typed inputs keep the pandas
-    builder."""
-    if isinstance(cols, str):
-        cols = [cols]
+    builder (a bigint group column staged for exact keys)."""
+    cols = _item_cols(cols, token_col, weight_col)
     keep = [group_col] + (list(cols) if cols else [token_col])
     if weight_col is not None:
-        if not cols or len(cols) != 1:
-            raise ValueError(
-                "weight_col needs exactly one item column in cols "
-                f"(got cols={cols!r}, token_col={token_col!r})"
-            )
         keep.append(weight_col)
-    gtype = dict(df.dtypes)[group_col]
-    schema = f"`{group_col}` {gtype}, {PARTIAL_SCHEMA}"
     dtypes = dict(df.dtypes)
+    gtype = dtypes[group_col]
+    schema = f"`{group_col}` {gtype}, {PARTIAL_SCHEMA}"
     consumes = getattr(factory(), "CONSUMES", "hashes")
     col_dtype = dtypes.get(cols[0], "").lower() if cols else ""
     arrow_ok = weight_col is None and consumes != "vectors" and (
@@ -761,7 +777,68 @@ def grouped_sketch_partials(
         build = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col)
     else:
         build = make_pandas_partial_fn(factory, group_col, cols, token_col, weight_col)
+        if gtype == "bigint":
+            g = F.col(group_col)
+            keep[:1] = [F.coalesce(g, F.lit(0)).alias(group_col), g.isNull().alias(_GNULL)]
     return partial_stage(df, keep, build, schema, pandas=not arrow_ok)[0]
+
+
+def _estimates(group_col: str, extract=None):
+    """``(finish, cols)`` of one group's row ``(group_col, estimate,
+    n_rows)``: ``extract(sketch)``, else ``estimate()``, else
+    ``total``, else null (Bloom, KLL, t-digest, FD)."""
+
+    def finish(key, sk: Sketch, n_rows: int) -> pd.DataFrame:
+        if extract is not None:
+            est = extract(sk)
+        elif hasattr(sk, "estimate"):
+            est = sk.estimate()
+        else:
+            est = getattr(sk, "total", None)
+        return pd.DataFrame({
+            group_col: [key],
+            "estimate": [None if est is None else float(est)],
+            "n_rows": [int(n_rows)],
+        })
+
+    return finish, "estimate double, n_rows long"
+
+
+def _topk(where: str, group_col: str, k: int, capacity: int | None):
+    """``(factory, finish, cols)`` of a per-group top-``k``: sketches of
+    ``capacity`` slots (default ``max(64, 8·k)``, at least ``k``) and
+    one group's rows ``(group_col, item, count_est, error, rank)``,
+    count-descending with the sketch's tie-break, ``rank`` 1-based."""
+    from .sketches.topk import TopKSketch
+
+    if k < 1:
+        raise ValueError(f"{where}: k must be >= 1, got {k}")
+    cap = capacity if capacity is not None else max(64, 8 * k)
+    if cap < k:
+        raise ValueError(
+            f"{where}: capacity {cap} < k {k} — the sketch cannot "
+            "report more items than it monitors"
+        )
+
+    def finish(key, sk: Sketch, n_rows: int = 0) -> pd.DataFrame:
+        rows = sk.topk()[:k]
+        m = len(rows)
+        return pd.DataFrame({
+            group_col: pd.Series([key] * m),
+            "item": pd.Series([r[0] for r in rows], dtype="int64"),
+            "count_est": pd.Series([r[1] for r in rows], dtype="int64"),
+            "error": pd.Series([r[2] for r in rows], dtype="int64"),
+            "rank": pd.Series(range(1, m + 1), dtype="int32"),
+        })
+
+    return (lambda: TopKSketch(cap)), finish, "item long, count_est long, error long, rank int"
+
+
+def _per_group(partials: DataFrame, group_col: str, finish=None, cols=PARTIAL_SCHEMA):
+    """Each group's partial rows folded by :func:`_merge_rows` into one
+    partial row, or into ``finish``'s rows, typed ``group_col, cols``."""
+    schema = f"`{group_col}` {dict(partials.dtypes)[group_col]}, {cols}"
+    return partials.groupBy(group_col).applyInPandas(_merge_rows(group_col, finish), schema)
 
 
 def grouped_sketch_estimates(
@@ -774,38 +851,20 @@ def grouped_sketch_estimates(
 ) -> DataFrame:
     """Per-group sketch estimates, FULLY DISTRIBUTED: one scan emits a
     partial per (group, input partition); one shuffle of those small
-    blobs groups each key's partials; an ``applyInPandas`` merge per
-    group emits (group, estimate, n_rows).  Per-group sketches are
-    never collected to the driver — at 100 TB the group cardinality
-    (e.g. per-source or per-domain distinct counts) can be millions,
-    and this keeps the driver's footprint at zero while the shuffle
-    carries KB-scale blobs instead of raw rows.
+    blobs groups each key's partials; the tree merge's fold per group
+    emits (group, estimate, n_rows), as ``store_estimates`` does over
+    stored partials.  Per-group sketches are never collected to the
+    driver — at 100 TB the group cardinality (e.g. per-source or
+    per-domain distinct counts) can be millions, and this keeps the
+    driver's footprint at zero while the shuffle carries KB-scale blobs
+    instead of raw rows.
 
     ``extract`` maps the merged group sketch to the emitted value —
-    default is ``.estimate()`` (falling back to ``.total``); pass e.g.
+    default ``.estimate()``, else ``.total``, else null; pass e.g.
     ``lambda s: s.quantile(0.5)`` for per-group medians from a
     t-digest/KLL factory."""
     partials = grouped_sketch_partials(df, factory, group_col, cols, token_col)
-    gtype = dict(df.dtypes)[group_col]
-    out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
-
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc = _merge_blobs(pdf["blob"])
-        if extract is not None:
-            est = extract(acc)
-        elif hasattr(acc, "estimate"):
-            est = acc.estimate()
-        else:
-            est = float(getattr(acc, "total", 0.0))
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "estimate": [float(est)],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
-
-    return partials.groupBy(group_col).applyInPandas(merge_fn, out_schema)
+    return _per_group(partials, group_col, *_estimates(group_col, extract))
 
 
 def grouped_topk(
@@ -819,11 +878,12 @@ def grouped_topk(
 ) -> DataFrame:
     """Per-group heavy hitters in ONE pass, fully distributed: a
     SpaceSaving partial per (group, input partition), a shuffle of the
-    KB-scale blobs, an ``applyInPandas`` merge per group emitting that
+    KB-scale blobs, an ``applyInPandas`` fold per group emitting that
     group's top-``k`` as rows ``(group_col, item, count_est, error,
-    rank)`` — count-descending with the sketch's deterministic
-    tie-break (smaller item first), ``rank`` 1-based, true count ∈
-    [count_est − error, count_est] per row.
+    rank)`` (:func:`_topk`, shared with ``topk_stream``) —
+    count-descending with the sketch's deterministic tie-break (smaller
+    item first), ``rank`` 1-based, true count ∈ [count_est − error,
+    count_est] per row.
 
     The per-group analog of a global SpaceSaving top-k ("hot tokens
     per source" at 100 TB): like :func:`grouped_sketch_estimates`, no
@@ -845,40 +905,9 @@ def grouped_topk(
     without the exact groupBy-sum).  Weights must be integer-valued and
     ≥ 0; ``count_est`` then brackets the true WEIGHT SUM.  Requires
     ``cols`` (one item column); not combinable with ``token_col``."""
-    from .sketches.topk import TopKSketch
-
-    if k < 1:
-        raise ValueError(f"grouped_topk: k must be >= 1, got {k}")
-    cap = capacity if capacity is not None else max(64, 8 * k)
-    if cap < k:
-        raise ValueError(
-            f"grouped_topk: capacity {cap} < k {k} — the sketch cannot "
-            "report more items than it monitors"
-        )
-    partials = grouped_sketch_partials(
-        df, lambda: TopKSketch(cap), group_col, cols, token_col, weight_col
-    )
-    gtype = dict(df.dtypes)[group_col]
-    out_schema = (
-        f"`{group_col}` {gtype}, item long, count_est long, "
-        f"error long, rank int"
-    )
-
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc = _merge_blobs(pdf["blob"])
-        rows = acc.topk()[:k]
-        m = len(rows)
-        return pd.DataFrame(
-            {
-                group_col: pd.Series([key[0]] * m),
-                "item": pd.Series([r[0] for r in rows], dtype="int64"),
-                "count_est": pd.Series([r[1] for r in rows], dtype="int64"),
-                "error": pd.Series([r[2] for r in rows], dtype="int64"),
-                "rank": pd.Series(range(1, m + 1), dtype="int32"),
-            }
-        )
-
-    return partials.groupBy(group_col).applyInPandas(merge_fn, out_schema)
+    factory, finish, out_cols = _topk("grouped_topk", group_col, k, capacity)
+    partials = grouped_sketch_partials(df, factory, group_col, cols, token_col, weight_col)
+    return _per_group(partials, group_col, finish, out_cols)
 
 
 MULTI_PARTIAL_SCHEMA = f"name string, {PARTIAL_SCHEMA}"
@@ -939,8 +968,7 @@ def _sketch_partials(
 ) -> tuple[DataFrame, int | None]:
     """:func:`sketch_partials` plus the input partition count of
     :func:`partial_stage`."""
-    if isinstance(cols, str):
-        cols = [cols]
+    cols = _item_cols(cols)
     keep = list(cols) if cols else [token_col]
     dtypes = dict(df.dtypes)
     if getattr(factory(), "CONSUMES", "hashes") == "vectors":
@@ -975,15 +1003,19 @@ def _sketch_partials(
     )
 
 
-def _merge_rows(key: str | None):
-    """applyInPandas function folding one tree-merge group's partial
-    rows into one, under the group's smallest ``partition_id``."""
+def _merge_rows(key: str | None, finish: Callable | None = None):
+    """applyInPandas function folding one group's partial rows, in the
+    order they arrive, through :meth:`PartialRows.merge` (every merge of
+    partial rows is this fold) into one row under the group's smallest
+    ``partition_id``, or into ``finish(key, sketch, n_rows)``'s rows."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         acc = PartialRows()
         k = None if key is None else pdf[key].iloc[0]
         for row in pdf.to_dict("records"):
             acc.merge(k, row)
+        if finish is not None:
+            return finish(k, acc.sketches[k], acc.n_rows[k])
         return next(acc.rows(int(pdf["partition_id"].min()), key, pandas=True))
 
     return fn

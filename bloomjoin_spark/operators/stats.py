@@ -259,7 +259,8 @@ def source_overlap_matrix(
     Plan: one `grouped_sketch_partials` pass builds a theta sketch per
     (group, partition) — one scan regardless of group count — then a
     blob-sized shuffle merges each group's partials distributed
-    (`applyInPandas`, same shape as `grouped_sketch_estimates`).  Only
+    (`applyInPandas` over the tree merge's fold, as in
+    `grouped_sketch_estimates`, into one partial row per group).  Only
     the K merged sketches (≤ 8·k bytes each) reach the driver, where
     all K·(K−1)/2 pair estimates are set operations on retained hash
     samples — zero further Spark jobs, no pairwise joins over data.
@@ -276,9 +277,8 @@ def source_overlap_matrix(
     (`ThetaSketch.error_bound_vs`; 0.0 means both sketches are exact).
     """
     import numpy as np
-    import pandas as pd
 
-    from ..aggregate import grouped_sketch_partials
+    from ..aggregate import _per_group, grouped_sketch_partials
     from ..sketches import Sketch, ThetaSketch
     from ..sketches.theta import _FULL_THETA
 
@@ -297,19 +297,7 @@ def source_overlap_matrix(
     partials = grouped_sketch_partials(
         df, lambda: ThetaSketch(k), group_col, cols=cols, token_col=token_col
     )
-    gtype = dict(df.dtypes)[group_col]
-
-    def merge_fn(key, pdf):  # (key, pdf) form; see grouped_sketch_estimates
-        acc = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({group_col: [key[0]], "blob": [acc.to_bytes()]})
-
-    merged = partials.groupBy(group_col).applyInPandas(
-        merge_fn, f"`{group_col}` {gtype}, blob binary"
-    )
-    rows = merged.collect()  # bounded: ONE ≤8k-byte blob per group
+    rows = _per_group(partials, group_col).collect()  # bounded: ONE ≤8k-byte blob per group
     sks = {r[group_col]: Sketch.from_bytes(bytes(r["blob"])) for r in rows}
     groups = sorted(sks, key=str)
     out = []
@@ -341,6 +329,7 @@ def source_overlap_matrix(
                     else z * un.estimate() * un.rel_std_error,
                 )
             )
+    gtype = dict(df.dtypes)[group_col]
     schema = (
         f"`group_a` {gtype}, `group_b` {gtype}, distinct_a double, "
         "distinct_b double, intersection double, `union` double, "

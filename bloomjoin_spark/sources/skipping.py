@@ -43,12 +43,11 @@ from __future__ import annotations
 from functools import reduce
 from operator import and_, or_
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..aggregate import grouped_sketch_partials
+from ..aggregate import _per_group, grouped_sketch_partials
 from ..hashing import hash_columns
 from ..sketches.base import Sketch
 from ..sketches.bloom import BloomSketch
@@ -118,23 +117,13 @@ def write_bloom_indexed(
         back, lambda: BloomSketch(int(capacity), fpp), "_file", cols=keys
     )
 
-    def _merge(mkey, pdf):
-        acc = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
+    def _index_row(file, sk, n_rows):
         return pd.DataFrame(
-            {
-                "file": [mkey[0]],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "blob": [acc.seal().to_bytes()],
-            }
+            {"_file": [file], "n_rows": [n_rows], "blob": [sk.seal().to_bytes()]}
         )
 
-    index = partials.groupBy("_file").applyInPandas(
-        _merge, "file string, n_rows long, blob binary"
-    )
-    index.write.mode("overwrite").parquet(_index_dir(path))
+    index = _per_group(partials, "_file", _index_row, "n_rows long, blob binary")
+    index.withColumnRenamed("_file", "file").write.mode("overwrite").parquet(_index_dir(path))
     bits = BloomSketch(int(capacity), fpp).m
     return {
         "files": len(counts),

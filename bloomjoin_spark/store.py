@@ -31,13 +31,14 @@ from __future__ import annotations
 
 from typing import Callable, Mapping
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import (
     MULTI_PARTIAL_SCHEMA,
     PARTIAL_SCHEMA,
+    _estimates,
+    _per_group,
     grouped_sketch_partials,
     make_multi_partial_fn_arrow,
     partial_stage,
@@ -49,6 +50,8 @@ from .sketches import Sketch
 
 #: store columns beyond the partial payload
 _META_COLS = ("snapshot", "hash_format")
+#: the partial payload every merge folds
+_PARTIAL_COLS = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
 
 
 def append_sketch_snapshot(
@@ -121,15 +124,11 @@ def read_sketch_store(
     ever used), so the collect is bounded by construction, not by data
     size."""
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    # the full PARTIAL_SCHEMA payload: store_sketch selects all of it
-    # and tree_merge consumes it — a dir missing n_partials/fingerprint
-    # must fail HERE with the curated error, not later with
-    # UNRESOLVED_COLUMN
-    required = {
-        "partition_id", "n_partials", "n_rows", "fingerprint",
-        "blob", "snapshot", "hash_format",
-    }
-    missing = required - set(df.columns)
+    # the full PARTIAL_SCHEMA payload: store_sketch and store_estimates
+    # select all of it and every merge folds it — a dir missing
+    # n_partials/fingerprint must fail HERE with the curated error, not
+    # later with UNRESOLVED_COLUMN
+    missing = {*_PARTIAL_COLS, *_META_COLS} - set(df.columns)
     if missing:
         raise ValueError(
             f"sketch store {path!r} is missing required column(s) "
@@ -158,35 +157,15 @@ def store_estimates(
     extract: Callable[[Sketch], float] | None = None,
 ) -> DataFrame:
     """Per-group estimates from stored blobs only: one shuffle of the
-    KB-scale partials, an ``applyInPandas`` merge per group — history
-    is never rescanned and per-group sketches never reach the driver
-    (group cardinality may be millions at 100 TB).  Output:
-    (group_col, estimate, n_rows) with n_rows the exact ingested total
-    across snapshots."""
-    gtype = dict(store.dtypes)[group_col]
-    out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
-
-    def merge_fn(key, pdf):  # (key, pdf) form; hints confuse eval-type inference
-        acc: Sketch | None = None
-        for b in pdf["blob"]:
-            s = Sketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        if extract is not None:
-            est = extract(acc)
-        elif hasattr(acc, "estimate"):
-            est = acc.estimate()
-        else:
-            est = float(getattr(acc, "total", 0.0))
-        return pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "estimate": [float(est)],
-                "n_rows": [int(pdf["n_rows"].sum())],
-            }
-        )
-
-    cols = [group_col, "n_rows", "blob"]
-    return store.select(*cols).groupBy(group_col).applyInPandas(merge_fn, out_schema)
+    KB-scale partials, the tree merge's fold per group (as
+    ``grouped_sketch_estimates`` over fresh partials) — history is never
+    rescanned and per-group sketches never reach the driver (group
+    cardinality may be millions at 100 TB).  Output: (group_col,
+    estimate, n_rows) with n_rows the exact ingested total across
+    snapshots; the estimate is null without ``extract``, ``estimate()``
+    or ``total``."""
+    partials = store.select(group_col, *_PARTIAL_COLS)
+    return _per_group(partials, group_col, *_estimates(group_col, extract))
 
 
 def sketch_store_sink(
@@ -237,5 +216,4 @@ def store_sketch(store: DataFrame, fanin: int = 64) -> Sketch:
     """Merge an (ungrouped) store into one Sketch via the distributed
     tree merge — same fan-in-bounded reduction as ``build_sketch``, so
     a store of any size merges without a driver-side fan-in."""
-    partial_cols = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
-    return tree_merge(store.select(*partial_cols), fanin)[0][None].sketch
+    return tree_merge(store.select(*_PARTIAL_COLS), fanin)[0][None].sketch

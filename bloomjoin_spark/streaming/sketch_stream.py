@@ -194,7 +194,9 @@ def bloom_join_stream(
 
 class StreamingSketchCollector:
     """Merge sketch partials from every micro-batch into running
-    sketches, optionally keyed by a group column.
+    sketches (``sketches``, optionally keyed by a group column) through
+    the batch merge's fold, ``aggregate.PartialRows``; ``lineage`` keeps
+    one entry per folded partial row.
 
     Usage::
 
@@ -211,45 +213,35 @@ class StreamingSketchCollector:
         token_col: str | None = None,
         group_col: str | None = None,
     ):
+        from ..aggregate import PartialRows
+
         self.factory = factory
         self.cols = cols
         self.token_col = token_col
         self.group_col = group_col
-        self.sketches: dict = {}
+        self._acc = PartialRows()
+        self.sketches: dict = self._acc.sketches
         self.lineage: list[dict] = []
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..aggregate import grouped_sketch_partials, sketch_partials
-        from ..sketches.base import Sketch
 
-        if self.group_col is None:
+        g = self.group_col
+        if g is None:
             partials = sketch_partials(
                 batch_df, self.factory, cols=self.cols, token_col=self.token_col
-            ).collect()
-            rows = [(None, r) for r in partials]
-        else:
-            # ONE pass over the micro-batch for every group key (pandas
-            # groupby inside each Arrow batch) — never K filtered scans
-            partials = grouped_sketch_partials(
-                batch_df, self.factory, self.group_col,
-                cols=self.cols, token_col=self.token_col,
-            ).collect()
-            rows = [(r[self.group_col], r) for r in partials]
-        for key, row in rows:
-            sk = Sketch.from_bytes(bytes(row["blob"]))
-            if key in self.sketches:
-                self.sketches[key] = self.sketches[key].merge(sk)
-            else:
-                self.sketches[key] = sk
-            self.lineage.append(
-                {
-                    "batch_id": batch_id,
-                    "key": key,
-                    "partition_id": row["partition_id"],
-                    "n_rows": row["n_rows"],
-                    "fingerprint": row["fingerprint"],
-                }
             )
+        else:
+            # ONE pass over the micro-batch for every group key — never
+            # K filtered scans
+            partials = grouped_sketch_partials(
+                batch_df, self.factory, g, cols=self.cols, token_col=self.token_col
+            )
+        for row in partials.collect():
+            key = None if g is None else row[g]
+            self._acc.merge(key, row)
+            lin = {c: row[c] for c in ("partition_id", "n_rows", "fingerprint")}
+            self.lineage.append({"batch_id": batch_id, "key": key, **lin})
 
     def attach(self, stream: DataFrame):
         """Returns a writeStream ready to ``.start()``."""
@@ -285,14 +277,12 @@ def stateful_sketch_stream(
     streaming embedding-drift alarms).  ``extract`` maps the running
     sketch to the emitted double (default ``.estimate()``, falling back
     to ``.total``; pass e.g. ``lambda s: s.quantile(0.5)`` or a gram
-    trace)."""
-    import pandas as pd
-
-    from ..aggregate import _ingest_pdf
+    trace); a sketch with neither gives a null estimate."""
+    from ..aggregate import _estimates, _ingest_pdf, _item_cols
     from ..sketches.base import Sketch
 
-    if isinstance(cols, str):
-        cols = [cols]
+    cols = _item_cols(cols)
+    finish, out_cols = _estimates(group_col, extract)
 
     def fn(key, pdf_iter, state):
         sk = Sketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
@@ -306,18 +296,9 @@ def stateful_sketch_stream(
             n_in, _ = _ingest_pdf(sk, pdf, cols, token_col)
             n += n_in
         state.update((sk.to_bytes(), n))
-        if extract is not None:
-            est = extract(sk)
-        elif hasattr(sk, "estimate"):
-            est = sk.estimate()
-        else:
-            est = float(getattr(sk, "total", 0))
-        yield pd.DataFrame(
-            {group_col: [key[0]], "estimate": [float(est)], "n_rows": [n]}
-        )
+        yield finish(key[0], sk, n)
 
-    gtype = dict(stream.dtypes)[group_col]
-    out_schema = f"`{group_col}` {gtype}, estimate double, n_rows long"
+    out_schema = f"`{group_col}` {dict(stream.dtypes)[group_col]}, {out_cols}"
     state_schema = "blob binary, n long"
     return stream.groupBy(group_col).applyInPandasWithState(
         fn, out_schema, state_schema, "update", "NoTimeout"
@@ -338,7 +319,9 @@ def topk_stream(
     every trigger folds the micro-batch in through the same PODS'12
     combine the batch :func:`~bloomjoin_spark.grouped_topk` uses and
     emits the key's refreshed top-``k`` rows ``(group, item, count_est,
-    error, rank)`` — so after any stream prefix the emitted rows equal
+    error, rank)`` through the batch's own row writer and checks
+    (``aggregate._topk``) — so after any stream
+    prefix the emitted rows equal
     a batch ``grouped_topk`` over the same rows (same invariants: true
     ∈ [count_est − error, count_est], exact when ``capacity`` covers
     the key's distinct items).
@@ -349,31 +332,14 @@ def topk_stream(
     total state is groups × capacity counters — bounded regardless of
     stream length, unlike exact streaming count aggregation whose state
     grows with distinct (group, item) pairs."""
-    from ..aggregate import _ingest_pdf
+    from ..aggregate import _ingest_pdf, _item_cols, _topk
     from ..sketches.topk import TopKSketch
 
-    if k < 1:
-        raise ValueError(f"topk_stream: k must be >= 1, got {k}")
-    cap = capacity if capacity is not None else max(64, 8 * k)
-    if cap < k:
-        raise ValueError(
-            f"topk_stream: capacity {cap} < k {k} — the sketch cannot "
-            "report more items than it monitors"
-        )
-    if isinstance(cols, str):
-        cols = [cols]
-    if weight_col is not None and (not cols or token_col is not None):
-        raise ValueError(
-            "topk_stream: weight_col needs exactly one item column in "
-            f"cols (got cols={cols!r}, token_col={token_col!r})"
-        )
+    factory, finish, out_cols = _topk("topk_stream", group_col, k, capacity)
+    cols = _item_cols(cols, token_col, weight_col)
 
     def fn(key, pdf_iter, state):
-        sk = (
-            TopKSketch.from_bytes(bytes(state.get[0]))
-            if state.exists
-            else TopKSketch(cap)
-        )
+        sk = TopKSketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         for pdf in pdf_iter:
             if len(pdf) == 0:
                 continue
@@ -381,25 +347,11 @@ def topk_stream(
             # null semantics as batch grouped_topk (aggregate._ingest_pdf)
             _ingest_pdf(sk, pdf, cols, token_col, weight_col)
         state.update((sk.to_bytes(),))
-        rows = sk.topk()[:k]
-        m = len(rows)
-        yield pd.DataFrame(
-            {
-                group_col: pd.Series([key[0]] * m),
-                "item": pd.Series([r[0] for r in rows], dtype="int64"),
-                "count_est": pd.Series([r[1] for r in rows], dtype="int64"),
-                "error": pd.Series([r[2] for r in rows], dtype="int64"),
-                "rank": pd.Series(range(1, m + 1), dtype="int32"),
-            }
-        )
+        yield finish(key[0], sk)
 
     # the group column keeps its REAL dtype (int/bigint keys must round-
     # trip the state operator exactly as batch grouped_topk emits them)
-    gtype = dict(stream.dtypes)[group_col]
-    out_schema = (
-        f"`{group_col}` {gtype}, item long, count_est long, error long, "
-        "rank int"
-    )
+    out_schema = f"`{group_col}` {dict(stream.dtypes)[group_col]}, {out_cols}"
     state_schema = "blob binary"
     return stream.groupBy(group_col).applyInPandasWithState(
         fn, out_schema, state_schema, "update", "NoTimeout"

@@ -2,6 +2,8 @@
 tree-merge depth, checkpointed resume (north rule: per-partition
 lineage + resumability)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -970,3 +972,158 @@ def test_partial_rows_unchanged(spark, lane):
     partition ids, partial counts, row counts, lineage fingerprints and
     blobs."""
     assert partial_row_digests(spark, [lane]) == {lane: PARTIAL_ROW_DIGESTS[lane]}
+
+
+# ---------------------------------------------------------------------------
+# per-group results pinned per site: every function that folds a group's
+# partial rows into its output rows, on the same fixed input
+# ---------------------------------------------------------------------------
+
+
+def _group_results(spark, site, tmp):
+    """The rows one per-group result site returns over ``_lane_rows()``
+    grouped by ``g`` (a string column with nulls)."""
+    from bloomjoin_spark import (
+        FrequentDirectionsSketch,
+        HllSketch,
+        KllSketch,
+        TDigestSketch,
+        grouped_sketch_estimates,
+        grouped_topk,
+    )
+    from bloomjoin_spark.operators import source_overlap_matrix
+    from bloomjoin_spark.sources.skipping import _index_dir, write_bloom_indexed
+    from bloomjoin_spark.store import (
+        append_sketch_snapshot,
+        read_sketch_store,
+        store_estimates,
+    )
+    from bloomjoin_spark.streaming import StreamingSketchCollector
+
+    df = spark.createDataFrame(spark.sparkContext.parallelize(_lane_rows(), 3), _LANE_SCHEMA)
+    path = os.path.join(tmp, site)
+    if site == "estimates_hll":
+        out = grouped_sketch_estimates(df, lambda: HllSketch(10), "g", cols=["s"])
+    elif site == "estimates_tdigest_median":
+        out = grouped_sketch_estimates(
+            df, lambda: TDigestSketch(20), "g", cols=["x"],
+            extract=lambda s: s.quantile(0.5),
+        )
+    elif site == "estimates_fd_trace":
+        out = grouped_sketch_estimates(
+            df, lambda: FrequentDirectionsSketch(2, 3), "g", cols=["vec"],
+            extract=lambda s: float(np.trace(s.gram())),
+        )
+    elif site == "topk_tokens":
+        out = grouped_topk(df, "g", k=3, capacity=4, token_col="toks")
+    elif site == "topk_weighted":
+        out = grouped_topk(df, "g", k=2, capacity=4, cols=["k"], weight_col="w")
+    elif site == "store_estimates":
+        for snap in ("s0", "s1"):
+            append_sketch_snapshot(df, lambda: HllSketch(10), path, snap, "g", ["s"])
+        out = store_estimates(read_sketch_store(spark, path), "g")
+    elif site == "source_overlap_matrix":
+        out = source_overlap_matrix(df, "g", cols=["s"], k=16)
+    elif site == "bloom_index":
+        write_bloom_indexed(df, path, "s", fpp=0.01, num_files=3)
+        out = spark.read.parquet(_index_dir(path)).select("n_rows", "blob")
+    else:
+        assert site == "collector", site
+        coll = StreamingSketchCollector(lambda: KllSketch(16), cols=["x"], group_col="g")
+        coll._process_batch(df, 0)
+        sks = [(k, sk.to_bytes()) for k, sk in coll.sketches.items()]
+        lineage = [tuple(sorted(e.items(), key=str)) for e in coll.lineage]
+        return sks + lineage
+    return [tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+            for r in out.collect()]
+
+
+#: sha256 of each site's sorted result rows, generated before the
+#: per-group merges shared one fold and one finisher
+GROUP_RESULT_DIGESTS = {
+    "estimates_hll": "bdfbf36de6ab1576a7865132512be69be8c6e6b3a040071509369e6be4dfb701",
+    "estimates_tdigest_median": "0c4cb59ebde1765c2c43989fb0f9bc2652be22a0d6e9732bca3a23355eefa856",
+    "estimates_fd_trace": "c157548f6b13d53fbe725be87aaaca41015267ef3f3ccb8c81dba39b663df348",
+    "topk_tokens": "34beb3ccf0db746e24d09c53209d8f2bd527b471f4e1329eba75cd0a4f216195",
+    "topk_weighted": "6986043170ddf3bd3a33d37adac4699922e510e3da9fc371a27d48162786bd2e",
+    "store_estimates": "6e1414810ba6153cf607d806af738f707032132ab09c06e36cd6bbd47c12cb06",
+    "source_overlap_matrix": "8a0de9b1f5001265050ba0974391340e25b9afadde83f2eefe04832e80ca3bea",
+    "bloom_index": "e898dfc15dca59f1a1d4b44a8d41060a375096191f88103a030dbb49e96682aa",
+    "collector": "40c6e3ff1ef2ad61ce8f1d46f5b28c75b9bb9591dd9c3fefe23b50d392094780",
+}
+
+
+def group_result_digests(spark, sites=tuple(GROUP_RESULT_DIGESTS)):
+    """``{site: sha256}`` of each site's result rows, sorted, under
+    seven-row Arrow batches."""
+    import hashlib
+    import tempfile
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            return {
+                site: hashlib.sha256(
+                    repr(sorted(_group_results(spark, site, tmp), key=repr)).encode()
+                ).hexdigest()
+                for site in sites
+            }
+    finally:
+        spark.conf.set(conf, old)
+
+
+@pytest.mark.parametrize("site", list(GROUP_RESULT_DIGESTS))
+def test_group_results_unchanged(spark, site):
+    """Every per-group result site returns the same rows: group keys,
+    estimates, top-k rows, overlap pairs, index blobs and the
+    collector's sketches and lineage."""
+    assert group_result_digests(spark, [site]) == {site: GROUP_RESULT_DIGESTS[site]}
+
+
+def test_pandas_lane_keeps_64bit_group_keys(spark):
+    """A bigint group column with a null in the same Arrow batch reaches
+    the pandas lane as float64; keys above 2^53 must still come back
+    exact and apart, as Spark's own groupBy keeps them."""
+    from bloomjoin_spark import HllSketch, grouped_sketch_estimates, grouped_topk
+    from bloomjoin_spark.aggregate import grouped_sketch_partials
+
+    big = 1 << 53
+    rows = [(big, 1, "a", 1), (big + 1, 2, "b", 2), (big + 3, 3, "c", 1),
+            (None, 4, "d", 3), (big + 1, 5, "e", 1)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), "g long, a long, b string, w long"
+    )
+    exp = {r["g"]: r["count"] for r in df.groupBy("g").count().collect()}
+    assert len(exp) == 4
+    parts = grouped_sketch_partials(df, lambda: HllSketch(10), "g", cols=["a", "b"])
+    assert {r["g"]: r["n_rows"] for r in parts.collect()} == exp
+    est = grouped_sketch_estimates(df, lambda: HllSketch(10), "g", cols=["a", "b"])
+    assert {r["g"]: r["n_rows"] for r in est.collect()} == exp
+    top = grouped_topk(df, "g", k=2, cols=["a"], weight_col="w")
+    assert {r["g"] for r in top.collect()} == set(exp)
+
+
+def test_estimate_is_null_without_an_estimate_rule(spark, tmp_path):
+    """With no ``extract``, a sketch with neither ``estimate()`` nor
+    ``total`` reports a null estimate, never 0.0."""
+    from bloomjoin_spark import HllSketch, KllSketch, TDigestSketch, grouped_sketch_estimates
+    from bloomjoin_spark.store import (
+        append_sketch_snapshot,
+        read_sketch_store,
+        store_estimates,
+        store_sketch,
+    )
+
+    df = spark.createDataFrame(spark.sparkContext.parallelize(_lane_rows(), 3), _LANE_SCHEMA)
+    path = str(tmp_path / "store")
+    facs = {"hll": lambda: HllSketch(10), "tdigest": lambda: TDigestSketch(20)}
+    append_sketch_snapshot(df, facs, path, "s0", token_col="toks")
+    store = read_sketch_store(spark, path)
+    est = {r["name"]: r["estimate"] for r in store_estimates(store, "name").collect()}
+    hll = store_sketch(store.where(F.col("name") == "hll")).estimate()
+    assert est == {"hll": hll, "tdigest": None}
+    kll = grouped_sketch_estimates(df, lambda: KllSketch(16), "g", cols=["x"]).collect()
+    assert len(kll) == 4
+    assert all(r["estimate"] is None for r in kll)
