@@ -109,11 +109,14 @@ _T_EPS = 1e-9
 
 
 def _verify_pairs(sh: DataFrame, cand: DataFrame, id_col: str,
-                  threshold: float) -> DataFrame:
-    """Shared exact-Jaccard verification: join candidate (id_a, id_b)
-    pairs back to their full shingle arrays, compute J (JVM
-    array_intersect), keep ≥ threshold, round 6.  Eager
-    localCheckpoint so the caller can release the shingle cache."""
+                  threshold: float, score=jaccard_col, name: str = "jaccard",
+                  extra=()) -> DataFrame:
+    """THE exact check of every shingle-set operator: join candidate
+    (id_a, id_b) pairs back to their full shingle arrays, score them
+    with ``score(sh_a, sh_b)`` (JVM ``array_intersect``; exact Jaccard
+    by default), round 6 into ``name``, keep ≥ threshold and append the
+    ``extra`` columns.  Eager localCheckpoint so the caller can release
+    the shingle cache."""
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     verified = (
@@ -122,9 +125,10 @@ def _verify_pairs(sh: DataFrame, cand: DataFrame, id_col: str,
         .select(
             "id_a",
             "id_b",
-            F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
+            F.round(score(F.col("sh_a"), F.col("sh_b")), 6).alias(name),
+            *extra,
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col(name) >= threshold)
     )
     return verified.localCheckpoint()
 
@@ -225,41 +229,27 @@ def _schema_without(df: DataFrame, drop: str):
             yield f.name, f.dataType.simpleString()
 
 
-#: per-operator stats from the LAST _drop_oversized_buckets run in this
-#: process — filled even when the caller passes no ``dropped_report``,
-#: so pipelines that filter warnings can still DETECT a recall change
-#: programmatically (``last_dropped_stats``).
-_LAST_DROPPED: dict[str, dict] = {}
-
-
-def last_dropped_stats(op_name: str | None = None) -> dict:
-    """Bucket-cap stats of the most recent capped operator run(s):
-    {op_name: {dropped_buckets, dropped_bucket_rows, max_bucket_size}}
-    (or one op's dict when ``op_name`` is given; empty dict if that op
-    has not run).  Driver-side, process-local — check it right after
-    the operator call whose recall you care about."""
-    if op_name is not None:
-        return dict(_LAST_DROPPED.get(op_name, {}))
-    return {k: dict(v) for k, v in _LAST_DROPPED.items()}
-
-
 def _drop_oversized_buckets(
     exploded: DataFrame,
     group_cols: list[str],
     max_bucket_size: int | None,
     dropped_report: dict | None,
     op_name: str,
+    stacklevel: int = 3,
 ) -> DataFrame:
     """Shared degenerate-bucket guard for the O(bucket²) candidate
-    self-joins (LSH bands, simhash chunks, embedding buckets): drop
-    groups larger than ``max_bucket_size`` via a broadcast anti-join on
-    the (small) oversized-group list.
+    joins (LSH bands, simhash chunks, embedding buckets, shingle
+    prefixes): drop groups larger than ``max_bucket_size`` via a
+    broadcast anti-join on the (small) oversized-group list.
 
     ALWAYS warns when buckets are dropped — the size aggregate is one
     cheap job over the already-materialized banded table, so a silent
-    recall regression is never possible; ``dropped_report`` (optional)
-    additionally receives (dropped_buckets, dropped_bucket_rows,
-    max_bucket_size).  ``max_bucket_size=None`` disables the guard."""
+    recall regression is never possible; the caller's
+    ``dropped_report`` dict (optional) receives (dropped_buckets,
+    dropped_bucket_rows, max_bucket_size).  The stats go nowhere else:
+    a process-global copy would race between driver threads.
+    ``stacklevel`` names the operator's caller in the warning.
+    ``max_bucket_size=None`` disables the guard."""
     if max_bucket_size is None:
         return exploded
     import warnings
@@ -273,25 +263,92 @@ def _drop_oversized_buckets(
         F.count(F.lit(1)).alias("nb"),
         F.coalesce(F.sum("__bn"), F.lit(0)).alias("nr"),
     ).first()
-    stats = {
-        "dropped_buckets": int(row["nb"]),
-        "dropped_bucket_rows": int(row["nr"]),
-        "max_bucket_size": max_bucket_size,
-    }
-    _LAST_DROPPED[op_name] = stats
     if dropped_report is not None:
-        dropped_report.update(stats)
+        dropped_report.update(
+            dropped_buckets=int(row["nb"]),
+            dropped_bucket_rows=int(row["nr"]),
+            max_bucket_size=max_bucket_size,
+        )
     if not row["nb"]:
         return exploded
     warnings.warn(
         f"{op_name}: dropped {row['nb']} bucket(s) holding {row['nr']} rows "
         f"(> max_bucket_size={max_bucket_size}); run exact_dedup first for "
         "identical-content heavy hitters",
-        stacklevel=3,
+        stacklevel=stacklevel,
     )
     return exploded.join(
         F.broadcast(big.select(*group_cols)), on=group_cols, how="left_anti"
     )
+
+
+def _bucket_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    keys: list[str],
+    op_name: str,
+    max_bucket_size: int | None,
+    dropped_report: dict | None,
+    carry=(),
+    where=None,
+) -> DataFrame:
+    """THE candidate generator of the bucket self-join operators (minhash
+    LSH, simhash, n-gram Jaccard, embedding; containment's probe × index
+    join is not a self-join): rows of ``keyed`` that share a bucket
+    (equal ``keys``) pair up once as ``(id_a < id_b)``, with the
+    ``carry`` columns of both sides as ``<col>_a`` / ``<col>_b``,
+    duplicate pairs removed.  A collision is only a candidate — the
+    caller's exact check decides.
+
+    ``where(a, b)`` is an optional per-edge pruning condition; ``a`` and
+    ``b`` map a column name of ``keyed`` to that side's column.  A pair
+    survives if ANY of its shared buckets passes it.
+
+    Oversized buckets go through ``_drop_oversized_buckets`` first: the
+    self-join is O(bucket²), and one boilerplate bucket of 10⁶ ids at
+    100 TB is 10¹² candidate pairs.
+
+    One materialization point: ``keyed`` feeds the guard's size
+    aggregate AND both sides of the self-join — without it Catalyst
+    re-runs the upstream signature UDF (or the df join + window) once
+    per branch (4× the expensive stage, observed in the physical plan).
+    Lazy local checkpoint: computed on first use, reused by every
+    branch, freed by the ContextCleaner."""
+    keyed = _drop_oversized_buckets(
+        keyed.localCheckpoint(eager=False), keys, max_bucket_size,
+        dropped_report, op_name, stacklevel=4,
+    )
+    a, b = keyed.alias("a"), keyed.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    if where is not None:
+        on.append(where(lambda c: F.col(f"a.{c}"), lambda c: F.col(f"b.{c}")))
+    return a.join(b, on=on).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    ).dropDuplicates(["id_a", "id_b"])
+
+
+def _band_structs(sig_col: str, bands: int, nbits: int = 64) -> Column:
+    """THE band slice of a packed bit signature: an array of ``bands``
+    (band, bucket) structs, bucket = the band's ``nbits // bands`` bits.
+    Shifts are plain ints so the expression stays codegen-friendly."""
+    if not 1 <= bands <= nbits:  # else a band of width 0: one shared bucket
+        raise ValueError(
+            f"{bands} bands over a {nbits}-bit signature leave no bits per "
+            f"band; bands must be in [1, {nbits}]"
+        )
+    width = nbits // bands
+    mask = F.lit((1 << width) - 1).cast("bigint")
+    return F.array(*[
+        F.struct(
+            F.lit(i).alias("band"),
+            F.shiftrightunsigned(F.col(sig_col), i * width)
+            .bitwiseAND(mask).alias("bucket"),
+        )
+        for i in range(bands)
+    ])
 
 
 class LshPlan:
@@ -400,20 +457,23 @@ def lsh_candidate_pairs(
     collide iff some band of their signatures is identical. Shuffles
     only (band, bucket_hash, id) triples.
 
-    DEGENERATE-BUCKET GUARD: the bucket self-join is O(bucket²) — one
-    boilerplate bucket of 10⁶ ids at 100 TB is 10¹² candidate pairs.
-    Buckets over ``max_bucket_size`` are dropped (broadcast anti-join
-    on the small oversized-bucket list), with a warning and, when a
+    DEGENERATE-BUCKET GUARD (``_bucket_pairs``): buckets over
+    ``max_bucket_size`` are dropped with a warning and, when a
     ``dropped_report`` dict is passed, (dropped_buckets, dropped_rows,
     max_bucket_size) filled in.  Rationale: a bucket that large is
     near-identical boilerplate — ``exact_dedup`` removes identical
     copies in one cheap hash-groupBy; pass ``max_bucket_size=None`` to
-    disable."""
-    num_perm_col = F.size(F.col(sig_col))
-    rows_per_band = F.floor(num_perm_col / bands).cast("int")
+    disable.
+
+    ``bands`` must be ≥ 1, and at most the signature length
+    (``minhash_dedup_pairs`` checks that bound): a band of zero values
+    hashes every document into one shared bucket."""
+    if bands < 1:
+        raise ValueError(f"lsh_candidate_pairs: bands must be >= 1, got {bands}")
+    rows_per_band = F.floor(F.size(F.col(sig_col)) / bands).cast("int")
     banded = sig_df.select(
         F.col(id_col),
-        F.explode(
+        F.inline(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.struct(
@@ -433,35 +493,12 @@ def lsh_candidate_pairs(
                     ).alias("bucket"),
                 ),
             )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # one materialization point: the banded table feeds the bucket-size
-    # aggregate AND both sides of the self-join — without it Catalyst
-    # re-runs the signature UDF once per branch (4× the expensive stage,
-    # observed in the physical plan). Lazy local checkpoint: computed on
-    # first use, reused by every branch, freed by the ContextCleaner.
-    banded = banded.localCheckpoint(eager=False)
-    banded = _drop_oversized_buckets(
-        banded, ["band", "bucket"], max_bucket_size, dropped_report,
-        "lsh_candidate_pairs",
+        ),
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col(f"a.band") == F.col("b.band"),
-                F.col(f"a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return _bucket_pairs(
+        banded, id_col, ["band", "bucket"], "lsh_candidate_pairs",
+        max_bucket_size, dropped_report,
     )
-    return pairs
 
 
 def minhash_dedup_pairs(
@@ -490,12 +527,16 @@ def minhash_dedup_pairs(
     repeated calls in a long-lived session)."""
     if bands == "auto":
         bands = lsh_plan(threshold, num_perm).bands
-    elif isinstance(bands, bool) or not isinstance(bands, int):
+    elif (isinstance(bands, bool) or not isinstance(bands, int)
+          or not 1 <= bands <= num_perm):
         # bool is an int subclass: bands=True would silently run a
         # 1-band full-signature LSH that misses every non-identical
-        # near-dup — exactly the failure this validation exists for
+        # near-dup — exactly the failure this validation exists for.
+        # Past num_perm a band holds no signature value, and every
+        # document would share one bucket per band
         raise ValueError(
-            f'minhash_dedup_pairs: bands must be an int or "auto", got {bands!r}'
+            f'minhash_dedup_pairs: bands must be "auto" or an int in '
+            f"[1, num_perm={num_perm}], got {bands!r}"
         )
     sh = with_shingle_hashes(df, text_col, n).select(id_col, "shingles").persist()
     try:
@@ -694,53 +735,21 @@ def simhash_near_dup_pairs(
     NOTE this cap is a new DEFAULT (previously uncapped): callers who
     want exhaustive pairs over legitimately large identical-chunk
     cohorts must pass ``max_bucket_size=None`` (or run ``exact_dedup``
-    first — a dropped bucket is near-identical content)."""
-    bands = max_hamming + 1
-    width = 64 // bands
-    mask = (1 << width) - 1
+    first — a dropped bucket is near-identical content).
+    ``max_hamming`` must be in [0, 63]: each of its ``max_hamming + 1``
+    bands needs at least one of the 64 bits."""
     exploded = df.select(
         F.col(id_col),
         F.col(sim_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col(sim_col), i * width)
-                        .bitwiseAND(F.lit(mask).cast("bigint"))
-                        .alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, sim_col, "bb.band", "bb.bucket")
-    # shared materialization point for the cap aggregate + both join
-    # sides (else an upstream simhash UDF re-runs once per branch)
-    exploded = exploded.localCheckpoint(eager=False)
-    exploded = _drop_oversized_buckets(
-        exploded, ["band", "bucket"], max_bucket_size, dropped_report,
-        "simhash_near_dup_pairs",
+        F.inline(_band_structs(sim_col, max_hamming + 1)),
     )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{sim_col}").alias("sh_a"),
-            F.col(f"b.{sim_col}").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = _bucket_pairs(
+        exploded, id_col, ["band", "bucket"], "simhash_near_dup_pairs",
+        max_bucket_size, dropped_report, carry=[sim_col],
     )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    hamming = F.bit_count(
+        F.col(f"{sim_col}_a").bitwiseXOR(F.col(f"{sim_col}_b"))
+    )
     return pairs.select(
         "id_a", "id_b", hamming.alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
@@ -825,7 +834,7 @@ def ngram_jaccard_pairs(
 
     ``max_shingle_df`` is the shared degenerate-bucket guard: a shingle
     whose PREFIX bucket exceeds it is dropped (warned + recorded in
-    ``last_dropped_stats('ngram_jaccard_pairs')``).  A shingle that
+    ``dropped_report``).  A shingle that
     common lands in a prefix only for docs with almost no rarer
     content (pure boilerplate) — but dropping does trade away the
     exactness guarantee for those docs; pass ``max_shingle_df=None``
@@ -850,56 +859,35 @@ def ngram_jaccard_pairs(
         )
         freq = ex.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
         prefix = _rarity_prefix(ex.join(freq, "__g"), id_col, threshold)
-        # one materialization point: the prefix table feeds the guard's
-        # size aggregate and both sides of the self-join (else the
-        # df-join + window recompute per branch)
-        prefix = prefix.localCheckpoint(eager=False)
-        prefix = _drop_oversized_buckets(
-            prefix, ["__g"], max_shingle_df, dropped_report,
-            "ngram_jaccard_pairs",
-        )
-        a, b = prefix.alias("a"), prefix.alias("b")
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.__g") == F.col("b.__g"),
-                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-                ],
-            )
+
+        def prune(a, b):
             # length filter: J ≥ t forces t·max(L) ≤ |A∩B| ≤ min(L);
             # −ε so a pair sitting EXACTLY at the threshold (t·max an
             # integer, one ULP high as a double product) is not pruned
-            .filter(
-                F.least(F.col("a.__L"), F.col("b.__L")).cast("double")
-                >= F.lit(threshold) * F.greatest(F.col("a.__L"), F.col("b.__L"))
+            length = (
+                F.least(a("__L"), b("__L")).cast("double")
+                >= F.lit(threshold) * F.greatest(a("__L"), b("__L"))
                 - F.lit(_T_EPS)
             )
             # position filter (PPJoin): J ≥ t needs overlap
             # I ≥ t·(L_a+L_b)/(1+t), and a match at ranks (r_a, r_b)
             # bounds I ≤ min(L_a−r_a, L_b−r_b) + 1.  Applied per edge
-            # and OR-ed by the distinct below: the first common shingle
-            # of a true pair (minimal rank on BOTH sides — one shared
+            # and OR-ed by the pair dedup: the first common shingle of
+            # a true pair (minimal rank on BOTH sides — one shared
             # global order) always passes, so recall is unchanged while
             # pairs meeting only on late prefix positions never reach
             # the verify join
-            .filter(
-                (
-                    F.lit(1)
-                    + F.least(
-                        F.col("a.__L") - F.col("a.__r"),
-                        F.col("b.__L") - F.col("b.__r"),
-                    )
-                ).cast("double")
-                >= F.lit(threshold / (1.0 + threshold))
-                * (F.col("a.__L") + F.col("b.__L"))
+            position = (
+                (F.lit(1) + F.least(a("__L") - a("__r"), b("__L") - b("__r")))
+                .cast("double")
+                >= F.lit(threshold / (1.0 + threshold)) * (a("__L") + b("__L"))
                 - F.lit(_T_EPS)
             )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
+            return length & position
+
+        cand = _bucket_pairs(
+            prefix, id_col, ["__g"], "ngram_jaccard_pairs",
+            max_shingle_df, dropped_report, where=prune,
         )
         return _verify_pairs(sh, cand, id_col, threshold)
     finally:
@@ -917,8 +905,8 @@ def ngram_jaccard_dedup(
     keep rule as ``exact_dedup``/``minhash_dedup``, so the three dedup
     tiers compose deterministically).  The 100%-recall guarantee
     requires ``max_shingle_df=None`` — the default cap trades it for
-    bounded degenerate-bucket cost, with a warning +
-    ``last_dropped_stats`` when it bites."""
+    bounded degenerate-bucket cost, with a warning (and the
+    ``dropped_report`` dict filled) when it bites."""
     pairs = ngram_jaccard_pairs(df, text_col, id_col, **kw)
     return _keep_min_reps(df, pairs, id_col)
 
@@ -969,7 +957,7 @@ def containment_pairs(
     index-side bucket fan-out exactly as in ``ngram_jaccard_pairs``
     (dropping a shingle that common trades exactness for bounded cost;
     ``None`` restores the 100%-recall guarantee), recorded in
-    ``last_dropped_stats('containment_pairs')``."""
+    ``dropped_report``."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(
             f"containment_pairs: threshold must be in (0, 1], got {threshold}"
@@ -1011,28 +999,13 @@ def containment_pairs(
             )
             .distinct()
         )
-        sa = sh.select(F.col(id_col).alias("id_a"),
-                       F.col("shingles").alias("sh_a"))
-        sb = sh.select(F.col(id_col).alias("id_b"),
-                       F.col("shingles").alias("sh_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        verified = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.round(
-                    inter.cast("double") / F.size("sh_a").cast("double"), 6
-                ).alias("containment"),
-                F.size("sh_a").alias("len_a"),
-                F.size("sh_b").alias("len_b"),
-            )
-            .filter(F.col("containment") >= threshold)
+        return _verify_pairs(
+            sh, cand, id_col, threshold,
+            score=lambda sa, sb: F.size(F.array_intersect(sa, sb)).cast("double")
+            / F.size(sa).cast("double"),
+            name="containment",
+            extra=(F.size("sh_a").alias("len_a"), F.size("sh_b").alias("len_b")),
         )
-        # eager localCheckpoint cuts lineage off the shingle cache so
-        # the finally-unpersist is safe (same contract as _verify_pairs)
-        return verified.localCheckpoint()
     finally:
         sh.unpersist()
 

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _band_structs, _bucket_pairs, _keep_min_reps
+
 _PLANE_SEED = 0x7F4A7C159E3779B9
 
 
@@ -148,22 +150,6 @@ def add_lsh_signature(
     return df.mapInArrow(sig, schema=schema)
 
 
-def _band_structs(sig_col: str, bands: int, width: int, mask: int):
-    """array of (band, bucket) structs; shifts are plain-int so the
-    whole expression stays codegen-friendly."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col(sig_col), i * width)
-                .bitwiseAND(F.lit(mask).cast("bigint"))
-                .alias("bucket"),
-            )
-            for i in range(bands)
-        ]
-    )
-
-
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -175,25 +161,19 @@ def ann_lsh_topk(
     bands: int = 8,
 ) -> DataFrame:
     """Approximate top-k: LSH-bucket candidates (≥1 identical band),
-    exact cosine re-rank. Recall grows with ``bands``."""
-    width = nbits // bands
-    mask = (1 << width) - 1
+    exact cosine re-rank. Recall grows with ``bands`` (at most
+    ``nbits``: a band needs at least one bit)."""
+    structs = _band_structs("__sig", bands, nbits)
 
-    def banded(df, idc, vcol, sig_col):
-        sig = add_lsh_signature(df.select(idc, vcol), vec_col=vcol, nbits=nbits,
-                                out_col=sig_col)
-        exploded = sig.select(
-            idc,
-            vcol,
-            F.explode(_band_structs(sig_col, bands, width, mask)).alias("bb"),
-        ).select(idc, vcol, "bb.band", "bb.bucket")
-        return exploded
+    def banded(df, idc, vcol):
+        sig = add_lsh_signature(df.select(idc, vcol), vcol, nbits, "__sig")
+        return sig.select(idc, vcol, F.inline(structs))
 
-    c = banded(corpus, id_col, vec_col, "__csig")
+    c = banded(corpus, id_col, vec_col)
     qq = queries.select(
         F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
     )
-    q = banded(qq, "__qid", "__qvec", "__qsig")
+    q = banded(qq, "__qid", "__qvec")
     cand = (
         c.join(F.broadcast(q), on=["band", "bucket"])
         .select("__qid", id_col, vec_col, "__qvec")
@@ -468,51 +448,26 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs: LSH candidates → exact cosine ≥
     threshold. (id_a < id_b, sim).
 
-    Buckets over ``max_bucket_size`` are dropped before the O(bucket²)
-    self-join (a degenerate bucket — e.g. zero/constant vectors — is
-    quadratic at scale); warning + optional ``dropped_report`` dict,
-    same guard as ``lsh_candidate_pairs``."""
-    width = nbits // bands
-    mask = (1 << width) - 1
+    Candidates come from ``dedup._bucket_pairs``, the self-join every
+    near-dup operator shares: buckets over ``max_bucket_size`` are
+    dropped before the O(bucket²) join (a degenerate bucket — e.g.
+    zero/constant vectors — is quadratic at scale), with a warning and
+    the optional ``dropped_report`` dict filled.  ``bands`` is at most
+    ``nbits``."""
+    structs = _band_structs("__sig", bands, nbits)
     sig = add_lsh_signature(df.select(id_col, vec_col), vec_col, nbits, "__sig")
-    exploded = sig.select(
-        id_col,
-        vec_col,
-        F.explode(_band_structs("__sig", bands, width, mask)).alias("bb"),
-    ).select(id_col, vec_col, "bb.band", "bb.bucket")
-    # shared materialization point for the cap aggregate + both join
-    # sides (else the LSH signature UDF re-runs once per branch)
-    exploded = exploded.localCheckpoint(eager=False)
-    from .dedup import _drop_oversized_buckets
-
-    exploded = _drop_oversized_buckets(
-        exploded, ["band", "bucket"], max_bucket_size, dropped_report,
-        "embedding_near_dup_pairs",
-    )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"a.{vec_col}").alias("va"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"b.{vec_col}").alias("vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _bucket_pairs(
+        sig.select(id_col, vec_col, F.inline(structs)), id_col,
+        ["band", "bucket"], "embedding_near_dup_pairs",
+        max_bucket_size, dropped_report, carry=[vec_col],
     )
     return cand.select(
         "id_a",
         "id_b",
         F.round(
             cosine_sim_col(
-                F.col("va").cast("array<double>"), F.col("vb").cast("array<double>")
+                F.col(f"{vec_col}_a").cast("array<double>"),
+                F.col(f"{vec_col}_b").cast("array<double>"),
             ),
             6,
         ).alias("sim"),
@@ -530,8 +485,6 @@ def embedding_dedup(
     the same keep rule as the text dedup tiers (``exact_dedup``,
     ``minhash_dedup``, ``ngram_jaccard_dedup``), so mixed text+embedding
     dedup stacks compose deterministically."""
-    from .dedup import _keep_min_reps
-
     pairs = embedding_near_dup_pairs(df, id_col, vec_col, **kw)
     return _keep_min_reps(df, pairs, id_col)
 

@@ -56,7 +56,7 @@ __all__ = ["write_bloom_indexed", "read_bloom_indexed", "last_skip_stats"]
 
 #: stats of the most recent ``read_bloom_indexed`` call in this process:
 #: {"files_total", "files_read", "n_values"} — the observability hook the
-#: skip claim is tested through (mirrors dedup.last_dropped_stats).
+#: skip claim is tested through.
 last_skip_stats: dict | None = None
 
 
