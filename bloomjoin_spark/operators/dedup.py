@@ -5,8 +5,8 @@ Scale shape (100 TB): everything is expressed as DataFrame ops whose
 shuffles are on *short keys* (hashes/buckets), never on document text:
 
 - exact: groupBy(md5(text)) — one shuffle of 16-byte keys;
-- MinHash/LSH: signatures via one vectorized pandas UDF (flat numpy
-  ``minimum.reduceat`` over Arrow batches), then shingle→band→bucket
+- MinHash/LSH: signatures in one Arrow column stage (``_arrow_column``:
+  flat numpy ``minimum.reduceat`` per Arrow batch), then shingle→band→bucket
   explode + groupBy bucket — candidate generation never compares
   documents pairwise;
 - verification: exact Jaccard via JVM ``array_intersect``/``array_union``
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..hashing import splitmix64
 
@@ -164,69 +164,87 @@ def _list_lens_and_flat(col):
     return lens, flat
 
 
+def _fixed_list(values: np.ndarray, valid: np.ndarray | None = None):
+    """THE fixed-width list writer: an Arrow list column whose rows are
+    the rows of the (rows, width) matrix ``values``.  With ``valid``,
+    ``values`` holds the valid rows only and every other row is NULL,
+    with no values behind it."""
+    import pyarrow as pa
+
+    width = values.shape[1]
+    mask = None
+    if valid is None:
+        offsets = np.arange(0, (len(values) + 1) * width, width, dtype=np.int32)
+    else:
+        offsets = np.zeros(len(valid) + 1, dtype=np.int32)
+        np.cumsum(valid * width, out=offsets[1:])
+        mask = pa.array(~valid)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(values.ravel()), mask=mask
+    )
+
+
+def _arrow_column(df: DataFrame, out_col: str, out_type: T.DataType, kernel,
+                  drop: str | None = None) -> DataFrame:
+    """THE per-row Arrow column stage: ``df`` minus ``drop``, plus
+    ``out_col`` (Spark type ``out_type``) computed by
+    ``kernel(batch) -> pa.Array`` over each non-empty Arrow batch — one
+    ``mapInArrow``, no job, no Exchange.  A kernel is per-batch and
+    stateless: whatever it needs is computed on the driver and ships in
+    its closure.  The output schema is ``df``'s own fields plus one, so
+    no column name is parsed (a name holding a space or a backtick
+    passes through); an ``out_col`` that ``df`` already holds raises
+    ``ValueError`` at call time, before any job."""
+    kept = [f for f in df.schema.fields if f.name != drop]
+    if any(f.name == out_col for f in kept):
+        raise ValueError(f"output column {out_col!r} already exists")
+    schema = T.StructType(kept + [T.StructField(out_col, out_type)])
+
+    def stage(it):
+        for batch in it:
+            if batch.num_rows:
+                col = kernel(batch)
+                if drop is not None:
+                    batch = batch.drop_columns([drop])
+                yield batch.append_column(out_col, col)
+
+    return df.mapInArrow(stage, schema)
+
+
 def add_minhash_signature(
     df: DataFrame,
     shingle_col: str = "shingles",
     num_perm: int = 128,
     out_col: str = "minhash",
 ) -> DataFrame:
-    """num_perm minhash values per row. Arrow-native (``mapInArrow``):
-    the shingle list column is ONE flat int64 buffer + offsets, so the
-    whole batch is flattened zero-copy and each permutation is one
-    splitmix64 + ``np.minimum.reduceat`` over row offsets — no per-row
-    numpy object materialization (the allocator-churn pathology
-    aggregate.py documents and avoids for sketch ingest)."""
+    """num_perm minhash values per row, replacing ``shingle_col``.
+    Arrow-native (``_arrow_column``): the shingle list column is ONE
+    flat int64 buffer + offsets, so the whole batch is flattened
+    zero-copy and each permutation is one splitmix64 +
+    ``np.minimum.reduceat`` over row offsets — no per-row numpy object
+    materialization (the allocator-churn pathology aggregate.py
+    documents and avoids for sketch ingest).  A NULL or empty shingle
+    set gets the all-``int64.max`` signature."""
     seeds = splitmix64(
         np.arange(1, num_perm + 1, dtype=np.uint64) * _U64(_PERM_SEED)
     )
 
-    def sig(it):
-        import pyarrow as pa
+    def sig(batch):
+        lens, flat = _list_lens_and_flat(batch.column(shingle_col))
+        out = np.full((batch.num_rows, num_perm), np.iinfo(np.int64).max, dtype=np.int64)
+        nz = lens > 0
+        if nz.any():
+            flat_u = flat.astype(np.int64, copy=False).view(np.uint64)
+            offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])[nz]
+            mins = np.empty((num_perm, int(nz.sum())), dtype=np.uint64)
+            for j in range(num_perm):
+                hp = splitmix64(flat_u ^ seeds[j])
+                mins[j] = np.minimum.reduceat(hp, offsets)
+            # store as int64 (same bits) for Spark's long type
+            out[nz] = mins.T.view(np.int64)
+        return _fixed_list(out)
 
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            sidx = batch.schema.get_field_index(shingle_col)
-            lens, flat = _list_lens_and_flat(batch.column(sidx))
-            out = np.full((n, num_perm), np.iinfo(np.int64).max, dtype=np.int64)
-            nz = lens > 0
-            if nz.any():
-                flat_u = flat.astype(np.int64, copy=False).view(np.uint64)
-                offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])[nz]
-                mins = np.empty((num_perm, int(nz.sum())), dtype=np.uint64)
-                for j in range(num_perm):
-                    hp = splitmix64(flat_u ^ seeds[j])
-                    mins[j] = np.minimum.reduceat(hp, offsets)
-                # store as int64 (same bits) for Spark's long type
-                out[nz] = mins.T.view(np.int64)
-            arrays = [
-                batch.column(i)
-                for i, f in enumerate(batch.schema)
-                if f.name != shingle_col
-            ]
-            names = [f.name for f in batch.schema if f.name != shingle_col]
-            sig_list = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)
-                ),
-                pa.array(out.ravel(), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                arrays + [sig_list], names=names + [out_col]
-            )
-
-    out_schema = ", ".join(
-        f"{name} {dtype}"
-        for name, dtype in _schema_without(df, shingle_col)
-    ) + f", {out_col} array<bigint>"
-    return df.mapInArrow(sig, schema=out_schema)
-
-
-def _schema_without(df: DataFrame, drop: str):
-    for f in df.schema.fields:
-        if f.name != drop:
-            yield f.name, f.dataType.simpleString()
+    return _arrow_column(df, out_col, T.ArrayType(T.LongType()), sig, drop=shingle_col)
 
 
 def _drop_oversized_buckets(
@@ -465,12 +483,21 @@ def lsh_candidate_pairs(
     copies in one cheap hash-groupBy; pass ``max_bucket_size=None`` to
     disable.
 
-    ``bands`` must be ≥ 1, and at most the signature length
-    (``minhash_dedup_pairs`` checks that bound): a band of zero values
-    hashes every document into one shared bucket."""
+    ``bands`` must be ≥ 1, and at most the signature length: a band of
+    zero values would hash every document into one shared bucket, so a
+    non-NULL signature shorter than ``bands`` fails the action
+    (``raise_error`` inside the band expression; a NULL signature keeps
+    its one bucket per band)."""
     if bands < 1:
         raise ValueError(f"lsh_candidate_pairs: bands must be >= 1, got {bands}")
-    rows_per_band = F.floor(F.size(F.col(sig_col)) / bands).cast("int")
+    size = F.size(F.col(sig_col))
+    rows_per_band = F.when(
+        F.col(sig_col).isNotNull() & (size < bands),
+        F.raise_error(F.concat(
+            F.lit(f"lsh_candidate_pairs: {bands} bands over a signature of "),
+            size.cast("string"), F.lit(" values leave a band with no value"),
+        )),
+    ).otherwise(F.floor(size / bands)).cast("int")
     banded = sig_df.select(
         F.col(id_col),
         F.inline(
@@ -684,39 +711,27 @@ def add_simhash(
     tmp = "__sh_tok_hashes"
     with_h = df.withColumn(tmp, F.transform(toks, lambda t: F.xxhash64(t)))
 
-    def sim(it):
+    def sim(batch):
         import pyarrow as pa
 
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            hidx = batch.schema.get_field_index(tmp)
-            lens, flat = _list_lens_and_flat(batch.column(hidx))
-            out = np.zeros(n, dtype=np.uint64)
-            nz = lens > 0
-            if nz.any():
-                flat_u = flat.astype(np.int64, copy=False).view(np.uint64)
-                offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])[nz]
-                ln = lens[nz]
-                vals = np.zeros(ln.size, dtype=np.uint64)
-                for j in range(64):
-                    ones = np.add.reduceat(
-                        ((flat_u >> _U64(j)) & _U64(1)).astype(np.int32), offsets
-                    ).astype(np.int64)
-                    # majority vote: bit j set iff ones > len/2
-                    vals |= ((2 * ones - ln) > 0).astype(np.uint64) << _U64(j)
-                out[nz] = vals
-            arrays = [batch.column(i) for i, f in enumerate(batch.schema) if f.name != tmp]
-            names = [f.name for f in batch.schema if f.name != tmp]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [pa.array(out.view(np.int64))], names=names + [out_col]
-            )
+        lens, flat = _list_lens_and_flat(batch.column(tmp))
+        out = np.zeros(batch.num_rows, dtype=np.uint64)
+        nz = lens > 0
+        if nz.any():
+            flat_u = flat.astype(np.int64, copy=False).view(np.uint64)
+            offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])[nz]
+            ln = lens[nz]
+            vals = np.zeros(ln.size, dtype=np.uint64)
+            for j in range(64):
+                ones = np.add.reduceat(
+                    ((flat_u >> _U64(j)) & _U64(1)).astype(np.int32), offsets
+                ).astype(np.int64)
+                # majority vote: bit j set iff ones > len/2
+                vals |= ((2 * ones - ln) > 0).astype(np.uint64) << _U64(j)
+            out[nz] = vals
+        return pa.array(out.view(np.int64))
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} bigint"
-    return with_h.mapInArrow(sim, schema=schema)
+    return _arrow_column(with_h, out_col, T.LongType(), sim, drop=tmp)
 
 
 def simhash_near_dup_pairs(

@@ -2,24 +2,41 @@
 
 - ``cosine_topk``: brute-force exact top-k — the baseline. The scoring
   expression is pure JVM (``zip_with`` + ``aggregate``), the query set
-  is broadcast, and ranking is a window per query id. At scale this is
-  one scan of the corpus per query batch — no shuffle of vectors except
-  the final top-k-per-query exchange (k rows per partition after the
-  partial window).
-- ``ann_lsh_topk``: the scale path — random-hyperplane LSH: 64 sign
-  bits per vector (one vectorized matmul per Arrow batch), banded into
-  bucket keys; candidates come from bucket equi-joins (shuffles only
-  (band, bucket, id)), then exact cosine re-ranks candidates.
+  is broadcast, and ranking is a window per query id
+  (``_rerank_candidates``, the exact tail every ANN path below shares).
+- ``ann_lsh_topk``: random-hyperplane LSH — sign bits per vector (one
+  matmul per Arrow batch), banded into bucket keys; candidates come
+  from bucket equi-joins (shuffles only (band, bucket, id)), then the
+  exact cosine re-rank.
+- ``ann_ivf_topk`` / ``ann_ivf_topk_partitioned``: IVF — spherical
+  k-means cells; a query probes its ``nprobe`` nearest cells
+  (``_probe_cells``), candidates are an equi-join on the cell id (a
+  partition-pruned read over a ``write_ivf_partitioned`` corpus).
+- ``ann_pq_topk`` / ``ann_ivf_pq_topk``: product quantization — the
+  scan ADC-scores m-byte codes (``add_pq_codes``), optionally inside
+  the probed IVF cells, and fetches true vectors for a shortlist only.
+
+Every per-row kernel (LSH signature, IVF cell, probed cells, PQ code)
+runs through one Arrow column stage, ``dedup._arrow_column``: one
+``mapInArrow`` per call, the vector list column read as one flat
+buffer (``_vectors``), no per-row Python.  A vector op reads a NULL or
+empty vector by its own documented rule; a non-empty row whose length
+differs from the others (LSH) or from the centroid dim (IVF) raises
+``ValueError``.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import functools
 
-from .dedup import _band_structs, _bucket_pairs, _keep_min_reps
+import numpy as np
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F, types as T
+
+from .dedup import (
+    _arrow_column, _band_structs, _bucket_pairs, _fixed_list,
+    _keep_min_reps, _list_lens_and_flat,
+)
 
 _PLANE_SEED = 0x7F4A7C159E3779B9
 
@@ -41,6 +58,35 @@ def cosine_sim_col(a, b):
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
+def _rerank_candidates(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """Exact-cosine top-k of (__qid, id, vec, __qvec) candidates: (query_id,
+    id, sim, rank), ties broken by (sim desc, id asc) — the brute-force
+    scorer and the shared tail of every ANN path."""
+    scored = cand.select(
+        F.col("__qid").alias(query_id_col),
+        F.col(id_col),
+        F.round(
+            cosine_sim_col(
+                F.col(vec_col).cast("array<double>"),
+                F.col("__qvec").cast("array<double>"),
+            ),
+            6,
+        ).alias("sim"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _query_frame(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -53,31 +99,35 @@ def cosine_topk(
     ``queries`` must have (query_id, embedding); it is broadcast.
     Deterministic tie-break: (sim desc, vec_id asc). Self-matches
     (same id) are not excluded — filter upstream if undesired."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+    q = F.broadcast(_query_frame(queries, query_id_col, vec_col))
+    return _rerank_candidates(
+        corpus.select(id_col, vec_col).crossJoin(q), k, id_col, vec_col, query_id_col
+    )
+
+
+def _vectors(col, dim: int | None = None):
+    """THE vector reader of the per-row kernels: ``(nz, V)``, the mask of
+    the non-empty rows of an Arrow list column and their (rows, dim)
+    float64 matrix — the flat buffer reshaped, so a float64 column is
+    not copied.  Every non-empty row must hold ``dim`` values (``None``:
+    the length of the first one), else ``ValueError``."""
+    lens, flat = _list_lens_and_flat(col)
+    nz = lens > 0
+    if dim is None:
+        dim = int(lens[nz][0]) if nz.any() else 0
+    bad = nz & (lens != dim)
+    if bad.any():
+        raise ValueError(
+            f"vector rows must have length {dim}, found a row of length "
+            f"{int(lens[bad][0])}"
         )
-    )
-    scored = corpus.select(id_col, vec_col).crossJoin(q).select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_sim_col(
-                F.col(vec_col).cast("array<double>"),
-                F.col("__qvec").cast("array<double>"),
-            ),
-            6,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return nz, flat.astype(np.float64, copy=False).reshape(int(nz.sum()), dim)
 
 
+@functools.lru_cache(maxsize=None)
 def _planes(dim: int, nbits: int) -> np.ndarray:
-    """Deterministic gaussian hyperplanes via counter-based Box-Muller."""
+    """Deterministic gaussian hyperplanes via counter-based Box-Muller
+    (cached per process; read-only)."""
     from ..hashing import splitmix64
 
     n = dim * nbits
@@ -86,7 +136,9 @@ def _planes(dim: int, nbits: int) -> np.ndarray:
     u1 = np.clip(u[:n], 1e-12, 1.0)
     u2 = u[n:]
     g = np.sqrt(-2.0 * np.log(u1)) * np.cos(2 * np.pi * u2)
-    return g.reshape(dim, nbits)
+    g = g.reshape(dim, nbits)
+    g.setflags(write=False)
+    return g
 
 
 def add_lsh_signature(
@@ -97,57 +149,25 @@ def add_lsh_signature(
 ) -> DataFrame:
     """Pack sign(V·P) into one int64 per row — Arrow-native: the vector
     list column is ONE flat float buffer, so the whole batch reshapes
-    zero-copy to (rows, dim) and signs come from a single matmul; no
-    per-row numpy object materialization. Planes are generated
-    deterministically per process."""
+    to (rows, dim) and signs come from a single matmul; no per-row
+    numpy object materialization.  Planes are deterministic per
+    (dim, nbits).  A NULL or empty vector signs 0; the non-empty
+    vectors of a batch must share one length."""
+    powers = np.uint64(1) << np.arange(nbits, dtype=np.uint64)
 
-    def sig(it):
+    def sig(batch):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        planes = None
-        powers = (np.uint64(1) << np.arange(nbits, dtype=np.uint64))
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vidx = batch.schema.get_field_index(vec_col)
-            col = batch.column(vidx)
-            lens = (
-                pc.list_value_length(col)
-                .fill_null(0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
+        nz, V = _vectors(batch.column(vec_col))
+        out = np.zeros(batch.num_rows, dtype=np.uint64)
+        if nz.any():
+            bits = (V @ _planes(V.shape[1], nbits)) > 0
+            out[nz] = (bits.astype(np.uint64) * powers[None, :]).sum(
+                axis=1, dtype=np.uint64
             )
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=False
-            )
-            out = np.zeros(n, dtype=np.uint64)
-            nz = lens > 0
-            if nz.any():
-                dims = np.unique(lens[nz])
-                if dims.size != 1:
-                    raise ValueError(
-                        f"embedding column {vec_col!r} has mixed dims {dims[:5]}"
-                    )
-                dim = int(dims[0])
-                if planes is None:
-                    planes = _planes(dim, nbits)
-                V = flat.reshape(-1, dim)  # zero-copy: rows are contiguous
-                bits = (V @ planes) > 0
-                out[nz] = (bits.astype(np.uint64) * powers[None, :]).sum(
-                    axis=1, dtype=np.uint64
-                )
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            names = [f.name for f in batch.schema]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [pa.array(out.view(np.int64))], names=names + [out_col]
-            )
+        return pa.array(out.view(np.int64))
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} bigint"
-    return df.mapInArrow(sig, schema=schema)
+    return _arrow_column(df, out_col, T.LongType(), sig)
 
 
 def ann_lsh_topk(
@@ -170,10 +190,7 @@ def ann_lsh_topk(
         return sig.select(idc, vcol, F.inline(structs))
 
     c = banded(corpus, id_col, vec_col)
-    qq = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
-    q = banded(qq, "__qid", "__qvec")
+    q = banded(_query_frame(queries, query_id_col, vec_col), "__qid", "__qvec")
     cand = (
         c.join(F.broadcast(q), on=["band", "bucket"])
         .select("__qid", id_col, vec_col, "__qvec")
@@ -239,66 +256,31 @@ def train_ivf_centroids(
     return C
 
 
-def _assign_clusters_fn(centroids: np.ndarray, vec_col: str, out_col: str, top: int):
-    """mapInArrow: per batch, zero-copy reshape the flat vector buffer,
-    one matmul against the centroids, argmax (top=1 → int cluster id)
-    or arg-top-nprobe (top>1 → array<int>)."""
+def _assign_clusters_fn(centroids: np.ndarray, vec_col: str, nprobe: int | None = None):
+    """Arrow kernel: one matmul of the batch's unit vectors against the
+    centroids, then the nearest cell (``nprobe`` None: an int cell id)
+    or the ``nprobe`` nearest cells, nearest first (array<int>).  A
+    NULL or empty vector takes cell 0; a non-empty vector whose length
+    differs from the centroid dim raises ``ValueError``."""
+    top = nprobe or 1
 
-    def fn(it):
+    def cells(batch):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        C = centroids
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vidx = batch.schema.get_field_index(vec_col)
-            col = batch.column(vidx)
-            lens = (
-                pc.list_value_length(col).fill_null(0)
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=False
-            )
-            nz = lens > 0
+        nz, V = _vectors(batch.column(vec_col), centroids.shape[1])
+        out = np.zeros((batch.num_rows, top), dtype=np.int32)
+        if nz.any():
+            nrm = np.linalg.norm(V, axis=1, keepdims=True)
+            sims = (V / np.clip(nrm, 1e-12, None)) @ centroids.T
             if top == 1:
-                out = np.zeros(n, dtype=np.int32)
+                out[nz, 0] = np.argmax(sims, axis=1)
             else:
-                out = np.zeros((n, top), dtype=np.int32)
-            if nz.any():
-                V = flat.reshape(-1, C.shape[1])
-                nrm = np.linalg.norm(V, axis=1, keepdims=True)
-                sims = (V / np.clip(nrm, 1e-12, None)) @ C.T
-                if top == 1:
-                    out[nz] = np.argmax(sims, axis=1).astype(np.int32)
-                else:
-                    t = min(top, C.shape[0])
-                    part = np.argpartition(-sims, t - 1, axis=1)[:, :t]
-                    out_nz = np.zeros((int(nz.sum()), top), dtype=np.int32)
-                    out_nz[:, :t] = np.take_along_axis(
-                        part,
-                        np.argsort(
-                            -np.take_along_axis(sims, part, axis=1), axis=1
-                        ),
-                        axis=1,
-                    )
-                    if t < top:
-                        out_nz[:, t:] = out_nz[:, t - 1 : t]
-                    out[nz] = out_nz
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            names = [f.name for f in batch.schema]
-            if top == 1:
-                extra = pa.array(out)
-            else:
-                extra = pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * top, top, dtype=np.int32)),
-                    pa.array(out.ravel()),
-                )
-            yield pa.RecordBatch.from_arrays(arrays + [extra], names=names + [out_col])
+                part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
+                order = np.argsort(-np.take_along_axis(sims, part, axis=1), axis=1)
+                out[nz] = np.take_along_axis(part, order, axis=1)
+        return pa.array(out.ravel()) if nprobe is None else _fixed_list(out)
 
-    return fn
+    return cells
 
 
 def add_ivf_cluster(
@@ -307,11 +289,36 @@ def add_ivf_cluster(
     vec_col: str = "embedding",
     out_col: str = "ivf_cluster",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (int cluster id)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} int"
-    return df.mapInArrow(_assign_clusters_fn(centroids, vec_col, out_col, 1), schema)
+    """Assign each vector to its nearest centroid (int cluster id; cell
+    0 for a NULL or empty vector, ``ValueError`` for a vector whose
+    length is not the centroid dim)."""
+    return _arrow_column(
+        df, out_col, T.IntegerType(), _assign_clusters_fn(centroids, vec_col)
+    )
+
+
+def _nprobe(nprobe: int, nlist: int) -> int:
+    """THE nprobe rule of every IVF query path: at least 1 (else
+    ``ValueError``), at most the cell count."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    return min(nprobe, nlist)
+
+
+def _probe_cells(
+    queries: DataFrame, centroids: np.ndarray, nprobe: int,
+    query_id_col: str, vec_col: str, cell_col: str,
+) -> DataFrame:
+    """(__qid, __qvec, cell_col): each query once per cell among its
+    ``nprobe`` nearest — one Arrow column stage, then an explode."""
+    top = _nprobe(nprobe, centroids.shape[0])
+    probes = _arrow_column(
+        _query_frame(queries, query_id_col, vec_col), "__cls",
+        T.ArrayType(T.IntegerType()), _assign_clusters_fn(centroids, "__qvec", top),
+    )
+    return probes.select(
+        "__qid", "__qvec", F.explode("__cls").alias(cell_col)
+    ).dropDuplicates(["__qid", cell_col])
 
 
 def ann_ivf_topk(
@@ -330,47 +337,16 @@ def ann_ivf_topk(
     corpus once, probe each query's nprobe nearest cells (equi-join on
     cluster id, queries broadcast), exact cosine re-rank.  Recall grows
     with nprobe/nlist; nprobe == nlist degrades gracefully to exact."""
+    _nprobe(nprobe, nlist)  # fail before training
     cent = train_ivf_centroids(corpus, vec_col, nlist, sample, iters)
     c = add_ivf_cluster(corpus.select(id_col, vec_col), cent, vec_col, "__cl")
-    qq = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
-    probe_schema = "__qid " + dict(qq.dtypes)["__qid"] + \
-        ", __qvec " + dict(qq.dtypes)["__qvec"] + ", __cls array<int>"
-    qp = qq.mapInArrow(
-        _assign_clusters_fn(cent, "__qvec", "__cls", max(1, nprobe)), probe_schema
-    )
-    qx = qp.select("__qid", "__qvec", F.explode("__cls").alias("__cl")).dropDuplicates(
-        ["__qid", "__cl"]
-    )
+    qx = _probe_cells(queries, cent, nprobe, query_id_col, vec_col, "__cl")
     cand = (
         c.join(F.broadcast(qx), on="__cl")
         .select("__qid", id_col, vec_col, "__qvec")
         .dropDuplicates(["__qid", id_col])
     )
     return _rerank_candidates(cand, k, id_col, vec_col, query_id_col)
-
-
-def _rerank_candidates(
-    cand: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
-) -> DataFrame:
-    """Exact-cosine re-rank of (__qid, id, vec, __qvec) candidates —
-    shared tail of every ANN path."""
-    scored = cand.select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_sim_col(
-                F.col(vec_col).cast("array<double>"),
-                F.col("__qvec").cast("array<double>"),
-            ),
-            6,
-        ).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
 
 
 def write_ivf_partitioned(
@@ -407,24 +383,12 @@ def ann_ivf_topk_partitioned(
     data) and pushed as a literal ``isin`` partition filter, so the
     parquet scan is pruned to nprobe/nlist of the corpus before the
     (broadcast) candidate join."""
-    corpus = spark.read.parquet(path)
-    qq = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
-    probe_schema = (
-        "__qid " + dict(qq.dtypes)["__qid"]
-        + ", __qvec " + dict(qq.dtypes)["__qvec"] + ", __cls array<int>"
-    )
-    qp = qq.mapInArrow(
-        _assign_clusters_fn(centroids, "__qvec", "__cls", max(1, nprobe)),
-        probe_schema,
-    )
-    qx = qp.select(
-        "__qid", "__qvec", F.explode("__cls").alias(cluster_col)
-    ).dropDuplicates(["__qid", cluster_col])
     # reused by the cell-list collect AND the candidate join — one
     # materialization so the assignment UDF runs once
-    qx = qx.localCheckpoint(eager=False)
+    qx = _probe_cells(
+        queries, centroids, nprobe, query_id_col, vec_col, cluster_col
+    ).localCheckpoint(eager=False)
+    corpus = spark.read.parquet(path)
     cells = [int(r[cluster_col]) for r in qx.select(cluster_col).distinct().collect()]
     pruned = corpus.filter(F.col(cluster_col).isin(cells))
     cand = (
@@ -558,62 +522,43 @@ def train_pq_codebooks(
     return books
 
 
-def _encode_pq_fn(codebooks: np.ndarray, vec_col: str, out_col: str):
-    """mapInArrow: per batch, reshape the flat vector buffer, one
-    argmin against each subspace book, emit m-byte binary codes
-    (NULL for null/empty/wrong-dim vectors)."""
+def _encode_pq_fn(codebooks: np.ndarray, vec_col: str):
+    """Arrow kernel: one argmin of the batch's unit vectors against each
+    subspace book, emitting m-byte binary codes (NULL for a null,
+    empty or wrong-dim vector).  Codeword norms are computed once, on
+    the driver."""
     m, _, dsub = codebooks.shape
     dim = m * dsub
+    bnorm = (codebooks * codebooks).sum(axis=2)
 
-    def fn(it):
+    def encode(batch):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        B = codebooks
-        bnorm = [(B[j] * B[j]).sum(axis=1) for j in range(m)]
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = batch.column(batch.schema.get_field_index(vec_col))
-            lens = (
-                pc.list_value_length(col).fill_null(0)
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            ok = lens == dim
-            codes = np.zeros((n, m), dtype=np.uint8)
-            if ok.any():
-                flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                    np.float64, copy=False
-                )
-                # row start offsets of the flat buffer, rows of any length
+        lens, flat = _list_lens_and_flat(batch.column(vec_col))
+        n = batch.num_rows
+        ok = lens == dim
+        codes = np.zeros((n, m), dtype=np.uint8)
+        if ok.any():
+            flat = flat.astype(np.float64, copy=False)
+            if (ok | (lens == 0)).all():  # the flat buffer IS the matrix
+                V = flat.reshape(-1, dim)
+            else:  # gather the valid rows past the wrong-dim ones
                 starts = np.zeros(n, dtype=np.int64)
                 np.cumsum(lens[:-1], out=starts[1:])
-                idx = starts[ok, None] + np.arange(dim, dtype=np.int64)
-                V = flat[idx]
-                V /= np.clip(np.linalg.norm(V, axis=1, keepdims=True), 1e-12, None)
-                for j in range(m):
-                    S = V[:, j * dsub : (j + 1) * dsub]
-                    d2 = -2.0 * (S @ B[j].T) + bnorm[j]
-                    codes[ok, j] = np.argmin(d2, axis=1).astype(np.uint8)
-            data = pa.py_buffer(codes.tobytes())
-            offsets = pa.array(
-                np.arange(0, (n + 1) * m, m, dtype=np.int32)
-            ).buffers()[1]
-            mask = None
-            if not ok.all():
-                mask = pa.array(ok).buffers()[1]
-            code_arr = pa.Array.from_buffers(
-                pa.binary(), n, [mask, offsets, data],
-                null_count=int((~ok).sum()),
-            )
-            arrays = [batch.column(i) for i in range(batch.num_columns)]
-            names = [f.name for f in batch.schema]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [code_arr], names=names + [out_col]
-            )
+                V = flat[starts[ok, None] + np.arange(dim, dtype=np.int64)]
+            V = V / np.clip(np.linalg.norm(V, axis=1, keepdims=True), 1e-12, None)
+            for j in range(m):
+                S = V[:, j * dsub : (j + 1) * dsub]
+                d2 = -2.0 * (S @ codebooks[j].T) + bnorm[j]
+                codes[ok, j] = np.argmin(d2, axis=1).astype(np.uint8)
+        offsets = pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)).buffers()[1]
+        mask = None if ok.all() else pa.array(ok).buffers()[1]
+        return pa.Array.from_buffers(
+            pa.binary(), n, [mask, offsets, pa.py_buffer(codes.tobytes())],
+            null_count=int((~ok).sum()),
+        )
 
-    return fn
+    return encode
 
 
 def add_pq_codes(
@@ -624,12 +569,9 @@ def add_pq_codes(
 ) -> DataFrame:
     """``df`` plus an ``out_col`` binary column of m-byte PQ codes
     (NULL where the vector is null, empty, or the wrong dimension)."""
-    if out_col in df.columns:
-        raise ValueError(f"output column {out_col!r} already exists")
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} binary"
-    return df.mapInArrow(_encode_pq_fn(codebooks, vec_col, out_col), schema)
+    return _arrow_column(
+        df, out_col, T.BinaryType(), _encode_pq_fn(codebooks, vec_col)
+    )
 
 
 def _adc_score_fn(
@@ -808,12 +750,7 @@ def _adc_search(
     )
     # shortlist·|queries| rows — AQE broadcasts this side of the fetch
     cand = cand_ids.join(corpus.select(id_col, vec_col), id_col).join(
-        F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("__qid"),
-                F.col(vec_col).alias("__qvec"),
-            )
-        ),
+        F.broadcast(_query_frame(queries, query_id_col, vec_col)),
         F.col(query_id_col) == F.col("__qid"),
     )
     return _rerank_candidates(
@@ -901,9 +838,7 @@ def ann_ivf_pq_topk(
         shortlist = max(4 * k, 50)
     if shortlist < k:
         raise ValueError(f"shortlist {shortlist} must be >= k {k}")
-    if not 1 <= nprobe:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    nprobe = min(nprobe, centroids.shape[0])
+    nprobe = _nprobe(nprobe, centroids.shape[0])
     if codes is None:
         codes = add_pq_codes(
             add_ivf_cluster(corpus.select(id_col, vec_col), centroids,

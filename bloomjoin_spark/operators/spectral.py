@@ -24,10 +24,12 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from ..aggregate import BuildResult, build_sketch, grouped_sketch_estimates
 from ..sketches.fd import FrequentDirectionsSketch
+from .dedup import _arrow_column, _fixed_list
+from .similarity import _vectors
 
 __all__ = [
     "fd_sketch",
@@ -106,18 +108,18 @@ def pca_project(
 ) -> DataFrame:
     """Project an ``array<float>`` column onto the top-``k`` principal
     directions of a built FD sketch — the dimensionality-reduction step
-    before IVF/PQ training, as ONE ``mapInArrow`` stage: the vector
-    column flattens zero-copy to an (n, d) matrix, one BLAS matmul with
-    the k×d direction matrix (closure-shipped — k·d floats, KBs), and
-    the (n, k) result re-wraps as a list column.  No shuffle, no
-    per-row Python; NULL vectors project to NULL.
+    before IVF/PQ training, as ONE Arrow column stage
+    (``dedup._arrow_column``): the vector column flattens to an (n, d)
+    matrix, one BLAS matmul with the k×d direction matrix
+    (closure-shipped — k·d floats, KBs), and the (n, k) result re-wraps
+    as a list column.  No shuffle, no per-row Python; NULL vectors
+    project to NULL, and any other row whose length is not the sketch
+    dim (an empty one too) raises ``ValueError``.
 
     The sketch certifies the projection quality: the captured spectral
     mass of the top-k directions is within ``spectral_error_bound()``
     of the true top-k mass (FD's PSD sandwich), so 'how much variance
     k components keep' is answerable without an exact pass."""
-    import pyarrow as pa
-
     sk = sketch.sketch if isinstance(sketch, BuildResult) else sketch
     _, vt = sk.directions(k)
     if vt.shape[0] < k:
@@ -126,45 +128,18 @@ def pca_project(
         )
     v = np.ascontiguousarray(vt, dtype=np.float64)  # (k, d)
     dim = sk.dim
-    in_cols = df.columns
-    if out_col in in_cols:
-        raise ValueError(f"output column {out_col!r} already exists")
-    vec_idx = in_cols.index(vec_col)
-    out_fields = ", ".join(f"`{c}` {t}" for c, t in df.dtypes)
-    out_schema = f"{out_fields}, `{out_col}` array<double>"
 
-    def project(it):
-        for batch in it:
-            col = batch.column(vec_idx)
-            lens = pa.compute.list_value_length(col).fill_null(-1).to_numpy(
-                zero_copy_only=False
+    def project(batch):
+        col = batch.column(vec_col)
+        nz, m = _vectors(col, dim)  # a ragged non-null row raises here
+        if int(nz.sum()) != len(col) - col.null_count:
+            raise ValueError(
+                f"vector column rows must have length {dim} "
+                "(found a non-null row of length 0)"
             )
-            valid = pa.compute.is_valid(col).to_numpy(zero_copy_only=False)
-            mask_np = valid & (lens == dim)
-            bad = valid & ~mask_np
-            if bad.any():
-                raise ValueError(
-                    f"vector column rows must have length {dim} "
-                    "(found a non-null row of different length)"
-                )
-            # project only the valid rows; re-expand with nulls after
-            flat = col.drop_null().flatten().to_numpy(zero_copy_only=False)
-            m = flat.astype(np.float64, copy=False).reshape(-1, dim)
-            proj = m @ v.T  # (n_valid, k)
-            n = len(col)
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(np.where(mask_np, k, 0)).astype(np.int32)
-            out = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.array(proj.reshape(-1), pa.float64()),
-                mask=pa.array(~mask_np),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [out],
-                names=list(batch.schema.names) + [out_col],
-            )
+        return _fixed_list(m @ v.T, valid=nz)  # NULL rows stay NULL
 
-    return df.mapInArrow(project, schema=out_schema)
+    return _arrow_column(df, out_col, T.ArrayType(T.DoubleType()), project)
 
 
 def spectral_drift(

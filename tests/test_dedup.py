@@ -772,6 +772,26 @@ def test_band_count_validated(spark, call):
         calls[call]().collect()
 
 
+def test_lsh_bands_over_signature_length_fail_the_action(spark):
+    """``lsh_candidate_pairs`` called directly with more bands than
+    signature values fails its action (a ``raise_error`` inside the
+    band expression) instead of hashing every row into one bucket per
+    band, where the cap dropped everything and the call returned no
+    pair.  A NULL signature does not raise."""
+    from bloomjoin_spark import operators as ops
+
+    rows = [(i, " ".join(f"w{i % 7}x{j}" for j in range(8))) for i in range(60)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = ops.add_minhash_signature(
+        ops.with_shingle_hashes(docs).select("doc_id", "shingles"), num_perm=8
+    )
+    with pytest.raises(Exception, match="leave a band with no value"):
+        ops.lsh_candidate_pairs(sig, bands=16, max_bucket_size=100).collect()
+    nulls = sig.unionByName(spark.createDataFrame([(999, None)], sig.schema))
+    got = ops.lsh_candidate_pairs(nulls, bands=8, max_bucket_size=100).collect()
+    assert got and all(999 not in (r.id_a, r.id_b) for r in got)
+
+
 # ---------------------------------------------------------------------------
 # every near-dup operator pinned on one fixed input: result rows, drop
 # reports and Spark jobs per call
