@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 
 from ..aggregate import build_sketch
 from ..plans.planner import (
-    MIN_EXPECTED_REDUCTION,
     BloomJoinReport,
     choose_prefilter_target,
     normalize_how,
@@ -140,45 +139,54 @@ def _key64(df: DataFrame, cols: list[str], casts: list[str | None]) -> Column:
     return F.xxhash64(*exprs)
 
 
-def segmented_any(hs: pd.Series, hit_fn) -> pd.Series:
-    """Per-row ANY over a batch of ``array<bigint>`` hash rows: flatten
-    the batch, run ``hit_fn(flat_int64) -> bool[]`` ONCE, then
-    segment-ANY via cumsum — the shared scaffolding of every vectorized
-    array membership probe (the above-cap Bloom probe here, the exact
-    hash-set probe in ``streaming.decontaminate_stream``).  NULL/empty
-    rows → False."""
+def _segmented_any(hs: pd.Series, hit_fn) -> np.ndarray:
+    """Per-row ANY over a batch of ``array<bigint>`` rows: flatten the
+    batch, run ``hit_fn(flat_int64) -> bool[]`` ONCE, then segment-ANY
+    via cumsum.  NULL/empty rows → False."""
     lens = np.fromiter(
         (0 if v is None else len(v) for v in hs), dtype=np.int64, count=len(hs)
     )
     if int(lens.sum()) == 0:
-        return pd.Series(np.zeros(len(hs), dtype=bool))
+        return np.zeros(len(hs), dtype=bool)
     flat = np.concatenate(
         [np.asarray(v, dtype=np.int64) for v in hs if v is not None and len(v)]
     )
     hit = np.asarray(hit_fn(flat), dtype=bool)
     cs = np.concatenate([[0], np.cumsum(hit)])
     ends = np.cumsum(lens)
-    return pd.Series(cs[ends] > cs[ends - lens])
+    return cs[ends] > cs[ends - lens]
 
 
-def _make_probe_udf(bc, array: bool = False):
-    """Vectorized membership probe over the broadcast filter — the
-    fallback for a filter above the codegen cap.  ``array=True`` probes
-    an ``array<bigint>`` column: True when ANY element hits.
-    ``bc.value`` unpickles the BloomSketch once per executor process."""
+def _python_probe(spark, value, hit):
+    """The one membership probe outside codegen: ``value`` is broadcast
+    once, and the returned ``probe(col, array=False) -> Column`` is a
+    vectorized pandas UDF (ArrowEvalPython) that answers
+    ``hit(value, batch) -> bool[]`` per Arrow batch.  ``array=True``
+    probes an ``array<bigint>`` column: the batch's rows are flattened
+    once, ``hit`` runs over the flat int64 values, and a row is True
+    when ANY element hits (NULL/empty rows → False).  ``bc.value``
+    unpickles ``value`` once per executor process."""
+    bc = spark.sparkContext.broadcast(value)
 
-    @F.pandas_udf("boolean")
-    def probe(h: pd.Series) -> pd.Series:
-        bf: BloomSketch = bc.value
-        if array:
-            return segmented_any(h, lambda flat: bf.contains_hashes(flat.view(np.uint64)))
-        return pd.Series(bf.contains_hashes(h.to_numpy(dtype=np.int64).view(np.uint64)))
+    def probe(col: Column, array: bool = False) -> Column:
+        @F.pandas_udf("boolean")
+        def udf(s: pd.Series) -> pd.Series:
+            v = bc.value
+            if array:
+                return pd.Series(_segmented_any(s, lambda flat: hit(v, flat)))
+            return pd.Series(np.asarray(hit(v, s), dtype=bool))
 
-    # nondeterministic stops Catalyst's constraint propagation from
-    # copying the probe onto the BUILD side through the join condition —
-    # the filter was built from those very keys, so it passes 100% there
-    # and is pure wasted Python time
-    return probe.asNondeterministic()
+        # nondeterministic on every site: it stops Catalyst's constraint
+        # propagation from copying a probe onto the BUILD side through a
+        # join condition — a filter built from those very keys passes
+        # 100% there, and it is pure wasted Python time
+        return udf.asNondeterministic()(col)
+
+    return probe
+
+
+def _bloom_hit(bf: BloomSketch, h) -> np.ndarray:
+    return bf.contains_hashes(np.asarray(h, dtype=np.int64).view(np.uint64))
 
 
 class MembershipFilter:
@@ -187,7 +195,8 @@ class MembershipFilter:
     column, ``any_in(arr)`` over an ``array<bigint>`` one (True when any
     element may be a member).  Under ``_NATIVE_FILTER_CAP_BYTES`` both
     are the codegen ``BloomFilterMightContain`` over ``blob``; above it,
-    or on private-API drift, both are the broadcast pandas probe."""
+    or on private-API drift, both are the broadcast pandas probe
+    (``_python_probe``, one broadcast for both)."""
 
     def __init__(self, spark, sketch: BloomSketch | None, blob: bytes | None,
                  report, forced: bool, partitions: int, rounds: int):
@@ -198,7 +207,7 @@ class MembershipFilter:
         self.bits = sketch.m if sketch is not None else len(blob) * 8
         self.partitions, self.rounds = partitions, rounds
         self._spark, self._report, self._forced = spark, report, forced
-        self._bc = None
+        self._py = None
 
     def driver_sketch(self) -> BloomSketch:
         """The filter on the driver, loaded from ``blob`` when Spark
@@ -214,9 +223,9 @@ class MembershipFilter:
         return self._probe(arr, array=True)
 
     def _probe(self, col: Column, array: bool) -> Column:
-        # a broadcast exists once the pandas probe is in use: after a
-        # drift fallback the codegen probe is not retried
-        if self.blob is not None and self._bc is None:
+        # once the pandas probe is in use (after a drift fallback) the
+        # codegen probe is not retried
+        if self.blob is not None and self._py is None:
             try:
                 if array:
                     return F.exists(
@@ -225,9 +234,9 @@ class MembershipFilter:
                 return _native_might_contain(self._spark, self.blob, col)
             except Exception as ex:  # private-API drift → pandas probe
                 _note_native_fallback(self._report, ex, self._forced)
-        if self._bc is None:
-            self._bc = self._spark.sparkContext.broadcast(self.driver_sketch().seal())
-        return _make_probe_udf(self._bc, array)(col)
+        if self._py is None:
+            self._py = _python_probe(self._spark, self.driver_sketch().seal(), _bloom_hit)
+        return self._py(col, array)
 
 
 def membership_filter(
@@ -398,12 +407,13 @@ def bloom_join(
     report.override_requested_side = override
     n_hints = _normalize_n_hint(n_hint)
 
-    use_prefilter = target is not None
-    skip_reasons: list[str] = []
-    if use_prefilter:
-        build_df = y if target == "x" else x
+    # ---- one skip rule (plans.planner.should_skip_prefilter), asked
+    # three times as the evidence arrives: free plan stats, the build
+    # side's size, the sampled reduction.  Every skip takes one exit.
+    mf, skip_reasons = None, []
+    if target is not None:
+        build_df, probe_df = (y, x) if target == "x" else (x, y)
         build_cols = [p[1] for p in pairs] if target == "x" else [p[0] for p in pairs]
-        probe_df = x if target == "x" else y
         probe_cols = [p[0] for p in pairs] if target == "x" else [p[1] for p in pairs]
         build_name = "y" if target == "x" else "x"
 
@@ -420,26 +430,14 @@ def bloom_join(
         #    min_probe_bytes=0 disables; None → planner.MIN_PROBE_BYTES.
         if not force_prefilter:
             floor = _resolve_min_probe_bytes(x.sparkSession, min_probe_bytes)
-            bytes_est = _plan_size_bytes(build_df)
-            thr = _broadcast_threshold(x.sparkSession)
-            gate = should_skip_prefilter(
-                n_probe=None,
-                build_distinct=None,
-                expected_reduction=None,
-                build_bytes_estimate=bytes_est,
-                broadcast_threshold=thr,
-                probe_bytes_estimate=(
-                    _plan_size_bytes(probe_df) if floor else None
-                ),
+            skip_reasons = should_skip_prefilter(
+                build_bytes_estimate=_plan_size_bytes(build_df),
+                broadcast_threshold=_broadcast_threshold(x.sparkSession),
+                probe_bytes_estimate=_plan_size_bytes(probe_df) if floor else None,
                 min_probe_bytes=floor or None,
             )
-            if gate:
-                report.skip_reasons = gate
-                if verbose:
-                    print(f"bloom_join: prefilter skipped: {'; '.join(gate)}")
-                out = _standard_join(x, y, pairs, how)
-                return (out, report) if return_report else out
 
+    if target is not None and not skip_reasons:
         # ---- canonical casts shared by build hash and probe hash
         xt, yt = dict(x.dtypes), dict(y.dtypes)
         casts = [_common_cast(xt[xc], yt[yc]) for xc, yc in pairs]
@@ -455,71 +453,58 @@ def bloom_join(
             n_hint=n_hints.get(build_name),
         )
         report.build_distinct_estimate = build_distinct
-
-        skip_reasons = should_skip_prefilter(
-            n_probe=n_hints.get("probe"),
-            build_distinct=n_build if build_distinct is None else build_distinct,
-            expected_reduction=None,
-        )
-        if force_prefilter:
-            skip_reasons = []
-        use_prefilter = not skip_reasons
-        if not use_prefilter and build_keyed.is_cached:
+        if not force_prefilter:
+            skip_reasons = should_skip_prefilter(
+                n_probe=n_hints.get("probe"),
+                build_distinct=n_build if build_distinct is None else build_distinct,
+            )
+        if skip_reasons and build_keyed.is_cached:
             build_keyed.unpersist()  # skip path must release the cache
 
-    if not use_prefilter:
+    if target is not None and not skip_reasons:
+        # ---- one filter, either engine; a small build side is built on
+        # the driver, and any filter under the cap probes in codegen
+        mf = membership_filter(
+            build_keyed, n_build, fpp, engine, report, hashes=small, fanin=fanin,
+            checkpoint_dir=checkpoint_dir,
+        )
+        sketch = mf.sketch
+        if sketch is not None:
+            report.build_partitions = mf.partitions
+            report.merge_rounds = mf.rounds
+            report.filter_hashes = sketch.k
+            fill = sketch.fill_ratio()
+            report.filter_fill_ratio = fill
+            # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
+            if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
+                report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
+
+        probe_hash = _key64(probe_df, probe_cols, casts)
+
+        # ---- sampled selectivity (O16, estimate_selectivity
+        # R/bloomjoin.R:240-257) + cost-based skip (O17, :300-311): probe
+        # a driver-side sample against the just-built filter; the
+        # measured pass rate IS s + (1−s)·fpr, the reference's
+        # expected_pass formula.
+        if selectivity_check and not force_prefilter:
+            hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
+            if len(hs):
+                pass_rate = float(mf.driver_sketch().contains_hashes(hs).mean())
+                report.selectivity_estimate = max(
+                    0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
+                )
+                report.expected_reduction = 1.0 - pass_rate
+                skip_reasons = should_skip_prefilter(
+                    expected_reduction=report.expected_reduction
+                )
+
+    if mf is None or skip_reasons:
+        report.engine = "none"
         report.skip_reasons = skip_reasons
         if verbose and skip_reasons:
             print(f"bloom_join: prefilter skipped: {'; '.join(skip_reasons)}")
         out = _standard_join(x, y, pairs, how)
         return (out, report) if return_report else out
-
-    # ---- one filter, either engine; a small build side is built on the
-    # driver, and any filter under the cap probes in codegen
-    mf = membership_filter(
-        build_keyed, n_build, fpp, engine, report, hashes=small, fanin=fanin,
-        checkpoint_dir=checkpoint_dir,
-    )
-    sketch = mf.sketch
-    if sketch is not None:
-        report.build_partitions = mf.partitions
-        report.merge_rounds = mf.rounds
-        report.filter_hashes = sketch.k
-        fill = sketch.fill_ratio()
-        report.filter_fill_ratio = fill
-        # distinct estimate by inverting the fill ratio: d ≈ -(m/k)·ln(1-fill)
-        if report.build_distinct_estimate is None and 0.0 < fill < 1.0:
-            report.build_distinct_estimate = int(-(sketch.m / sketch.k) * np.log1p(-fill))
-
-    probe_hash = _key64(probe_df, probe_cols, casts)
-
-    # ---- sampled selectivity (O16, estimate_selectivity
-    # R/bloomjoin.R:240-257) + cost-based skip (O17, :300-311): probe a
-    # driver-side sample against the just-built filter; the measured
-    # pass rate IS s + (1−s)·fpr, the reference's expected_pass formula.
-    if selectivity_check and not force_prefilter:
-        hs = _systematic_probe_sample(probe_df, probe_hash, _SELECTIVITY_SAMPLE)
-        if len(hs):
-            pass_rate = float(mf.driver_sketch().contains_hashes(hs).mean())
-            report.selectivity_estimate = max(
-                0.0, min(1.0, (pass_rate - fpp) / max(1.0 - fpp, 1e-12))
-            )
-            report.expected_reduction = 1.0 - pass_rate
-            if report.expected_reduction <= MIN_EXPECTED_REDUCTION:
-                report.used_prefilter = False
-                report.engine = "none"
-                report.skip_reasons = [
-                    f"expected reduction {report.expected_reduction:.3f} "
-                    f"≤ {MIN_EXPECTED_REDUCTION} (sampled pass rate "
-                    f"{pass_rate:.3f})"
-                ]
-                if verbose:
-                    print(
-                        "bloom_join: prefilter skipped after sampling: "
-                        + report.skip_reasons[0]
-                    )
-                out = _standard_join(x, y, pairs, how)
-                return (out, report) if return_report else out
 
     report.used_prefilter = True
     report.prefilter_side = target
@@ -643,7 +628,7 @@ def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
     try:
         stats = keyed.agg(
             F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("__bj_key64", 0.02).alias("d"),
+            F.approx_count_distinct(keyed.columns[0], 0.02).alias("d"),
         ).first()
     except BaseException:
         keyed.unpersist()

@@ -17,11 +17,14 @@ shuffles are on *short keys* (hashes/buckets), never on document text:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..hashing import splitmix64
+from .bloom_join import _python_probe, _size_build, bloom_join
 
 _U64 = np.uint64
 _PERM_SEED = 0x3C6EF372FE94F82A
@@ -1073,6 +1076,7 @@ def simhash_dedup(
 # incremental dedup: new ingest batch vs a historical corpus
 # ---------------------------------------------------------------------------
 
+@dataclass
 class IncrementalDedupReport:
     """Counters from one :func:`incremental_dedup` call.
 
@@ -1083,40 +1087,22 @@ class IncrementalDedupReport:
     that skipped the verify join as filter misses (always 0 in the
     in-call lane)."""
 
-    __slots__ = (
-        "n_batch", "n_within_dups", "n_definite_new",
-        "n_candidates", "n_cross_dups", "filter_provided",
-        "engine", "engine_fallback_reason",
-    )
-
-    def __init__(self):
-        self.n_batch = 0
-        self.n_within_dups = 0
-        self.n_definite_new = 0
-        self.n_candidates = 0
-        self.n_cross_dups = 0
-        self.filter_provided = False
-        #: in-call lane: the verify join's engine ('native' Spark-built
-        #: or 'bloom' sketch-built filter, probed in codegen under the
-        #: cap either way); filter lanes: 'bloom' (the history filter,
-        #: broadcast and probed by a pandas UDF — ``_history_filter_hit``)
-        self.engine = ""
-        #: in-call lane: why the verify join's auto dispatch degraded to
-        #: the sketch engine (None if it ran native) — the same
-        #: observable-degradation contract as BloomJoinReport /
-        #: DecontamReport (VERDICT r4 #3); None in the filter lanes
-        self.engine_fallback_reason = None
-
-    def __repr__(self):
-        return (
-            f"IncrementalDedupReport(batch={self.n_batch}, "
-            f"within_dups={self.n_within_dups}, "
-            f"definite_new={self.n_definite_new}, "
-            f"candidates={self.n_candidates}, "
-            f"cross_dups={self.n_cross_dups}, "
-            f"filter_provided={self.filter_provided}, "
-            f"engine={self.engine!r})"
-        )
+    n_batch: int = 0
+    n_within_dups: int = 0
+    n_definite_new: int = 0
+    n_candidates: int = 0
+    n_cross_dups: int = 0
+    filter_provided: bool = False
+    #: in-call lane: the verify join's engine ('native' Spark-built
+    #: or 'bloom' sketch-built filter, probed in codegen under the
+    #: cap either way); filter lanes: 'bloom' (the history filter,
+    #: broadcast and probed by a pandas UDF — ``_history_filter_hit``)
+    engine: str = ""
+    #: in-call lane: why the verify join's auto dispatch degraded to
+    #: the sketch engine (None if it ran native) — the same
+    #: observable-degradation contract as BloomJoinReport /
+    #: DecontamReport (VERDICT r4 #3); None in the filter lanes
+    engine_fallback_reason: str | None = None
 
 
 def build_history_filter(
@@ -1133,33 +1119,19 @@ def build_history_filter(
     the history side is scanned ONCE (resumably — killed builds recompute
     only missing partitions via the lineage checkpoint), and every
     subsequent ingest batch probes the serialized filter without
-    touching history again.  Sizing uses a one-job
-    ``approx_count_distinct`` over the fingerprints unless ``n_hint``
+    touching history again.  Sizing is ``bloom_join``'s distributed
+    lane (``_size_build``): the fingerprints are persisted and one
+    ``approx_count_distinct`` job sizes the filter, unless ``n_hint``
     is given (the reference's n_hint contract, R/bloomjoin.R:92-99).
     """
     from ..aggregate import build_sketch
     from ..sketches import BloomSketch
 
-    fps = history.select(
-        content_fingerprint(text_col).alias("__fp")
-    )
-    persisted = False
-    if n_hint is None:
-        # sizing and build both scan the fingerprints: persist the
-        # 16-byte/row projection so the history text is read and
-        # fingerprinted ONCE, not once per pass (same persist-for-two-
-        # jobs contract as bloom_join's sizing, bloom_join.py:276-292)
-        fps = fps.persist()
-        persisted = True
-        d = fps.agg(
-            F.approx_count_distinct("__fp", 0.02).alias("d")
-        ).first()["d"]
-        # 1.05 margin absorbs the ±2% rsd: an estimate that runs low
-        # would undersize m and raise the effective fpp
-        n_hint = int(d * 1.05)
+    fps = history.select(content_fingerprint(text_col).alias("__fp"))
+    fps, rows, distinct, n, _ = _size_build(fps, fps, exact=False, n_hint=n_hint)
+    n = max(int(n), 16)
     try:
-        n = max(int(n_hint), 16)
-        if int(n_hint) == 0:
+        if (rows if distinct is None else distinct) == 0:
             # empty history: an empty filter rejects everything (the same
             # empty-build short-circuit as bloom_join, O26) — no Spark job
             return BloomSketch(n, fpp)
@@ -1168,8 +1140,14 @@ def build_history_filter(
             checkpoint_dir=checkpoint_dir,
         ).sketch
     finally:
-        if persisted:
+        if fps.is_cached:
             fps.unpersist()
+
+
+def _history_hit(bf, fps: pd.Series) -> np.ndarray:
+    from ..hashing import hash_series
+
+    return bf.contains_hashes(hash_series(fps))
 
 
 def _history_filter_hit(spark, history_filter, fp: Column) -> Column:
@@ -1185,15 +1163,7 @@ def _history_filter_hit(spark, history_filter, fp: Column) -> Column:
     # seal() densifies BEFORE the broadcast: an unsealed (sparse) filter
     # ships as its pooled hash list and every Python worker re-densifies
     # it on first probe — seconds per worker at 1M history keys
-    bc = spark.sparkContext.broadcast(history_filter.seal())
-
-    @F.pandas_udf("boolean")
-    def probe(s: pd.Series) -> pd.Series:
-        from ..hashing import hash_series
-
-        return pd.Series(bc.value.contains_hashes(hash_series(s)))
-
-    return probe.asNondeterministic()(fp)
+    return _python_probe(spark, history_filter.seal(), _history_hit)(fp)
 
 
 def incremental_dedup(
@@ -1248,8 +1218,6 @@ def incremental_dedup(
     |true duplicates|; in the in-call lane, one filtered history scan
     per ingest and no history-sized filter.
     """
-    from .bloom_join import bloom_join
-
     fp_expr = content_fingerprint(text_col).alias("__fp")
     # within-batch: representative (min id) per distinct fingerprint,
     # carrying its group size so the batch row count needs no extra job

@@ -689,14 +689,13 @@ def _adc_search(
         for r in queries.select(query_id_col, vec_col).collect()
         if r[1] is not None and len(r[1])
     ]
-    qid_dtype = dict(queries.dtypes)[query_id_col]
-    id_dtype = dict(codes.dtypes)[id_col]
+    # schemas from the frames' own field types: a name is never parsed
+    keys = [T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+            T.StructField(id_col, codes.schema[id_col].dataType)]
     if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [],
-            f"{query_id_col} {qid_dtype}, {id_col} {id_dtype}, "
-            "sim double, rank int",
-        )
+        return queries.sparkSession.createDataFrame([], T.StructType(keys + [
+            T.StructField("sim", T.DoubleType()), T.StructField("rank", T.IntegerType())
+        ]))
     qids = [r[0] for r in qrows]
     Qv = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     if Qv.shape[1] != m * dsub:
@@ -704,8 +703,8 @@ def _adc_search(
             f"query dim {Qv.shape[1]} != codebook dim {m * dsub}"
         )
     Qv = Qv / np.clip(np.linalg.norm(Qv, axis=1, keepdims=True), 1e-12, None)
-    # ADC tables: T[q, j, c] = q's j-th subvector · codeword c
-    T = np.einsum("qjd,jcd->qjc", Qv.reshape(len(qids), m, dsub), codebooks)
+    # ADC tables: tables[q, j, c] = q's j-th subvector · codeword c
+    tables = np.einsum("qjd,jcd->qjc", Qv.reshape(len(qids), m, dsub), codebooks)
 
     scan = codes
     cells_allowed = None
@@ -726,12 +725,10 @@ def _adc_search(
     from pyspark.sql.pandas.types import to_arrow_type
 
     qid_arrow_type = to_arrow_type(queries.schema[query_id_col].dataType)
-    cand_schema = (
-        f"{query_id_col} {qid_dtype}, {id_col} {id_dtype}, __approx double"
-    )
+    cand_schema = T.StructType(keys + [T.StructField("__approx", T.DoubleType())])
     per_batch = scan.mapInArrow(
         _adc_score_fn(
-            T, qids, qid_arrow_type, id_col, code_col, query_id_col,
+            tables, qids, qid_arrow_type, id_col, code_col, query_id_col,
             shortlist, cell_col=cell_col, cells_allowed=cells_allowed,
         ),
         cand_schema,

@@ -1,6 +1,5 @@
 from .audit import PlanAudit, plan_audit
 from .planner import (
-    BloomJoinPlan,
     BloomJoinReport,
     choose_prefilter_target,
     resolve_join_columns,
@@ -11,7 +10,6 @@ from .planner import (
 __all__ = [
     "PlanAudit",
     "plan_audit",
-    "BloomJoinPlan",
     "BloomJoinReport",
     "choose_prefilter_target",
     "resolve_join_columns",

@@ -146,14 +146,12 @@ def choose_prefilter_target(
     requested: str = "auto",
     n_x: int | None = None,
     n_y: int | None = None,
-    distinct_x: int | None = None,
-    distinct_y: int | None = None,
 ) -> tuple[str | None, bool]:
     """(target side to FILTER or None, override_requested_side).
 
     The filter is always BUILT from the opposite side's keys.
     Decision table ported from choose_prefilter_target
-    (R/bloomjoin.R:326-377)."""
+    (R/bloomjoin.R:326-377); ``n_x``/``n_y`` are the sides' sizes."""
     how = normalize_how(how)
     safe = _SAFE_TARGETS[how]
     override = False
@@ -177,26 +175,26 @@ def choose_prefilter_target(
         return safe[0], True
     if len(safe) == 1:
         return safe[0], False
-    # inner + auto: filter the denser side (rows per opposite distinct key)
+    # inner + auto: filter the larger side (the reference's density
+    # rule, rows per opposite key, with no distinct counts to divide by)
     if n_x is not None and n_y is not None:
-        dx = n_x / max(1, distinct_y if distinct_y is not None else n_y)
-        dy = n_y / max(1, distinct_x if distinct_x is not None else n_x)
-        return ("x", False) if dx >= dy else ("y", False)
+        return ("x", False) if n_x >= n_y else ("y", False)
     return "x", False  # default: filter the left/probe side
 
 
 def should_skip_prefilter(
-    n_probe: int | None,
-    build_distinct: int | None,
-    expected_reduction: float | None,
+    n_probe: int | None = None,
+    build_distinct: int | None = None,
+    expected_reduction: float | None = None,
     build_bytes_estimate: int | None = None,
     broadcast_threshold: int | None = None,
     probe_bytes_estimate: int | None = None,
     min_probe_bytes: int | None = None,
 ) -> list[str]:
-    """Returns skip reasons (empty = proceed). Port of
-    should_skip_prefilter (R/bloomjoin.R:379-393) + Spark-specific
-    broadcast-wins and probe-size-floor gates."""
+    """Returns skip reasons (empty = proceed) for the evidence given;
+    ``bloom_join`` asks as it arrives (plan stats, build size, sampled
+    reduction).  Port of should_skip_prefilter (R/bloomjoin.R:379-393)
+    + Spark-specific broadcast-wins and probe-size-floor gates."""
     reasons = []
     if n_probe is not None and n_probe == 0:
         reasons.append("probe side empty")
@@ -232,19 +230,6 @@ def should_skip_prefilter(
             "broadcast-hash-join already avoids the probe shuffle"
         )
     return reasons
-
-
-@dataclass
-class BloomJoinPlan:
-    how: str
-    pairs: list[tuple[str, str]]
-    use_prefilter: bool
-    target: str | None  # side being filtered ("x"/"y") or None
-    build_side: str | None  # opposite side, filter built from its keys
-    fpp: float
-    expected_elements: int | None
-    skip_reasons: list[str] = field(default_factory=list)
-    override_requested_side: bool = False
 
 
 @dataclass

@@ -49,15 +49,11 @@ from pyspark.sql import functions as F
 
 from ..aggregate import _per_group, grouped_sketch_partials
 from ..hashing import hash_columns
+from ..operators.bloom_join import _python_probe
 from ..sketches.base import Sketch
 from ..sketches.bloom import BloomSketch
 
-__all__ = ["write_bloom_indexed", "read_bloom_indexed", "last_skip_stats"]
-
-#: stats of the most recent ``read_bloom_indexed`` call in this process:
-#: {"files_total", "files_read", "n_values"} — the observability hook the
-#: skip claim is tested through.
-last_skip_stats: dict | None = None
+__all__ = ["write_bloom_indexed", "read_bloom_indexed"]
 
 
 def _data_dir(path: str) -> str:
@@ -147,11 +143,16 @@ def _exact_condition(keys: list[str], values: list):
     )
 
 
+def _index_hit(hashes, blobs: pd.Series) -> list[bool]:
+    return [bool(Sketch.from_bytes(bytes(b)).contains_hashes(hashes).any()) for b in blobs]
+
+
 def read_bloom_indexed(
     spark: SparkSession,
     path: str,
     key: str | list[str],
     values: list,
+    skip_report: dict | None = None,
 ) -> DataFrame:
     """Point/IN lookup through the per-file Bloom index.
 
@@ -161,17 +162,19 @@ def read_bloom_indexed(
     reads the surviving files, and applies the exact predicate.
     Result rows are identical to filtering the full table — the index
     changes WHICH FILES are opened, never the answer.  Skip evidence
-    lands in ``last_skip_stats``.
+    lands in ``skip_report`` when given: ``files_total``,
+    ``files_read`` and ``n_values``.
 
     ``values``: non-null scalars for a single-column key, tuples (in
     key order) for a composite key.
     """
-    global last_skip_stats
     keys = [key] if isinstance(key, str) else list(key)
     vals = list(values)
     base = spark.read.parquet(_data_dir(path))
+    if skip_report is None:
+        skip_report = {}
+    skip_report.update(files_total=0, files_read=0, n_values=len(vals))
     if not vals:
-        last_skip_stats = {"files_total": 0, "files_read": 0, "n_values": 0}
         return base.filter(F.lit(False))
 
     if len(keys) == 1:
@@ -180,26 +183,13 @@ def read_bloom_indexed(
         probe = pd.DataFrame(
             {k: [tup[i] for tup in vals] for i, k in enumerate(keys)}
         )
-    hashes = hash_columns(probe, keys)
-    hb = spark.sparkContext.broadcast(hashes)
-
-    @F.pandas_udf("boolean")
-    def _any_hit(blobs: pd.Series) -> pd.Series:
-        h = hb.value
-        return pd.Series(
-            [bool(Sketch.from_bytes(bytes(b)).contains_hashes(h).any()) for b in blobs]
-        )
-
+    any_hit = _python_probe(spark, hash_columns(probe, keys), _index_hit)
     index = spark.read.parquet(_index_dir(path))
     # one probe job: blobs stay executor-side, (file, hit) comes back —
     # file names are the listing the scan planner must hold anyway
-    probed = index.select("file", _any_hit(F.col("blob")).alias("hit")).collect()
+    probed = index.select("file", any_hit(F.col("blob")).alias("hit")).collect()
     survivors = [r["file"] for r in probed if r["hit"]]
-    last_skip_stats = {
-        "files_total": len(probed),
-        "files_read": len(survivors),
-        "n_values": len(vals),
-    }
+    skip_report.update(files_total=len(probed), files_read=len(survivors))
     cond = _exact_condition(keys, vals)
     if not survivors:
         return base.filter(cond).filter(F.lit(False))

@@ -21,7 +21,6 @@ import re
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -371,6 +370,14 @@ def documents_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: in
     )
 
 
+def _sorted_hit(ref: np.ndarray, flat: np.ndarray) -> np.ndarray:
+    """Exact membership of ``flat`` in the sorted unique ``ref``."""
+    if len(ref) == 0:
+        return np.zeros(len(flat), dtype=bool)
+    idx = np.searchsorted(ref, flat)
+    return (idx < len(ref)) & (ref[np.minimum(idx, len(ref) - 1)] == flat)
+
+
 def decontaminate_stream(
     stream: DataFrame,
     bench: DataFrame,
@@ -403,6 +410,7 @@ def decontaminate_stream(
     ``mode='drop'`` returns the stream without contaminated docs;
     ``mode='flag'`` returns it with a boolean ``flag_col``.
     """
+    from ..operators.bloom_join import _python_probe
     from ..operators.decontam import ngram_hashes_col
 
     if mode not in ("drop", "flag"):
@@ -421,24 +429,10 @@ def decontaminate_stream(
         .toPandas()
     )
     bh = np.unique(bh_pdf["h"].to_numpy(dtype=np.int64))
-    bc = stream.sparkSession.sparkContext.broadcast(bh)
-
-    from ..operators.bloom_join import segmented_any
-
-    @F.pandas_udf("boolean")
-    def any_hit(hs: pd.Series) -> pd.Series:
-        ref = bc.value
-
-        def hit_fn(flat):
-            if len(ref) == 0:
-                return np.zeros(len(flat), dtype=bool)
-            idx = np.searchsorted(ref, flat)
-            return (idx < len(ref)) & (ref[np.minimum(idx, len(ref) - 1)] == flat)
-
-        return segmented_any(hs, hit_fn)
+    probe = _python_probe(stream.sparkSession, bh, _sorted_hit)
 
     base = stream.withColumn("__bj_toks", scol)
-    flagged = any_hit(ngram_hashes_col(F.col("__bj_toks"), n))
+    flagged = probe(ngram_hashes_col(F.col("__bj_toks"), n), array=True)
     if mode == "flag":
         return base.withColumn(flag_col, flagged).drop("__bj_toks")
     return base.filter(~flagged).drop("__bj_toks")

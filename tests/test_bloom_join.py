@@ -889,3 +889,186 @@ def test_sketch_engine_probe_drift_uses_pandas_probe(spark, monkeypatch):
     assert "ArrowEvalPython" in got._jdf.queryExecution().executedPlan().toString()
     assert_df_equal(got, x.join(y, "id", "inner"))
     assert rep.finalize().probe_rows_before == 8_000
+
+
+# ---------------------------------------------------------------------------
+# every membership test outside codegen, pinned: the above-cap Bloom probe
+# (bloom_join's contains, decontam's any_in), the history-filter probe, the
+# exact-set probe of decontaminate_stream, the per-file index probe, and
+# the history-filter build
+# ---------------------------------------------------------------------------
+
+PYTHON_PROBE_DIGESTS = {
+    "bloom_join_contains": "fcee49e5d8715ce2b59e38de971c310c92d86868044b9a3e8e10fabea285752f",
+    "decontam_any_in": "083c8a856d09a1d80143d9c38add69122db0048350aa0bf01e91d84869100f28",
+    "incremental_dedup_filter": "0fb00acb0cca92d1ff76568f0f5c9399ff0a0335f103537ed9e349eaff24b534",
+    "decontaminate_stream_flag": "b3deab7dca1fa24c9b23bb36533447e6f6dcba0c4f0ab4d756cd7bb9a48cd79d",
+    "read_bloom_indexed": "543fd67ece6b27f8a85ff72f39df666da1d92eed2e656af385b42c5b439899dd",
+    "history_filter_unhinted": "747831ea55690f4994a309ec2235f867dd8ce70107df5885cc39fdd184a28e91",
+    "history_filter_hinted": "9bc9d3e4aa530071be9f44582e38d8cb565f92221c766ce7546023b595cc85d6",
+    "history_filter_empty": "c6ba2fb6f944c8a798954b57520a9d420fb62aaf0f9fb148f76bb0165e956b75",
+}
+
+
+def _texts(spark, rows):
+    return spark.createDataFrame(rows, "doc_id bigint, text string").repartition(3)
+
+
+def _token_docs(spark):
+    """Three partitions of token arrays, with NULL and empty rows."""
+    rows = [(i, [i % 11, (i * 3) % 11, i % 5, 7, i % 13]) for i in range(40)]
+    rows += [(100, None), (101, []), (102, [2, 3]), (103, [4, 9, 2, 3, 4])]
+    return spark.createDataFrame(rows, "doc_id bigint, tokens array<int>").repartition(3)
+
+
+def _probe_call(spark, site, tmp):
+    """One call of ``site``: ``(out, finish)``, the frame whose plan
+    carries the probe (None for a filter build) and ``finish()``, which
+    consumes it and returns the result rows."""
+    from bloomjoin_spark.operators import (
+        IncrementalDedupReport,
+        build_history_filter,
+        contaminated_docs,
+        incremental_dedup,
+    )
+    from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
+    from bloomjoin_spark.streaming import decontaminate_stream
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    history = _texts(spark, [(i, f"Doc {i % 150}  ") for i in range(200)])
+    if site == "bloom_join_contains":
+        x = spark.range(0, 3_000, 1, 3).withColumn("vx", F.col("id") * 2)
+        y = spark.range(1_500, 1_900, 1, 2).withColumn("vy", F.col("id") % 7)
+        out, rep = bloom_join(
+            x, y, on="id", engine="bloom", force_prefilter=True, return_report=True
+        )
+
+        def finish():
+            got = rows(out)
+            rep.finalize()
+            return got + [(rep.engine, rep.used_prefilter, rep.filter_bits,
+                           rep.filter_hashes, rep.probe_rows_before,
+                           rep.probe_rows_after)]
+
+        return out, finish
+    if site == "decontam_any_in":
+        bench = spark.createDataFrame(
+            [(900, [7, 3, 9]), (901, [2, 3, 4]), (902, None)],
+            "doc_id bigint, tokens array<int>",
+        )
+        out, rep = contaminated_docs(
+            _token_docs(spark), bench, n=3, engine="bloom", return_report=True
+        )
+        return out, lambda: rows(out) + [(rep.engine, rep.n_bench_ngrams, rep.filter_bits)]
+    if site == "incremental_dedup_filter":
+        bf = build_history_filter(history, n_hint=300)
+        batch = _texts(
+            spark,
+            [(1_000 + i, f"doc {i}") for i in range(140, 170)]
+            + [(2_000, "doc 160"), (2_001, "  DOC 5"), (2_002, "new one")],
+        )
+        rep = IncrementalDedupReport()
+        out = incremental_dedup(batch, history, history_filter=bf, report=rep)
+        return out, lambda: rows(out) + [
+            tuple(getattr(rep, f) for f in (
+                "n_batch", "n_within_dups", "n_definite_new", "n_candidates",
+                "n_cross_dups", "filter_provided", "engine", "engine_fallback_reason",
+            ))
+        ]
+    if site == "decontaminate_stream_flag":
+        bench = spark.createDataFrame(
+            [([7, 3, 9],), ([2, 3, 4],), (None,)], "tokens array<int>"
+        )
+        out = decontaminate_stream(_token_docs(spark), bench, n=3, mode="flag")
+        return out, lambda: rows(out)
+    if site == "read_bloom_indexed":
+        path = f"{tmp}/indexed"
+        kv = spark.range(0, 600).selectExpr("concat('k', id) AS k", "id AS v")
+        write_bloom_indexed(kv, path, key="k", num_files=4)
+        stats = {}
+        out = read_bloom_indexed(
+            spark, path, "k", ["k3", "k77", "k599", "absent"], skip_report=stats
+        )
+        return out, lambda: rows(out) + [tuple(sorted(stats.items()))]
+    n_hint = {"history_filter_hinted": 500}.get(site)
+    if site == "history_filter_empty":
+        history = history.where(F.lit(False))
+    bf = build_history_filter(history, fpp=1e-3, n_hint=n_hint)
+    return None, lambda: [bf.to_bytes()]
+
+
+#: sites whose Bloom filter is pushed above the codegen cap
+_ABOVE_CAP = ("bloom_join_contains", "decontam_any_in")
+
+
+def python_probe_results(spark, sites=tuple(PYTHON_PROBE_DIGESTS)):
+    """``{site: (sha256 of its result rows, python eval operators)}``
+    under seven-row Arrow batches.  The operators are the
+    ``ArrowEvalPython`` and ``BatchEvalPython`` nodes of the call's
+    output plan and of every frame the call itself collects or
+    checkpoints (the history and index probes run there); None for a
+    filter build."""
+    import contextlib
+    import hashlib
+    import importlib
+    import tempfile
+
+    from bloomjoin_spark.plans import plan_audit
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    frame = type(spark.range(0))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch, old_cap = spark.conf.get(conf), bj._NATIVE_FILTER_CAP_BYTES
+    seen: list = []
+
+    def audited(name):
+        real = getattr(frame, name)
+
+        def call(self, *a, **kw):
+            seen.extend(_eval_python(plan_audit(self)))
+            return real(self, *a, **kw)
+
+        return real, call
+
+    out = {}
+    spark.conf.set(conf, "7")
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            for site in sites:
+                seen.clear()
+                bj._NATIVE_FILTER_CAP_BYTES = 8 if site in _ABOVE_CAP else old_cap
+                with contextlib.ExitStack() as stack:
+                    for name in ("collect", "localCheckpoint"):
+                        real, call = audited(name)
+                        setattr(frame, name, call)
+                        stack.callback(setattr, frame, name, real)
+                    df, finish = _probe_call(spark, site, tmp)
+                ops = None if df is None else seen + _eval_python(plan_audit(df))
+                res = finish()
+                out[site] = (hashlib.sha256(repr(res).encode()).hexdigest(), ops)
+    finally:
+        spark.conf.set(conf, old_batch)
+        bj._NATIVE_FILTER_CAP_BYTES = old_cap
+    return out
+
+
+def _eval_python(audit) -> list:
+    return [op for op in audit.python_operators if op == "ArrowEvalPython"] + [
+        "BatchEvalPython"] * audit.n_row_python_udfs
+
+
+@pytest.mark.parametrize("site", list(PYTHON_PROBE_DIGESTS))
+def test_python_probe_results_unchanged(spark, site):
+    """Every membership probe outside codegen returns the same rows and
+    reports, each call plans exactly one vectorized Python probe (an
+    ArrowEvalPython, never a BatchEvalPython), and the history filter
+    builds the same bytes, with or without a size hint and over an
+    empty history."""
+    digest, ops = python_probe_results(spark, [site])[site]
+    assert digest == PYTHON_PROBE_DIGESTS[site]
+    if site.startswith("history_filter"):
+        assert ops is None
+    else:
+        assert ops == ["ArrowEvalPython"]

@@ -451,6 +451,41 @@ def test_arrow_column_output_schema(spark, op):
         call(df.withColumn(out_col, F.lit(0)))
 
 
+@pytest.mark.parametrize("op", ["ann_pq_topk", "ann_ivf_pq_topk"])
+def test_pq_search_names_with_spaces(spark, op):
+    """The PQ search paths take id and query-id column names holding a
+    space (their candidate and empty-result schemas were once parsed
+    DDL strings, which raised ParseException at call time), and return
+    the rows of the plainly named call."""
+    from bloomjoin_spark import operators as ops
+
+    df = _vec_frame(spark)
+    q = df.filter(F.col("vec_id") % 7 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    cents = ops.train_ivf_centroids(df, nlist=4, sample=1000, iters=4)
+    books = ops.train_pq_codebooks(df, m=2, nbits=3, sample=1000, iters=4)
+
+    def search(corpus, queries, **kw):
+        if op == "ann_pq_topk":
+            return ops.ann_pq_topk(corpus, queries, books, k=3, **kw)
+        return ops.ann_ivf_pq_topk(corpus, queries, cents, books, k=3, nprobe=2, **kw)
+
+    plain = search(df, q)
+    spaced = search(
+        df.withColumnRenamed("vec_id", "vec id"),
+        q.withColumnRenamed("query_id", "query id"),
+        id_col="vec id", query_id_col="query id",
+    )
+    assert spaced.columns == ["query id", "vec id", "sim", "rank"]
+    assert sorted(map(tuple, spaced.collect())) == sorted(map(tuple, plain.collect()))
+    empty = search(
+        df.withColumnRenamed("vec_id", "vec id"),
+        q.withColumnRenamed("query_id", "query id").limit(0),
+        id_col="vec id", query_id_col="query id",
+    )
+    assert empty.columns == spaced.columns and empty.count() == 0
+
+
 # ---------------------------------------------------------------------------
 # Pinned outputs of every per-row Arrow column stage and its callers
 # ---------------------------------------------------------------------------

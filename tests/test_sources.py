@@ -186,7 +186,6 @@ def test_bloom_index_skips_files(spark, tmp_path):
     one key lives in exactly one file — and the result is row-identical
     to filtering the full table (false positives only widen the scan)."""
     from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
-    from bloomjoin_spark.sources import skipping
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "source", "n_chars")
@@ -196,11 +195,11 @@ def test_bloom_index_skips_files(spark, tmp_path):
     assert stats["rows"] == docs.count()
 
     some = [r["doc_id"] for r in docs.limit(3).collect()]
-    got = read_bloom_indexed(spark, path, "doc_id", some)
+    st = {}
+    got = read_bloom_indexed(spark, path, "doc_id", some, skip_report=st)
     want = docs.filter(docs.doc_id.isin(some))
     assert sorted(r["doc_id"] for r in got.collect()) == \
         sorted(r["doc_id"] for r in want.collect())
-    st = skipping.last_skip_stats
     assert st["files_total"] == stats["files"]
     # 3 clustered keys touch at most 3 files (+ tiny fpp slack)
     assert st["files_read"] <= 3
@@ -210,20 +209,45 @@ def test_bloom_index_miss_reads_nothing(spark, tmp_path):
     """Absent keys prune every file; the lookup is still a valid empty
     frame with the data schema."""
     from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
-    from bloomjoin_spark.sources import skipping
 
     df = spark.range(0, 2000).selectExpr(
         "concat('k', id) AS k", "id AS v")
     path = str(tmp_path / "kv_indexed")
     write_bloom_indexed(df, path, key="k", num_files=4)
 
-    got = read_bloom_indexed(spark, path, "k", ["absent-a", "absent-b"])
+    st = {}
+    got = read_bloom_indexed(spark, path, "k", ["absent-a", "absent-b"], skip_report=st)
     assert got.count() == 0
     assert got.columns == ["k", "v"]
-    assert skipping.last_skip_stats["files_read"] == 0
+    assert st["files_read"] == 0
 
     # empty lookup list: empty result, no probe work
     assert read_bloom_indexed(spark, path, "k", []).count() == 0
+
+
+def test_bloom_index_skip_report_per_call(spark, tmp_path):
+    """Lookups from concurrent driver threads each fill their own
+    ``skip_report`` (a process-wide stats global once raced here)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
+
+    df = spark.range(0, 400).selectExpr("concat('k', id) AS k", "id AS v")
+    path = str(tmp_path / "kv_threads")
+    write_bloom_indexed(df, path, key="k", num_files=4)
+
+    def lookup(n):
+        rep = {}
+        got = read_bloom_indexed(spark, path, "k", [f"k{i}" for i in range(n)], skip_report=rep)
+        return n, got.count(), rep
+
+    with ThreadPoolExecutor(4) as pool:
+        results = list(pool.map(lookup, [1, 2, 3, 4, 5, 6], timeout=300))
+    assert len(results) == 6
+    for n, rows, rep in results:
+        assert rows == n
+        assert rep["n_values"] == n and rep["files_total"] == 4
+        assert rep["files_read"] <= min(n, 4)
 
 
 def test_bloom_index_composite_key_and_fp_safety(spark, tmp_path):
