@@ -608,7 +608,7 @@ def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
     ``n_hint`` sizes it (``rows`` = the hint, ``distinct`` None), or
     ``keyed`` is persisted for the distributed build and one aggregate
     (partial-aggregated HLL, no wide shuffle) estimates the distinct
-    count."""
+    count in the job that caches it (``_materialize``)."""
     try:  # free plan stats, no job
         st = build_df._jdf.queryExecution().optimizedPlan().stats()
         rows = int(st.rowCount().get()) if st.rowCount().isDefined() else 0
@@ -624,18 +624,34 @@ def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
             return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
     if n_hint is not None:
         return build_keyed, n_hint, None, n_hint, None
-    keyed = build_keyed.persist()
-    try:
-        stats = keyed.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(keyed.columns[0], 0.02).alias("d"),
-        ).first()
-    except BaseException:
-        keyed.unpersist()
-        raise
+    keyed, stats = _materialize(
+        build_keyed,
+        F.count(F.lit(1)).alias("n"),
+        F.approx_count_distinct(build_keyed.columns[0], 0.02).alias("d"),
+        persist=True,
+    )
     d = int(stats["d"])
     # 1.05 margin absorbs the ±2% rsd so the fpp target holds
     return keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
+
+
+def _materialize(df: DataFrame, *counters: Column, persist: bool = False):
+    """``(df, counts)``: ``df`` materialized by ONE job that also yields
+    the aggregate ``counters`` (``counts[name]``) through an
+    ``Observation`` — no second action re-reads ``df`` to count it, so
+    no global aggregate and no single-partition exchange.  ``df`` comes
+    back as an eager ``localCheckpoint``, or with ``persist`` cached by
+    a ``noop`` write, so the caller can release it with ``unpersist()``."""
+    obs = Observation()
+    if not persist:
+        return df.observe(obs, *counters).localCheckpoint(), obs.get
+    df = df.persist()
+    try:
+        df.observe(obs, *counters).write.format("noop").mode("overwrite").save()
+    except BaseException:
+        df.unpersist()
+        raise
+    return df, obs.get
 
 
 def _native_build_filter(build_keyed: DataFrame, n_build: int, fpp: float) -> bytes:

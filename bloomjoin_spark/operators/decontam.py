@@ -7,8 +7,11 @@ the n-gram membership problem used by LLM training pipelines (GPT-3
 appendix C / PaLM-style 8-gram overlap decontamination):
 
 1. the benchmark side's distinct n-grams are small — build a Bloom
-   filter over their 64-bit hashes (one treeAggregate / one JVM
-   ``stat.bloomFilter`` job, never collected as raw n-grams);
+   filter over their 64-bit hashes, sized like ``bloom_join``'s build
+   side (``_size_build``): a small set comes back as hashes in one
+   bounded collect and is built on the driver, a larger one by one
+   treeAggregate / one JVM ``stat.bloomFilter`` job — never collected
+   as raw n-grams;
 2. each corpus document computes ONE window-hash array over its
    tokens (``ngram_hashes_col``: a single ``transform`` whose element
    is the variadic ``xxhash64(arr[i..i+n−1])`` — no gram arrays, no
@@ -35,7 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bloom_join import membership_filter
+from .bloom_join import _size_build, membership_filter
 from .text import words_col  # canonical tokenization (re-exported)
 
 _NG = "__bj_ng"
@@ -174,6 +177,7 @@ def contaminated_docs(
     BloomSketch partials, ``'auto'`` is native, falling back to the
     sketch engine above the plan-literal cap or on private-API drift —
     the dispatch ``bloom_join`` uses (``bloom_join.membership_filter``).
+    A small n-gram set is built on the driver under either engine.
     Under either engine a filter under the cap probes each document as a
     codegen ``exists(hashes, might_contain)`` with no Python stage; only
     a larger one takes the broadcast pandas probe.
@@ -184,30 +188,32 @@ def contaminated_docs(
     ccol = _resolve_col(corpus, corpus_tokens)
     report = DecontamReport(n=n)
 
-    # benchmark n-gram set: distinct, consumed three times (sizing
-    # count, filter build, verify join) → one lazy materialization point
+    # benchmark n-gram set: distinct, consumed twice (the sizing pass
+    # that feeds the filter build, the verify join) → one lazy
+    # materialization point
     bench_ngs = (
         bench.select(F.explode(ngrams_col(bcol, n)).alias(_NG))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_bench = bench_ngs.count()
+    # the ladder hash of a single n-gram array == the doc-ladder hash
+    # at that gram's position, so the build side hashes its (distinct,
+    # small) gram set while the corpus never materializes a gram.  One
+    # key per distinct gram: _size_build's row count is the exact size
+    keyed, n_bench, _, _, small = _size_build(bench_ngs, bench_ngs.select(
+        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
+    ))
     report.n_bench_ngrams = n_bench
     out_schema_src = corpus.select(
         F.col(id_col), F.lit(0).cast("bigint").alias("n_hits")
     )
     if n_bench == 0:
+        if keyed.is_cached:
+            keyed.unpersist()
         report.engine = "none"
         report.notes.append("benchmark side has no n-grams; nothing to flag")
         empty = out_schema_src.where(F.lit(False))
         return (empty, report) if return_report else empty
-
-    # the ladder hash of a single n-gram array == the doc-ladder hash
-    # at that gram's position, so the build side hashes its (distinct,
-    # small) gram set while the corpus never materializes a gram
-    keyed = bench_ngs.select(
-        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    )
 
     # corpus side: ONE rolling-hash ladder per document (O(n·L) long
     # ops, zero gram-array allocations), probed per document with a
@@ -217,9 +223,9 @@ def contaminated_docs(
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
     doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
 
-    cand_pred = membership_filter(keyed, n_bench, fpp, engine, report).any_in(
-        doc_hashes
-    )
+    cand_pred = membership_filter(
+        keyed, n_bench, fpp, engine, report, hashes=small
+    ).any_in(doc_hashes)
 
     # candidate docs ≈ contaminated + per-DOC false positives (each doc
     # probes ~L grams, so doc-level fp ≈ L·fpp — hence the low default
@@ -336,14 +342,16 @@ def contaminated_docs_many(
         empty = out_schema_src.where(F.lit(False))
         return (empty, report) if return_report else empty
 
-    keyed = tagged.select(
+    # a small union comes back as its distinct hashes for a driver
+    # build; a larger one is sized by the rollup's exact count
+    keyed, _, _, _, small = _size_build(tagged, tagged.select(
         F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    )
+    ), n_hint=n_union)
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
     doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
-    cand_pred = membership_filter(keyed, n_union, fpp, engine, report).any_in(
-        doc_hashes
-    )
+    cand_pred = membership_filter(
+        keyed, n_union, fpp, engine, report, hashes=small
+    ).any_in(doc_hashes)
     cand = base.where(cand_pred)
     hits = cand.select(
         F.col(id_col), F.explode(ngrams_col(F.col("__bj_toks"), n)).alias(_NG)

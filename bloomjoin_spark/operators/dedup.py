@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..hashing import splitmix64
-from .bloom_join import _python_probe, _size_build, bloom_join
+from .bloom_join import _materialize, _python_probe, _size_build, bloom_join
 
 _U64 = np.uint64
 _PERM_SEED = 0x3C6EF372FE94F82A
@@ -593,9 +593,9 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
     Small pair sets (≤ ``driver_max_edges`` directed edges — the edge
     set is already eagerly materialized, so the gate costs one count of
     checkpointed rows) take a driver union-find instead: each
-    distributed iteration is two jobs (join-aggregate + convergence
-    check), so a 3-iteration run pays ~6 scheduler round-trips to label
-    a graph that fits in a few MB.  The union-find computes the same
+    distributed iteration checkpoints one join-aggregate, about seven
+    stage jobs under adaptive execution, so a 3-iteration run pays ~20
+    scheduler round-trips to label a graph that fits in a few MB.  The union-find computes the same
     min-id component labels exactly; the iterative path remains for
     pair sets past the gate (at 100 TB a pair graph can be billions of
     edges — that must stay distributed)."""
@@ -622,10 +622,10 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # carry the changed flag in the SAME plan so convergence costs
-        # one aggregation over the just-materialized iterate — no second
-        # join-and-count job, no unbroken lineage across iterations
-        new_labels = (
+        # the job that checkpoints the iterate (cutting its lineage: prior
+        # iterates become unreferenced and the ContextCleaner drops them)
+        # also counts the changed labels — no second job per iteration
+        new_labels, chg = _materialize(
             labels.join(nbr_min, labels["id"] == nbr_min["src"], "left")
             .select(
                 "id",
@@ -635,13 +635,11 @@ def dedup_clusters(pairs: DataFrame, id_col_a: str = "id_a", id_col_b: str = "id
                 (F.coalesce(F.col("nbr_label"), F.col("label")) < F.col("label"))
                 .cast("long")
                 .alias("__chg"),
-            )
-            .localCheckpoint()  # eager: materializes + cuts lineage; prior
-            # iterates become unreferenced and the ContextCleaner drops them
+            ),
+            F.sum("__chg").alias("changed"),
         )
-        changed = new_labels.agg(F.sum("__chg")).first()[0]
         labels = new_labels.drop("__chg")
-        if not changed:
+        if not chg["changed"]:
             break
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
@@ -1120,9 +1118,10 @@ def build_history_filter(
     only missing partitions via the lineage checkpoint), and every
     subsequent ingest batch probes the serialized filter without
     touching history again.  Sizing is ``bloom_join``'s distributed
-    lane (``_size_build``): the fingerprints are persisted and one
-    ``approx_count_distinct`` job sizes the filter, unless ``n_hint``
-    is given (the reference's n_hint contract, R/bloomjoin.R:92-99).
+    lane (``_size_build``): the job that caches the fingerprints also
+    estimates their distinct count, which sizes the filter, unless
+    ``n_hint`` is given (the reference's n_hint contract,
+    R/bloomjoin.R:92-99).
     """
     from ..aggregate import build_sketch
     from ..sketches import BloomSketch
@@ -1244,18 +1243,16 @@ def incremental_dedup(
 
     # one materialization (batch-sized: one 16-byte fingerprint + id per
     # distinct batch doc) serves every consumer: the candidate branch
-    # feeds the verify join, the miss branch feeds the union, and the
-    # counters below re-aggregate it — without it each of those jobs
-    # re-runs the groupBy + probe chain
-    probed = reps.localCheckpoint(eager=False)
-    # one job materializes the checkpoint AND yields every counter; the
-    # exact candidate count is the verify join's n_hint, which skips
-    # bloom_join's own sizing pass
-    agg = probed.agg(
+    # feeds the verify join, the miss branch feeds the union — without
+    # it each of those jobs re-runs the groupBy + probe chain.  Its job
+    # also yields every counter; the exact candidate count is the verify
+    # join's n_hint, which skips bloom_join's own sizing pass
+    probed, agg = _materialize(
+        reps,
         F.count(F.lit(1)).alias("n_reps"),
         F.sum("__n").alias("n_batch"),
         F.count(F.when(F.col("__hit"), 1)).alias("n_cand"),
-    ).first()
+    )
     n_cand = agg["n_cand"]
     cand = probed.filter(F.col("__hit")).drop("__hit", "__n")
     hfp = history.select(fp_expr)
@@ -1265,7 +1262,7 @@ def incremental_dedup(
         n_hint={"x": max(n_cand, 16)}, return_report=True,
     )
     if report is not None:
-        verified_new = verified_new.localCheckpoint(eager=False)
+        verified_new, verified = _materialize(verified_new, F.count(F.lit(1)).alias("n"))
     new_ids = verified_new.select(id_col)
     if filtered:
         new_ids = probed.filter(~F.col("__hit")).select(id_col).unionByName(new_ids)
@@ -1282,6 +1279,6 @@ def incremental_dedup(
         report.n_batch = n_batch
         report.n_within_dups = n_batch - n_reps
         report.n_candidates = n_cand
-        report.n_cross_dups = n_cand - verified_new.count()
+        report.n_cross_dups = n_cand - verified["n"]
         report.n_definite_new = n_reps - n_cand
     return out

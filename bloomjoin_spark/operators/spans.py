@@ -65,7 +65,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sketches.bloom import bloom_sizing
-from .bloom_join import membership_filter
+from .bloom_join import _materialize, membership_filter
 from .decontam import ngram_hashes_col
 
 __all__ = [
@@ -162,7 +162,7 @@ def duplicate_span_starts(
     # localCheckpoint pins the ladder as a stored ATTRIBUTE: 8 bytes per
     # token position (the metadata-not-payload shape of guide §8; the
     # token text itself is never duplicated), materialized by the
-    # stage-1 count job below, dropped with the session.
+    # stage-1 job below, dropped with the session.
     lad = base.select(F.col(id_col), ladder.alias(_HARR)).localCheckpoint(
         eager=False
     )
@@ -170,16 +170,17 @@ def duplicate_span_starts(
 
     # 1. duplicated-hash set D: distinct-per-doc window hashes shuffle
     #    as (hash, doc) pairs; count(*) == distinct-doc count because
-    #    array_distinct leaves one row per (doc, hash)
-    dup = (
+    #    array_distinct leaves one row per (doc, hash); the job that
+    #    checkpoints D also counts it
+    dup, counts = _materialize(
         lad.select(F.col(id_col), F.explode(F.array_distinct(h_arr)).alias(_H))
         .groupBy(_H)
         .agg(F.count(F.lit(1)).alias("__sp_nd"))
         .where(F.col("__sp_nd") >= min_docs)
-        .select(_H)
-        .localCheckpoint(eager=False)
+        .select(_H),
+        F.count(F.lit(1)).alias("n"),
     )
-    n_dup = dup.count()
+    n_dup = counts["n"]
     report.n_dup_hashes = n_dup
     empty = base.select(
         F.col(id_col), F.array().cast("array<int>").alias("starts")

@@ -119,10 +119,9 @@ def read_sketch_store(
     Reads with ``mergeSchema`` so a store whose snapshots were written
     with different group columns surfaces every column (missing ones
     null) instead of silently adopting one file's schema; the required
-    partial payload columns are checked.  The distinct-format check
-    aggregates to at most a handful of rows (one per library version
-    ever used), so the collect is bounded by construction, not by data
-    size."""
+    partial payload columns are checked.  The hash-format guard is one
+    collect with no exchange that returns only the rows whose stamp is
+    foreign or missing: none on a store this version wrote."""
     df = spark.read.option("mergeSchema", "true").parquet(path)
     # the full PARTIAL_SCHEMA payload: store_sketch and store_estimates
     # select all of it and every merge folds it — a dir missing
@@ -137,11 +136,14 @@ def read_sketch_store(
         )
     if snapshots is not None:
         df = df.where(F.col("snapshot").isin(list(snapshots)))
-    fmts = sorted(
+    foreign = {
         r["hash_format"]
-        for r in df.select("hash_format").distinct().collect()
-    )
-    if fmts and fmts != [HASH_FORMAT]:
+        for r in df.where(~F.col("hash_format").eqNullSafe(HASH_FORMAT))
+        .select("hash_format")
+        .collect()
+    }
+    if foreign:
+        fmts = sorted(foreign, key=lambda f: (f is None, f))
         raise ValueError(
             f"sketch store {path!r} holds hash format(s) {fmts}, this "
             f"library hashes format {HASH_FORMAT}: merging mixed domains "

@@ -48,3 +48,23 @@ def assert_df_equal(actual, expected, ignore_order=True):
     assert a == e, f"rows differ: {len(a)} vs {len(e)}; first diff: " + str(
         next((p for p in zip(a, e) if p[0] != p[1]), None)
     )
+
+
+def tagged_jobs(spark, fn):
+    """``(fn(), n)``: ``n`` is the number of Spark jobs that ran under a
+    fresh session tag while ``fn`` did (a tag must not hold ``-``)."""
+    import uuid
+
+    tag = f"jobs{uuid.uuid4().hex}"
+    spark.addTag(tag)
+    try:
+        res = fn()
+    finally:
+        spark.removeTag(tag)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return res, sum(
+        any(t.endswith(f"-{tag}") for t in jobs.apply(i).jobTags().mkString(" ").split())
+        for i in range(jobs.size())
+    )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from bloomjoin_spark import bloom_join
 from bloomjoin_spark.plans.planner import spark_how
 
-from conftest import assert_df_equal
+from conftest import assert_df_equal, tagged_jobs
 
 
 @pytest.fixture(scope="module")
@@ -1072,3 +1072,46 @@ def test_python_probe_results_unchanged(spark, site):
         assert ops is None
     else:
         assert ops == ["ArrowEvalPython"]
+
+
+#: Spark jobs of one sizing or history-filter build call, counted by
+#: session tag
+MATERIALIZE_JOBS = {
+    "size_build_distributed": 1,
+    "history_filter_unhinted": 4,
+    "history_filter_hinted": 1,
+    "history_filter_empty": 2,
+}
+
+
+def materialize_jobs(spark, site):
+    """Jobs of one ``site`` call: ``_size_build``'s distributed lane (a
+    build side with no plan row count, so no exact collect) or one
+    ``build_history_filter`` lane of ``_probe_call``."""
+    from bloomjoin_spark.operators import build_history_filter
+
+    bj = _bj_module()
+    if site == "size_build_distributed":
+        build = spark.range(0, 3_000, 1, 3).where(F.col("id") % 3 != 1)
+        keyed = build.select(F.xxhash64("id").alias("__bj_key64"))
+        res, n = tagged_jobs(spark, lambda: bj._size_build(build, keyed, exact=False))
+        assert res[1] == 2_000 and res[4] is None
+        res[0].unpersist()
+        return n
+    history = _texts(spark, [(i, f"Doc {i % 150}  ") for i in range(200)])
+    if site == "history_filter_empty":
+        history = history.where(F.lit(False))
+    n_hint = 500 if site == "history_filter_hinted" else None
+    return tagged_jobs(spark, lambda: build_history_filter(history, fpp=1e-3, n_hint=n_hint))[1]
+
+
+@pytest.mark.parametrize("site", list(MATERIALIZE_JOBS))
+def test_materialize_jobs_per_call(spark, site):
+    """The distributed sizing lane counts its build side in the job that
+    caches it, so no call pays a separate aggregate job.  A count that
+    differs is taken again (adaptive execution now and then runs one
+    more stage job) and the fewer of the two must match."""
+    n = materialize_jobs(spark, site)
+    if n != MATERIALIZE_JOBS[site]:
+        n = min(n, materialize_jobs(spark, site))
+    assert n == MATERIALIZE_JOBS[site]

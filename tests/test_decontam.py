@@ -15,6 +15,7 @@ from bloomjoin_spark.operators.decontam import (
     ngrams_col,
     words_col,
 )
+from conftest import SF_DIR
 
 
 def _docs(spark, rows):
@@ -401,3 +402,123 @@ def test_decontam_native_cap_checked_before_build(spark, monkeypatch):
     assert rep.engine == "bloom"
     assert "predicted native filter" in rep.engine_fallback_reason
     assert sorted(r.doc_id for r in flagged.collect()) == [1]
+
+
+# ---------------------------------------------------------------------------
+# both decontam operators pinned on one fixed input: result rows, report,
+# and the Python operators of every frame the call itself collects
+# ---------------------------------------------------------------------------
+
+#: sha256 of each case's schema, sorted rows and report, generated before
+#: the benchmark n-gram set was sized and built through ``_size_build``
+DECONTAM_DIGESTS = {
+    "docs_bloom": "c8484f1f7826caa914751b1e5ce5817c541d544c4c945e9677b6ee5d7392df3b",
+    "docs_auto": "af4fe2edbd8a562bdfce5869eaefa080d6d5c7b020822d3264461ebeae548c58",
+    "docs_words_auto": "a2971eea5530e3bcb5a250beb600fefbcd04d74f40f29a66e1c94372fcaea1d1",
+    "docs_empty": "c6c6d8feb00e7f18473fa1ea398cff81ee35b3d8c73e4a04a1cc03084bb6339e",
+    "many_bloom": "f02714ae8a1d896d14e13567553d56dbdcf14777d43b32c907ceae79ecc5bea6",
+    "many_auto": "32bceed9405afd3de179b01c22933f2331b44348384373b75006f3fd5e4148c2",
+    "parquet_docs_bloom": "7a60894f40a76621b2e98d73286c934eb462604825f6693ca1732f7ec0d6db61",
+    "parquet_many_bloom": "7510498e4bf85ccebe32f5128662d4c1564686bfbf9d6d12a8fa12f667217aba",
+    # the same rows and report as their parent except ``filter_bits``:
+    # the set is built on the driver at ``bloom_sizing``'s power-of-two
+    # size (the sketch engine's), no longer by ``stat.bloomFilter``
+    # (18,496 → 32,768 bits for a; 35,008 → 65,536 for the union)
+    "parquet_docs_auto": "88d20a4d19515235ad54c2d0bd32f1a27f1a00bc07ab73f5d7029e821a9f1502",
+    "parquet_many_auto": "68ccd7bdddad753bf8e51e55c8a3a948c54367f2bcf91c7db124820701a88109",
+}
+
+
+def _decontam_call(spark, case):
+    """``(out, report)`` of one decontam call.  ``parquet_*``: the
+    documents table against its ``doc_id % 29 == 3`` (and ``% 31 == 4``)
+    docs as word 6-grams, a benchmark side whose plan size is known.
+    Otherwise a corpus of three partitions with NULL, empty and short
+    documents against Python-local benchmarks, whose plan size is not."""
+    from bloomjoin_spark.operators import contaminated_docs_many
+
+    engine = case.rsplit("_", 1)[1]
+    if case.startswith("parquet"):
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        benches = {"a": docs.where(F.col("doc_id") % 29 == 3),
+                   "b": docs.where(F.col("doc_id") % 31 == 4)}
+        kw = {"n": 6, "corpus_tokens": words_col(F.col("text")), "engine": engine,
+              "return_report": True}
+        if case.startswith("parquet_many"):
+            return contaminated_docs_many(docs, benches, **kw)
+        return contaminated_docs(docs, benches["a"], **kw)
+    corpus = _docs(
+        spark,
+        [(i, [i % 11, (i * 3) % 11, i % 5, 7, i % 13, 2, 3]) for i in range(40)]
+        + [(100, None), (101, []), (102, [2, 3]), (103, [4, 9, 2, 3, 4])],
+    ).repartition(3)
+    benches = {
+        "a": _docs(spark, [(900, [7, 3, 9]), (901, [2, 3, 4]), (902, None)]),
+        "b": _docs(spark, [(910, [4, 9, 2, 3]), (911, [1, 1])]),
+    }
+    if case.startswith("many"):
+        return contaminated_docs_many(
+            corpus, benches, n=3, engine=engine, return_report=True
+        )
+    if case == "docs_empty":
+        return contaminated_docs(corpus, benches["a"].where("doc_id < 0"), n=3,
+                                 return_report=True)
+    if case == "docs_words_auto":
+        text = spark.createDataFrame(
+            [(i, f"w{i % 7} the quick brown fox w{i % 3}") for i in range(30)],
+            "doc_id bigint, text string",
+        )
+        return contaminated_docs(
+            text, text.where("doc_id < 4"), n=3,
+            corpus_tokens=words_col(F.col("text")), return_report=True,
+        )
+    return contaminated_docs(corpus, benches["a"], n=3, engine=engine,
+                             return_report=True)
+
+
+def decontam_digests(spark, cases=tuple(DECONTAM_DIGESTS)):
+    """``{case: sha256}`` of ``_decontam_call``."""
+    import hashlib
+
+    out = {}
+    for case in cases:
+        got, rep = _decontam_call(spark, case)
+        rows = sorted(tuple(r) for r in got.collect())
+        blob = repr((got.schema.simpleString(), rows, sorted(vars(rep).items())))
+        out[case] = hashlib.sha256(blob.encode()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("case", list(DECONTAM_DIGESTS))
+def test_decontam_results_unchanged(spark, case):
+    """Same flagged rows and the same report (engine, exact
+    ``n_bench_ngrams``, filter bits, per-suite notes) in every case."""
+    assert decontam_digests(spark, [case]) == {case: DECONTAM_DIGESTS[case]}
+
+
+@pytest.mark.parametrize("case", [c for c in DECONTAM_DIGESTS if c.startswith("parquet")])
+def test_decontam_collects_no_python_operator(spark, case):
+    """A benchmark n-gram set whose plan size is known small comes back
+    in one bounded collect and is built on the driver under either
+    engine, as ``bloom_join``'s build side is: no frame the call collects
+    or checkpoints plans a Python operator (the sketch engine used to
+    build it in a ``MapInArrow`` stage)."""
+    import contextlib
+
+    from bloomjoin_spark.plans import plan_audit
+
+    frame = type(spark.range(0))
+    seen = []
+    with contextlib.ExitStack() as stack:
+        for name in ("collect", "toArrow", "toPandas", "localCheckpoint"):
+            real = getattr(frame, name)
+
+            def call(self, *a, _real=real, **kw):
+                seen.extend(plan_audit(self).python_operators)
+                return _real(self, *a, **kw)
+
+            setattr(frame, name, call)
+            stack.callback(setattr, frame, name, real)
+        _, rep = _decontam_call(spark, case)
+    assert rep.n_bench_ngrams > 0
+    assert seen == []

@@ -11,6 +11,7 @@ from bloomjoin_spark.operators import (
     simhash_near_dup_pairs,
     with_shingle_hashes,
 )
+from conftest import tagged_jobs
 
 
 @pytest.fixture(scope="module")
@@ -410,9 +411,10 @@ def test_incremental_dedup_keeps_only_new(hist_and_batch):
 
 def test_incremental_dedup_job_count(spark, docs):
     """An in-call ingest builds no history filter: the representatives'
-    checkpoint + counters, the verify join's candidate-side filter (one
-    bounded collect, built on the driver) and one action fit in 10 Spark
-    jobs (20 with a history-side filter).
+    checkpoint (its job also yields the counters), the verify join's
+    candidate-side filter (one bounded collect, built on the driver), the
+    verified rows' checkpoint (its job counts them) and one action fit
+    in 8 Spark jobs (20 with a history-side filter).
     The batch avoids ``limit``, whose single-partition exchange would
     add a job of its own."""
     from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
@@ -428,17 +430,11 @@ def test_incremental_dedup_job_count(spark, docs):
         .withColumn("doc_id", F.col("doc_id") + 3_000_000)
     )
     batch = fresh.unionByName(cross).unionByName(within)
-    sc = spark.sparkContext
-    group = "incremental_dedup_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        rep = IncrementalDedupReport()
-        kept = incremental_dedup(batch, history, report=rep).select("doc_id").collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 10, n_jobs
+    rep = IncrementalDedupReport()
+    kept, n_jobs = tagged_jobs(
+        spark, lambda: incremental_dedup(batch, history, report=rep).select("doc_id").collect()
+    )
+    assert 0 < n_jobs <= 8, n_jobs
     assert len(kept) == fresh.count()
     assert rep.n_within_dups == within.count()
     assert rep.n_candidates == rep.n_batch - rep.n_within_dups
@@ -522,6 +518,85 @@ def test_incremental_dedup_empty_history(docs):
     history = docs.limit(0)
     out = incremental_dedup(docs, history)
     assert out.count() == docs.count()
+
+
+# ---------------------------------------------------------------------------
+# every call that materializes a frame and counts it, pinned: the rows and
+# report of incremental_dedup in each lane, and dedup_clusters' iterative
+# lane
+# ---------------------------------------------------------------------------
+
+#: sha256 of each site's sorted rows and report, generated before the
+#: counters rode the job that materializes
+COUNTER_SITE_DIGESTS = {
+    "incremental_dedup": "64d39530c20d50d9056fba51441f7f613c2898b65770663dc6d5f4e9aec554f6",
+    "incremental_dedup_filter": "70e49b3782c9e3080ee5a3e984201cce205ad7df9ba15ee85b629a2a78230d10",
+    "incremental_dedup_checkpoint": "fb6fe78da7bb95b8c326b4fdfd5014ff3020e3736997b3f47c572f87b2ccdff1",
+    "clusters_iterative": "cbced7f4acda9a726a0095790b5b5003d532e035f68560198138c5fc3a5e3515",
+    "clusters_max_iter": "16186ff549ca73e9cfd51d42f9a1ae1ab3da7f5fa2c6c44cc0515f031e3784a9",
+}
+
+
+def _counter_site(spark, site, tmp):
+    """Sorted result rows plus report fields of one ``site`` call."""
+    from bloomjoin_spark.operators import (
+        IncrementalDedupReport,
+        build_history_filter,
+        incremental_dedup,
+    )
+    from bloomjoin_spark.operators.dedup import dedup_clusters
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    def texts(rs):
+        return spark.createDataFrame(rs, "doc_id bigint, text string").repartition(3)
+
+    if site.startswith("clusters"):
+        edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (20, 21),
+                 (20, 22), (30, 32), (31, 32), (40, 41), (41, 42), (42, 40)]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(2)
+        max_iter = 1 if site == "clusters_max_iter" else 10
+        return rows(dedup_clusters(pairs, max_iter=max_iter, driver_max_edges=0))
+    history = texts([(i, f"Doc {i % 150}  ") for i in range(200)])
+    batch = texts(
+        [(1_000 + i, f"doc {i}") for i in range(140, 170)]
+        + [(2_000, "doc 160"), (2_001, "  DOC 5"), (2_002, "new one"),
+           (2_003, "new one")]
+    )
+    kw = {}
+    if site == "incremental_dedup_filter":
+        kw["history_filter"] = build_history_filter(history)
+    elif site == "incremental_dedup_checkpoint":
+        kw["checkpoint_dir"] = f"{tmp}/history_filter"
+    rep = IncrementalDedupReport()
+    out = incremental_dedup(batch, history, report=rep, **kw)
+    return rows(out) + [tuple(getattr(rep, f) for f in (
+        "n_batch", "n_within_dups", "n_definite_new", "n_candidates",
+        "n_cross_dups", "filter_provided", "engine", "engine_fallback_reason",
+    ))]
+
+
+def counter_site_digests(spark, sites=tuple(COUNTER_SITE_DIGESTS)):
+    """``{site: sha256}`` of ``_counter_site``."""
+    import hashlib
+    import tempfile
+
+    out = {}
+    with tempfile.TemporaryDirectory() as tmp:
+        for site in sites:
+            got = _counter_site(spark, site, tmp)
+            out[site] = hashlib.sha256(repr(got).encode()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("site", list(COUNTER_SITE_DIGESTS))
+def test_counter_site_results_unchanged(spark, site):
+    """incremental_dedup keeps its rows and every report field in the
+    in-call, provided-filter and checkpointed-filter lanes, and the
+    iterative dedup_clusters lane its labels, converged or cut at
+    ``max_iter``."""
+    assert counter_site_digests(spark, [site]) == {site: COUNTER_SITE_DIGESTS[site]}
 
 
 # ---------------------------------------------------------------------------
@@ -906,26 +981,13 @@ NEAR_DUP_JOBS = {
 
 def near_dup_jobs(spark, op):
     """Jobs of one ``op`` call plus its ``collect()``, counted by session
-    tag (a tag must not hold ``-``)."""
-    import uuid
+    tag."""
     import warnings
 
     df = _near_dup_frame(spark)
-    tag = f"jobs{uuid.uuid4().hex}"
-    spark.addTag(tag)
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            _near_dup_call(df, op, {}).collect()
-    finally:
-        spark.removeTag(tag)
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc._jsc.sc().statusStore().jobsList(None)
-    return sum(
-        any(t.endswith(f"-{tag}") for t in jobs.apply(i).jobTags().mkString(" ").split())
-        for i in range(jobs.size())
-    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        return tagged_jobs(spark, lambda: _near_dup_call(df, op, {}).collect())[1]
 
 
 @pytest.mark.parametrize("op", list(NEAR_DUP_JOBS))

@@ -9,6 +9,7 @@ from bloomjoin_spark.operators import (
     cosine_topk,
     embedding_near_dup_pairs,
 )
+from conftest import tagged_jobs
 
 
 @pytest.fixture(scope="module")
@@ -624,28 +625,15 @@ def test_arrow_column_results_unchanged(spark, op):
 
 def arrow_column_jobs(spark, ops=tuple(ARROW_COLUMN_DIGESTS)):
     """``{op: jobs}`` of one op call plus its ``collect()``, counted by
-    session tag (a tag must not hold ``-``); the shared inputs are
-    trained and written before the count."""
+    session tag; the shared inputs are trained and written before the
+    count."""
     import tempfile
-    import uuid
 
-    sc = spark.sparkContext
     out = {}
     with tempfile.TemporaryDirectory() as tmp:
         ctx = _arrow_column_ctx(spark, tmp)
         for op in ops:
-            tag = f"jobs{uuid.uuid4().hex}"
-            spark.addTag(tag)
-            try:
-                _arrow_column_call(spark, ctx, op).collect()
-            finally:
-                spark.removeTag(tag)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs = sc._jsc.sc().statusStore().jobsList(None)
-            out[op] = sum(
-                any(t.endswith(f"-{tag}") for t in jobs.apply(i).jobTags().mkString(" ").split())
-                for i in range(jobs.size())
-            )
+            out[op] = tagged_jobs(spark, lambda: _arrow_column_call(spark, ctx, op).collect())[1]
     return out
 
 

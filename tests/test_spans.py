@@ -55,6 +55,43 @@ def docs(spark):
     return spark.createDataFrame(ROWS, "doc_id string, tokens array<int>")
 
 
+#: sha256 of ``duplicate_span_starts``'s sorted rows and report per case,
+#: generated before its duplicated-hash count rode the job that
+#: materializes the set
+SPAN_START_DIGESTS = {
+    "exact": "2905fdbfacd37f0c6dc897dae63e987c9299ece1d0408611a7c3d568faeabc94",
+    "hash": "a7c76f62b92df209b22e721fa0127e9f60af26f66498d18f01f89e87b6a7246a",
+    "no_prefilter": "00bada249408588d815c6df9a1b5644f3fdeb05bfdbfcd0fcbb75a9c7fbff70a",
+    "min_docs_3": "cd5d0687e25cdeacd9fda6ee9bc60eb52849ee774d79d2bc576696bab8aa337e",
+    "no_dups": "b66cb8a2a2f94b31c34d0a8f745a13e3e87dcfc3e3679ece9f3703f059c1b4c9",
+}
+
+
+def span_start_digests(spark, cases=tuple(SPAN_START_DIGESTS)):
+    """``{case: sha256}`` of one ``duplicate_span_starts`` call over
+    ``ROWS`` (``no_dups``: its clean documents only)."""
+    import hashlib
+
+    df = spark.createDataFrame(ROWS, "doc_id string, tokens array<int>").repartition(3)
+    kw = {"exact": {}, "hash": {"verify": "hash"}, "no_prefilter": {"max_filter_bytes": 0},
+          "min_docs_3": {"min_docs": 3}, "no_dups": {}}
+    out = {}
+    for case in cases:
+        src = df.where(F.col("doc_id").isin("c", "d", "g")) if case == "no_dups" else df
+        got, rep = duplicate_span_starts(src, n=3, return_report=True, **kw[case])
+        rows = sorted(tuple(r) for r in got.collect())
+        blob = repr((got.schema.simpleString(), rows, sorted(vars(rep).items())))
+        out[case] = hashlib.sha256(blob.encode()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize("case", list(SPAN_START_DIGESTS))
+def test_span_start_results_unchanged(spark, case):
+    """Same starts and the same report (``n_dup_hashes``, prefilter,
+    filter bits, notes) under each verify mode and gate."""
+    assert span_start_digests(spark, [case]) == {case: SPAN_START_DIGESTS[case]}
+
+
 def _collect_clean(df):
     return {
         r["doc_id"]: (r["tokens"], r["n_dup_tokens"])

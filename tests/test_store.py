@@ -12,6 +12,7 @@ from bloomjoin_spark.store import (
     store_estimates,
     store_sketch,
 )
+from conftest import tagged_jobs
 
 
 def _docs(spark, lo, hi, nparts=4):
@@ -256,6 +257,38 @@ def test_mixed_hash_format_refused(spark, tmp_path):
     # excluding the foreign snapshot reads fine
     ok = read_sketch_store(spark, path, snapshots=["day1"])
     assert ok.count() > 0
+
+
+def test_unstamped_snapshot_refused(spark, tmp_path):
+    """A snapshot with no ``hash_format`` column (null under
+    ``mergeSchema``) is a foreign domain too: the curated error, not a
+    comparison of None with the stamps."""
+    path = str(tmp_path / "ustore")
+    append_sketch_snapshot(
+        _docs(spark, 0, 500), lambda: HllSketch(12), path, "day1", cols=["doc_id"]
+    )
+    rows = spark.read.parquet(path).drop("hash_format").collect()
+    spark.createDataFrame(rows).withColumn("snapshot", F.lit("day0")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("snapshot").parquet(path)
+    with pytest.raises(ValueError, match=r"hash format\(s\) \[None\]"):
+        read_sketch_store(spark, path)
+    assert read_sketch_store(spark, path, snapshots=["day1"]).count() > 0
+
+
+def test_store_read_and_merge_jobs(spark, tmp_path):
+    """Reading a store (schema check and hash-format guard) and merging
+    it into one sketch cost a fixed number of Spark jobs: the guard is
+    one collect with no exchange."""
+    path = str(tmp_path / "jstore")
+    for day, (lo, hi) in {"day1": (0, 300), "day2": (300, 600)}.items():
+        append_sketch_snapshot(
+            _docs(spark, lo, hi), lambda: HllSketch(12), path, day, cols=["doc_id"]
+        )
+    store, n_read = tagged_jobs(spark, lambda: read_sketch_store(spark, path))
+    sk, n_merge = tagged_jobs(spark, lambda: store_sketch(store))
+    assert abs(sk.estimate() - 600) / 600 <= 4 * 1.04 / 2**6
+    assert (n_read, n_merge) == (1, 1)
 
 
 def test_foreign_dir_missing_payload_columns_curated_error(spark, tmp_path):
