@@ -41,7 +41,6 @@ parity: ``R/bloomjoin.R:266-322``).
 
 from __future__ import annotations
 
-import math
 import warnings
 
 import numpy as np
@@ -59,7 +58,7 @@ from ..plans.planner import (
     spark_how,
     validate_join_inputs,
 )
-from ..sketches.bloom import BloomSketch, bloom_sizing
+from ..sketches.bloom import BloomSketch, bloom_sizing, spark_sizing
 
 #: probe-side sample size for the selectivity estimate — the reference's
 #: probe_limit (R/bloomjoin.R:240-257 uses 5000)
@@ -255,7 +254,9 @@ def membership_filter(
     treeAggregate, no Python); ``"bloom"`` builds one mergeable partial
     per partition, tree OR-merged (the lane ``checkpoint_dir`` resumes).
     A small build side's distinct key ``hashes`` are built on the driver
-    under either engine.  A native filter predicted or serialized above
+    under either engine, at ``bloom_sizing``'s power-of-two size, or
+    under ``"native"`` at Spark's own size where only that one fits
+    under the cap.  A native filter predicted or serialized above
     ``_NATIVE_FILTER_CAP_BYTES``, or a native build that fails on
     private-API drift, falls back to the sketch engine.  The fallback
     warns on every call that asked for ``"native"``, once per session
@@ -273,14 +274,17 @@ def membership_filter(
         if engine == "native":
             try:
                 # n is known: check the cap before building, and after
-                _check_native_cap(
-                    _native_filter_bytes(n, fpp) if hashes is None
-                    else _spark_blob_bytes(bloom_sizing(n, fpp)[0]),
-                    "predicted",
-                )
+                _check_native_cap(_native_filter_bytes(n, fpp), "predicted")
                 if hashes is None:
                     blob = _native_build_filter(keyed, n, fpp)
                     _check_native_cap(len(blob), "serialized")
+                elif _spark_blob_bytes(bloom_sizing(n, fpp)[0]) > _NATIVE_FILTER_CAP_BYTES:
+                    # the driver's power-of-two size, up to twice Spark's,
+                    # misses the cap where Spark's fits: build Spark's
+                    # filter on the driver, with no build job
+                    sk = BloomSketch.spark_sized(n, fpp)
+                    sk.update_hashes(hashes)
+                    blob = sk.to_spark_bytes()
             except Exception as ex:  # private-API drift / size gate → sketch engine
                 _note_native_fallback(report, ex, forced)
                 engine, blob = "bloom", None
@@ -582,10 +586,8 @@ def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
 
 def _native_filter_bytes(n: int, fpp: float) -> int:
     """Serialized size of Spark's ``BloomFilter.create(n, fpp)``, known
-    before the build: ``optimalNumOfBits`` in 64-bit words plus Spark
-    4's 16-byte header."""
-    bits = int(-n * math.log(fpp) / (math.log(2) ** 2))
-    return 8 * -(-bits // 64) + 16
+    before the build."""
+    return _spark_blob_bytes(spark_sizing(n, fpp)[0])
 
 
 def _check_native_cap(n_bytes: int, what: str) -> None:

@@ -8,10 +8,10 @@ appendix C / PaLM-style 8-gram overlap decontamination):
 
 1. the benchmark side's distinct n-grams are small — build a Bloom
    filter over their 64-bit hashes, sized like ``bloom_join``'s build
-   side (``_size_build``): a small set comes back as hashes in one
-   bounded collect and is built on the driver, a larger one by one
-   treeAggregate / one JVM ``stat.bloomFilter`` job — never collected
-   as raw n-grams;
+   side (``_size_build``) but gated on their exact count: a small set
+   comes back as hashes in one bounded collect and is built on the
+   driver, a larger one by one treeAggregate / one JVM
+   ``stat.bloomFilter`` job — never collected as raw n-grams;
 2. each corpus document computes ONE window-hash array over its
    tokens (``ngram_hashes_col``: a single ``transform`` whose element
    is the variadic ``xxhash64(arr[i..i+n−1])`` — no gram arrays, no
@@ -38,7 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bloom_join import _size_build, membership_filter
+from .bloom_join import _SMALL_BUILD_ROWS, _materialize, _size_build, membership_filter
 from .text import words_col  # canonical tokenization (re-exported)
 
 _NG = "__bj_ng"
@@ -188,32 +188,31 @@ def contaminated_docs(
     ccol = _resolve_col(corpus, corpus_tokens)
     report = DecontamReport(n=n)
 
-    # benchmark n-gram set: distinct, consumed twice (the sizing pass
-    # that feeds the filter build, the verify join) → one lazy
-    # materialization point
-    bench_ngs = (
-        bench.select(F.explode(ngrams_col(bcol, n)).alias(_NG))
-        .distinct()
-        .localCheckpoint(eager=False)
+    # benchmark n-gram set: distinct, consumed twice (the filter build,
+    # the verify join) → one materialization point, whose job also
+    # counts it exactly.  The small lane's gate reads that count:
+    # Catalyst's size estimate cannot see the explode's expansion
+    bench_ngs, counts = _materialize(
+        bench.select(F.explode(ngrams_col(bcol, n)).alias(_NG)).distinct(),
+        F.count(F.lit(1)).alias("n"),
     )
-    # the ladder hash of a single n-gram array == the doc-ladder hash
-    # at that gram's position, so the build side hashes its (distinct,
-    # small) gram set while the corpus never materializes a gram.  One
-    # key per distinct gram: _size_build's row count is the exact size
-    keyed, n_bench, _, _, small = _size_build(bench_ngs, bench_ngs.select(
-        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    ))
+    n_bench = int(counts["n"])
     report.n_bench_ngrams = n_bench
     out_schema_src = corpus.select(
         F.col(id_col), F.lit(0).cast("bigint").alias("n_hits")
     )
     if n_bench == 0:
-        if keyed.is_cached:
-            keyed.unpersist()
         report.engine = "none"
         report.notes.append("benchmark side has no n-grams; nothing to flag")
         empty = out_schema_src.where(F.lit(False))
         return (empty, report) if return_report else empty
+
+    # the ladder hash of a single n-gram array == the doc-ladder hash
+    # at that gram's position, so the build side hashes its (distinct,
+    # small) gram set while the corpus never materializes a gram
+    keyed, _, _, _, small = _size_build(bench_ngs, bench_ngs.select(
+        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
+    ), exact=n_bench <= _SMALL_BUILD_ROWS, n_hint=n_bench)
 
     # corpus side: ONE rolling-hash ladder per document (O(n·L) long
     # ops, zero gram-array allocations), probed per document with a
@@ -343,10 +342,12 @@ def contaminated_docs_many(
         return (empty, report) if return_report else empty
 
     # a small union comes back as its distinct hashes for a driver
-    # build; a larger one is sized by the rollup's exact count
+    # build; a larger one is sized by the rollup's exact count.  The
+    # gate reads the rollup's row count: Catalyst's size estimate
+    # cannot see the explode's expansion
     keyed, _, _, _, small = _size_build(tagged, tagged.select(
         F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    ), n_hint=n_union)
+    ), exact=sum(suite_sizes.values()) <= _SMALL_BUILD_ROWS, n_hint=n_union)
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
     doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
     cand_pred = membership_filter(

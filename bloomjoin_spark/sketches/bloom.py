@@ -99,6 +99,16 @@ def bloom_sizing(n: int, p: float) -> tuple[int, int]:
     return m, k
 
 
+def spark_sizing(n: int, p: float) -> tuple[int, int]:
+    """(m_bits, k) of Spark's ``BloomFilter.create(n, p)``:
+    ``optimalNumOfBits`` rounded up to whole 64-bit words, and
+    ``optimalNumOfHashFunctions`` of the unrounded bits (Java's
+    ``Math.round``, half up).  m is rarely a power of two."""
+    bits = int(-n * math.log(p) / (_LN2 * _LN2))
+    k = max(1, math.floor(bits / max(int(n), 1) * _LN2 + 0.5))
+    return 64 * -(-bits // 64), k
+
+
 def bloom_params(n: int, p: float = 0.01) -> dict:
     """Report (m, k, bytes, bits/key, achieved fpr) — must call the SAME
     sizing code the filter uses (the reference fixed exactly that drift,
@@ -408,6 +418,17 @@ class BloomSketch(Sketch):
         return self.fill_ratio() ** self.k
 
     # -- Spark interop ---------------------------------------------------
+    @classmethod
+    def spark_sized(cls, n: int, fpp: float) -> "BloomSketch":
+        """An empty filter of Spark's own size (``spark_sizing``): it
+        serializes to the bytes of the JVM ``BloomFilter.create(n, fpp)``
+        over the same keys.  ``stat.bloomFilter`` builds that filter too,
+        up to its runtime-filter clamp (2^26 bits by default), above
+        which it builds a smaller one."""
+        obj = cls._blank(*spark_sizing(n, fpp), fpp, 0, False)
+        obj._words = np.zeros(obj.m // 64, dtype=np.uint64)
+        return obj
+
     def to_spark_bytes(self) -> bytes:
         """Spark's serialized ``BloomFilterImplV2`` (version 2, k, seed
         0, word count, big-endian words) of this filter — the literal

@@ -792,6 +792,31 @@ def test_spark_bytes_match_jvm_bloom_filter(spark):
     assert got.tolist() == [jbf.mightContainLong(v) for v in probe.tolist()]
 
 
+@pytest.mark.parametrize("n, fpp", [(957, 1e-4), (3_001, 0.03), (1, 0.5), (3_720_000, 1e-4)])
+def test_spark_sized_driver_build_matches_jvm_create(spark, n, fpp):
+    """A driver filter of Spark's own size (``BloomSketch.spark_sized``)
+    serializes to the bytes of the JVM ``BloomFilter.create(n, fpp)``
+    over the same keys, also above the 2^26 bits where ``stat.bloomFilter``
+    clamps its filter (the last case, 71.3M bits)."""
+    import numpy as np
+
+    from bloomjoin_spark.sketches import BloomSketch
+
+    keys = np.random.default_rng(n).integers(-(2**63), 2**63 - 1, min(n, 2_000), dtype=np.int64)
+    sk = BloomSketch.spark_sized(n, fpp)
+    sk.update_hashes(keys.view(np.uint64))
+    jvm = spark.sparkContext._jvm
+    jbf = jvm.org.apache.spark.util.sketch.BloomFilter.create(n, fpp)
+    for k in keys.tolist():
+        jbf.putLong(k)
+    bos = jvm.java.io.ByteArrayOutputStream()
+    jbf.writeTo(bos)
+    assert bytes(bos.toByteArray()) == sk.to_spark_bytes()
+    if n < 4_000:  # under the clamp, the native engine builds the same bytes
+        keyed = spark.createDataFrame([(int(k),) for k in keys], "__bj_key64 bigint")
+        assert _bj_module()._native_build_filter(keyed, n, fpp) == sk.to_spark_bytes()
+
+
 def test_hinted_small_native_call_runs_one_job(spark):
     """A hinted native call over a small build side runs exactly ONE job
     before it returns: the bounded collect, then a driver build — no

@@ -522,3 +522,58 @@ def test_decontam_collects_no_python_operator(spark, case):
         _, rep = _decontam_call(spark, case)
     assert rep.n_bench_ngrams > 0
     assert seen == []
+
+
+@pytest.mark.parametrize("case, cap, bits", [
+    # Spark's optimal filter < cap < bloom_sizing's power-of-two one
+    ("parquet_docs_auto", 3_000, 18_496),  # 2,328 < 3,000 < 4,112 bytes
+    ("parquet_many_auto", 6_000, 35_008),  # 4,392 < 6,000 < 8,208 bytes
+])
+def test_decontam_native_build_where_only_spark_size_fits(spark, monkeypatch, case, cap, bits):
+    """A small n-gram set is built on the driver at a power-of-two size,
+    up to twice Spark's optimal size.  Where only Spark's size fits under
+    the plan-literal cap, the driver builds Spark's filter (no
+    ``stat.bloomFilter`` job) and the probe stays in codegen: the same
+    rows, and no Python operator in the output's plan."""
+    import importlib
+
+    from bloomjoin_spark.plans import plan_audit
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    want = sorted(tuple(r) for r in _decontam_call(spark, case)[0].collect())
+    monkeypatch.setattr(bj, "_NATIVE_FILTER_CAP_BYTES", cap)
+    real, builds = bj._native_build_filter, []
+    monkeypatch.setattr(bj, "_native_build_filter", lambda *a: builds.append(a) or real(*a))
+    out, rep = _decontam_call(spark, case)
+    assert builds == []
+    assert (rep.engine, rep.filter_bits, rep.engine_fallback_reason) == ("native", bits, None)
+    assert plan_audit(out).python_operators == []
+    assert sorted(tuple(r) for r in out.collect()) == want
+
+
+#: Spark jobs of a decontam call plus ``collect()`` whose n-gram set is
+#: over the small-lane bound (lowered to 500 rows), counted by session tag
+OVER_BOUND_JOBS = {"parquet_docs_bloom": 7, "parquet_many_bloom": 10}
+
+
+@pytest.mark.parametrize("case", list(OVER_BOUND_JOBS))
+def test_decontam_gate_reads_exact_gram_count(spark, monkeypatch, case):
+    """The small lane's gate reads the exact gram count, not the plan's
+    size estimate, which cannot see the explode's expansion: a set over
+    the bound runs no bounded collect (``toArrow``) that it would throw
+    away, and keeps its rows, report and job count."""
+    import importlib
+
+    from conftest import tagged_jobs
+
+    bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+    dc = importlib.import_module("bloomjoin_spark.operators.decontam")
+    for mod in (bj, dc):
+        monkeypatch.setattr(mod, "_SMALL_BUILD_ROWS", 500, raising=False)
+    frame = type(spark.range(0))
+    real, arrows = frame.toArrow, []
+    monkeypatch.setattr(frame, "toArrow", lambda self: arrows.append(self) or real(self))
+    digest, jobs = tagged_jobs(spark, lambda: decontam_digests(spark, [case]))
+    assert arrows == []
+    assert digest == {case: DECONTAM_DIGESTS[case]}
+    assert jobs <= OVER_BOUND_JOBS[case]
