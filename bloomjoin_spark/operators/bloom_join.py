@@ -13,10 +13,12 @@ pipeline, ``R/bloomjoin.R:62-124``):
 2. a build side of at most ``_SMALL_BUILD_ROWS`` rows comes back as
    hashes in ONE bounded collect: exact distinct count, filter built on
    the driver (the reference's one pass, ``src/BloomFilter.cpp:102-118``),
-   under either engine and with or without ``n_hint``.  A larger one is
-   built by Spark's ``stat.bloomFilter`` (native engine) or streams once
-   through ``mapInArrow``, one Bloom partial per partition, partials
-   tree-merged by OR (sketch engine);
+   under either engine and with or without ``n_hint``.  One whose plan
+   size is unknown is cached and counted first, and comes back from the
+   cache when the count is that small.  A larger one is built by Spark's
+   ``stat.bloomFilter`` (native engine) or streams once through
+   ``mapInArrow``, one Bloom partial per partition, partials tree-merged
+   by OR (sketch engine);
 3. ``membership_filter`` — the one build-and-probe dispatch this
    operator shares with ``bloom_join_stream``, decontam and spans —
    keeps every filter in Spark's own bit layout (``sketches/bloom.py``),
@@ -75,9 +77,9 @@ _BROADCAST_BUDGET_BYTES = 512 << 20
 #: and probed by a pandas UDF.
 _NATIVE_FILTER_CAP_BYTES = 16 << 20
 
-#: exact-sizing bound: an unhinted build side of at most this many rows
-#: comes back as 8-byte key hashes (≤ 32 MiB) in one bounded collect
-#: instead of a persist + approximate-distinct pass + distributed build
+#: exact-sizing bound: a build side of at most this many rows comes
+#: back as 8-byte key hashes (≤ 32 MiB) in one bounded collect instead
+#: of a persist + approximate-distinct pass + distributed build
 _SMALL_BUILD_ROWS = 1 << 22
 
 #: that collect runs in ONE task: a build side whose plan size estimate
@@ -215,6 +217,11 @@ class MembershipFilter:
             self.sketch = BloomSketch.from_spark_bytes(self.blob)
         return self.sketch
 
+    @property
+    def codegen(self) -> bool:
+        """True while both probes are the codegen ``BloomFilterMightContain``."""
+        return self.blob is not None and self._py is None
+
     def contains(self, col: Column) -> Column:
         return self._probe(col, array=False)
 
@@ -224,7 +231,7 @@ class MembershipFilter:
     def _probe(self, col: Column, array: bool) -> Column:
         # once the pandas probe is in use (after a drift fallback) the
         # codegen probe is not retried
-        if self.blob is not None and self._py is None:
+        if self.codegen:
             try:
                 if array:
                     return F.exists(
@@ -601,40 +608,63 @@ def _check_native_cap(n_bytes: int, what: str) -> None:
         )
 
 
-def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
-                n_hint: int | None = None):
-    """``(keyed, rows, distinct, n, hashes)`` of a build side, ``n``
-    sizing the filter.  A small one (when ``exact``) comes back in ONE
-    early-terminating collect (one job, one JVM task) whose unique
-    ``hashes`` count its keys exactly, hinted or not.  Otherwise an
-    ``n_hint`` sizes it (``rows`` = the hint, ``distinct`` None), or
-    ``keyed`` is persisted for the distributed build and one aggregate
-    (partial-aggregated HLL, no wide shuffle) estimates the distinct
-    count in the job that caches it (``_materialize``)."""
+def _bounded_collect(df: DataFrame, gate: DataFrame, max_rows: int):
+    """``df``'s rows as one Arrow table from ONE early-terminating
+    collect (one job, one JVM task), or None.  It runs only when
+    ``gate``'s free plan stats (no job) put it at most ``max_rows``
+    rows and ``_SMALL_BUILD_SCAN_BYTES``; a collect that comes back
+    over ``max_rows`` is None too.  A plan with no row count (a file
+    scan without CBO) passes on its bytes alone, so the collect stops
+    after ``max_rows + 1`` rows: that bounds the work thrown away."""
     try:  # free plan stats, no job
-        st = build_df._jdf.queryExecution().optimizedPlan().stats()
+        st = gate._jdf.queryExecution().optimizedPlan().stats()
         rows = int(st.rowCount().get()) if st.rowCount().isDefined() else 0
-        small = exact and rows <= _SMALL_BUILD_ROWS and (
+        small = rows <= max_rows and (
             int(st.sizeInBytes()) <= _SMALL_BUILD_SCAN_BYTES
         )
     except Exception:
         small = False
-    if small:
-        tbl = build_keyed.coalesce(1).limit(_SMALL_BUILD_ROWS + 1).toArrow()
-        if tbl.num_rows <= _SMALL_BUILD_ROWS:
-            uniq = np.unique(tbl.column(0).to_numpy().view(np.uint64))
-            return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
-    if n_hint is not None:
+    if not small:
+        return None
+    tbl = df.coalesce(1).limit(max_rows + 1).toArrow()
+    return tbl if tbl.num_rows <= max_rows else None
+
+
+def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
+                n_hint: int | None = None):
+    """``(keyed, rows, distinct, n, hashes)`` of a build side, ``n``
+    sizing the filter.  When ``exact``, a build side that passes the
+    plan-stats gate comes back in ONE bounded collect
+    (``_bounded_collect``) whose unique ``hashes`` count its keys
+    exactly, hinted or not.  Otherwise an ``n_hint`` sizes it
+    (``rows`` = the hint, ``distinct`` None), or ``keyed`` is persisted
+    and one aggregate (partial-aggregated HLL, no wide shuffle) counts
+    it in the job that caches it (``_materialize``).  A cached build
+    side of at most ``_SMALL_BUILD_ROWS`` rows (when ``exact``) then
+    still comes back as exact ``hashes``, collected from the cache, for
+    a driver build; a larger one is sized by the estimate for the
+    distributed build."""
+    tbl = _bounded_collect(build_keyed, build_df, _SMALL_BUILD_ROWS) if exact else None
+    if tbl is None and n_hint is not None:
         return build_keyed, n_hint, None, n_hint, None
-    keyed, stats = _materialize(
-        build_keyed,
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(build_keyed.columns[0], 0.02).alias("d"),
-        persist=True,
-    )
-    d = int(stats["d"])
-    # 1.05 margin absorbs the ±2% rsd so the fpp target holds
-    return keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
+    if tbl is None:
+        build_keyed, stats = _materialize(
+            build_keyed,
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(build_keyed.columns[0], 0.02).alias("d"),
+            persist=True,
+        )
+        if not exact or stats["n"] > _SMALL_BUILD_ROWS:
+            d = int(stats["d"])
+            # 1.05 margin absorbs the ±2% rsd so the fpp target holds
+            return build_keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
+        try:
+            tbl = build_keyed.toArrow()
+        except BaseException:
+            build_keyed.unpersist()
+            raise
+    uniq = np.unique(tbl.column(0).to_numpy().view(np.uint64))
+    return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
 
 
 def _materialize(df: DataFrame, *counters: Column, persist: bool = False):

@@ -87,11 +87,13 @@ def ngram_hashes_col(arr: Column, n: int) -> Column:
     build and probe must both use this function (the domain is NOT
     ``xxhash64(gram_array)``).  Short/NULL docs yield an empty array.
 
-    Pass an ATTRIBUTE (a selected column), not a compound expression:
-    the lambda body references ``arr`` n times per element, and a
-    compound expression would be re-evaluated each time (O(L²) for a
-    ``split``) — ``contaminated_docs`` materializes the token column
-    first for exactly this reason."""
+    Pass a column whose value is bound once, not a compound
+    expression: the lambda body references ``arr`` n times per element,
+    and a compound expression would be re-evaluated each time (O(L²)
+    for a ``split``).  A selected attribute is not enough under a
+    filter, which pushdown rewrites back to the expression;
+    ``contaminated_docs`` binds its tokens to a lambda variable
+    (``_probe_docs``) for exactly this reason."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if n > 63:
@@ -148,6 +150,23 @@ class DecontamReport:
 
 def _resolve_col(df: DataFrame, col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def _probe_docs(mf, n: int) -> Column:
+    """Per-document ANY of ``mf`` over the ``n``-gram window hashes of
+    ``__bj_toks``.  Filter pushdown substitutes the token column's
+    expression for the attribute, so the codegen probe binds the tokens
+    ONCE to a lambda variable: over the bare column, every window of
+    ``ngram_hashes_col``'s lambda would re-evaluate it (a ``words_col``
+    text re-split n times per window).  The pandas probe takes the bare
+    column: Spark leaves a Python UDF whose argument nests lambdas over
+    a lambda variable unextracted, and the task fails."""
+    toks = F.col("__bj_toks")
+    if mf.codegen:
+        pred = mf.any_in(F.transform(F.array(toks), lambda t: ngram_hashes_col(t, n))[0])
+        if mf.codegen:  # no private-API drift while building it
+            return pred
+    return mf.any_in(ngram_hashes_col(toks, n))
 
 
 def contaminated_docs(
@@ -220,11 +239,9 @@ def contaminated_docs(
     # probe stage is |corpus|, not |corpus|·L.  Only id + tokens are
     # selected, so column pruning still reaches parquet.
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
-    doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
-
-    cand_pred = membership_filter(
-        keyed, n_bench, fpp, engine, report, hashes=small
-    ).any_in(doc_hashes)
+    cand_pred = _probe_docs(
+        membership_filter(keyed, n_bench, fpp, engine, report, hashes=small), n
+    )
 
     # candidate docs ≈ contaminated + per-DOC false positives (each doc
     # probes ~L grams, so doc-level fp ≈ L·fpp — hence the low default
@@ -349,10 +366,9 @@ def contaminated_docs_many(
         F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
     ), exact=sum(suite_sizes.values()) <= _SMALL_BUILD_ROWS, n_hint=n_union)
     base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
-    doc_hashes = ngram_hashes_col(F.col("__bj_toks"), n)
-    cand_pred = membership_filter(
-        keyed, n_union, fpp, engine, report, hashes=small
-    ).any_in(doc_hashes)
+    cand_pred = _probe_docs(
+        membership_filter(keyed, n_union, fpp, engine, report, hashes=small), n
+    )
     cand = base.where(cand_pred)
     hits = cand.select(
         F.col(id_col), F.explode(ngrams_col(F.col("__bj_toks"), n)).alias(_NG)

@@ -21,10 +21,20 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 
 from ..hashing import splitmix64
-from .bloom_join import _materialize, _python_probe, _size_build, bloom_join
+from ..plans.planner import BloomJoinReport
+from .bloom_join import (
+    _bounded_collect,
+    _materialize,
+    _python_probe,
+    _size_build,
+    bloom_join,
+    membership_filter,
+)
 
 _U64 = np.uint64
 _PERM_SEED = 0x3C6EF372FE94F82A
@@ -1078,12 +1088,14 @@ def simhash_dedup(
 class IncrementalDedupReport:
     """Counters from one :func:`incremental_dedup` call.
 
-    ``n_candidates`` counts the within-batch representatives sent to
-    the exact verify join: filter hits when a history filter is given
-    (``history_filter=`` or ``checkpoint_dir=``), every representative
-    in the in-call lane.  ``n_definite_new`` counts the representatives
-    that skipped the verify join as filter misses (always 0 in the
-    in-call lane)."""
+    ``n_candidates`` counts the within-batch representatives that are
+    verified exactly against the history: filter hits when a history
+    filter is given (``history_filter=`` or ``checkpoint_dir=``), every
+    representative in the in-call lane.  ``n_definite_new`` counts the
+    representatives that skipped verification as filter misses (always
+    0 in the in-call lane).  Every field reads the same whether the
+    batch ran the small-batch lane (deduplicated on the driver) or the
+    distributed one."""
 
     n_batch: int = 0
     n_within_dups: int = 0
@@ -1091,13 +1103,15 @@ class IncrementalDedupReport:
     n_candidates: int = 0
     n_cross_dups: int = 0
     filter_provided: bool = False
-    #: in-call lane: the verify join's engine ('native' Spark-built
-    #: or 'bloom' sketch-built filter, probed in codegen under the
-    #: cap either way); filter lanes: 'bloom' (the history filter,
-    #: broadcast and probed by a pandas UDF — ``_history_filter_hit``)
+    #: in-call lane: the engine of the candidates' filter ('native'
+    #: Spark-built or 'bloom' sketch-built, probed in codegen under the
+    #: cap either way; a small batch's is built on the driver and reads
+    #: 'native' too); filter lanes: 'bloom' (the history filter,
+    #: broadcast and probed by a pandas UDF — ``_history_filter_hit`` —
+    #: or, for a small batch, probed on the driver)
     engine: str = ""
-    #: in-call lane: why the verify join's auto dispatch degraded to
-    #: the sketch engine (None if it ran native) — the same
+    #: in-call lane: why the candidates' filter's auto dispatch
+    #: degraded to the sketch engine (None if it ran native) — the same
     #: observable-degradation contract as BloomJoinReport /
     #: DecontamReport (VERDICT r4 #3); None in the filter lanes
     engine_fallback_reason: str | None = None
@@ -1165,6 +1179,80 @@ def _history_filter_hit(spark, history_filter, fp: Column) -> Column:
     return _python_probe(spark, history_filter.seal(), _history_hit)(fp)
 
 
+#: id types whose pyarrow ``min`` orders values as Spark's ``min`` does
+#: (no NaN, no collation); a batch keyed otherwise keeps the distributed
+#: lane
+_DRIVER_ID_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DateType)
+
+#: the small-batch lane's row bound.  Its batch collect hashes every
+#: row in ONE task, where the distributed lane's shuffle runs in
+#: parallel: from about 150,000 rows of 100-byte text it saves no wall
+#: time, and at 250,000 it loses (``docs/PLANS.md`` §42)
+_SMALL_DEDUP_ROWS = 1 << 17
+
+
+def _small_batch_dedup(batch, hfp, fp, id_col, fpp, history_filter, report):
+    """The small-batch lane of :func:`incremental_dedup`: the new rows
+    of ``batch``, or None when the batch fails ``_bounded_collect``'s
+    gate at ``_SMALL_DEDUP_ROWS`` or keys its rows by a type outside
+    ``_DRIVER_ID_TYPES``."""
+    dt = batch.schema[id_col].dataType
+    if not (isinstance(dt, _DRIVER_ID_TYPES) or dt == T.StringType()):
+        return None
+    # fingerprints travel as 16 raw bytes, or as the 32-character md5
+    # hex that a history filter hashes (``_history_hit``)
+    width = 16 if history_filter is None else 32
+    tbl = _bounded_collect(batch.select(
+        (F.unhex(fp) if width == 16 else fp).alias("fp"),
+        F.col(id_col).alias("id"), F.xxhash64(fp).alias("h"),
+    ), batch, _SMALL_DEDUP_ROWS)
+    if tbl is None:
+        return None
+    reps = tbl.group_by("fp").aggregate([("id", "min"), ("h", "min")])
+    fps = reps.column("fp")
+    if history_filter is None or not reps.num_rows:
+        cand = np.ones(reps.num_rows, dtype=bool)
+    else:
+        cand = np.asarray(_history_hit(history_filter, fps.to_pandas()), dtype=bool)
+    uniq = np.unique(reps.column("h_min").to_numpy()[cand].view(np.uint64))
+    jrep = BloomJoinReport()
+    mf = membership_filter(hfp, max(16, len(uniq)), fpp, "auto", jrep, hashes=uniq)
+    cross = np.zeros(reps.num_rows, dtype=bool)
+    if cand.any():
+        # the history's fingerprints that pass the candidates' filter
+        # (the candidates in history + ~fpp of its distinct rest), read
+        # in the one history scan as one string; the candidates among
+        # them are exact
+        hits = F.array_join(F.collect_set("__fp"), "")
+        obs = Observation()
+        hfp.where(mf.contains(F.xxhash64("__fp"))).observe(
+            obs, (F.unhex(hits) if width == 16 else hits).alias("hits"),
+        ).write.format("noop").mode("overwrite").save()
+        blob = obs.get["hits"]
+        blob = blob.encode("ascii") if isinstance(blob, str) else bytes(blob)
+        hits = pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(width), len(blob) // width, [None, pa.py_buffer(blob)]
+        )
+        in_hist = pc.is_in(fps.cast(pa.binary(width)), value_set=hits).fill_null(False)
+        cross = cand & in_hist.to_numpy()
+    new_ids = reps.column("id_min").filter(pa.array(~cross)).drop_null()
+    out = batch.join(batch.sparkSession.createDataFrame(
+        pa.table({id_col: new_ids}), T.StructType([batch.schema[id_col]]),
+    ), on=id_col, how="left_semi")
+    if report is not None:
+        if history_filter is None:
+            report.engine = jrep.engine
+            report.engine_fallback_reason = jrep.engine_fallback_reason
+        else:
+            report.engine = "bloom"
+        report.n_batch = tbl.num_rows
+        report.n_within_dups = tbl.num_rows - reps.num_rows
+        report.n_candidates = n_cand = int(cand.sum())
+        report.n_cross_dups = int(cross.sum())
+        report.n_definite_new = reps.num_rows - n_cand
+    return out
+
+
 def incremental_dedup(
     batch: DataFrame,
     history: DataFrame,
@@ -1206,6 +1294,31 @@ def incremental_dedup(
        shuffle instead of its full size.  In the in-call lane that is
        the call's only history scan.
 
+    Small-batch lane: a batch that passes ``bloom_join``'s free
+    plan-stats gate (``_bounded_collect``: at most ``_SMALL_DEDUP_ROWS``
+    rows and ``_SMALL_BUILD_SCAN_BYTES`` by plan stats, no job), whose
+    ids are integral, date or string, runs steps 2–4 on the driver
+    instead, from two bounded reads:
+
+    a. ONE collect (one task) of every batch row's fingerprint (16
+       bytes by ``unhex``; the md5 hex when a history filter is
+       probed), id and JVM ``xxhash64`` of the fingerprint; the min-id
+       groups, the counters and the candidates (every representative,
+       or the history filter's hits, probed on the driver with no
+       pandas stage) come from it;
+    b. the candidates' filter is built on the driver
+       (``membership_filter(..., hashes=)``), and ONE history scan with
+       no exchange probes it in codegen and observes the fingerprints
+       that pass (``collect_set``: the candidates in history plus ~fpp
+       of its distinct rest); with no candidates there is no scan;
+    c. the cross duplicates are exactly the candidates among those
+       fingerprints; the new ids are uploaded (a local relation) and
+       semi-joined back to ``batch``.
+
+    A batch that fails the gate, or whose collect comes back over the
+    row bound (a file scan without CBO has no row count, so its gate
+    reads bytes only), takes the distributed lane above.
+
     The in-call lane (no ``history_filter``, no ``checkpoint_dir``)
     builds its filter over the batch, so it assumes |batch| ≤ |history|
     — the ingest shape above.  For a batch much larger than its
@@ -1217,7 +1330,20 @@ def incremental_dedup(
     |true duplicates|; in the in-call lane, one filtered history scan
     per ingest and no history-sized filter.
     """
-    fp_expr = content_fingerprint(text_col).alias("__fp")
+    fp = content_fingerprint(text_col)
+    fp_expr = fp.alias("__fp")
+    hfp = history.select(fp_expr)
+    if history_filter is not None and report is not None:
+        report.filter_provided = True
+    filtered = history_filter is not None or checkpoint_dir is not None
+    if filtered and history_filter is None:
+        history_filter = build_history_filter(
+            history, text_col, fpp=fpp, checkpoint_dir=checkpoint_dir
+        )
+    out = _small_batch_dedup(batch, hfp, fp, id_col, fpp, history_filter, report)
+    if out is not None:
+        return out
+
     # within-batch: representative (min id) per distinct fingerprint,
     # carrying its group size so the batch row count needs no extra job
     reps = (
@@ -1225,16 +1351,7 @@ def incremental_dedup(
         .groupBy("__fp")
         .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("__n"))
     )
-
-    if history_filter is not None and report is not None:
-        report.filter_provided = True
-
-    filtered = history_filter is not None or checkpoint_dir is not None
     if filtered:
-        if history_filter is None:
-            history_filter = build_history_filter(
-                history, text_col, fpp=fpp, checkpoint_dir=checkpoint_dir
-            )
         reps = reps.withColumn(
             "__hit", _history_filter_hit(batch.sparkSession, history_filter, F.col("__fp"))
         )
@@ -1255,7 +1372,6 @@ def incremental_dedup(
     )
     n_cand = agg["n_cand"]
     cand = probed.filter(F.col("__hit")).drop("__hit", "__n")
-    hfp = history.select(fp_expr)
     verified_new, jrep = bloom_join(
         cand, hfp, on="__fp", how="anti",
         fpp=fpp, force_prefilter=True, collect_metrics=False,

@@ -1099,6 +1099,72 @@ def test_python_probe_results_unchanged(spark, site):
         assert ops == ["ArrowEvalPython"]
 
 
+@pytest.mark.parametrize("lane", ["small", "distributed"])
+def test_incremental_dedup_filter_lanes_match_probe_digest(spark, monkeypatch, lane):
+    """Over cached inputs (a known plan size, so the small lane's gate
+    passes) the provided-filter lane keeps its pinned rows and report in
+    both lanes (the distributed one forced by row bounds of 0).  Only the distributed lane plans the pandas history probe: the
+    small lane probes the filter on the driver."""
+    import sys
+
+    mod = sys.modules[__name__]
+    real = mod._texts
+
+    def cached(spark, rows):
+        df = real(spark, rows).persist()
+        df.count()
+        return df
+
+    monkeypatch.setattr(mod, "_texts", cached)
+    if lane == "distributed":
+        import importlib
+
+        dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+        monkeypatch.setattr(dd, "_SMALL_DEDUP_ROWS", 0)
+        monkeypatch.setattr(_bj_module(), "_SMALL_BUILD_ROWS", 0)
+    site = "incremental_dedup_filter"
+    digest, ops = python_probe_results(spark, [site])[site]
+    assert digest == PYTHON_PROBE_DIGESTS[site]
+    assert ops == ([] if lane == "small" else ["ArrowEvalPython"])
+
+
+def test_small_build_side_of_unknown_size_built_on_driver(spark):
+    """A build side whose plan size is unknown (a Python-local frame)
+    is cached and counted in one job; a count under the small-lane
+    bound brings its keys back from the cache for a driver build.  So a
+    sketch-engine call runs 2 jobs before it returns, no frame it
+    collects holds a Python operator (no ``MapInArrow`` build stage, no
+    tree-merge collect), and the distinct count is exact."""
+    import contextlib
+
+    from bloomjoin_spark.plans import plan_audit
+
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.createDataFrame(
+        [(i, i % 7) for i in range(4_000, 4_800)] + [(4_000, 1)], "id long, vy long"
+    )
+    frame, seen = type(x), []
+    with contextlib.ExitStack() as stack:
+        for name in ("collect", "toArrow", "toPandas"):
+            real_fn = getattr(frame, name)
+
+            def call(self, *a, _real=real_fn, **kw):
+                seen.extend(plan_audit(self).python_operators)
+                return _real(self, *a, **kw)
+
+            setattr(frame, name, call)
+            stack.callback(setattr, frame, name, real_fn)
+        (got, rep), n_jobs = tagged_jobs(spark, lambda: bloom_join(
+            x, y, on="id", engine="bloom", prefilter_side="x", force_prefilter=True,
+            return_report=True,
+        ))
+    assert n_jobs == 2
+    assert seen == []
+    assert (rep.engine, rep.build_partitions, rep.merge_rounds) == ("bloom", 1, 0)
+    assert (rep.n_build, rep.build_distinct_estimate) == (801, 800)
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
 #: Spark jobs of one sizing or history-filter build call, counted by
 #: session tag
 MATERIALIZE_JOBS = {

@@ -551,6 +551,28 @@ def test_decontam_native_build_where_only_spark_size_fits(spark, monkeypatch, ca
     assert sorted(tuple(r) for r in out.collect()) == want
 
 
+@pytest.mark.parametrize("many", [False, True])
+def test_decontam_splits_tokens_once_per_node(spark, many):
+    """A ``words_col`` token column is split once in each plan node that
+    reads it: per document in the probe filter, per candidate in the
+    project under the verify explode.  Filter pushdown used to put the
+    split back into every window of ``ngram_hashes_col``'s lambda (14
+    ``split(`` calls at n=3)."""
+    from bloomjoin_spark.operators import contaminated_docs_many
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    a, b = docs.where(F.col("doc_id") % 29 == 3), docs.where(F.col("doc_id") % 31 == 4)
+    kw = {"n": 3, "corpus_tokens": words_col(F.col("text"))}
+    if many:
+        out = contaminated_docs_many(docs, {"a": a, "b": b}, **kw)
+    else:
+        out = contaminated_docs(docs, a, **kw)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [line for line in plan.splitlines() if "split(" in line]
+    assert [line.count("split(") for line in nodes] == [1, 1]
+    assert "Filter" in nodes[1]
+
+
 #: Spark jobs of a decontam call plus ``collect()`` whose n-gram set is
 #: over the small-lane bound (lowered to 500 rows), counted by session tag
 OVER_BOUND_JOBS = {"parquet_docs_bloom": 7, "parquet_many_bloom": 10}

@@ -409,12 +409,9 @@ def test_incremental_dedup_keeps_only_new(hist_and_batch):
     assert not rep.filter_provided
 
 
-def test_incremental_dedup_job_count(spark, docs):
-    """An in-call ingest builds no history filter: the representatives'
-    checkpoint (its job also yields the counters), the verify join's
-    candidate-side filter (one bounded collect, built on the driver), the
-    verified rows' checkpoint (its job counts them) and one action fit
-    in 8 Spark jobs (20 with a history-side filter).
+def _job_count_call(spark, docs, jobs):
+    """Runs one ``incremental_dedup`` call plus ``collect()`` over a
+    cached batch, checks its rows and report, and returns its jobs.
     The batch avoids ``limit``, whose single-partition exchange would
     add a job of its own."""
     from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
@@ -429,16 +426,51 @@ def test_incremental_dedup_job_count(spark, docs):
         fresh.filter(F.col("doc_id") % 100 == 0)
         .withColumn("doc_id", F.col("doc_id") + 3_000_000)
     )
-    batch = fresh.unionByName(cross).unionByName(within)
+    batch = fresh.unionByName(cross).unionByName(within).persist()
+    batch.count()
     rep = IncrementalDedupReport()
-    kept, n_jobs = tagged_jobs(
-        spark, lambda: incremental_dedup(batch, history, report=rep).select("doc_id").collect()
-    )
-    assert 0 < n_jobs <= 8, n_jobs
+    out = []
+
+    def call():
+        out.append(incremental_dedup(batch, history, report=rep))
+        return out[-1].select("doc_id").collect()
+
+    kept, n_jobs = tagged_jobs(spark, call)
+    if n_jobs != jobs:  # adaptive execution now and then runs one more stage job
+        n_jobs = min(n_jobs, tagged_jobs(spark, call)[1])
+    batch.unpersist()
     assert len(kept) == fresh.count()
     assert rep.n_within_dups == within.count()
     assert rep.n_candidates == rep.n_batch - rep.n_within_dups
     assert rep.n_cross_dups == cross.count()
+    return n_jobs, out[0]
+
+
+def test_incremental_dedup_job_count(spark, docs):
+    """A small cached ingest batch is deduplicated from two bounded
+    reads: one collect of its fingerprints, ids and hashes, and one
+    codegen-probed history scan with no exchange.  With ``collect()``
+    (the broadcast of the uploaded new ids, then the result) that is
+    exactly 4 Spark jobs, and no frame the call plans holds a Python
+    operator."""
+    from bloomjoin_spark.plans import plan_audit
+
+    n_jobs, out = _job_count_call(spark, docs, 4)
+    assert n_jobs == 4
+    assert plan_audit(out).python_operators == []
+
+
+def test_incremental_dedup_distributed_lane_job_count(spark, monkeypatch, docs):
+    """The lane every batch over the small lane's gate takes runs
+    exactly 7 jobs with ``collect()`` on the same batch: the
+    representatives' shuffle-map stage and ``localCheckpoint``, the
+    verify join's key collect, the broadcast of the filtered history,
+    the verified rows' ``localCheckpoint`` and the action's two."""
+    import importlib
+
+    dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+    monkeypatch.setattr(dd, "_small_batch_dedup", lambda *a, **kw: None)
+    assert _job_count_call(spark, docs, 7)[0] == 7
 
 
 def test_incremental_dedup_engine_dispatch(hist_and_batch):
@@ -537,8 +569,9 @@ COUNTER_SITE_DIGESTS = {
 }
 
 
-def _counter_site(spark, site, tmp):
-    """Sorted result rows plus report fields of one ``site`` call."""
+def _counter_site(spark, site, tmp, cached=False):
+    """Sorted result rows plus report fields of one ``site`` call;
+    ``cached`` caches its inputs, so that their plan size is known."""
     from bloomjoin_spark.operators import (
         IncrementalDedupReport,
         build_history_filter,
@@ -550,7 +583,11 @@ def _counter_site(spark, site, tmp):
         return sorted((tuple(r) for r in df.collect()), key=repr)
 
     def texts(rs):
-        return spark.createDataFrame(rs, "doc_id bigint, text string").repartition(3)
+        df = spark.createDataFrame(rs, "doc_id bigint, text string").repartition(3)
+        if cached:
+            df = df.persist()
+            df.count()
+        return df
 
     if site.startswith("clusters"):
         edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (20, 21),
@@ -577,7 +614,7 @@ def _counter_site(spark, site, tmp):
     ))]
 
 
-def counter_site_digests(spark, sites=tuple(COUNTER_SITE_DIGESTS)):
+def counter_site_digests(spark, sites=tuple(COUNTER_SITE_DIGESTS), cached=False):
     """``{site: sha256}`` of ``_counter_site``."""
     import hashlib
     import tempfile
@@ -585,7 +622,7 @@ def counter_site_digests(spark, sites=tuple(COUNTER_SITE_DIGESTS)):
     out = {}
     with tempfile.TemporaryDirectory() as tmp:
         for site in sites:
-            got = _counter_site(spark, site, tmp)
+            got = _counter_site(spark, site, tmp, cached)
             out[site] = hashlib.sha256(repr(got).encode()).hexdigest()
     return out
 
@@ -1000,3 +1037,111 @@ def test_near_dup_jobs_per_call(spark, op):
     if n != NEAR_DUP_JOBS[op]:
         n = min(n, near_dup_jobs(spark, op))
     assert n == NEAR_DUP_JOBS[op]
+
+
+# ---------------------------------------------------------------------------
+# incremental_dedup's two lanes: a small batch on the driver, any other
+# batch distributed; both give the same rows and report
+# ---------------------------------------------------------------------------
+
+def _dedup_lanes(monkeypatch, lane):
+    """Forces ``lane`` ("small" or "distributed": the small lane's and
+    the verify join's row bounds lowered to 0) and returns the list
+    that records, per call, whether the small lane ran."""
+    import importlib
+
+    dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+    if lane == "distributed":
+        bj = importlib.import_module("bloomjoin_spark.operators.bloom_join")
+        monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 0)
+        monkeypatch.setattr(dd, "_SMALL_DEDUP_ROWS", 0)
+    real, ran = dd._small_batch_dedup, []
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        ran.append(out is not None)
+        return out
+
+    monkeypatch.setattr(dd, "_small_batch_dedup", spy)
+    return ran
+
+
+@pytest.mark.parametrize("lane", ["small", "distributed"])
+@pytest.mark.parametrize(
+    "site", [s for s in COUNTER_SITE_DIGESTS if s.startswith("incremental_dedup")]
+)
+def test_incremental_dedup_lanes_match_counter_digests(spark, monkeypatch, site, lane):
+    """Over cached inputs (a known plan size, so the small lane's gate
+    passes) each ``incremental_dedup`` counter site keeps its rows and
+    every report field in both lanes."""
+    ran = _dedup_lanes(monkeypatch, lane)
+    got = counter_site_digests(spark, [site], cached=True)
+    assert got == {site: COUNTER_SITE_DIGESTS[site]}
+    assert ran == [lane == "small"]
+
+
+#: (batch rows, history rows) of each edge case; ids are bigint unless
+#: the case says otherwise
+_EDGE_ROWS = {
+    "null_text": ([(5, None), (3, None), (4, "a"), (6, "b")], [(1, None), (2, "b")]),
+    "null_ids": ([(None, "a"), (None, "b"), (7, "b"), (8, "c"), (None, "d")],
+                 [(1, "d")]),
+    "repeated_ids": ([(1, "x"), (1, "y"), (2, "x"), (3, "z"), (3, "z ")], [(9, "y")]),
+    "string_ids": ([("b9", "x"), ("b10", "x"), ("a", "y"), ("c", "z")], [("h", "z")]),
+    "empty_batch": ([], [(1, "a")]),
+    "empty_history": ([(1, "a"), (2, "A "), (3, "b")], []),
+    "filter_no_candidates": ([(1, "new a"), (2, "new b"), (3, "new a")],
+                             [(10, "old a"), (11, "old b")]),
+    "filter_null_text": ([(5, None), (3, None), (4, "a"), (6, "b")], [(1, None), (2, "b")]),
+}
+
+
+def _edge_call(spark, case):
+    """Sorted rows, report fields and jobs of the ``incremental_dedup``
+    call (no action) of one edge case over cached inputs."""
+    from bloomjoin_spark.operators import (
+        IncrementalDedupReport,
+        build_history_filter,
+        incremental_dedup,
+    )
+
+    schema = f"doc_id {'string' if case == 'string_ids' else 'bigint'}, text string"
+    batch_rows, history_rows = _EDGE_ROWS[case]
+    frames = [spark.createDataFrame(r, schema).repartition(2).persist()
+              for r in (batch_rows, history_rows)]
+    for df in frames:
+        df.count()
+    batch, history = frames
+    kw = {}
+    if case.startswith("filter"):
+        kw["history_filter"] = build_history_filter(history)
+    rep = IncrementalDedupReport()
+    out, n_jobs = tagged_jobs(spark, lambda: incremental_dedup(batch, history, report=rep, **kw))
+    rows = sorted((tuple(r) for r in out.collect()), key=repr)
+    for df in frames:
+        df.unpersist()
+    return rows, vars(rep), n_jobs
+
+
+@pytest.mark.parametrize("case", list(_EDGE_ROWS))
+def test_incremental_dedup_lanes_agree_on_edge_cases(spark, monkeypatch, case):
+    """Null text, null ids, repeated ids, string ids, an empty batch, an
+    empty history, and in a filter lane a batch that misses the filter
+    and null text: the small lane returns the distributed lane's rows
+    and report.  With no candidates it reads no history (one job: the
+    batch collect)."""
+    import importlib
+
+    ran = _dedup_lanes(monkeypatch, "small")
+    small = _edge_call(spark, case)
+    monkeypatch.undo()
+    # the small lane declines: a row bound of 0 would pass an empty batch
+    dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+    monkeypatch.setattr(dd, "_small_batch_dedup", lambda *a, **kw: None)
+    dist = _edge_call(spark, case)
+    assert ran == [True]
+    assert small[:2] == dist[:2]
+    if case == "filter_no_candidates":
+        assert small[1]["n_candidates"] == 0
+        assert small[2] == 1
+
