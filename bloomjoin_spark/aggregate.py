@@ -12,18 +12,13 @@ handling, the set / weighted / per-instance dispatch and the lineage
 fingerprint; :class:`PartialRows` writes every partial row, in Arrow
 or pandas form, and folds them again in the merge.
 
-Every partial stage
-goes through :func:`partial_stage`. A cached input is narrowed
-(``coalesce``, no shuffle) to ⌈plan bytes / ``_PY_TASK_BYTES``⌉ Python
-tasks, because every Python task pays a fixed cost before any
-hashing (the zips on the worker's import path are re-read once per
-worker process, not per task, see ``_worker``; docs/PLANS.md §35);
-its input partition id rides in as a leading ``__pid``
-column, and each task streams its input partitions one after another
-and builds one partial per run of equal ``__pid``, so partials,
-fingerprints and blobs are the same as with one task per partition.
-Any other input (file scans, whose size is only estimated) runs one
-task per input partition.
+Every partial stage goes through :func:`partial_stage`, which narrows
+a filled cache (``coalesce``, no shuffle) to ⌈plan bytes /
+``_PY_TASK_BYTES``⌉ Python tasks, because every Python task pays a
+fixed cost before any hashing (docs/PLANS.md §35), with the same
+partials, fingerprints and blobs as one task per partition.  Any
+other input (file scans, whose bytes are only estimated) runs one task
+per input partition.
 
 Token columns (``token_col``) are flattened zero-copy and collapsed by
 one bincount per batch (:func:`_token_histogram`) into (distinct id,
@@ -78,6 +73,7 @@ from .hashing import (
     hash_tokens_flat,
     hash_utf8_arrow,
 )
+from .plans.sizing import size
 from .sketches.base import Sketch
 from .sketches.bloom import BloomSketch
 
@@ -123,9 +119,6 @@ _ARROW_FAST = _ARROW_NUMERIC | {"string"}
 #: it is re-derived from the verify skill's fixed-cost step.
 _PY_TASK_BYTES = 64 << 20
 
-#: Catalyst's "unknown" sizeInBytes (Long.MaxValue) and anything above it
-_UNKNOWN_SIZE = (1 << 63) - 1
-
 
 def _input_partitions(df: DataFrame) -> int | None:
     """Partition count of ``df``'s physical plan, read without a job;
@@ -136,28 +129,6 @@ def _input_partitions(df: DataFrame) -> int | None:
         return df.rdd.getNumPartitions()
     except Exception:
         return None
-
-
-def _python_tasks(df: DataFrame, n_in: int) -> int:
-    """``min(n_in, ⌈plan sizeInBytes / _PY_TASK_BYTES⌉)`` for a plan
-    that reads only cached relations; ``n_in`` for any other plan and
-    when the stats are unknown or overflow.  A file scan's size is an
-    estimate from default column widths, and merging its splits would
-    merge the scan itself, so it keeps one task per partition."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        leaves = plan.collectLeaves()
-        if any(
-            leaves.apply(i).nodeName() != "InMemoryRelation"
-            for i in range(leaves.size())
-        ):
-            return n_in
-        size = int(plan.stats().sizeInBytes())
-    except Exception:
-        return n_in
-    if size >= _UNKNOWN_SIZE:
-        return n_in
-    return min(n_in, max(1, -(-size // _PY_TASK_BYTES)))
 
 
 def _cut(chunk, lo: int, hi: int, pandas: bool):
@@ -271,9 +242,10 @@ def partial_stage(
     """The one Python stage every sketch-partial build goes through;
     ``build(pid, chunks)`` yields one input partition's partial rows.
 
-    A cached input of ``P`` partitions (and no ``done_ids``) is
-    narrowed (``coalesce``: no shuffle, no extra job) to ``min(P,
-    ⌈plan bytes / _PY_TASK_BYTES⌉)`` Python tasks, with the input
+    A cached input of ``P`` partitions (every leaf a filled cache:
+    ``plans.size``'s ``cached``; and no ``done_ids``) is narrowed
+    (``coalesce``: no shuffle, no extra job) to ``min(P, ⌈plan bytes /
+    _PY_TASK_BYTES⌉)`` Python tasks, with the input
     partition id riding in as a leading ``__pid`` column; every other
     input runs one task per partition, and a resume skips the
     partitions in ``done_ids`` without scanning them.  See
@@ -285,7 +257,9 @@ def partial_stage(
     n_in = _input_partitions(staged)
     n_tasks = n_in
     if n_in and not done_ids:
-        n_tasks = _python_tasks(staged, n_in)
+        sz = size(staged)
+        if sz.cached and sz.bytes is not None:
+            n_tasks = min(n_in, max(1, -(-sz.bytes // _PY_TASK_BYTES)))
     coalesced = n_tasks is not None and n_tasks < n_in
     if coalesced:
         staged = df.select(F.spark_partition_id().alias("__pid"), *keep)

@@ -13,9 +13,10 @@ pipeline, ``R/bloomjoin.R:62-124``):
 2. a build side of at most ``_SMALL_BUILD_ROWS`` rows comes back as
    hashes in ONE bounded collect: exact distinct count, filter built on
    the driver (the reference's one pass, ``src/BloomFilter.cpp:102-118``),
-   under either engine and with or without ``n_hint``.  One whose plan
-   size is unknown is cached and counted first, and comes back from the
-   cache when the count is that small.  A larger one is built by Spark's
+   under either engine and with or without ``n_hint``.  The gate reads
+   the side's ``plans.size`` bound; one whose row count is not bounded
+   there is cached and counted first, and comes back from the cache
+   when the count is that small.  A larger one is built by Spark's
    ``stat.bloomFilter`` (native engine) or streams once through
    ``mapInArrow``, one Bloom partial per partition, partials tree-merged
    by OR (sketch engine);
@@ -43,6 +44,7 @@ parity: ``R/bloomjoin.R:266-322``).
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
@@ -52,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..aggregate import build_sketch
 from ..plans.planner import (
+    MIN_PROBE_BYTES,
     BloomJoinReport,
     choose_prefilter_target,
     normalize_how,
@@ -60,6 +63,7 @@ from ..plans.planner import (
     spark_how,
     validate_join_inputs,
 )
+from ..plans.sizing import Size, size
 from ..sketches.bloom import BloomSketch, bloom_sizing, spark_sizing
 
 #: probe-side sample size for the selectivity estimate — the reference's
@@ -78,13 +82,10 @@ _BROADCAST_BUDGET_BYTES = 512 << 20
 _NATIVE_FILTER_CAP_BYTES = 16 << 20
 
 #: exact-sizing bound: a build side of at most this many rows comes
-#: back as 8-byte key hashes (≤ 32 MiB) in one bounded collect instead
-#: of a persist + approximate-distinct pass + distributed build
+#: back as 8-byte key hashes (≤ 32 MiB) in one bounded one-task collect
+#: (``Size.collectable``) instead of a persist + approximate-distinct
+#: pass + distributed build
 _SMALL_BUILD_ROWS = 1 << 22
-
-#: that collect runs in ONE task: a build side whose plan size estimate
-#: is unknown or over one default input split keeps the parallel lane
-_SMALL_BUILD_SCAN_BYTES = 128 << 20
 
 #: once-per-session latch for the native→sketch fallback warning (the
 #: per-call record lives in BloomJoinReport.engine_fallback_reason)
@@ -280,15 +281,17 @@ def membership_filter(
     try:
         if engine == "native":
             try:
-                # n is known: check the cap before building, and after
-                _check_native_cap(_native_filter_bytes(n, fpp), "predicted")
+                # n is known: check cap and clamp before building, and after
                 if hashes is None:
+                    _check_native_cap(_native_filter_bytes(keyed.sparkSession, n, fpp),
+                                      "predicted")
                     blob = _native_build_filter(keyed, n, fpp)
                     _check_native_cap(len(blob), "serialized")
                 elif _spark_blob_bytes(bloom_sizing(n, fpp)[0]) > _NATIVE_FILTER_CAP_BYTES:
                     # the driver's power-of-two size, up to twice Spark's,
-                    # misses the cap where Spark's fits: build Spark's
+                    # misses the cap where Spark's may fit: build Spark's
                     # filter on the driver, with no build job
+                    _check_native_cap(_spark_blob_bytes(spark_sizing(n, fpp)[0]), "predicted")
                     sk = BloomSketch.spark_sized(n, fpp)
                     sk.update_hashes(hashes)
                     blob = sk.to_spark_bytes()
@@ -405,15 +408,13 @@ def bloom_join(
     report = BloomJoinReport(join_type=how, fpr=fpp)
 
     # ---- side guard (O18) -------------------------------------------
-    # inner + auto: filter the LARGER side by Catalyst plan stats (free,
-    # no job) — the analog of the reference's density rule
+    # inner + auto: filter the LARGER side by plan bytes (free, no job;
+    # unknown is larger) — the analog of the reference's density rule
     # (R/bloomjoin.R:367-376): the big side gains the most from being
     # filtered, the small side makes the cheapest filter.
     n_x = n_y = None
     if how == "inner" and prefilter_side == "auto":
-        bx, by = _plan_size_bytes(x), _plan_size_bytes(y)
-        if bx is not None and by is not None and bx != by:
-            n_x, n_y = bx, by
+        n_x, n_y = (math.inf if s.bytes is None else s.bytes for s in (size(x), size(y)))
     target, override = choose_prefilter_target(how, prefilter_side, n_x=n_x, n_y=n_y)
     report.override_requested_side = override
     n_hints = _normalize_n_hint(n_hint)
@@ -427,24 +428,19 @@ def bloom_join(
         build_cols = [p[1] for p in pairs] if target == "x" else [p[0] for p in pairs]
         probe_cols = [p[0] for p in pairs] if target == "x" else [p[1] for p in pairs]
         build_name = "y" if target == "x" else "x"
+        build_size = size(build_df)
 
-        # ---- Spark-specific gates, both free (plan-stats sizeInBytes,
-        # no job runs — parquet footers / in-memory relation stats):
-        # 1. broadcast gate: if Catalyst would broadcast the build side
-        #    anyway, a broadcast-hash join already avoids the probe
-        #    shuffle and the prefilter only adds passes (SURVEY.md §4.1
-        #    "cost-based skip" re-tuned for Spark);
-        # 2. probe floor: a probe side under MIN_PROBE_BYTES shuffles
-        #    less than the prefilter's fixed decision/build jobs cost —
-        #    the reference's probe_rows < 1024 gate (R/bloomjoin.R:385-
-        #    387) re-expressed on Catalyst's free size signal.
-        #    min_probe_bytes=0 disables; None → planner.MIN_PROBE_BYTES.
+        # ---- Spark-specific gates, both on free plan bytes: a build
+        # side Catalyst would broadcast anyway (SURVEY.md §4.1), and a
+        # probe side under the floor, whose shuffle costs less than the
+        # prefilter's fixed jobs (the reference's probe_rows < 1024
+        # gate, R/bloomjoin.R:385-387)
         if not force_prefilter:
             floor = _resolve_min_probe_bytes(x.sparkSession, min_probe_bytes)
             skip_reasons = should_skip_prefilter(
-                build_bytes_estimate=_plan_size_bytes(build_df),
+                build_bytes_estimate=build_size.bytes,
                 broadcast_threshold=_broadcast_threshold(x.sparkSession),
-                probe_bytes_estimate=_plan_size_bytes(probe_df) if floor else None,
+                probe_bytes_estimate=size(probe_df).bytes if floor else None,
                 min_probe_bytes=floor or None,
             )
 
@@ -460,8 +456,8 @@ def bloom_join(
             _key64(build_df, build_cols, casts).alias("__bj_key64")
         )
         build_keyed, report.n_build, build_distinct, n_build, small = _size_build(
-            build_df, build_keyed, exact=checkpoint_dir is None,
-            n_hint=n_hints.get(build_name),
+            build_keyed, build_size, n_hint=n_hints.get(build_name),
+            driver_build=checkpoint_dir is None,
         )
         report.build_distinct_estimate = build_distinct
         if not force_prefilter:
@@ -591,10 +587,22 @@ def _note_native_fallback(report, ex: Exception, forced: bool) -> None:
         )
 
 
-def _native_filter_bytes(n: int, fpp: float) -> int:
-    """Serialized size of Spark's ``BloomFilter.create(n, fpp)``, known
-    before the build."""
-    return _spark_blob_bytes(spark_sizing(n, fpp)[0])
+def _native_filter_bytes(spark, n: int, fpp: float) -> int:
+    """Serialized size of ``stat.bloomFilter(col, n, fpp)``'s filter,
+    known before the build.  Raises where its clamps (bits to
+    ``runtime.bloomFilter.maxNumBits``, the hash count's key count to
+    ``maxNumItems``) would build a worse fpp than asked."""
+    conf = "spark.sql.optimizer.runtime.bloomFilter."
+    max_bits = int(spark.conf.get(conf + "maxNumBits"))
+    max_items = int(spark.conf.get(conf + "maxNumItems"))
+    bits = spark_sizing(n, fpp)[0]
+    if bits > 64 * -(-max_bits // 64) or n > max_items:
+        raise RuntimeError(
+            f"stat.bloomFilter would clamp the filter for {n:,} keys at fpp={fpp} "
+            f"({bits:,} bits) to maxNumBits={max_bits:,} / maxNumItems={max_items:,}, "
+            "so its fpp would be worse than asked"
+        )
+    return _spark_blob_bytes(bits)
 
 
 def _check_native_cap(n_bytes: int, what: str) -> None:
@@ -608,63 +616,50 @@ def _check_native_cap(n_bytes: int, what: str) -> None:
         )
 
 
-def _bounded_collect(df: DataFrame, gate: DataFrame, max_rows: int):
+def _bounded_collect(df: DataFrame, size: Size, max_rows: int):
     """``df``'s rows as one Arrow table from ONE early-terminating
-    collect (one job, one JVM task), or None.  It runs only when
-    ``gate``'s free plan stats (no job) put it at most ``max_rows``
-    rows and ``_SMALL_BUILD_SCAN_BYTES``; a collect that comes back
-    over ``max_rows`` is None too.  A plan with no row count (a file
-    scan without CBO) passes on its bytes alone, so the collect stops
-    after ``max_rows + 1`` rows: that bounds the work thrown away."""
-    try:  # free plan stats, no job
-        st = gate._jdf.queryExecution().optimizedPlan().stats()
-        rows = int(st.rowCount().get()) if st.rowCount().isDefined() else 0
-        small = rows <= max_rows and (
-            int(st.sizeInBytes()) <= _SMALL_BUILD_SCAN_BYTES
-        )
-    except Exception:
-        small = False
-    if not small:
+    collect (one job, one JVM task) when ``size`` (of ``df`` or the
+    frame it projects) is ``collectable``, else None.  Only a frame
+    whose rows have no bound can come back over ``max_rows`` (then
+    None too); the collect stops at ``max_rows + 1`` rows."""
+    if not size.collectable(max_rows):
         return None
     tbl = df.coalesce(1).limit(max_rows + 1).toArrow()
     return tbl if tbl.num_rows <= max_rows else None
 
 
-def _size_build(build_df: DataFrame, build_keyed: DataFrame, exact: bool = True,
-                n_hint: int | None = None):
-    """``(keyed, rows, distinct, n, hashes)`` of a build side, ``n``
-    sizing the filter.  When ``exact``, a build side that passes the
-    plan-stats gate comes back in ONE bounded collect
-    (``_bounded_collect``) whose unique ``hashes`` count its keys
-    exactly, hinted or not.  Otherwise an ``n_hint`` sizes it
-    (``rows`` = the hint, ``distinct`` None), or ``keyed`` is persisted
-    and one aggregate (partial-aggregated HLL, no wide shuffle) counts
-    it in the job that caches it (``_materialize``).  A cached build
-    side of at most ``_SMALL_BUILD_ROWS`` rows (when ``exact``) then
-    still comes back as exact ``hashes``, collected from the cache, for
-    a driver build; a larger one is sized by the estimate for the
-    distributed build."""
-    tbl = _bounded_collect(build_keyed, build_df, _SMALL_BUILD_ROWS) if exact else None
+def _size_build(keyed: DataFrame, size: Size | None, n_hint: int | None = None,
+                driver_build: bool = True):
+    """``(keyed, rows, distinct, n, hashes)`` of a build side's keys,
+    ``n`` sizing the filter and ``size`` the side's.  With
+    ``driver_build``, keys that ``_bounded_collect`` takes come back as
+    exact unique ``hashes``, hinted or not.  Otherwise an ``n_hint``
+    sizes them (``distinct`` None), or ``keyed`` is persisted and
+    counted (rows, HLL distinct) in the job that caches it; a count of
+    at most ``_SMALL_BUILD_ROWS`` (with ``driver_build``) then comes
+    back from the cache as exact ``hashes``.  ``driver_build=False``
+    keeps the build off the driver: a resumable ``checkpoint_dir``
+    build, the history filter's Python-domain hashes."""
+    tbl = _bounded_collect(keyed, size, _SMALL_BUILD_ROWS) if driver_build else None
     if tbl is None and n_hint is not None:
-        return build_keyed, n_hint, None, n_hint, None
+        return keyed, n_hint, None, n_hint, None
     if tbl is None:
-        build_keyed, stats = _materialize(
-            build_keyed,
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(build_keyed.columns[0], 0.02).alias("d"),
-            persist=True,
+        keyed, stats = _materialize(
+            keyed, F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(keyed.columns[0], 0.02).alias("d"), persist=True,
         )
-        if not exact or stats["n"] > _SMALL_BUILD_ROWS:
+        try:
+            if driver_build:
+                tbl = _bounded_collect(keyed, Size.observed(stats["n"]), _SMALL_BUILD_ROWS)
+        except BaseException:
+            keyed.unpersist()
+            raise
+        if tbl is None:
             d = int(stats["d"])
             # 1.05 margin absorbs the ±2% rsd so the fpp target holds
-            return build_keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
-        try:
-            tbl = build_keyed.toArrow()
-        except BaseException:
-            build_keyed.unpersist()
-            raise
+            return keyed, int(stats["n"]), d, max(16, int(d * 1.05)), None
     uniq = np.unique(tbl.column(0).to_numpy().view(np.uint64))
-    return build_keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
+    return keyed, tbl.num_rows, len(uniq), max(16, len(uniq)), uniq
 
 
 def _materialize(df: DataFrame, *counters: Column, persist: bool = False):
@@ -736,14 +731,6 @@ def _standard_join(x: DataFrame, y: DataFrame, pairs, how: str) -> DataFrame:
     return x.join(y, on=cond, how=sh)
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst plan-stats size estimate (bytes); None if unavailable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
 _BYTE_SUFFIX = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
                 "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
                 "tb": 1 << 40}
@@ -763,41 +750,28 @@ def _parse_byte_string(raw: str) -> int:
 
 
 def _resolve_min_probe_bytes(spark, param: int | None) -> int:
-    """Probe-floor resolution: explicit param → session conf
-    ``spark.bloomjoin.minProbeBytes`` (accepts Spark byte strings like
-    "128m"; "0" disables) → planner.MIN_PROBE_BYTES default.  A SET
-    conf that fails to parse raises — silently substituting the
-    default would make the planner contradict explicit operator
-    config."""
-    from ..plans.planner import MIN_PROBE_BYTES
-
+    """Probe floor: ``param``, else the session conf
+    ``spark.bloomjoin.minProbeBytes`` (a Spark byte string like "128m";
+    "0" disables; one that fails to parse raises, never silently
+    replaced by the default), else planner.MIN_PROBE_BYTES."""
     if param is not None:
         return int(param)
+    raw = spark.conf.get("spark.bloomjoin.minProbeBytes", None)
+    if raw is None:
+        return MIN_PROBE_BYTES
     try:
-        raw = spark.conf.get("spark.bloomjoin.minProbeBytes", None)
-    except Exception:
-        raw = None  # conf API itself unavailable → default
-    if raw is not None:
-        try:
-            return _parse_byte_string(raw)
-        except ValueError as ex:
-            raise ValueError(
-                f"spark.bloomjoin.minProbeBytes={raw!r} is not a valid byte "
-                "string (examples: '0', '256m', '2g')"
-            ) from ex
-    return MIN_PROBE_BYTES
+        return _parse_byte_string(raw)
+    except ValueError as ex:
+        raise ValueError(
+            f"spark.bloomjoin.minProbeBytes={raw!r} is not a valid byte "
+            "string (examples: '0', '256m', '2g')"
+        ) from ex
 
 
 def _broadcast_threshold(spark) -> int | None:
     """autoBroadcastJoinThreshold in bytes; None when disabled (-1)."""
-    try:
-        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        thr = int(
-            spark.sparkContext._jvm.org.apache.spark.util.Utils.byteStringAsBytes(raw)
-        )
-        return thr if thr > 0 else None
-    except Exception:
-        return None
+    thr = _parse_byte_string(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    return thr if thr > 0 else None
 
 
 def _normalize_n_hint(n_hint) -> dict:

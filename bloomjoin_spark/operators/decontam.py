@@ -8,10 +8,11 @@ appendix C / PaLM-style 8-gram overlap decontamination):
 
 1. the benchmark side's distinct n-grams are small — build a Bloom
    filter over their 64-bit hashes, sized like ``bloom_join``'s build
-   side (``_size_build``) but gated on their exact count: a small set
-   comes back as hashes in one bounded collect and is built on the
-   driver, a larger one by one treeAggregate / one JVM
-   ``stat.bloomFilter`` job — never collected as raw n-grams;
+   side (``_size_build``) from the exact count of the job that
+   materializes them (``Size.observed``): a small set comes back as
+   hashes in one bounded collect and is built on the driver, a larger
+   one by one treeAggregate / one JVM ``stat.bloomFilter`` job — never
+   collected as raw n-grams;
 2. each corpus document computes ONE window-hash array over its
    tokens (``ngram_hashes_col``: a single ``transform`` whose element
    is the variadic ``xxhash64(arr[i..i+n−1])`` — no gram arrays, no
@@ -38,7 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bloom_join import _SMALL_BUILD_ROWS, _materialize, _size_build, membership_filter
+from ..plans.sizing import Size
+from .bloom_join import _materialize, _size_build, membership_filter
 from .text import words_col  # canonical tokenization (re-exported)
 
 _NG = "__bj_ng"
@@ -152,6 +154,12 @@ def _resolve_col(df: DataFrame, col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _grams(bench: DataFrame, tokens: Column | str, n: int) -> DataFrame:
+    """The distinct token ``n``-grams of ``bench``, one per ``_NG`` row."""
+    grams = ngrams_col(_resolve_col(bench, tokens), n)
+    return bench.select(F.explode(grams).alias(_NG)).distinct()
+
+
 def _probe_docs(mf, n: int) -> Column:
     """Per-document ANY of ``mf`` over the ``n``-gram window hashes of
     ``__bj_toks``.  Filter pushdown substitutes the token column's
@@ -167,6 +175,44 @@ def _probe_docs(mf, n: int) -> Column:
         if mf.codegen:  # no private-API drift while building it
             return pred
     return mf.any_in(ngram_hashes_col(toks, n))
+
+
+def _flagged(corpus, ccol, id_col, grams, n_rows, n_distinct, n, fpp, engine, report,
+             empty_note, *by) -> DataFrame:
+    """``(id_col, *by, n_hits)`` of the ``corpus`` documents sharing an
+    ``n``-gram with ``grams`` (``_NG`` and ``by`` columns, ``n_rows``
+    rows holding ``n_distinct`` grams, counted by the job that
+    materialized it): the one build, probe and verify path of both
+    decontam operators."""
+    if n_distinct == 0:
+        report.engine = "none"
+        report.notes.append(empty_note)
+        return corpus.select(F.col(id_col), *[F.lit("").alias(c) for c in by],
+                             F.lit(0).cast("bigint").alias("n_hits")).where(F.lit(False))
+    # the ladder hash of a single n-gram array == the doc-ladder hash
+    # at that gram's position, so the build side hashes its (distinct,
+    # small) gram set while the corpus never materializes a gram
+    keyed, _, _, _, small = _size_build(grams.select(
+        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
+    ), Size.observed(n_rows), n_hint=n_distinct)
+
+    # corpus side: ONE rolling-hash ladder per document (O(n·L) long
+    # ops, zero gram-array allocations), probed per document with a
+    # short-circuiting ANY — no explode, so the row count through the
+    # probe stage is |corpus|, not |corpus|·L.  Only id + tokens are
+    # selected, so column pruning still reaches parquet.
+    base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
+    mf = membership_filter(keyed, n_distinct, fpp, engine, report, hashes=small)
+
+    # candidate docs ≈ contaminated + per-DOC false positives (each doc
+    # probes ~L grams, so doc-level fp ≈ L·fpp — hence the low default
+    # fpp); only candidates materialize their gram arrays for the EXACT
+    # verify join, so the output has no false positives at all and the
+    # verify cost is proportional to true contamination
+    hits = base.where(_probe_docs(mf, n)).select(
+        F.col(id_col), F.explode(ngrams_col(F.col("__bj_toks"), n)).alias(_NG)
+    ).join(grams, on=_NG, how="inner")
+    return hits.groupBy(id_col, *by).agg(F.count_distinct(_NG).alias("n_hits"))
 
 
 def contaminated_docs(
@@ -203,56 +249,18 @@ def contaminated_docs(
     """
     if engine not in ("auto", "native", "bloom"):
         raise ValueError(f"unknown engine {engine!r}")
-    bcol = _resolve_col(bench, bench_tokens if bench_tokens is not None else corpus_tokens)
     ccol = _resolve_col(corpus, corpus_tokens)
     report = DecontamReport(n=n)
 
     # benchmark n-gram set: distinct, consumed twice (the filter build,
     # the verify join) → one materialization point, whose job also
-    # counts it exactly.  The small lane's gate reads that count:
-    # Catalyst's size estimate cannot see the explode's expansion
-    bench_ngs, counts = _materialize(
-        bench.select(F.explode(ngrams_col(bcol, n)).alias(_NG)).distinct(),
-        F.count(F.lit(1)).alias("n"),
-    )
+    # counts it exactly
+    bench_tokens = corpus_tokens if bench_tokens is None else bench_tokens
+    bench_ngs, counts = _materialize(_grams(bench, bench_tokens, n), F.count(F.lit(1)).alias("n"))
     n_bench = int(counts["n"])
     report.n_bench_ngrams = n_bench
-    out_schema_src = corpus.select(
-        F.col(id_col), F.lit(0).cast("bigint").alias("n_hits")
-    )
-    if n_bench == 0:
-        report.engine = "none"
-        report.notes.append("benchmark side has no n-grams; nothing to flag")
-        empty = out_schema_src.where(F.lit(False))
-        return (empty, report) if return_report else empty
-
-    # the ladder hash of a single n-gram array == the doc-ladder hash
-    # at that gram's position, so the build side hashes its (distinct,
-    # small) gram set while the corpus never materializes a gram
-    keyed, _, _, _, small = _size_build(bench_ngs, bench_ngs.select(
-        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    ), exact=n_bench <= _SMALL_BUILD_ROWS, n_hint=n_bench)
-
-    # corpus side: ONE rolling-hash ladder per document (O(n·L) long
-    # ops, zero gram-array allocations), probed per document with a
-    # short-circuiting ANY — no explode, so the row count through the
-    # probe stage is |corpus|, not |corpus|·L.  Only id + tokens are
-    # selected, so column pruning still reaches parquet.
-    base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
-    cand_pred = _probe_docs(
-        membership_filter(keyed, n_bench, fpp, engine, report, hashes=small), n
-    )
-
-    # candidate docs ≈ contaminated + per-DOC false positives (each doc
-    # probes ~L grams, so doc-level fp ≈ L·fpp — hence the low default
-    # fpp); only candidates materialize their gram arrays for the EXACT
-    # verify join, so the output has no false positives at all and the
-    # verify cost is proportional to true contamination
-    cand = base.where(cand_pred)
-    hits = cand.select(
-        F.col(id_col), F.explode(ngrams_col(F.col("__bj_toks"), n)).alias(_NG)
-    ).join(bench_ngs, on=_NG, how="inner")
-    out = hits.groupBy(id_col).agg(F.count_distinct(_NG).alias("n_hits"))
+    out = _flagged(corpus, ccol, id_col, bench_ngs, n_bench, n_bench, n, fpp, engine,
+                   report, "benchmark side has no n-grams; nothing to flag")
     return (out, report) if return_report else out
 
 
@@ -305,28 +313,18 @@ def contaminated_docs_many(
     report = DecontamReport(n=n)
 
     tagged = None
+    bench_tokens = corpus_tokens if bench_tokens is None else bench_tokens
     for name, bench in benches.items():
-        bcol = _resolve_col(
-            bench, bench_tokens if bench_tokens is not None else corpus_tokens
-        )
-        t = (
-            bench.select(F.explode(ngrams_col(bcol, n)).alias(_NG))
-            .distinct()
-            .withColumn(suite_col, F.lit(str(name)))
-        )
+        t = _grams(bench, bench_tokens, n).withColumn(suite_col, F.lit(str(name)))
         tagged = t if tagged is None else tagged.unionByName(t)
     # one materialization point: the (suite, gram) table feeds the
     # suite/union counts, the filter build, and the verify join —
     # without it every branch re-explodes every suite
     tagged = tagged.localCheckpoint(eager=False)
     # ONE rollup job yields the per-suite sizes AND the exact
-    # distinct-union count (the NULL-suite total row): suite labels are
-    # never NULL (F.lit(str(name))), so the total row is unambiguous.
-    # This replaces a groupBy-collect job plus a separate
-    # distinct→checkpoint→count chain — the union gram frame itself is
-    # unnecessary, because duplicate inserts are no-ops for a Bloom
-    # filter (both engines), so the build below runs straight over the
-    # checkpointed tagged table.
+    # distinct-union count (the NULL-suite total row; suite labels are
+    # never NULL).  No union gram frame: a duplicate insert is a no-op
+    # for a Bloom filter, so the build runs over the tagged table.
     count_rows = (
         tagged.rollup(suite_col)
         .agg(
@@ -346,36 +344,8 @@ def contaminated_docs_many(
         (int(r["cnt_d"]) for r in count_rows if r[suite_col] is None), 0
     )
     report.n_bench_ngrams = n_union
-
-    out_schema_src = corpus.select(
-        F.col(id_col),
-        F.lit("").alias(suite_col),
-        F.lit(0).cast("bigint").alias("n_hits"),
-    )
-    if n_union == 0:
-        report.engine = "none"
-        report.notes.append("no suite has any n-grams; nothing to flag")
-        empty = out_schema_src.where(F.lit(False))
-        return (empty, report) if return_report else empty
-
-    # a small union comes back as its distinct hashes for a driver
-    # build; a larger one is sized by the rollup's exact count.  The
-    # gate reads the rollup's row count: Catalyst's size estimate
-    # cannot see the explode's expansion
-    keyed, _, _, _, small = _size_build(tagged, tagged.select(
-        F.element_at(ngram_hashes_col(F.col(_NG), n), 1).alias("__bj_key64")
-    ), exact=sum(suite_sizes.values()) <= _SMALL_BUILD_ROWS, n_hint=n_union)
-    base = corpus.select(F.col(id_col), ccol.alias("__bj_toks"))
-    cand_pred = _probe_docs(
-        membership_filter(keyed, n_union, fpp, engine, report, hashes=small), n
-    )
-    cand = base.where(cand_pred)
-    hits = cand.select(
-        F.col(id_col), F.explode(ngrams_col(F.col("__bj_toks"), n)).alias(_NG)
-    ).join(tagged, on=_NG, how="inner")
-    out = hits.groupBy(id_col, suite_col).agg(
-        F.count_distinct(_NG).alias("n_hits")
-    )
+    out = _flagged(corpus, ccol, id_col, tagged, sum(suite_sizes.values()), n_union, n,
+                   fpp, engine, report, "no suite has any n-grams; nothing to flag", suite_col)
     return (out, report) if return_report else out
 
 

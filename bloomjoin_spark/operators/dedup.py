@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Observation, functions as F, types as
 
 from ..hashing import splitmix64
 from ..plans.planner import BloomJoinReport
+from ..plans.sizing import size
 from .bloom_join import (
     _bounded_collect,
     _materialize,
@@ -1141,7 +1142,7 @@ def build_history_filter(
     from ..sketches import BloomSketch
 
     fps = history.select(content_fingerprint(text_col).alias("__fp"))
-    fps, rows, distinct, n, _ = _size_build(fps, fps, exact=False, n_hint=n_hint)
+    fps, rows, distinct, n, _ = _size_build(fps, None, n_hint, driver_build=False)
     n = max(int(n), 16)
     try:
         if (rows if distinct is None else distinct) == 0:
@@ -1205,7 +1206,7 @@ def _small_batch_dedup(batch, hfp, fp, id_col, fpp, history_filter, report):
     tbl = _bounded_collect(batch.select(
         (F.unhex(fp) if width == 16 else fp).alias("fp"),
         F.col(id_col).alias("id"), F.xxhash64(fp).alias("h"),
-    ), batch, _SMALL_DEDUP_ROWS)
+    ), size(batch), _SMALL_DEDUP_ROWS)
     if tbl is None:
         return None
     reps = tbl.group_by("fp").aggregate([("id", "min"), ("h", "min")])
@@ -1294,30 +1295,18 @@ def incremental_dedup(
        shuffle instead of its full size.  In the in-call lane that is
        the call's only history scan.
 
-    Small-batch lane: a batch that passes ``bloom_join``'s free
-    plan-stats gate (``_bounded_collect``: at most ``_SMALL_DEDUP_ROWS``
-    rows and ``_SMALL_BUILD_SCAN_BYTES`` by plan stats, no job), whose
-    ids are integral, date or string, runs steps 2–4 on the driver
-    instead, from two bounded reads:
-
-    a. ONE collect (one task) of every batch row's fingerprint (16
-       bytes by ``unhex``; the md5 hex when a history filter is
-       probed), id and JVM ``xxhash64`` of the fingerprint; the min-id
-       groups, the counters and the candidates (every representative,
-       or the history filter's hits, probed on the driver with no
-       pandas stage) come from it;
-    b. the candidates' filter is built on the driver
-       (``membership_filter(..., hashes=)``), and ONE history scan with
-       no exchange probes it in codegen and observes the fingerprints
-       that pass (``collect_set``: the candidates in history plus ~fpp
-       of its distinct rest); with no candidates there is no scan;
-    c. the cross duplicates are exactly the candidates among those
-       fingerprints; the new ids are uploaded (a local relation) and
-       semi-joined back to ``batch``.
-
-    A batch that fails the gate, or whose collect comes back over the
-    row bound (a file scan without CBO has no row count, so its gate
-    reads bytes only), takes the distributed lane above.
+    Small-batch lane (``_small_batch_dedup``): a batch that passes
+    ``bloom_join``'s free collect gate over its ``plans.size`` (at most
+    ``_SMALL_DEDUP_ROWS`` rows, no job; a parquet batch is bounded by
+    its footers), whose ids are integral, date or string, runs steps
+    2–4 on the driver from two bounded reads: ONE collect of every
+    row's fingerprint, id and JVM ``xxhash64`` (groups, counters and
+    candidates come from it; a history filter is probed there), and
+    ONE codegen-probed history scan with no exchange that observes the
+    fingerprints passing the candidates' filter, so the cross
+    duplicates are exact; the new ids are uploaded and semi-joined
+    back to ``batch``.  A batch that fails the gate, or whose collect
+    comes back over the bound, takes the distributed lane above.
 
     The in-call lane (no ``history_filter``, no ``checkpoint_dir``)
     builds its filter over the batch, so it assumes |batch| ≤ |history|

@@ -6,10 +6,13 @@ from .planner import (
     should_skip_prefilter,
     validate_join_inputs,
 )
+from .sizing import Size, size
 
 __all__ = [
     "PlanAudit",
     "plan_audit",
+    "Size",
+    "size",
     "BloomJoinReport",
     "choose_prefilter_target",
     "resolve_join_columns",

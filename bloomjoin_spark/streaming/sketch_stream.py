@@ -105,8 +105,10 @@ def session_counts(
     still merges; a strictly greater gap opens a new session — so a
     bounded stream's output row-equals the batch operator's
     ``session_stats`` on (key, session_start, n_events, last_ts), and
-    batch boundaries can never change the result (the state store
-    merges adjacent windows across batches).
+    batch boundaries do not change the result (the state store merges
+    adjacent windows across batches) unless a row arrives behind the
+    ``watermark``: a late row is dropped, so the result then depends
+    on the order in which rows arrive.
     """
     return (
         stream.withWatermark(ts_col, watermark)
@@ -171,6 +173,7 @@ def bloom_join_stream(
         membership_filter,
     )
     from ..plans.planner import normalize_how, resolve_join_columns
+    from ..plans.sizing import size
 
     how = normalize_how(how)
     if how not in ("inner", "semi"):
@@ -185,7 +188,7 @@ def bloom_join_stream(
         _key64(static, [p[1] for p in pairs], casts).alias("__bj_key64")
     )
     # a small static side is sized exactly and built on the driver
-    build_keyed, _, _, n, small = _size_build(static, build_keyed, n_hint=n_hint)
+    build_keyed, _, _, n, small = _size_build(build_keyed, size(static), n_hint=n_hint)
     mf = membership_filter(build_keyed, n, fpp, "bloom", None, hashes=small)
     hit = mf.contains(_key64(stream, [p[0] for p in pairs], casts))
     return _standard_join(stream.filter(hit), static, pairs, how)

@@ -738,13 +738,45 @@ def test_native_cap_checked_before_build(spark, monkeypatch):
     assert_df_equal(got, x.join(y, "id", "inner"))
 
 
+def test_native_clamp_predicted_before_build(spark, monkeypatch):
+    """A Spark build that ``runtime.bloomFilter.maxNumBits`` would clamp
+    never runs: the call falls back to the sketch engine, records why,
+    and builds the filter at the size its fpp asks for."""
+    from bloomjoin_spark.sketches.bloom import bloom_sizing
+
+    bj = _bj_module()
+    calls = []
+    real_build = bj._native_build_filter
+    monkeypatch.setattr(bj, "_native_build_filter",
+                        lambda *a: calls.append(a) or real_build(*a))
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 100)
+    monkeypatch.setattr(bj, "_native_fallback_warned", False)
+    x = spark.range(0, 8_000).withColumn("vx", F.col("id") * 2)
+    y = spark.range(4_000, 4_800).withColumn("vy", F.col("id") * 3)
+    conf = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    spark.conf.set(conf, "4096")  # Spark's own size for 800 keys is 7,680 bits
+    try:
+        with pytest.warns(UserWarning, match="would clamp"):
+            got, rep = bloom_join(
+                x, y, on="id", engine="native", force_prefilter=True,
+                n_hint={"y": 800}, return_report=True,
+            )
+    finally:
+        spark.conf.unset(conf)
+    assert calls == []
+    assert rep.engine == "bloom" and rep.used_prefilter
+    assert "maxNumBits=4,096" in rep.engine_fallback_reason
+    assert rep.filter_bits == bloom_sizing(800, 0.01)[0] > 4096
+    assert_df_equal(got, x.join(y, "id", "inner"))
+
+
 def test_native_filter_size_prediction_matches_spark(spark):
     """The pre-build prediction is the serialized size Spark produces."""
     bj = _bj_module()
     keyed = spark.range(0, 1_000).select(F.xxhash64("id").alias("__bj_key64"))
     for n, fpp in [(16, 0.01), (1_000, 0.01), (50_000, 1e-4)]:
         blob = bj._native_build_filter(keyed, n, fpp)
-        assert bj._native_filter_bytes(n, fpp) == len(blob)
+        assert bj._native_filter_bytes(spark, n, fpp) == len(blob)
 
 
 def test_sizing_persist_released_when_build_raises(spark, monkeypatch):
@@ -1176,8 +1208,8 @@ MATERIALIZE_JOBS = {
 
 
 def materialize_jobs(spark, site):
-    """Jobs of one ``site`` call: ``_size_build``'s distributed lane (a
-    build side with no plan row count, so no exact collect) or one
+    """Jobs of one ``site`` call: ``_size_build``'s distributed lane
+    (``driver_build=False``, so no exact collect) or one
     ``build_history_filter`` lane of ``_probe_call``."""
     from bloomjoin_spark.operators import build_history_filter
 
@@ -1185,7 +1217,7 @@ def materialize_jobs(spark, site):
     if site == "size_build_distributed":
         build = spark.range(0, 3_000, 1, 3).where(F.col("id") % 3 != 1)
         keyed = build.select(F.xxhash64("id").alias("__bj_key64"))
-        res, n = tagged_jobs(spark, lambda: bj._size_build(build, keyed, exact=False))
+        res, n = tagged_jobs(spark, lambda: bj._size_build(keyed, None, driver_build=False))
         assert res[1] == 2_000 and res[4] is None
         res[0].unpersist()
         return n

@@ -252,6 +252,9 @@ def test_auto_mode_decontam_fallback_is_observable(spark, monkeypatch):
 
     monkeypatch.setattr(bj, "_native_build_filter", boom)
     monkeypatch.setattr(bj, "_native_fallback_warned", False)
+    # a bench too large for a driver build: only there does the native
+    # engine build in Spark
+    monkeypatch.setattr(bj, "_SMALL_BUILD_ROWS", 0)
     corpus = _docs(spark, [(1, [1, 2, 3, 4]), (2, [9, 9, 9])])
     bench = _docs(spark, [(900, [2, 3, 4])])
     with pytest.warns(UserWarning, match="native bloom engine unavailable"):
@@ -413,11 +416,16 @@ def test_decontam_native_cap_checked_before_build(spark, monkeypatch):
 #: the benchmark n-gram set was sized and built through ``_size_build``
 DECONTAM_DIGESTS = {
     "docs_bloom": "c8484f1f7826caa914751b1e5ce5817c541d544c4c945e9677b6ee5d7392df3b",
-    "docs_auto": "af4fe2edbd8a562bdfce5869eaefa080d6d5c7b020822d3264461ebeae548c58",
-    "docs_words_auto": "a2971eea5530e3bcb5a250beb600fefbcd04d74f40f29a66e1c94372fcaea1d1",
     "docs_empty": "c6c6d8feb00e7f18473fa1ea398cff81ee35b3d8c73e4a04a1cc03084bb6339e",
     "many_bloom": "f02714ae8a1d896d14e13567553d56dbdcf14777d43b32c907ceae79ecc5bea6",
-    "many_auto": "32bceed9405afd3de179b01c22933f2331b44348384373b75006f3fd5e4148c2",
+    # the same rows and report as their parent except ``filter_bits``:
+    # the gate reads the exact gram count (``Size.observed``), so a
+    # Python-local bench is built on the driver at ``bloom_sizing``'s
+    # power-of-two size, no longer by ``stat.bloomFilter`` (192 → 64
+    # bits for docs, 320 → 256 for words, 256 → 128 for the union)
+    "docs_auto": "950ed285560f28161c03b2ed5cec15ee4f9e3503e454ef6c4895bdec51267e18",
+    "docs_words_auto": "76fafe841653ccff77acbcdd0e623a63fb77479cb6d0a9cc273aacaca7b0c1d4",
+    "many_auto": "7c1fa22025658fd7c4a8e9deb68ed626035a0bf08b0991e9caa8a53b4acfb9b6",
     "parquet_docs_bloom": "7a60894f40a76621b2e98d73286c934eb462604825f6693ca1732f7ec0d6db61",
     "parquet_many_bloom": "7510498e4bf85ccebe32f5128662d4c1564686bfbf9d6d12a8fa12f667217aba",
     # the same rows and report as their parent except ``filter_bits``:
