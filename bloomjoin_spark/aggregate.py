@@ -53,7 +53,6 @@ from __future__ import annotations
 import functools
 import itertools
 import math
-import os
 import warnings
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -62,16 +61,20 @@ from operator import itemgetter
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .hashing import (
     NULL_SENTINEL,
+    foreign_hash_format,
     hash_columns,
     hash_float64,
+    hash_format_mismatch,
     hash_numeric_array,
     hash_tokens_flat,
     hash_utf8_arrow,
+    stamp_hash_format,
 )
 from .plans.sizing import size
 from .sketches.base import Sketch
@@ -80,6 +83,8 @@ from .sketches.bloom import BloomSketch
 PARTIAL_SCHEMA = (
     "partition_id long, n_partials long, n_rows long, fingerprint long, blob binary"
 )
+#: the partial payload every merge folds
+_PARTIAL_COLS = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
 
 #: bincount pre-aggregation bound for non-negative int token ids
 #: (typical LLM vocabs are ≤ a few hundred thousand)
@@ -1067,29 +1072,27 @@ def _checkpointed(
     checkpointed resumability); returns the partials to merge and their
     input partition count.
 
-    A resume skips the dir's done partition ids (after the hash-format
-    and bit-layout checks of :func:`_resume_ids`), appends the rest and
-    leaves an unmarked dir unmarked, so every later resume keeps warning
-    (ADVICE r4).  A fresh build overwrites every partial with
-    current-version data, so the dir is stamped with ``HASH_FORMAT``
-    even when it was unmarked before.  The partials are then re-read
-    from the dir, one per (``key``, partition id).  Their parquet layout
-    says nothing about how many partitions they cover, so ``n_parts``
-    counts the distinct real ids (a cheap distinct over KB-scale lineage
-    rows; a negative id is an empty task's marker): an adaptive input's
-    merge keeps the fan-in bound of a build without checkpoint."""
+    A resume skips the dir's done partition ids (:func:`_resume_ids`)
+    and appends the rest; a fresh build, or a dir that cannot resume,
+    overwrites it.  Every partial is written with the hash-format stamp.
+    The partials are then re-read from the dir, one per (``key``,
+    partition id).  Their parquet layout says nothing about how many
+    partitions they cover, so ``n_parts`` counts the distinct real ids
+    (a cheap distinct over KB-scale lineage rows; a negative id is an
+    empty task's marker): an adaptive input's merge keeps the fan-in
+    bound of a build without checkpoint."""
     if not checkpoint_dir:
         return stage(frozenset())
     spark = df.sparkSession
-    stamp, done_ids = True, frozenset()
-    if _checkpoint_exists(spark, checkpoint_dir):
-        stamp, done_ids = _resume_ids(spark, checkpoint_dir)
+    done_ids = _resume_ids(spark, checkpoint_dir)
     partials, n_parts = stage(done_ids)
-    partials.write.mode("append" if done_ids else "overwrite").parquet(checkpoint_dir)
-    if stamp or not done_ids:
-        _write_checkpoint_hash_format(spark, checkpoint_dir)
-    partials = spark.read.parquet(checkpoint_dir).dropDuplicates(
-        [*([key] if key else []), "partition_id"]
+    mode = "append" if done_ids else "overwrite"
+    stamp_hash_format(partials).write.mode(mode).parquet(checkpoint_dir)
+    keys = [key] if key else []
+    partials = (
+        spark.read.parquet(checkpoint_dir)
+        .select(*keys, *_PARTIAL_COLS)
+        .dropDuplicates([*keys, "partition_id"])
     )
     real = partials.where(F.col("partition_id") >= 0).select("partition_id").distinct()
     return partials, max(n_parts or 0, real.count())
@@ -1143,159 +1146,25 @@ def build_sketches(
     return out
 
 
-#: marker file recording hashing.HASH_FORMAT inside a checkpoint dir
-_HASH_FORMAT_MARKER = "_bj_hash_format"
-
-
-def _local_marker_path(path: str) -> str | None:
-    """Filesystem path of the marker for LOCAL checkpoint dirs
-    (mirrors _checkpoint_exists's scheme handling); None for URIs."""
-    if path.startswith("file:"):
-        path = path[len("file:") :]
-    if "://" in path:
-        return None
-    return os.path.join(path, _HASH_FORMAT_MARKER)
-
-
-def _write_checkpoint_hash_format(spark: SparkSession, path: str) -> None:
-    """Stamp the checkpoint dir with the hash-kernel version its
-    partials were built under (idempotent overwrite).  Local paths use
-    plain file IO (Hadoop's LocalFileSystem would add .crc side-files
-    that break external edits); remote URIs go through Hadoop FS."""
-    from .hashing import HASH_FORMAT
-
-    payload = str(HASH_FORMAT).encode("ascii")
+def _resume_ids(spark: SparkSession, path: str) -> frozenset[int]:
+    """Done partition ids of the checkpoint dir ``path``, none for a dir
+    without partials.  Partials of another hash format or without a
+    stamp (``hashing.foreign_hash_format``), and Bloom partials of an
+    older bit layout (``BloomSketch.LEGACY_KINDS``), cannot merge with
+    fresh ones: such a dir resumes nothing, so every partition is
+    rebuilt and the dir overwritten."""
     try:
-        local = _local_marker_path(path)
-        if local is not None:
-            with open(local, "wb") as f:
-                f.write(payload)
-            return
-        jvm = spark.sparkContext._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path, _HASH_FORMAT_MARKER)
-        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        out = fs.create(p, True)
-        out.write(bytearray(payload))
-        out.close()
-    except Exception as ex:  # marker is best-effort; resume still warns
-        warnings.warn(
-            f"could not write hash-format marker to {path!r} ({ex!r}); a "
-            "resume after a hash-kernel upgrade will not be detected",
-            stacklevel=2,
-        )
-
-
-def _check_checkpoint_hash_format(spark: SparkSession, path: str) -> bool:
-    """Guard a checkpoint RESUME against partials hashed under a
-    different kernel version (ADVICE r3: the >16 KiB long-row kernel
-    changed long-string hashes between v1 and v2 — mixing pre-upgrade
-    partials with fresh partitions double-counts HLL rows and misses
-    Bloom membership, and a docstring FORMAT NOTE alone does not detect
-    it).  Version mismatch → ValueError (rebuild fresh, or finish the
-    run with the old library version).  Marker missing → the checkpoint
-    predates version stamping (= v1-era): loud warning, proceed — the
-    divergence only affects >16 KiB string rows.
-
-    Returns whether a (current-version) marker was present.  Callers
-    must NOT stamp an unmarked dir after appending to it (ADVICE r4:
-    stamping a resumed v1-era checkpoint makes the now-mixed v1+v2
-    partials pass this guard silently on every later resume) — a dir
-    that resumed unmarked stays unmarked so each resume keeps warning."""
-    from .hashing import HASH_FORMAT
-
-    recorded: int | None = None
-    present = False
-    try:
-        local = _local_marker_path(path)
-        if local is not None:
-            present = os.path.exists(local)
-        else:
-            jvm = spark.sparkContext._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path, _HASH_FORMAT_MARKER)
-            fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            present = bool(fs.exists(p))
-    except Exception:
-        present = False  # existence genuinely unknowable → absence path
-    if present:
-        # an EXISTING marker that cannot be read or parsed must REFUSE
-        # the resume, not downgrade to the absence warning — an
-        # unreadable/corrupt version is exactly the unknown-version
-        # case the guard exists for
-        try:
-            if local is not None:
-                with open(local, "rb") as f:
-                    raw_txt = f.read(16).decode("ascii")
-            else:
-                stream = fs.open(p)
-                try:
-                    buf = []
-                    b = stream.read()  # py4j: one byte per call, -1 at EOF
-                    while b != -1 and len(buf) < 16:
-                        buf.append(b)
-                        b = stream.read()
-                finally:
-                    stream.close()
-                raw_txt = bytes(buf).decode("ascii")
-            recorded = int(raw_txt.strip())
-        except Exception as ex:
-            raise ValueError(
-                f"checkpoint {path!r} has a hash-format marker that cannot "
-                f"be read/parsed ({ex!r}); refusing to resume — treat it as "
-                "an unknown hash-kernel version and rebuild fresh (or fix "
-                "the marker file)"
-            ) from ex
-    if recorded is None:
-        warnings.warn(
-            f"checkpoint {path!r} has no hash-format marker (written before "
-            f"version stamping); current kernels are v{HASH_FORMAT}, which "
-            "changed hashes of >16 KiB string rows vs v1 — if the keyed "
-            "column can contain such rows, rebuild the sketch fresh instead "
-            "of resuming",
-            stacklevel=3,
-        )
-        return False
-    if recorded != HASH_FORMAT:
-        raise ValueError(
-            f"checkpoint {path!r} was written under hash-format v{recorded} "
-            f"but this build hashes v{HASH_FORMAT}; resuming would mix "
-            "incompatible hashes in one sketch. Rebuild fresh (delete the "
-            "checkpoint dir) or finish the run with the matching version."
-        )
-    return True
-
-
-def _resume_ids(spark: SparkSession, path: str) -> tuple[bool, frozenset[int]]:
-    """``(marker present, done partition ids)`` of an existing checkpoint
-    dir, after the hash-format check.  Bloom partials of an older bit
-    layout (``BloomSketch.LEGACY_KINDS``) cannot merge with fresh ones:
-    such a dir resumes nothing, so every partition is rebuilt and the
-    dir overwritten."""
-    stamp = _check_checkpoint_hash_format(spark, path)
-    rows = (
-        spark.read.parquet(path)
-        .select("partition_id", F.substring("blob", 5, 4).alias("kind"))
-        .distinct()
-        .collect()
-    )
-    stale = {bytes(r["kind"]) for r in rows} & set(BloomSketch.LEGACY_KINDS)
+        read = spark.read.parquet(path)
+    except AnalysisException:  # no dir, or no partials in it: a fresh build
+        return frozenset()
+    kind, fmt = F.substring("blob", 5, 4), foreign_hash_format(read)
+    rows = read.select("partition_id", kind.alias("kind"), fmt.alias("fmt")).distinct().collect()
+    stale = sorted({bytes(r["kind"]) for r in rows} & set(BloomSketch.LEGACY_KINDS))
+    why = hash_format_mismatch(f"checkpoint {path!r}", (r["fmt"] for r in rows))
     if stale:
-        warnings.warn(
-            f"checkpoint {path!r} holds Bloom partials of an older bit layout "
-            f"({', '.join(sorted(k.decode() for k in stale))}); rebuilding every "
-            "partition instead of merging them",
-            stacklevel=3,
-        )
-        return stamp, frozenset()
-    return stamp, frozenset(r["partition_id"] for r in rows)
-
-
-def _checkpoint_exists(spark: SparkSession, path: str) -> bool:
-    if path.startswith("file:"):
-        path = path[len("file:") :]
-    if "://" not in path:
-        return os.path.exists(path) and bool(os.listdir(path))
-    try:
-        spark.read.parquet(path).limit(1).collect()
-        return True
-    except Exception:
-        return False
+        why = (f"checkpoint {path!r} holds Bloom partials of an older bit layout "
+               f"({', '.join(k.decode() for k in stale)})")
+    if why:
+        warnings.warn(f"{why}; rebuilding every partition instead of merging them", stacklevel=3)
+        return frozenset()
+    return frozenset(r["partition_id"] for r in rows)

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 # Fixed seeds — deterministic across executors; that determinism is what
 # makes partial sketches mergeable (same role as the fixed seeds in
@@ -42,15 +44,41 @@ NULL_SENTINEL = np.uint64(0xD1B54A32D192ED03)
 
 #: version of the canonical hash kernels.  Bump whenever any kernel
 #: changes the hash VALUE of some input (v1 → v2: the >16 KiB long-row
-#: word-lane kernel changed long-string hashes).  Checkpointed sketch
-#: partials record this version; resuming a checkpoint written under a
-#: different version would mix incompatible hashes in one sketch (HLL
-#: double-counts, Bloom misses membership), so the aggregate layer
-#: refuses/warns instead of silently merging (see
-#: ``aggregate._check_checkpoint_hash_format``).
+#: word-lane kernel changed long-string hashes).  Every durable row
+#: (checkpoint partials, store partials, Bloom index rows) carries it
+#: through :func:`stamp_hash_format`, and :func:`foreign_hash_format`
+#: reads it back: rows of another version would mix incompatible hashes
+#: (HLL double-counts, Bloom misses membership), so they are never
+#: merged or probed.
 HASH_FORMAT = 2
 
+#: the column that stamps a durable row with the HASH_FORMAT that hashed it
+_STAMP = "hash_format"
+
 _U64 = np.uint64
+
+
+def stamp_hash_format(df: DataFrame) -> DataFrame:
+    """``df`` with every row stamped with this build's ``HASH_FORMAT``."""
+    return df.withColumn(_STAMP, F.lit(HASH_FORMAT))
+
+
+def foreign_hash_format(df: DataFrame) -> Column:
+    """Each row's stamp read back: null on a row this build hashed,
+    else its foreign stamp as text, ``"None"`` for a row with none (a
+    missing column reads as null, and null counts as foreign)."""
+    fmt = F.col(_STAMP) if _STAMP in df.columns else F.lit(None)
+    return F.when(~fmt.eqNullSafe(HASH_FORMAT), F.coalesce(fmt.cast("string"), F.lit("None")))
+
+
+def hash_format_mismatch(what: str, found) -> str | None:
+    """Why ``what`` cannot be merged or probed, given the values
+    :func:`foreign_hash_format` read from it; None when all are null."""
+    found = sorted({f for f in found if f is not None})
+    if not found:
+        return None
+    return (f"{what} holds hash format(s) [{', '.join(found)}], this library "
+            f"hashes format {HASH_FORMAT}")
 
 
 def splitmix64(x: np.ndarray) -> np.ndarray:
@@ -158,11 +186,10 @@ def hash_utf8_arrow(arr, seed: int = 0) -> np.ndarray:
     O(total bytes).  Nulls → NULL_SENTINEL.
 
     FORMAT NOTE: the long-row kernel changed the hash VALUES of rows
-    over the cutoff relative to pre-upgrade builds.  A checkpoint_dir
-    resume that mixes pre-upgrade partials with fresh partitions over a
-    string column containing >16 KiB rows would double-count those rows
-    (HLL) or miss their membership (Bloom); rebuild such sketches fresh
-    after upgrading — short-row hashes are unchanged."""
+    over the cutoff (``HASH_FORMAT`` 1 → 2); short-row hashes are
+    unchanged.  Partials of another format would double-count those
+    rows (HLL) or miss their membership (Bloom), so their per-row stamp
+    keeps them out of every merge and probe (:func:`foreign_hash_format`)."""
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):

@@ -53,7 +53,9 @@ def size(df) -> Size:
     """``df``'s :class:`Size`, with no job.  A row count the plan's root
     lacks is carried up from the leaf under row-preserving nodes: a
     filled cache's, or a local parquet scan's footer row counts
-    (``pyarrow.parquet.read_metadata`` over ``df.inputFiles()``)."""
+    (``pyarrow.parquet.read_metadata`` over the scan's own files).  A
+    ``Union`` sums its children's bounds, under the least exact of their
+    sources (cache, plan, footer), and has none if one child has none."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         n_bytes = int(plan.stats().sizeInBytes())
@@ -61,23 +63,38 @@ def size(df) -> Size:
         leaves = [plan.collectLeaves().apply(i) for i in range(plan.collectLeaves().size())]
         cached = all(leaf.nodeName() == "InMemoryRelation"
                      and leaf.cacheBuilder().isCachedColumnBuffersLoaded() for leaf in leaves)
-        node = plan
-        while not node.stats().rowCount().isDefined():
-            if node.nodeName() not in _ROW_PRESERVING or node.children().size() != 1:
-                small = n_bytes is not None and n_bytes <= SCAN_BYTES
-                rows = _footer_rows(node, df) if small else None
-                return Size(rows, n_bytes, cached, "unknown" if rows is None else "footer")
-            node = node.children().apply(0)
-        src = "cache" if node.nodeName() == "InMemoryRelation" and cached else "plan"
-        return Size(int(node.stats().rowCount().get()), n_bytes, cached, src)
+        small = n_bytes is not None and n_bytes <= SCAN_BYTES
+        rows, src = _rows_max(plan, cached, small)
+        return Size(rows, n_bytes, cached, src)
     except Exception:
         return Size()
 
 
-def _footer_rows(leaf, df) -> int | None:
-    """Footer row counts of a parquet scan over local files, summed."""
+def _rows_max(node, cached: bool, small: bool) -> tuple[int | None, str]:
+    """``(rows_max, source)`` of the plan under ``node``; footers are
+    read only when the whole plan is ``small``."""
+    while not node.stats().rowCount().isDefined():
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if node.nodeName() == "Union":
+            bounds = [_rows_max(kid, cached, small) for kid in kids]
+            if any(rows is None for rows, _ in bounds):
+                return None, "unknown"
+            src = max((s for _, s in bounds), key=("cache", "plan", "footer").index)
+            return sum(rows for rows, _ in bounds), src
+        if node.nodeName() not in _ROW_PRESERVING or len(kids) != 1:
+            rows = _footer_rows(node) if small else None
+            return rows, "unknown" if rows is None else "footer"
+        node = kids[0]
+    src = "cache" if node.nodeName() == "InMemoryRelation" and cached else "plan"
+    return int(node.stats().rowCount().get()), src
+
+
+def _footer_rows(leaf) -> int | None:
+    """Footer row counts of a parquet scan over local files, summed.
+    The files are the scan's own, not the frame's ``inputFiles()``:
+    that list is deduplicated, so a self-union would count them once."""
     scan = leaf.nodeName() == "LogicalRelation" and leaf.relation().fileFormat().shortName()
-    files = list(df.inputFiles()) if scan == "parquet" else []
+    files = list(leaf.relation().location().inputFiles()) if scan == "parquet" else []
     if not files or not all(f.startswith("file:") for f in files):
         return None
     import pyarrow.parquet as pq  # on first use: most frames never read a footer

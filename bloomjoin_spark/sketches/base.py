@@ -31,9 +31,10 @@ class Sketch:
     KIND: ClassVar[bytes] = b"????"
 
     #: kind tags of PRIOR payload layouts this subclass can still read
-    #: (via ``_from_payload_legacy``) — keeps killed-job resume working
-    #: across a payload-format upgrade: a checkpoint_dir written by the
-    #: previous version deserializes under its old tag.
+    #: (via ``_from_payload_legacy``): a blob or store row written by the
+    #: previous version deserializes under its old tag.  A checkpoint dir
+    #: holding Bloom partials of a legacy layout is rebuilt, not merged
+    #: (``aggregate._resume_ids``).
     LEGACY_KINDS: ClassVar[tuple[bytes, ...]] = ()
 
     _registry: ClassVar[dict[bytes, type["Sketch"]]] = {}

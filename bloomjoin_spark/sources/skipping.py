@@ -48,7 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..aggregate import _per_group, grouped_sketch_partials
-from ..hashing import hash_columns
+from ..hashing import (
+    foreign_hash_format,
+    hash_columns,
+    hash_format_mismatch,
+    stamp_hash_format,
+)
 from ..operators.bloom_join import _python_probe
 from ..sketches.base import Sketch
 from ..sketches.bloom import BloomSketch
@@ -119,7 +124,8 @@ def write_bloom_indexed(
         )
 
     index = _per_group(partials, "_file", _index_row, "n_rows long, blob binary")
-    index.withColumnRenamed("_file", "file").write.mode("overwrite").parquet(_index_dir(path))
+    index = stamp_hash_format(index.withColumnRenamed("_file", "file"))
+    index.write.mode("overwrite").parquet(_index_dir(path))
     bits = BloomSketch(int(capacity), fpp).m
     return {
         "files": len(counts),
@@ -170,12 +176,11 @@ def read_bloom_indexed(
     """
     keys = [key] if isinstance(key, str) else list(key)
     vals = list(values)
-    base = spark.read.parquet(_data_dir(path))
     if skip_report is None:
         skip_report = {}
     skip_report.update(files_total=0, files_read=0, n_values=len(vals))
     if not vals:
-        return base.filter(F.lit(False))
+        return spark.read.parquet(_data_dir(path)).filter(F.lit(False))
 
     if len(keys) == 1:
         probe = pd.DataFrame({keys[0]: vals})
@@ -185,16 +190,23 @@ def read_bloom_indexed(
         )
     any_hit = _python_probe(spark, hash_columns(probe, keys), _index_hit)
     index = spark.read.parquet(_index_dir(path))
-    # one probe job: blobs stay executor-side, (file, hit) comes back —
-    # file names are the listing the scan planner must hold anyway
-    probed = index.select("file", any_hit(F.col("blob")).alias("hit")).collect()
+    # one probe job: blobs stay executor-side, (file, hit, stamp) comes
+    # back — file names are the listing the scan planner must hold anyway
+    probed = index.select(
+        "file", any_hit(F.col("blob")).alias("hit"), foreign_hash_format(index).alias("fmt")
+    ).collect()
+    why = hash_format_mismatch(f"Bloom index of {path!r}", (r["fmt"] for r in probed))
+    if why:
+        raise ValueError(
+            f"{why}: its filters could skip files that hold the key. Rebuild "
+            "the index (re-run write_bloom_indexed) under one version."
+        )
     survivors = [r["file"] for r in probed if r["hit"]]
     skip_report.update(files_total=len(probed), files_read=len(survivors))
-    cond = _exact_condition(keys, vals)
-    if not survivors:
-        return base.filter(cond).filter(F.lit(False))
     # input_file_name() yields percent-ENCODED URIs; the reader wants
     # plain paths (a space in the table path would otherwise 404)
     from urllib.parse import unquote
 
-    return spark.read.parquet(*[unquote(f) for f in survivors]).filter(cond)
+    files = [unquote(f) for f in survivors] or [_data_dir(path)]
+    out = spark.read.parquet(*files).filter(_exact_condition(keys, vals))
+    return out if survivors else out.filter(F.lit(False))

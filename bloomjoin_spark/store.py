@@ -19,12 +19,12 @@ re-run ingest replaces ONLY its own snapshot partition (dynamic
 partition overwrite), so retries are idempotent and history is never
 touched.
 
-Hash-format safety: every row is stamped with ``hashing.HASH_FORMAT``.
-A store written under an older hash domain refuses to merge with
-current-version partials (mixed domains silently corrupt HLL / Bloom
-membership — the checkpoint marker closed this for transient
-checkpoints; the stamp column closes it for durable stores, and being
-per-row it survives partial appends from mixed library versions).
+Hash-format safety: every row is stamped with ``hashing.HASH_FORMAT``
+(``hashing.stamp_hash_format``, the stamp checkpoints and Bloom indexes
+carry too).  A store holding a row of another hash domain, or one
+without a stamp, refuses to merge (mixed domains silently corrupt HLL /
+Bloom membership); being per-row, the stamp survives partial appends
+from mixed library versions.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .aggregate import (
     MULTI_PARTIAL_SCHEMA,
-    PARTIAL_SCHEMA,
+    _PARTIAL_COLS,
     _estimates,
     _per_group,
     grouped_sketch_partials,
@@ -45,13 +45,8 @@ from .aggregate import (
     sketch_partials,
     tree_merge,
 )
-from .hashing import HASH_FORMAT
+from .hashing import foreign_hash_format, hash_format_mismatch, stamp_hash_format
 from .sketches import Sketch
-
-#: store columns beyond the partial payload
-_META_COLS = ("snapshot", "hash_format")
-#: the partial payload every merge folds
-_PARTIAL_COLS = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
 
 
 def append_sketch_snapshot(
@@ -100,9 +95,7 @@ def append_sketch_snapshot(
         partials = sketch_partials(df, factory, cols, token_col)
     else:
         partials = grouped_sketch_partials(df, factory, group_col, cols, token_col)
-    out = partials.withColumn("snapshot", F.lit(snapshot)).withColumn(
-        "hash_format", F.lit(int(HASH_FORMAT))
-    )
+    out = stamp_hash_format(partials.withColumn("snapshot", F.lit(snapshot)))
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -127,7 +120,7 @@ def read_sketch_store(
     # select all of it and every merge folds it — a dir missing
     # n_partials/fingerprint must fail HERE with the curated error, not
     # later with UNRESOLVED_COLUMN
-    missing = {*_PARTIAL_COLS, *_META_COLS} - set(df.columns)
+    missing = {*_PARTIAL_COLS, "snapshot"} - set(df.columns)
     if missing:
         raise ValueError(
             f"sketch store {path!r} is missing required column(s) "
@@ -136,19 +129,14 @@ def read_sketch_store(
         )
     if snapshots is not None:
         df = df.where(F.col("snapshot").isin(list(snapshots)))
-    foreign = {
-        r["hash_format"]
-        for r in df.where(~F.col("hash_format").eqNullSafe(HASH_FORMAT))
-        .select("hash_format")
-        .collect()
-    }
-    if foreign:
-        fmts = sorted(foreign, key=lambda f: (f is None, f))
+    foreign = foreign_hash_format(df)
+    found = df.where(foreign.isNotNull()).select(foreign).collect()
+    why = hash_format_mismatch(f"sketch store {path!r}", (r[0] for r in found))
+    if why:
         raise ValueError(
-            f"sketch store {path!r} holds hash format(s) {fmts}, this "
-            f"library hashes format {HASH_FORMAT}: merging mixed domains "
-            "would silently corrupt estimates. Rebuild the store (re-run "
-            "append_sketch_snapshot per snapshot) under one version."
+            f"{why}: merging mixed domains would silently corrupt estimates. "
+            "Rebuild the store (re-run append_sketch_snapshot per snapshot) "
+            "under one version."
         )
     return df
 

@@ -68,83 +68,51 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_checkpoint_hash_format_guard(spark, tmp_path):
-    """ADVICE r3: resuming a checkpoint written under a different hash
-    kernel version must be detected at resume time, not left to a
-    docstring — mismatched version raises, a marker-less (pre-stamping)
-    checkpoint warns, a same-version resume is silent."""
-    import os
+    """Every checkpoint partial carries the per-row hash-format stamp.  A
+    same-version resume is silent and runs the jobs it ran before the
+    stamp moved into the rows.  A dir holding a row of another hash
+    format, or a row without a stamp, is rebuilt with a warning, never
+    merged: partition 0's row is kept with an empty filter as its blob,
+    so merging it would drop that partition's keys.  The rebuild equals
+    a fresh build byte for byte and leaves every row stamped current."""
     import warnings as W
 
-    import pytest
-
-    from bloomjoin_spark.aggregate import _HASH_FORMAT_MARKER
+    from bloomjoin_spark.hashing import foreign_hash_format
+    from conftest import tagged_jobs
 
     n = 2000
     ckpt = str(tmp_path / "fmt_ckpt")
     df = spark.range(0, n).repartition(3).select(F.col("id").alias("k"))
-    build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"], checkpoint_dir=ckpt)
-    marker = os.path.join(ckpt, _HASH_FORMAT_MARKER)
-    assert os.path.exists(marker)
 
-    # same version → silent resume (errors only on OUR warnings; py4j
-    # emits unrelated ResourceWarnings during JVM roundtrips)
-    with W.catch_warnings():
-        W.simplefilter("error", UserWarning)
-        build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"], checkpoint_dir=ckpt)
+    def build():
+        return build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
+                            checkpoint_dir=ckpt)
 
-    # version mismatch → refuse
-    with open(marker, "w") as f:
-        f.write("1")
-    with pytest.raises(ValueError, match="hash-format v1"):
-        build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"], checkpoint_dir=ckpt)
+    def foreign_stamps():
+        rows = spark.read.parquet(ckpt)
+        return {r[0] for r in rows.select(foreign_hash_format(rows)).collect()}
 
-    # corrupt marker (code-review r4 fix): an EXISTING marker that
-    # cannot be parsed must REFUSE the resume, not downgrade to the
-    # absence warning — it is an unknown hash-kernel version
-    with open(marker, "w") as f:
-        f.write("not-a-version")
-    with pytest.raises(ValueError, match="cannot be read/parsed"):
-        build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
-                     checkpoint_dir=ckpt)
+    fresh = build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"]).sketch.to_bytes()
+    build()
+    assert foreign_stamps() == {None}
+    with W.catch_warnings():  # errors only on OUR warnings: py4j emits
+        W.simplefilter("error", UserWarning)  # unrelated ResourceWarnings
+        res, n_jobs = tagged_jobs(spark, build)
+    assert n_jobs == 9
+    assert res.sketch.to_bytes() == fresh
 
-    # marker missing (pre-upgrade checkpoint) → loud warning, proceeds
-    os.remove(marker)
-    with pytest.warns(UserWarning, match="no hash-format marker"):
-        r = build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
-                         checkpoint_dir=ckpt)
-    assert r.n_rows == n
-
-    # ADVICE r4: resuming an UNMARKED dir must NOT stamp it — the mixed
-    # v1+v2 partials would pass the guard silently on every later
-    # resume.  The dir stays unmarked and every resume keeps warning.
-    assert not os.path.exists(marker)
-    with pytest.warns(UserWarning, match="no hash-format marker"):
-        build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
-                     checkpoint_dir=ckpt)
-    assert not os.path.exists(marker)
-
-    # Round-5 review: an unmarked dir whose parquet yields ZERO done
-    # partition ids is rebuilt in overwrite mode — every partial is
-    # current-version afterwards, so the rebuild MUST stamp it (leaving
-    # it unmarked would warn spuriously forever and blind the guard to
-    # a genuine future mismatch)
-    # seed the dir with a zero-row parquet in the lineage schema, no
-    # marker — an unmarked v1-era-looking dir that carries nothing
-    build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"], checkpoint_dir=ckpt)
-    zero = spark.read.parquet(ckpt).limit(0)
-    zero.write.mode("overwrite").parquet(ckpt)
-    if os.path.exists(marker):  # Spark's overwrite usually removes it
-        os.remove(marker)
-    with pytest.warns(UserWarning, match="no hash-format marker"):
-        r2 = build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
-                          checkpoint_dir=ckpt)
-    assert r2.n_rows == n
-    assert os.path.exists(marker)  # pure rebuild → stamped
-    # and the next resume is silent again
-    with W.catch_warnings():
-        W.simplefilter("error", UserWarning)
-        build_sketch(df, lambda: BloomSketch(n, 0.01), cols=["k"],
-                     checkpoint_dir=ckpt)
+    empty = BloomSketch(n, 0.01).to_bytes()
+    for stamp, shown in ((F.lit(1).cast("long"), r"\[1\]"), (None, r"\[None\]")):
+        kept = spark.read.parquet(ckpt).where(F.col("partition_id") == 0)
+        kept = spark.createDataFrame(kept.collect(), kept.schema)
+        kept = kept.withColumn("blob", F.lit(empty))
+        kept = kept.drop("hash_format") if stamp is None else kept.withColumn("hash_format", stamp)
+        kept.write.mode("overwrite").parquet(ckpt)
+        with pytest.warns(UserWarning, match=rf"hash format\(s\) {shown}.*rebuilding"):
+            res = build()
+        assert res.sketch.to_bytes() == fresh and res.n_rows == n
+        assert foreign_stamps() == {None}
+        assert spark.read.parquet(ckpt).count() == 3
 
 
 def test_checkpoint_with_legacy_bloom_partials_is_rebuilt(spark, tmp_path):
@@ -768,10 +736,7 @@ def test_partial_resume_across_file_layouts(spark, tmp_path, cached):
     layout) resumes by computing exactly ids 3–5, and the result is
     byte-identical to a fresh build for Bloom, HLL and CMS — also when
     the fresh build ran all six partitions in one coalesced task."""
-    import shutil
-
     from bloomjoin_spark import CmsSketch, HllSketch, build_sketches
-    from bloomjoin_spark.aggregate import _HASH_FORMAT_MARKER
 
     toks = spark.range(0, 6_000, 1, 6).select(
         F.array((F.col("id") % 701).cast("int"), (F.col("id") % 13).cast("int"))
@@ -792,7 +757,6 @@ def test_partial_resume_across_file_layouts(spark, tmp_path, cached):
     for pid in (0, 1, 2):
         (lineage.where(F.col("partition_id") == pid).coalesce(1)
          .write.mode("append").parquet(pruned))
-    shutil.copy(f"{full}/{_HASH_FORMAT_MARKER}", pruned)
 
     resumed = build_sketches(toks, facs, token_col="tokens", checkpoint_dir=pruned)
     after = spark.read.parquet(pruned)

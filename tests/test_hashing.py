@@ -296,3 +296,33 @@ def test_utf8_arrow_kernel_no_collisions_bulk():
 
     big = pa.array([f"doc_{i:08d}" for i in range(200_000)])
     assert len(np.unique(hash_utf8_arrow(big))) == 200_000
+
+
+def test_hash_format_stamp_owned_by_one_module():
+    """Only ``hashing.py`` imports or names ``HASH_FORMAT`` and names
+    the stamp column in code: checkpoints, stores and Bloom indexes
+    stamp and read their rows through ``stamp_hash_format`` and
+    ``foreign_hash_format``.  Docstrings and comments may mention them."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "bloomjoin_spark"
+
+    def names_stamp(tree):
+        docs = {id(n.body[0].value) for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef))
+                and n.body and isinstance(n.body[0], ast.Expr)}
+        for n in ast.walk(tree):
+            name = getattr(n, "name", None) or getattr(n, "id", None) or getattr(n, "attr", None)
+            if name == "HASH_FORMAT" or (
+                isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and id(n) not in docs and re.search(r"\bhash_format\b", n.value)
+            ):
+                return True
+        return False
+
+    owners = sorted(str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+                    if names_stamp(ast.parse(p.read_text())))
+    assert owners == ["hashing.py"]

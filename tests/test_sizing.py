@@ -100,26 +100,13 @@ def _overflowed_collects(spark, monkeypatch, bound):
     return seen
 
 
-def test_parquet_batch_over_dedup_bound_runs_no_collect(spark, monkeypatch, tmp_path):
-    """A parquet batch over ``_SMALL_DEDUP_ROWS`` rows, read without
-    CBO, is bounded by its footers: it takes the distributed lane with
-    no thrown-away one-task collect, so it runs the jobs of the forced
-    distributed lane, with the same rows."""
+def _dedup_runs_no_collect(spark, monkeypatch, batch, history):
+    """``incremental_dedup(batch, history)`` runs no thrown-away
+    one-task collect and the jobs of the forced distributed lane, with
+    the same rows; returns the kept ids."""
     from bloomjoin_spark.operators import IncrementalDedupReport, incremental_dedup
 
     dd = importlib.import_module("bloomjoin_spark.operators.dedup")
-    n = dd._SMALL_DEDUP_ROWS + 8_000
-    path = str(tmp_path / "batch")
-    spark.range(0, n, 1, 4).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("doc "), (F.col("id") % (n - 2_000)).cast("string")).alias("text"),
-    ).write.parquet(path)
-    batch = spark.read.parquet(path)
-    history = spark.range(0, 3_000, 1, 2).select(
-        (F.col("id") + 10 * n).alias("doc_id"),
-        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
-    )
-    assert size(batch).source == "footer"
 
     def call():
         return sorted(r.doc_id for r in incremental_dedup(
@@ -134,7 +121,63 @@ def test_parquet_batch_over_dedup_bound_runs_no_collect(spark, monkeypatch, tmp_
     monkeypatch.setattr(dd, "_small_batch_dedup", lambda *a, **kw: None)
     assert call() == got
     assert n_jobs == jobs()
+    return got
+
+
+def _docs_parquet(spark, path, lo, hi, distinct):
+    spark.range(lo, hi, 1, 4).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), (F.col("id") % distinct).cast("string")).alias("text"),
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _history(spark, n):
+    return spark.range(0, 3_000, 1, 2).select(
+        (F.col("id") + 10 * n).alias("doc_id"),
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
+    )
+
+
+def test_parquet_batch_over_dedup_bound_runs_no_collect(spark, monkeypatch, tmp_path):
+    """A parquet batch over ``_SMALL_DEDUP_ROWS`` rows, read without
+    CBO, is bounded by its footers: it takes the distributed lane with
+    no thrown-away one-task collect, so it runs the jobs of the forced
+    distributed lane, with the same rows."""
+    dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+    n = dd._SMALL_DEDUP_ROWS + 8_000
+    batch = _docs_parquet(spark, str(tmp_path / "batch"), 0, n, n - 2_000)
+    assert size(batch).source == "footer"
+    got = _dedup_runs_no_collect(spark, monkeypatch, batch, _history(spark, n))
     assert len(got) == n - 2_000 - 3_000
+
+
+def test_size_sums_a_union_of_scans(spark, tmp_path):
+    """A ``Union`` sums its children's bounds, each read from its own
+    scan's footers: a self-union of one parquet dir holds twice its rows
+    though ``inputFiles()`` lists the dir's files once."""
+    path = str(tmp_path / "keys")
+    spark.range(0, 200_000, 1, 3).write.parquet(path)
+    a = spark.read.parquet(path)
+    assert len(a.unionByName(a).inputFiles()) == len(a.inputFiles()) == 3
+    got = size(a.unionByName(spark.read.parquet(path)))
+    assert (got.rows_max, got.source) == (400_000, "footer")
+    got = size(a.unionByName(a.select(F.explode(F.array("id", "id")).alias("id"))))
+    assert (got.rows_max, got.source) == (None, "unknown")
+
+
+def test_union_batch_over_dedup_bound_runs_no_collect(spark, monkeypatch, tmp_path):
+    """A batch that is a union of two parquet scans, over
+    ``_SMALL_DEDUP_ROWS`` rows together, is bounded by the sum of their
+    footers: it takes the distributed lane with no thrown-away collect."""
+    dd = importlib.import_module("bloomjoin_spark.operators.dedup")
+    half = dd._SMALL_DEDUP_ROWS // 2 + 4_000
+    a = _docs_parquet(spark, str(tmp_path / "a"), 0, half, half)
+    b = _docs_parquet(spark, str(tmp_path / "b"), half, 2 * half, half)
+    batch = a.unionByName(b)
+    assert size(batch).rows_max == 2 * half > dd._SMALL_DEDUP_ROWS
+    got = _dedup_runs_no_collect(spark, monkeypatch, batch, _history(spark, 2 * half))
+    assert len(got) == half - 3_000
 
 
 def test_parquet_build_side_over_bound_runs_no_collect(spark, monkeypatch):

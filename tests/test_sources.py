@@ -282,6 +282,52 @@ def test_bloom_index_path_with_space(spark, tmp_path):
     assert sorted(r["v"] for r in got) == [7, 200]
 
 
+def test_bloom_index_rows_carry_the_hash_format_stamp(spark, tmp_path):
+    """A current index is probed in one job, so a lookup plus its
+    ``collect()`` runs 2 jobs, and every index row reads as current."""
+    from bloomjoin_spark.hashing import foreign_hash_format
+    from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
+    from bloomjoin_spark.sources.skipping import _index_dir
+    from conftest import tagged_jobs
+
+    df = spark.range(0, 600).selectExpr("concat('k', id) AS k", "id AS v")
+    path = str(tmp_path / "kv_stamped")
+    write_bloom_indexed(df, path, key="k", num_files=3)
+    index = spark.read.parquet(_index_dir(path))
+    assert {r[0] for r in index.select(foreign_hash_format(index)).collect()} == {None}
+    got, n_jobs = tagged_jobs(
+        spark, lambda: read_bloom_indexed(spark, path, "k", ["k7", "k500"]).collect())
+    assert sorted(r["v"] for r in got) == [7, 500]
+    assert n_jobs == 2
+
+
+@pytest.mark.parametrize("stamp", ["foreign", "unstamped"])
+def test_bloom_index_of_another_hash_format_is_refused(spark, tmp_path, stamp):
+    """An index whose rows carry another hash format, or no stamp, could
+    skip files that hold the key: the lookup raises the curated error
+    from its probe, before it opens a data file (the data dir is gone)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from bloomjoin_spark.sources import read_bloom_indexed, write_bloom_indexed
+    from bloomjoin_spark.sources.skipping import _data_dir, _index_dir
+
+    df = spark.range(0, 300).selectExpr("concat('k', id) AS k", "id AS v")
+    path = str(tmp_path / "kv_old")
+    write_bloom_indexed(df, path, key="k", num_files=3)
+    rows = spark.read.parquet(_index_dir(path))
+    rows = spark.createDataFrame(rows.collect(), rows.schema)
+    if stamp == "foreign":
+        rows, shown = rows.withColumn("hash_format", F.lit(1)), r"\[1\]"
+    else:
+        rows, shown = rows.drop("hash_format"), r"\[None\]"
+    rows.write.mode("overwrite").parquet(_index_dir(path))
+    shutil.rmtree(_data_dir(path))
+    with pytest.raises(ValueError, match=rf"hash format\(s\) {shown}.*Rebuild the index"):
+        read_bloom_indexed(spark, path, "k", ["k7"])
+
+
 def test_write_zordered_skips_on_both_columns(spark, tmp_path):
     """Z-order layout contract: per-file footer min/max ranges are
     NARROW on BOTH z columns (multi-dimensional skipping), where the
