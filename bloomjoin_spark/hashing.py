@@ -81,6 +81,16 @@ def hash_format_mismatch(what: str, found) -> str | None:
             f"hashes format {HASH_FORMAT}")
 
 
+def refuse_foreign_hash_format(df: DataFrame, what: str, remedy: str) -> DataFrame:
+    """``df`` under a per-row guard that runs no job: the query that reads
+    a foreign row raises ``SparkRuntimeException`` [USER_RAISED_EXCEPTION]
+    worded as :func:`hash_format_mismatch` for that row, then ``remedy``."""
+    foreign = foreign_hash_format(df)
+    head, tail = hash_format_mismatch(what, ["\0"]).split("\0")  # around the stamp
+    msg = F.concat(F.lit(head), foreign, F.lit(tail + remedy))
+    return df.where(F.when(foreign.isNull(), True).otherwise(F.raise_error(msg)))
+
+
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 finalizer over a uint64 array."""
     x = x.astype(np.uint64, copy=True)

@@ -178,10 +178,9 @@ def _python_probe(spark, value, hit):
                 return pd.Series(_segmented_any(s, lambda flat: hit(v, flat)))
             return pd.Series(np.asarray(hit(v, s), dtype=bool))
 
-        # nondeterministic on every site: it stops Catalyst's constraint
-        # propagation from copying a probe onto the BUILD side through a
-        # join condition — a filter built from those very keys passes
-        # 100% there, and it is pure wasted Python time
+        # nondeterministic, as the codegen probe is: else Catalyst's constraint
+        # propagation copies the probe onto the BUILD side through a join
+        # condition, where a filter built from those very keys passes 100%
         return udf.asNondeterministic()(col)
 
     return probe
@@ -238,7 +237,9 @@ class MembershipFilter:
                     return F.exists(
                         col, lambda h: _native_might_contain(self._spark, self.blob, h)
                     )
-                return _native_might_contain(self._spark, self.blob, col)
+                # always true, but nondeterministic (see _python_probe)
+                gate = F.spark_partition_id() >= 0
+                return F.when(gate, _native_might_contain(self._spark, self.blob, col))
             except Exception as ex:  # private-API drift → pandas probe
                 _note_native_fallback(self._report, ex, self._forced)
         if self._py is None:

@@ -1237,6 +1237,7 @@ def _small_batch_dedup(batch, hfp, fp, id_col, fpp, history_filter, report):
         in_hist = pc.is_in(fps.cast(pa.binary(width)), value_set=hits).fill_null(False)
         cross = cand & in_hist.to_numpy()
     new_ids = reps.column("id_min").filter(pa.array(~cross)).drop_null()
+    # its broadcast costs a job, yet beats SQL IN, isin and array_contains (§45)
     out = batch.join(batch.sparkSession.createDataFrame(
         pa.table({id_col: new_ids}), T.StructType([batch.schema[id_col]]),
     ), on=id_col, how="left_semi")

@@ -21,10 +21,10 @@ touched.
 
 Hash-format safety: every row is stamped with ``hashing.HASH_FORMAT``
 (``hashing.stamp_hash_format``, the stamp checkpoints and Bloom indexes
-carry too).  A store holding a row of another hash domain, or one
-without a stamp, refuses to merge (mixed domains silently corrupt HLL /
-Bloom membership); being per-row, the stamp survives partial appends
-from mixed library versions.
+carry too).  The first action that reads a row of another hash domain,
+or one without a stamp, fails inside its own scan instead of merging it
+(mixed domains silently corrupt HLL / Bloom membership); being per-row,
+the stamp survives partial appends from mixed library versions.
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ from .aggregate import (
     sketch_partials,
     tree_merge,
 )
-from .hashing import foreign_hash_format, hash_format_mismatch, stamp_hash_format
+from .hashing import refuse_foreign_hash_format, stamp_hash_format
 from .sketches import Sketch
 
 
@@ -112,9 +112,10 @@ def read_sketch_store(
     Reads with ``mergeSchema`` so a store whose snapshots were written
     with different group columns surfaces every column (missing ones
     null) instead of silently adopting one file's schema; the required
-    partial payload columns are checked.  The hash-format guard is one
-    collect with no exchange that returns only the rows whose stamp is
-    foreign or missing: none on a store this version wrote."""
+    partial payload columns are checked (``ValueError``).  The hash-format
+    guard runs no job: any action over a foreign or unstamped row raises
+    ``SparkRuntimeException`` [USER_RAISED_EXCEPTION]; ``snapshots``
+    prunes before it, so excluding a foreign snapshot reads fine."""
     df = spark.read.option("mergeSchema", "true").parquet(path)
     # the full PARTIAL_SCHEMA payload: store_sketch and store_estimates
     # select all of it and every merge folds it — a dir missing
@@ -129,16 +130,11 @@ def read_sketch_store(
         )
     if snapshots is not None:
         df = df.where(F.col("snapshot").isin(list(snapshots)))
-    foreign = foreign_hash_format(df)
-    found = df.where(foreign.isNotNull()).select(foreign).collect()
-    why = hash_format_mismatch(f"sketch store {path!r}", (r[0] for r in found))
-    if why:
-        raise ValueError(
-            f"{why}: merging mixed domains would silently corrupt estimates. "
-            "Rebuild the store (re-run append_sketch_snapshot per snapshot) "
-            "under one version."
-        )
-    return df
+    return refuse_foreign_hash_format(
+        df, f"sketch store {path!r}",
+        ": merging mixed domains would silently corrupt estimates. Rebuild the "
+        "store (re-run append_sketch_snapshot per snapshot) under one version.",
+    )
 
 
 def store_estimates(

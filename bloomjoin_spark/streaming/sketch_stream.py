@@ -18,6 +18,7 @@ Two layers:
 from __future__ import annotations
 
 import re
+import warnings
 from collections.abc import Callable
 
 import numpy as np
@@ -255,6 +256,12 @@ class StreamingSketchCollector:
         return self.sketches.get(key)
 
 
+def _quiet_state_padding() -> None:
+    """In a state function's worker: ignore pandas' warning on PySpark's all-NA padding."""
+    warnings.filterwarnings("ignore", "The behavior of DataFrame concatenation with empty "
+                            "or all-NA", FutureWarning, r"pyspark\.sql\.pandas\.serializers")
+
+
 def stateful_sketch_stream(
     stream: DataFrame,
     factory: Callable,
@@ -287,6 +294,7 @@ def stateful_sketch_stream(
     finish, out_cols = _estimates(group_col, extract)
 
     def fn(key, pdf_iter, state):
+        _quiet_state_padding()
         sk = Sketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         n = int(state.get[1]) if state.exists else 0
         for pdf in pdf_iter:
@@ -341,6 +349,7 @@ def topk_stream(
     cols = _item_cols(cols, token_col, weight_col)
 
     def fn(key, pdf_iter, state):
+        _quiet_state_padding()
         sk = TopKSketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         for pdf in pdf_iter:
             if len(pdf) == 0:

@@ -92,6 +92,24 @@ def test_under_cap_probe_is_codegen_and_pre_exchange(spark):
     assert_df_equal(out, li.join(sub, li.l_partkey == sub.p_partkey, "inner"))
 
 
+@pytest.mark.parametrize("collect_metrics", [False, True])
+def test_codegen_probe_stays_on_the_probe_side(spark, collect_metrics):
+    """The codegen probe is not copied through the join condition onto
+    the build side (where a filter built from those keys passes every
+    row): one ``might_contain`` in the optimized plan, under either
+    value of ``collect_metrics``, and the output exact."""
+    from bloomjoin_spark import bloom_join
+
+    li, sub = _lineitem_and_sub(spark)
+    out, rep = bloom_join(
+        li, sub, on={"l_partkey": "p_partkey"}, how="inner", engine="native",
+        force_prefilter=True, collect_metrics=collect_metrics, return_report=True,
+    )
+    assert rep.engine == "native" and rep.used_prefilter
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("might_contain") == 1
+    assert_df_equal(out, li.join(sub, li.l_partkey == sub.p_partkey, "inner"))
+
+
 def _membership_case(spark, case):
     """``(out, exact)`` for one caller of ``bloom_join.membership_filter``:
     its output under a filter below the cap, and the exact path its

@@ -3,6 +3,7 @@ estimates, idempotent snapshot replacement, hash-domain guard."""
 
 import numpy as np
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from bloomjoin_spark import HllSketch
@@ -237,6 +238,29 @@ def test_multi_sketch_store_one_scan(spark, tmp_path):
         )
 
 
+#: every way a caller reads store rows; each must meet the per-row guard
+#: at its first action (``select("blob")``: column pruning cannot drop it)
+_CONSUMERS = {
+    "store_sketch": store_sketch,
+    "store_estimates": lambda st: store_estimates(st, "snapshot").collect(),
+    "count": lambda st: st.count(),
+    "select_blob": lambda st: st.select("blob").collect(),
+}
+
+
+def _refused_at_every_consumer(spark, path, match):
+    """Reading the store runs nothing; each consumer's first action
+    raises the curated refusal, and a read that excludes the foreign
+    snapshot still merges."""
+    store = read_sketch_store(spark, path)
+    for consume in _CONSUMERS.values():
+        with pytest.raises(SparkRuntimeException, match=match):
+            consume(store)
+    ok = read_sketch_store(spark, path, snapshots=["day1"])
+    assert ok.count() > 0
+    assert abs(store_sketch(ok).estimate() - 500) / 500 <= 4 * 1.04 / 2**6
+
+
 def test_mixed_hash_format_refused(spark, tmp_path):
     path = str(tmp_path / "mstore")
     append_sketch_snapshot(
@@ -252,11 +276,10 @@ def test_mixed_hash_format_refused(spark, tmp_path):
     old.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("snapshot").parquet(path)
-    with pytest.raises(ValueError, match="hash format"):
-        read_sketch_store(spark, path)
-    # excluding the foreign snapshot reads fine
-    ok = read_sketch_store(spark, path, snapshots=["day1"])
-    assert ok.count() > 0
+    _refused_at_every_consumer(
+        spark, path, r"USER_RAISED_EXCEPTION.*mstore' holds hash format\(s\) \[1\], "
+        r"this library hashes format \d+: merging mixed domains"
+    )
 
 
 def test_unstamped_snapshot_refused(spark, tmp_path):
@@ -271,15 +294,13 @@ def test_unstamped_snapshot_refused(spark, tmp_path):
     spark.createDataFrame(rows).withColumn("snapshot", F.lit("day0")).write.mode(
         "overwrite"
     ).option("partitionOverwriteMode", "dynamic").partitionBy("snapshot").parquet(path)
-    with pytest.raises(ValueError, match=r"hash format\(s\) \[None\]"):
-        read_sketch_store(spark, path)
-    assert read_sketch_store(spark, path, snapshots=["day1"]).count() > 0
+    _refused_at_every_consumer(spark, path, r"hash format\(s\) \[None\]")
 
 
 def test_store_read_and_merge_jobs(spark, tmp_path):
-    """Reading a store (schema check and hash-format guard) and merging
-    it into one sketch cost a fixed number of Spark jobs: the guard is
-    one collect with no exchange."""
+    """Reading a store (schema check, hash-format guard) runs no tagged
+    job, and merging it into one sketch runs one: the guard rides the
+    merge's own scan."""
     path = str(tmp_path / "jstore")
     for day, (lo, hi) in {"day1": (0, 300), "day2": (300, 600)}.items():
         append_sketch_snapshot(
@@ -288,7 +309,7 @@ def test_store_read_and_merge_jobs(spark, tmp_path):
     store, n_read = tagged_jobs(spark, lambda: read_sketch_store(spark, path))
     sk, n_merge = tagged_jobs(spark, lambda: store_sketch(store))
     assert abs(sk.estimate() - 600) / 600 <= 4 * 1.04 / 2**6
-    assert (n_read, n_merge) == (1, 1)
+    assert (n_read, n_merge) == (0, 1)
 
 
 def test_foreign_dir_missing_payload_columns_curated_error(spark, tmp_path):
