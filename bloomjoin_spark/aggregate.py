@@ -1,16 +1,17 @@
 """Two-phase distributed sketch aggregation.
 
 Phase 1 (executors): one sketch partial per input partition, built
-inside ``mapInArrow`` / ``mapInPandas`` — Arrow batches in, numpy
-hashing, zero per-row Python. Each partial travels as one row
+inside ``mapInArrow`` — Arrow batches in, numpy hashing, zero per-row
+Python. Each partial travels as one row
 ``([key,] partition_id, n_partials, n_rows, fingerprint, blob)``,
 keyed by a group value or a sketch name where one pass builds many.
-Every builder keeps only its extraction (flatten a token column, hash
-a utf8 or numeric column, reshape vectors, slice groups) and hands
-each batch to the one ingest rule, :func:`ingest`, which owns null
+Every single, grouped and weighted builder, and both sketch streams,
+read a batch through the one extraction, :func:`extract` (flatten a
+token column, hash key columns by their Arrow type, reshape vectors),
+and hand it to the one ingest rule, :func:`ingest`, which owns null
 handling, the set / weighted / per-instance dispatch and the lineage
-fingerprint; :class:`PartialRows` writes every partial row, in Arrow
-or pandas form, and folds them again in the merge.
+fingerprint; :class:`PartialRows` writes every partial row and folds
+them again in the merge.
 
 Every partial stage goes through :func:`partial_stage`, which narrows
 a filled cache (``coalesce``, no shuffle) to ⌈plan bytes /
@@ -67,13 +68,12 @@ from pyspark.sql import functions as F
 
 from .hashing import (
     NULL_SENTINEL,
+    combine_hashes,
     foreign_hash_format,
-    hash_columns,
+    hash_arrow,
     hash_float64,
     hash_format_mismatch,
     hash_numeric_array,
-    hash_tokens_flat,
-    hash_utf8_arrow,
     stamp_hash_format,
 )
 from .plans.sizing import size
@@ -105,15 +105,6 @@ def _token_histogram(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray] | None:
     return None
 
 
-#: single-column dtypes eligible for the Arrow fast path — numerics
-#: (hash_numeric_array = the exact hash_series dispatch) and strings
-#: (hash_utf8_arrow over flat utf8 buffers = the hash_strings kernel)
-_ARROW_NUMERIC = {
-    "tinyint", "smallint", "int", "integer", "bigint", "long",
-    "float", "double", "short", "byte",
-}
-_ARROW_FAST = _ARROW_NUMERIC | {"string"}
-
 #: plan bytes one partial-building Python task covers, applied to
 #: cached inputs only, the one traffic it was measured on. Chosen when
 #: a task cost ~0.25 CPU-s before any hashing and the token lanes ~0.19
@@ -136,22 +127,16 @@ def _input_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def _cut(chunk, lo: int, hi: int, pandas: bool):
-    return chunk.iloc[lo:hi] if pandas else chunk.slice(lo, hi - lo)
-
-
-def _concat(parts: list, pandas: bool):
+def _concat(parts: list):
     if len(parts) == 1:
         return parts[0]
-    if pandas:
-        return pd.concat(parts, ignore_index=True)
     import pyarrow as pa
 
     return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
 
-def _pid_runs(it, pandas: bool, batch_rows: int):
-    """``(pid, chunk)`` pairs of a ``__pid``-led Arrow or pandas stream;
+def _pid_runs(it, batch_rows: int):
+    """``(pid, chunk)`` pairs of a ``__pid``-led Arrow batch stream;
     each chunk holds one pid's rows without the ``__pid`` column.
 
     A coalesced task's batches straddle partition boundaries, so a
@@ -165,43 +150,38 @@ def _pid_runs(it, pandas: bool, batch_rows: int):
     for chunk in it:
         if len(chunk) == 0:
             continue
-        pids = (chunk["__pid"] if pandas else chunk.column(0)).to_numpy()
-        data = chunk.iloc[:, 1:] if pandas else chunk.drop_columns(["__pid"])
+        pids = chunk.column(0).to_numpy()
+        data = chunk.drop_columns(["__pid"])
         cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
         for lo, hi in zip([0, *cuts], [*cuts, len(pids)]):
             if pids[lo] != cur:
                 if pend:
-                    yield cur, _concat(pend, pandas)
+                    yield cur, _concat(pend)
                 cur, pend, n_pend = int(pids[lo]), [], 0
-            pend.append(_cut(data, lo, hi, pandas))
+            pend.append(data.slice(lo, hi - lo))
             n_pend += hi - lo
             while 0 < batch_rows <= n_pend:
-                whole = _concat(pend, pandas)
-                yield cur, _cut(whole, 0, batch_rows, pandas)
+                whole = _concat(pend)
+                yield cur, whole.slice(0, batch_rows)
                 n_pend -= batch_rows
-                pend = [_cut(whole, batch_rows, len(whole), pandas)] if n_pend else []
+                pend = [whole.slice(batch_rows)] if n_pend else []
             if len(pend) > 1:
-                yield cur, _concat(pend, pandas)
+                yield cur, _concat(pend)
                 pend, n_pend = [], 0
     if pend:
-        yield cur, _concat(pend, pandas)
+        yield cur, _concat(pend)
 
 
-def _uncounted(out, pandas: bool):
+def _uncounted(out):
     """``out`` with ``n_partials`` 0: a marker, not an input partition."""
-    if pandas:
-        return out.assign(n_partials=0)
     import pyarrow as pa
 
     i = out.schema.get_field_index("n_partials")
     return out.set_column(i, "n_partials", pa.array([0] * out.num_rows, pa.int64()))
 
 
-def _per_partition(
-    build, pandas: bool, batch_rows: int, done_ids: frozenset[int], coalesced: bool
-):
-    """The ``mapInArrow`` / ``mapInPandas`` function around
-    ``build(pid, chunks)``.
+def _per_partition(build, batch_rows: int, done_ids: frozenset[int], coalesced: bool):
+    """The ``mapInArrow`` function around ``build(pid, chunks)``.
 
     One task per input partition: ``build`` runs once with the task's
     partition id, also on a partition without rows, and a partition in
@@ -225,13 +205,13 @@ def _per_partition(
                 yield from build(task, it)
             return
         seen = False
-        runs = _pid_runs(it, pandas, batch_rows)
+        runs = _pid_runs(it, batch_rows)
         for pid, run in itertools.groupby(runs, key=itemgetter(0)):
             seen = True
             yield from build(pid, (chunk for _, chunk in run))
         if not seen:
             for out in build(-1 - task, iter(())):
-                yield _uncounted(out, pandas)
+                yield _uncounted(out)
 
     return fn
 
@@ -241,7 +221,6 @@ def partial_stage(
     keep: list[str],
     build: Callable,
     schema: str,
-    pandas: bool = False,
     done_ids: frozenset[int] = frozenset(),
 ) -> tuple[DataFrame, int | None]:
     """The one Python stage every sketch-partial build goes through;
@@ -272,9 +251,7 @@ def partial_stage(
     batch_rows = int(
         df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     )
-    fn = _per_partition(build, pandas, batch_rows, done_ids, coalesced)
-    if pandas:
-        return staged.mapInPandas(fn, schema=schema), n_in
+    fn = _per_partition(build, batch_rows, done_ids, coalesced)
     return staged.mapInArrow(fn, schema=schema), n_in
 
 
@@ -438,8 +415,7 @@ class PartialRows:
     def rows(self, pid: int, key_col: str | None = None, key_type=None, pandas=False):
         """Yield every key's row under ``partition_id`` ``pid``, as one
         pandas frame or one Arrow batch (``key_col`` of ``key_type``);
-        nothing when no key was seen.  A None key (a staged bigint
-        group's null) makes the pandas key column ``object``: exact ints."""
+        nothing when no key was seen."""
         keys = list(self.sketches)
         if not keys:
             return
@@ -451,8 +427,7 @@ class PartialRows:
             "blob": [self.sketches[k].to_bytes() for k in keys],
         }
         if pandas:
-            kdt = object if None in keys else None
-            kcol = {key_col: pd.Series(keys, dtype=kdt)} if key_col else {}
+            kcol = {key_col: pd.Series(keys)} if key_col else {}
             yield pd.DataFrame({**kcol, **cols})
             return
         import pyarrow as pa
@@ -463,168 +438,100 @@ class PartialRows:
         yield pa.RecordBatch.from_pydict(out)
 
 
-def _extract_values(pdf: pd.DataFrame, cols, token_col) -> np.ndarray:
-    """float64 value array for quantile sketches (NaN = null)."""
-    if token_col is not None:
-        chunks = [
-            np.asarray(t, dtype=np.float64)
-            for t in pdf[token_col]
-            if t is not None and len(t)
-        ]
-        return np.concatenate(chunks) if chunks else np.empty(0, dtype=np.float64)
-    return pdf[cols[0]].to_numpy(dtype=np.float64, na_value=np.nan)
-
-
-def _ingest_pdf(
+def extract_batch(
+    batch,
     sk: Sketch,
-    pdf: pd.DataFrame,
-    cols: list[str] | None,
-    token_col: str | None,
-    weight_col: str | None = None,
-) -> tuple[int, np.uint64]:
-    """The pandas lanes' extraction: ONE pandas batch into :func:`ingest`.
-    The pandas builder and both sketch streams (the stateful stream and
-    topk_stream) dispatch here, so batch/stream parity cannot drift.
-    Returns (rows_counted, fingerprint_delta): rows_counted is the batch
-    row count except on the vectors lane, where NULL vectors carry no
-    rows (matching the Arrow vectors lane's accounting)."""
-    consumes = getattr(sk, "CONSUMES", "hashes")
-    n, counts, had_nulls = len(pdf), None, False
-    if weight_col is not None:
-        x = pdf[cols[0]].to_numpy(dtype=np.float64, na_value=np.nan)
-        counts = pdf[weight_col].to_numpy()
-    elif consumes == "vectors":
-        vecs = [np.asarray(v, dtype=np.float64) for v in pdf[cols[0]] if v is not None]
-        had_nulls, n = len(vecs) < n, len(vecs)
-        bad = next((v.size for v in vecs if v.size != sk.dim), None)
-        if bad is not None:
-            raise ValueError(
-                f"vector column rows must all have length {sk.dim} "
-                f"(found a row of length {bad})"
-            )
-        x = np.stack(vecs) if vecs else np.empty((0, sk.dim))
-    elif consumes == "values":
-        x = _extract_values(pdf, cols, token_col)
-    elif token_col is not None:
-        x = hash_tokens_flat(pdf[token_col])
-    else:
-        x = hash_columns(pdf, list(cols))
-    return n, ingest(sk, x, counts, had_nulls=had_nulls)
-
-
-#: null flag beside a bigint group column staged as ``coalesce(g, 0)``
-_GNULL = "__gnull"
-
-
-def make_pandas_partial_fn(
-    factory: Callable[[], Sketch],
-    group_col: str | None = None,
     cols: list[str] | None = None,
     token_col: str | None = None,
     weight_col: str | None = None,
-):
-    """mapInPandas builder ``(pid, batches)`` for :func:`partial_stage`:
-    ONE pass over each partition producing one partial row, or with
-    ``group_col`` one per (group key, partition).  Grouping happens
-    inside the batch (pandas C groupby), so a K-key input costs one scan
-    — not the K filtered passes of filtering the DataFrame per key.
-    A bigint group column comes as ``coalesce(g, 0)`` plus ``_GNULL``:
-    with a null beside them pandas rounds keys above 2^53 as float64.
+    prehashed: bool = False,
+    rows: bool = False,
+) -> tuple:
+    """``(n, x, counts, had_nulls)`` of one Arrow batch for :func:`ingest`:
+    the one extraction every partial builder and both sketch streams
+    call, so a key hashes by one rule whichever lane reads it.
 
-    ``weight_col`` (weighted-frequency sketches only, e.g. TopKSketch):
-    each row's item counts ``weight`` times instead of once; rows whose
-    weight is NULL are skipped (a NULL weight carries no mass)."""
+    ``x`` is what ``sk.CONSUMES``: the row hashes of the ``cols`` key
+    (:func:`hashing.hash_arrow`, by each column's Arrow type),
+    prehashed int64 bits, the hashes of ``token_col``'s flat ids,
+    float64 values (of ``cols[0]``, or the tokens), or a vector column's
+    ``(rows, dim)`` matrix.  ``counts`` is the ``weight_col`` or a token
+    histogram's counts.  ``n`` is the rows the batch counts, which a
+    null vector does not; ``had_nulls`` marks null rows already dropped.
 
-    def fn(pid: int, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = PartialRows(lambda _: factory(), () if group_col else (None,))
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if group_col is None:
-                groups = [(None, pdf)]
-            elif _GNULL in pdf:
-                groups = (
-                    (None if null else key, sub)
-                    for (key, null), sub in pdf.groupby([group_col, _GNULL], sort=False)
-                )
-            else:
-                groups = pdf.groupby(group_col, dropna=False, sort=False)
-            for key, sub in groups:
-                acc.add(key, *_ingest_pdf(acc[key], sub, cols, token_col, weight_col))
-        yield from acc.rows(pid, group_col, pandas=True)
+    Without ``rows``, a single column's nulls are dropped before it is
+    read and tokens collapse to their histogram (:class:`_Tokens`).
+    With ``rows`` (a grouped builder slicing ``x`` by group, or a
+    stream) ``x`` keeps one element per row, per token or per non-null
+    vector, nulls staying in as marks; ``n`` is then each row's element
+    count, None when every row has exactly one."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    return fn
+    consumes = getattr(sk, "CONSUMES", "hashes")
+    if token_col is not None:
+        col = batch.column(token_col)
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        if prehashed:
+            return batch.num_rows, flat.astype(np.int64, copy=False).view(np.uint64), None, False
+        if not rows:
+            return batch.num_rows, *_Tokens(flat).input(sk), False
+        lens = pc.list_value_length(col).fill_null(0).to_numpy(zero_copy_only=False)
+        x = flat.astype(np.float64, copy=False) if consumes == "values" else hash_numeric_array(flat)
+        return lens, x, None, False
+    keys = [batch.column(c) for c in cols]
+    col, n, counts = keys[0], None if rows else batch.num_rows, None
+    had_nulls = (len(keys) == 1 and weight_col is None and col.null_count > 0
+                 and (not rows or consumes == "vectors"))
+    if had_nulls:
+        if rows:  # a null vector is a row of no element
+            n = col.is_valid().to_numpy(zero_copy_only=False).astype(np.int64)
+        col = keys[0] = col.drop_null()
+    if consumes == "vectors":
+        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+        if (lens != sk.dim).any():
+            raise ValueError(
+                f"vector column rows must all have length {sk.dim} "
+                f"(found a row of length {int(lens[lens != sk.dim][0])})"
+            )
+        x = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        x = x.reshape(-1, sk.dim)
+        return (n if rows else len(x)), x, None, had_nulls
+    if weight_col is not None or consumes == "values":
+        if pa.types.is_string(col.type) or pa.types.is_binary(col.type):
+            raise TypeError("value-consuming sketches need a numeric column, "
+                            f"got {col.type} for {type(sk).__name__}")
+        x = col.to_pandas().to_numpy(dtype=np.float64, na_value=np.nan)
+        if weight_col is not None:
+            counts = batch.column(weight_col).to_numpy(zero_copy_only=False)
+    elif prehashed:  # int64 already hashed JVM-side (xxhash64)
+        x = col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False).view(np.uint64)
+    else:
+        x = hash_arrow(col) if len(keys) == 1 else combine_hashes([hash_arrow(c) for c in keys])
+    return n, x, counts, had_nulls
 
 
 def make_partial_fn_arrow(
     factory: Callable[[], Sketch],
+    cols: list[str] | None = None,
     token_col: str | None = None,
     prehashed: bool = False,
 ):
-    """Arrow-native partial builder (``mapInArrow``) for the hot cases:
-    prehashed int64 keys, ``array<int>`` token columns, single numeric
-    or string columns, vector columns.  An Arrow list column is ONE
-    flat values buffer + offsets — flattening it is zero-copy, versus
-    the Arrow→pandas conversion that materializes a numpy object per
-    ROW (millions of small allocations per batch; measured 85-94%
-    kernel time from allocator churn at 32 concurrent workers).  A key
-    column's nulls are dropped (and recorded) before hashing."""
-    import pyarrow as pa
+    """Partial builder ``(pid, batches)`` for :func:`partial_stage`: ONE
+    pass over each partition producing one partial row, every batch
+    read by :func:`extract_batch`.  An Arrow list column is ONE flat
+    values buffer + offsets — flattening it is zero-copy, versus a
+    numpy object per ROW (measured 85-94% kernel time from allocator
+    churn at 32 concurrent workers)."""
 
     def partial_fn(pid, it):
         acc = PartialRows(lambda _: factory(), (None,))
         sk = acc[None]
-        consumes = getattr(sk, "CONSUMES", "hashes")
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            col, n, counts = batch.column(0), batch.num_rows, None
-            had_nulls = token_col is None and col.null_count > 0
-            if had_nulls:
-                col = col.drop_null()
-            if consumes == "vectors":
-                # matrix sketches (FrequentDirections): a zero-copy
-                # flatten + reshape, never a numpy object per row
-                if len(col) == 0:
-                    continue
-                dim = sk.dim
-                lens = pa.compute.list_value_length(col).to_numpy(zero_copy_only=False)
-                if (lens != dim).any():
-                    raise ValueError(
-                        f"vector column rows must all have length {dim} "
-                        f"(found a row of length {int(lens[lens != dim][0])})"
-                    )
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                x = flat.astype(np.float64, copy=False).reshape(-1, dim)
-                n = len(x)
-            elif token_col is not None:
-                arr = col.flatten().to_numpy(zero_copy_only=False)  # zero-copy
-                if prehashed:
-                    x = arr.astype(np.int64, copy=False).view(np.uint64)
-                else:
-                    x, counts = _Tokens(arr).input(sk)
-            elif pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
-                # string keys (doc_id, source — THE common case): hash
-                # the flat utf8 buffers directly, never an object per row
-                if consumes == "values":
-                    raise TypeError(
-                        "value-consuming sketches need a numeric column, "
-                        f"got string for {type(sk).__name__}"
-                    )
-                x = hash_utf8_arrow(col)
-            else:
-                arr = col.to_numpy(zero_copy_only=False)
-                if consumes == "values":
-                    x = arr.astype(np.float64, copy=False)
-                elif prehashed:  # int64 already hashed JVM-side (xxhash64)
-                    x = arr.astype(np.int64, copy=False).view(np.uint64)
-                else:
-                    # canonical numeric hash — hash_numeric_array keeps
-                    # int64 beyond 2^53 exact, matching the query-side
-                    # hash_series dispatch bit for bit
-                    x = hash_numeric_array(arr)
-            fp = ingest(sk, x, counts, had_nulls=had_nulls, null_marks=not prehashed)
-            acc.add(None, n, fp)
+            n, x, counts, had_nulls = extract_batch(batch, sk, cols, token_col, None, prehashed)
+            acc.add(None, n, ingest(sk, x, counts, had_nulls=had_nulls, null_marks=not prehashed))
         yield from acc.rows(pid)
 
     return partial_fn
@@ -635,24 +542,20 @@ def make_grouped_partial_fn_arrow(
     group_col: str,
     cols: list[str] | None = None,
     token_col: str | None = None,
+    weight_col: str | None = None,
 ):
-    """Arrow-native grouped partial builder (``mapInArrow``) for the hot
-    grouped lanes: ``array<int>`` token columns, single string columns,
-    and single numeric value columns.  The pandas builder materializes a
-    numpy object per ROW (token arrays) or per cell before its C
-    groupby — at 2M rows that conversion alone dominated the scan
-    (measured: grouped top-k partials 1.96 s of a 2.0 s cell).  Here
-    the batch stays columnar: group codes come from one
-    ``dictionary_encode``, elements sort once by code (stable —
-    within-group order is preserved, so sketch update order matches the
-    pandas builder), and each group ingests a SLICE of the flat
-    hash/value array.
-    Null group keys form their own group (pandas ``dropna=False``
-    parity)."""
+    """Grouped partial builder ``(pid, batches)`` for :func:`partial_stage`:
+    one partial row per (group key, partition) in ONE pass.  The batch
+    stays columnar: group codes come from one ``dictionary_encode``,
+    :func:`extract_batch` reads the whole batch once (``rows``: one
+    element per row, token or vector), elements sort once by code
+    (stable — within-group order is preserved), and each group ingests
+    a SLICE of ``x`` and ``counts`` — never a numpy object per row nor
+    one hash call per group.  Null group keys form their own group."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    values = getattr(factory(), "CONSUMES", "hashes") == "values"
+    proto = factory()
 
     def fn(pid, it):
         acc = PartialRows(lambda _: factory())
@@ -660,43 +563,31 @@ def make_grouped_partial_fn_arrow(
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            gcol = batch.column(batch.schema.get_field_index(group_col))
+            gcol = batch.column(group_col)
             gtype = gcol.type
+            if pa.types.is_timestamp(gtype):  # a zoned datetime would not round-trip
+                gcol = gcol.cast(pa.int64())
             denc = pc.dictionary_encode(gcol)
-            if isinstance(denc, pa.ChunkedArray):
-                denc = denc.combine_chunks()
             keys = denc.dictionary.to_pylist()
             codes = pc.fill_null(
                 pc.cast(denc.indices, pa.int64()), len(keys)
             ).to_numpy(zero_copy_only=False)
             if gcol.null_count:
                 keys.append(None)
-            dcol = batch.column(batch.schema.get_field_index(token_col or cols[0]))
-            if token_col is not None:
-                # flatten once (zero-copy) and repeat each row's code by
-                # its list length: per-group token slices in row order
-                lens = pc.list_value_length(dcol).to_numpy(zero_copy_only=False)
-                flat = dcol.flatten().to_numpy(zero_copy_only=False)
-                x_all = (
-                    flat.astype(np.float64, copy=False) if values
-                    else hash_numeric_array(flat.astype(np.int64, copy=False))
-                )
-                elem_codes = np.repeat(codes, np.nan_to_num(lens, nan=0).astype(np.int64))
-            else:
-                # one string column hashes by the flat-utf8 kernel,
-                # nulls → NULL_SENTINEL (hash_series parity)
-                x_all = (
-                    dcol.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-                    if values else hash_utf8_arrow(dcol)
-                )
-                elem_codes = codes
-            order = np.argsort(elem_codes, kind="stable")
-            bounds = np.searchsorted(elem_codes[order], np.arange(len(keys) + 1))
+            per_row, x, counts, _ = extract_batch(
+                batch, proto, cols, token_col, weight_col, rows=True
+            )
+            elems = codes if per_row is None else np.repeat(codes, per_row)
+            order = np.argsort(elems, kind="stable")
+            bounds = np.searchsorted(elems[order], np.arange(len(keys) + 1))
+            # every row counts but a null vector's
+            counted = np.bincount(codes if token_col else elems, minlength=len(keys))
             for ci, n in enumerate(np.bincount(codes, minlength=len(keys))):
                 if n:
-                    key = keys[ci]
-                    x = x_all[order[bounds[ci]:bounds[ci + 1]]]
-                    acc.add(key, n, ingest(acc[key], x))
+                    sl = order[bounds[ci]:bounds[ci + 1]]
+                    fp = ingest(acc[keys[ci]], x[sl], None if counts is None else counts[sl],
+                                had_nulls=counted[ci] < n)
+                    acc.add(keys[ci], counted[ci], fp)
         yield from acc.rows(pid, group_col, gtype)
 
     return fn
@@ -724,42 +615,15 @@ def grouped_sketch_partials(
     weight_col: str | None = None,
 ) -> DataFrame:
     """One partial row per (group key, input partition) in a single
-    scan. Output schema: (group_col, partition_id, n_partials, n_rows,
-    fingerprint, blob).
-
-    Hot grouped lanes (token arrays, single string column, single
-    numeric value column) run Arrow-native — flat buffers, one
-    dictionary-encode + stable sort per batch, never a numpy object per
-    row; weighted / multi-column / other-typed inputs keep the pandas
-    builder (a bigint group column staged for exact keys)."""
+    scan (:func:`make_grouped_partial_fn_arrow`). Output schema:
+    (group_col, partition_id, n_partials, n_rows, fingerprint, blob)."""
     cols = _item_cols(cols, token_col, weight_col)
     keep = [group_col] + (list(cols) if cols else [token_col])
     if weight_col is not None:
         keep.append(weight_col)
-    dtypes = dict(df.dtypes)
-    gtype = dtypes[group_col]
-    schema = f"`{group_col}` {gtype}, {PARTIAL_SCHEMA}"
-    consumes = getattr(factory(), "CONSUMES", "hashes")
-    col_dtype = dtypes.get(cols[0], "").lower() if cols else ""
-    arrow_ok = weight_col is None and consumes != "vectors" and (
-        (token_col is not None and consumes in ("hashes", "values"))
-        or (
-            cols is not None
-            and len(cols) == 1
-            and (
-                (consumes == "hashes" and col_dtype == "string")
-                or (consumes == "values" and col_dtype in _ARROW_NUMERIC)
-            )
-        )
-    )
-    if arrow_ok:
-        build = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col)
-    else:
-        build = make_pandas_partial_fn(factory, group_col, cols, token_col, weight_col)
-        if gtype == "bigint":
-            g = F.col(group_col)
-            keep[:1] = [F.coalesce(g, F.lit(0)).alias(group_col), g.isNull().alias(_GNULL)]
-    return partial_stage(df, keep, build, schema, pandas=not arrow_ok)[0]
+    schema = f"`{group_col}` {dict(df.dtypes)[group_col]}, {PARTIAL_SCHEMA}"
+    build = make_grouped_partial_fn_arrow(factory, group_col, cols, token_col, weight_col)
+    return partial_stage(df, keep, build, schema)[0]
 
 
 def _estimates(group_col: str, extract=None):
@@ -931,9 +795,8 @@ def sketch_partials(
     a cached input); partitions in ``done_ids`` are skipped unscanned.
 
     Projects to only the key/token columns first so the parquet scan
-    stays pruned (check ``ReadSchema`` in .explain).  Hot cases
-    (prehashed keys, token arrays, one numeric column) run on the
-    Arrow-native path — flat buffers, no per-row materialization."""
+    stays pruned (check ``ReadSchema`` in .explain); every batch is
+    read from flat Arrow buffers (:func:`make_partial_fn_arrow`)."""
     return _sketch_partials(df, factory, cols, token_col, prehashed, done_ids)[0]
 
 
@@ -951,7 +814,7 @@ def _sketch_partials(
     keep = list(cols) if cols else [token_col]
     dtypes = dict(df.dtypes)
     if getattr(factory(), "CONSUMES", "hashes") == "vectors":
-        # matrix sketches: one list-typed column, Arrow-native always
+        # matrix sketches: one list-typed column
         if not cols or len(cols) != 1:
             raise ValueError(
                 "vector-consuming sketches need exactly one list column "
@@ -962,24 +825,8 @@ def _sketch_partials(
                 f"vector-consuming sketches need an array<float> column; "
                 f"{cols[0]!r} is {dtypes.get(cols[0])!r}"
             )
-        build = make_partial_fn_arrow(factory, None, False)
-        return partial_stage(df, keep, build, PARTIAL_SCHEMA, done_ids=done_ids)
-    arrow_ok = (
-        prehashed
-        or token_col is not None
-        or (
-            cols is not None
-            and len(cols) == 1
-            and dtypes.get(cols[0], "").lower() in _ARROW_FAST
-        )
-    )
-    if arrow_ok:
-        build = make_partial_fn_arrow(factory, token_col, prehashed)
-    else:
-        build = make_pandas_partial_fn(factory, None, cols, token_col)
-    return partial_stage(
-        df, keep, build, PARTIAL_SCHEMA, pandas=not arrow_ok, done_ids=done_ids
-    )
+    build = make_partial_fn_arrow(factory, cols, token_col, prehashed)
+    return partial_stage(df, keep, build, PARTIAL_SCHEMA, done_ids=done_ids)
 
 
 def _merge_rows(key: str | None, finish: Callable | None = None):

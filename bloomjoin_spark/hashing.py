@@ -246,10 +246,21 @@ def hash_utf8_arrow(arr, seed: int = 0) -> np.ndarray:
     return out
 
 
+def _text(v) -> str:
+    if isinstance(v, (bytes, bytearray)):
+        try:
+            return v.decode("utf-8")
+        except UnicodeDecodeError:
+            pass
+    return str(v)
+
+
 def hash_strings(values: pd.Series | np.ndarray, seed: int = 0) -> np.ndarray:
     """Hash a string array to uint64 — same kernel as the Arrow ingest
     fast path (``hash_utf8_arrow``); the pandas→Arrow conversion is
-    C-speed.  Non-string objects canonicalise via ``str()``.
+    C-speed.  utf8 bytes hash as their text; any other object, and bytes
+    that are not utf8, canonicalise via ``str()`` — value by value, so a
+    value hashes the same whatever else the array holds.
     Nulls → NULL_SENTINEL."""
     import pyarrow as pa
 
@@ -262,7 +273,7 @@ def hash_strings(values: pd.Series | np.ndarray, seed: int = 0) -> np.ndarray:
     except (pa.ArrowInvalid, pa.ArrowTypeError):
         null_mask = pd.isna(arr)
         as_str = np.array(
-            ["" if m else str(v) for v, m in zip(arr, null_mask)], dtype=object
+            ["" if m else _text(v) for v, m in zip(arr, null_mask)], dtype=object
         )
         pa_arr = pa.array(as_str, type=pa.string())
         out = hash_utf8_arrow(pa_arr, seed)
@@ -272,12 +283,18 @@ def hash_strings(values: pd.Series | np.ndarray, seed: int = 0) -> np.ndarray:
 
 
 def hash_series(s: pd.Series, seed: int = 0) -> np.ndarray:
-    """Canonical uint64 hash of one pandas column (one Arrow batch).
+    """Canonical uint64 hash of one pandas column.
 
-    Dispatch mirrors the type switch in src/hash_keys.cpp:147-243:
-    numeric → canonical double bits; bool → 0.0/1.0; string → siphash;
-    datetime → epoch-seconds double. Nulls of every type collapse to
-    NULL_SENTINEL.
+    Dispatch mirrors the type switch in src/hash_keys.cpp:147-243, by
+    the pandas dtype: numeric → :func:`hash_numeric_array`; bool →
+    0.0/1.0; datetime64 → wall-clock epoch seconds as a double
+    (``ns → float64 → / 1e9``); anything else → :func:`hash_strings`,
+    which hashes strings by the utf8 kernel and other objects by their
+    ``str()`` (a date by its ISO string, so a date and a timestamp of
+    the same instant hash apart).  Nulls of every type collapse to
+    NULL_SENTINEL.  A pandas dtype can depend on the batch (a null turns
+    a bigint column into float64); Arrow batches hash through
+    :func:`hash_arrow`, by the column's type.
     """
     if pd.api.types.is_bool_dtype(s):
         return hash_float64(s.fillna(np.nan).astype(np.float64).to_numpy())
@@ -301,6 +318,35 @@ def hash_series(s: pd.Series, seed: int = 0) -> np.ndarray:
     if isinstance(s.dtype, pd.CategoricalDtype):
         s = s.astype(object)  # hash by level string: factor == character
     return hash_strings(s, seed)
+
+
+def hash_arrow(col, seed: int = 0) -> np.ndarray:
+    """Canonical uint64 hash of one Arrow key column, by its type alone,
+    so a key hashes the same whatever else its batch holds.  Integers
+    of every width hash by their int64 value (:func:`hash_numeric_array`:
+    exact bits beyond 2^53); floats and booleans as doubles (0.0/1.0);
+    strings by :func:`hash_utf8_arrow`; every other type (binary,
+    decimal, date, timestamp) by :func:`hash_series` of its
+    ``to_pandas()``, a timestamp with a zone at its wall clock there.
+    Nulls → NULL_SENTINEL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = col.type
+    if pa.types.is_integer(t):
+        out = hash_numeric_array(
+            pc.cast(col.fill_null(0), pa.int64()).to_numpy(zero_copy_only=False), seed
+        )
+        if col.null_count:
+            out[col.is_null().to_numpy(zero_copy_only=False)] = NULL_SENTINEL
+        return out
+    if pa.types.is_floating(t) or pa.types.is_boolean(t):
+        return hash_float64(pc.cast(col, pa.float64()).to_numpy(zero_copy_only=False), seed)
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return hash_utf8_arrow(col, seed)
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        col = pc.local_timestamp(col)
+    return hash_series(col.to_pandas(), seed)
 
 
 def combine_hashes(parts: list[np.ndarray]) -> np.ndarray:

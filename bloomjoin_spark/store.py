@@ -46,6 +46,7 @@ from .aggregate import (
     tree_merge,
 )
 from .hashing import refuse_foreign_hash_format, stamp_hash_format
+from .plans.sizing import size
 from .sketches import Sketch
 
 
@@ -201,5 +202,12 @@ def _store_batch_fn(factory, path, group_col, cols, token_col, prefix):
 def store_sketch(store: DataFrame, fanin: int = 64) -> Sketch:
     """Merge an (ungrouped) store into one Sketch via the distributed
     tree merge — same fan-in-bounded reduction as ``build_sketch``, so
-    a store of any size merges without a driver-side fan-in."""
-    return tree_merge(store.select(*_PARTIAL_COLS), fanin)[0][None].sketch
+    a store of any size merges without a driver-side fan-in.
+
+    The merge is planned from the store's row bound (``plans.size``:
+    local parquet footers, no job), since many partial rows can share
+    one file.  Where the bound is unknown (a store off the local file
+    system), the merge plans from the read's partition count, which
+    can fold more than ``fanin`` blobs on the driver."""
+    partials = store.select(*_PARTIAL_COLS)
+    return tree_merge(partials, fanin, size(partials).rows_max)[0][None].sketch

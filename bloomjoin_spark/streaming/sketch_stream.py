@@ -262,6 +262,24 @@ def _quiet_state_padding() -> None:
                             "or all-NA", FutureWarning, r"pyspark\.sql\.pandas\.serializers")
 
 
+def _ingest_frame(sk, pdf, cols, token_col, weight_col=None) -> int:
+    """Feed ``sk`` one group frame of a state function through the batch
+    grouped builder's own extraction and ingest
+    (``aggregate.extract_batch`` with ``rows``), so stream state equals
+    the batch build over the same rows; returns the rows it counts."""
+    import pyarrow as pa
+
+    from ..aggregate import extract_batch, ingest
+
+    if len(pdf) == 0:
+        return 0
+    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    _, x, counts, had_nulls = extract_batch(batch, sk, cols, token_col, weight_col, rows=True)
+    ingest(sk, x, counts, had_nulls=had_nulls)
+    # every row counts but a null vector's
+    return len(x) if getattr(sk, "CONSUMES", None) == "vectors" else len(pdf)
+
+
 def stateful_sketch_stream(
     stream: DataFrame,
     factory: Callable,
@@ -286,8 +304,12 @@ def stateful_sketch_stream(
     streaming embedding-drift alarms).  ``extract`` maps the running
     sketch to the emitted double (default ``.estimate()``, falling back
     to ``.total``; pass e.g. ``lambda s: s.quantile(0.5)`` or a gram
-    trace); a sketch with neither gives a null estimate."""
-    from ..aggregate import _estimates, _ingest_pdf, _item_cols
+    trace); a sketch with neither gives a null estimate.
+
+    Limit: PySpark hands the state function a bigint column that holds
+    a null as float64, so such a batch's keys beyond 2^53 hash as their
+    rounded double, unlike the batch build's exact bits."""
+    from ..aggregate import _estimates, _item_cols
     from ..sketches.base import Sketch
 
     cols = _item_cols(cols)
@@ -298,13 +320,7 @@ def stateful_sketch_stream(
         sk = Sketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         n = int(state.get[1]) if state.exists else 0
         for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            # the SHARED per-batch ingest dispatch (aggregate._ingest_pdf)
-            # — identical lane selection and null semantics as the batch
-            # builders, so stream state == batch build by construction
-            n_in, _ = _ingest_pdf(sk, pdf, cols, token_col)
-            n += n_in
+            n += _ingest_frame(sk, pdf, cols, token_col)
         state.update((sk.to_bytes(), n))
         yield finish(key[0], sk, n)
 
@@ -341,8 +357,12 @@ def topk_stream(
     source", updated per trigger.  State per key is O(capacity), so
     total state is groups × capacity counters — bounded regardless of
     stream length, unlike exact streaming count aggregation whose state
-    grows with distinct (group, item) pairs."""
-    from ..aggregate import _ingest_pdf, _item_cols, _topk
+    grows with distinct (group, item) pairs.
+
+    Limit: PySpark hands the state function a bigint column that holds
+    a null as float64, so such a batch's item and weight values beyond
+    2^53 would round; ``TopKSketch`` takes items only up to 2^53."""
+    from ..aggregate import _item_cols, _topk
     from ..sketches.topk import TopKSketch
 
     factory, finish, out_cols = _topk("topk_stream", group_col, k, capacity)
@@ -352,11 +372,7 @@ def topk_stream(
         _quiet_state_padding()
         sk = TopKSketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            # shared per-batch ingest dispatch — same lane selection and
-            # null semantics as batch grouped_topk (aggregate._ingest_pdf)
-            _ingest_pdf(sk, pdf, cols, token_col, weight_col)
+            _ingest_frame(sk, pdf, cols, token_col, weight_col)
         state.update((sk.to_bytes(),))
         yield finish(key[0], sk)
 

@@ -887,7 +887,11 @@ def _lane_partials(spark, lane):
 
 
 #: sha256 of each lane's sorted partial rows: a digest moves when any
-#: partition id, partial count, row count, fingerprint or blob moves
+#: partition id, partial count, row count, fingerprint or blob moves.
+#: ``grouped_weighted_topk`` was re-pinned when its lane moved to Arrow
+#: batches: before, a null string group key reached the sketch table as
+#: a fresh NaN per batch, so the null group wrote one partial row per
+#: batch instead of one per partition (every other row is unchanged)
 PARTIAL_ROW_DIGESTS = {
     "arrow_prehashed": "1ad755d99e22ab5de0b8b38ea3d9104429a95911ddd8b6caaf8f59ea77467828",
     "arrow_string": "6e00de0cc0bf1205d398e6bf10ad869bb99e5a3239c63127bed03f21947c3e9e",
@@ -903,7 +907,7 @@ PARTIAL_ROW_DIGESTS = {
     "grouped_tokens_values": "f3ddd4c59f47dbd76fa685e74931eeff4ae025cd52a721065e473528c7136de2",
     "grouped_string_hashes": "35ef1deccdb89d433435ad24cc3e44df75706b22eeb9fbb489943bf7f6de951c",
     "grouped_numeric_values": "39751197e0a0a2f2cba7835ed90f9485fe8b1574a8716c76462fac848658530f",
-    "grouped_weighted_topk": "56dbf339ec736c4ca89ec0f50b7ec6d9187cde9bd0f4d8194fbe1898a51faafc",
+    "grouped_weighted_topk": "1e0f48a97fecb83ebdac867f6e5a73a078cd9ab5ec69bb3bbef13661238a87bb",
     "multi": "8c0b0c0d5c2d083a3962e614f995c0a6e36f354c141a062d044efd8c05e8f942",
     "profile": "0c4803701e2b30ae1ffb1683eecc0c124de75fba64ac44ce20c253654b85c71d",
 }
@@ -1003,13 +1007,15 @@ def _group_results(spark, site, tmp):
 
 
 #: sha256 of each site's sorted result rows, generated before the
-#: per-group merges shared one fold and one finisher
+#: per-group merges shared one fold and one finisher; ``topk_weighted``
+#: re-pinned with ``grouped_weighted_topk``: its null group, now one
+#: partial per partition, reports exact counts (error 0)
 GROUP_RESULT_DIGESTS = {
     "estimates_hll": "bdfbf36de6ab1576a7865132512be69be8c6e6b3a040071509369e6be4dfb701",
     "estimates_tdigest_median": "0c4cb59ebde1765c2c43989fb0f9bc2652be22a0d6e9732bca3a23355eefa856",
     "estimates_fd_trace": "c157548f6b13d53fbe725be87aaaca41015267ef3f3ccb8c81dba39b663df348",
     "topk_tokens": "34beb3ccf0db746e24d09c53209d8f2bd527b471f4e1329eba75cd0a4f216195",
-    "topk_weighted": "6986043170ddf3bd3a33d37adac4699922e510e3da9fc371a27d48162786bd2e",
+    "topk_weighted": "035f8d6991e980f0dc1191ba788a832e201ef51ffd0a88788a97c8454fe061a2",
     "store_estimates": "6e1414810ba6153cf607d806af738f707032132ab09c06e36cd6bbd47c12cb06",
     "source_overlap_matrix": "8a0de9b1f5001265050ba0974391340e25b9afadde83f2eefe04832e80ca3bea",
     "bloom_index": "e898dfc15dca59f1a1d4b44a8d41060a375096191f88103a030dbb49e96682aa",
@@ -1069,6 +1075,31 @@ def test_pandas_lane_keeps_64bit_group_keys(spark):
     assert {r["g"] for r in top.collect()} == set(exp)
 
 
+def test_null_group_key_writes_one_partial_per_partition(spark):
+    """A null group key is one group: every grouped lane writes one
+    partial row per (key, partition), also when the null rows span
+    several Arrow batches."""
+    from bloomjoin_spark import HllSketch, TopKSketch
+    from bloomjoin_spark.aggregate import grouped_sketch_partials
+
+    rows = [(None if i % 3 == 0 else "ab"[i % 2], i % 5, 1 + i % 2) for i in range(40)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), "g string, k long, w long"
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "4")
+    try:
+        for factory, kw in ((lambda: TopKSketch(4), dict(cols=["k"], weight_col="w")),
+                            (lambda: HllSketch(10), dict(cols=["k", "w"]))):
+            keys = [(r["g"], r["partition_id"])
+                    for r in grouped_sketch_partials(df, factory, "g", **kw).collect()]
+            assert sorted(keys, key=repr) == sorted(set(keys), key=repr)
+            assert len(keys) == 6
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_estimate_is_null_without_an_estimate_rule(spark, tmp_path):
     """With no ``extract``, a sketch with neither ``estimate()`` nor
     ``total`` reports a null estimate, never 0.0."""
@@ -1091,3 +1122,29 @@ def test_estimate_is_null_without_an_estimate_rule(spark, tmp_path):
     kll = grouped_sketch_estimates(df, lambda: KllSketch(16), "g", cols=["x"]).collect()
     assert len(kll) == 4
     assert all(r["estimate"] is None for r in kll)
+
+
+def test_every_partial_build_runs_in_arrow(spark):
+    """The partial stages of a two-column key, a weighted grouped top-k
+    and a grouped matrix sketch each run one ``MapInArrow`` and no
+    ``MapInPandas``."""
+    import re
+
+    from bloomjoin_spark import (
+        FrequentDirectionsSketch,
+        HllSketch,
+        grouped_sketch_estimates,
+        grouped_topk,
+    )
+    from bloomjoin_spark.aggregate import sketch_partials
+
+    df = spark.createDataFrame(spark.sparkContext.parallelize(_lane_rows(), 3), _LANE_SCHEMA)
+    frames = [
+        sketch_partials(df, lambda: HllSketch(10), cols=["s", "k"]),
+        grouped_topk(df, "g", k=2, cols=["k"], weight_col="w"),
+        grouped_sketch_estimates(df, lambda: FrequentDirectionsSketch(2, 3), "g", cols=["vec"]),
+    ]
+    for out in frames:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+        assert not re.search(r"\bMapInPandas\b", plan), plan

@@ -289,6 +289,46 @@ def test_utf8_arrow_kernel_matches_hash_strings():
     assert h[0] == h[5] and h[0] != h[1] and h[2] != h[3]
 
 
+def test_arrow_key_hash_ignores_its_batch():
+    """``hash_arrow`` hashes each value of a column as it hashes that
+    value alone, for the types whose pandas form depends on the batch
+    (a null makes a bigint column float64 and a boolean one ``object``;
+    one non-utf8 value used to turn a whole binary batch into ``str()``)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from bloomjoin_spark.hashing import hash_arrow, hash_strings
+
+    big = (1 << 53) + 1
+    cases = [
+        pa.array([True, False, None]),
+        pa.array([big, -big, None], pa.int64()),
+        pa.array([7, None], pa.int8()),
+        pa.array([1.5, -0.0, float("nan"), None], pa.float32()),
+        pa.array([b"a", b"\xff\x00", b"", None]),
+        pa.array([Decimal("1.50"), None]),
+        pa.array([dt.date(2024, 1, 2), None]),
+        pa.array([0, None], pa.timestamp("us", tz="America/Los_Angeles")),
+    ]
+    for col in cases:
+        whole = hash_arrow(col)
+        alone = np.array([hash_arrow(col.slice(i, 1))[0] for i in range(len(col))])
+        assert np.array_equal(whole, alone), col.type
+        assert whole[-1] == NULL_SENTINEL
+    assert hash_arrow(cases[1])[0] != hash_float64(np.array([float(big)]))[0]
+    assert np.array_equal(hash_arrow(cases[0])[:2], hash_float64(np.array([1.0, 0.0])))
+    # a binary value hashes by its bytes when utf8, else by str(bytes),
+    # in an Arrow column and in a pandas frame alike
+    mixed = pd.Series([b"a", b"\xff\x00", None], dtype=object)
+    assert np.array_equal(hash_strings(mixed), hash_arrow(cases[4].take([0, 1, 3])))
+    assert hash_strings(mixed)[0] == hash_strings(pd.Series(["a"]))[0]
+    # a timestamp hashes at its session wall clock: 1969-12-31 16:00 here
+    wall = hash_series(pd.Series(pd.to_datetime(["1969-12-31 16:00"])))
+    assert hash_arrow(cases[-1])[0] == wall[0]
+
+
 def test_utf8_arrow_kernel_no_collisions_bulk():
     import pyarrow as pa
 

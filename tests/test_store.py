@@ -370,3 +370,35 @@ def test_fd_sketch_rides_the_store(spark, tmp_path):
          for r in _vecs(0, 180).collect()]
     )
     assert np.allclose(merged.gram(), A.T @ A, rtol=1e-9, atol=1e-9)
+
+
+def test_store_sketch_keeps_the_fanin_bound(spark, tmp_path, monkeypatch):
+    """A snapshot ingested from a cached input writes many partial rows
+    into one file (one coalesced task); the store merge plans its rounds
+    from the footer row bound, so the driver never folds more than
+    ``fanin`` blobs, and the estimate equals a fresh build's."""
+    import bloomjoin_spark.store as store_mod
+    from bloomjoin_spark import build_sketch
+
+    df = spark.range(0, 20000, 1, 200).cache()
+    df.count()
+    path = str(tmp_path / "store")
+    try:
+        append_sketch_snapshot(df, lambda: HllSketch(12), path, "d1", cols=["id"])
+        store = read_sketch_store(spark, path)
+        assert store.count() == 200
+        assert len(store.inputFiles()) == 1
+        rounds = []
+        real = store_mod.tree_merge
+
+        def spy(*args, **kw):
+            out = real(*args, **kw)
+            rounds.append(out[1])
+            return out
+
+        monkeypatch.setattr(store_mod, "tree_merge", spy)
+        sk = store_sketch(store, fanin=64)
+        assert rounds == [1]
+        assert sk.to_bytes() == build_sketch(df, lambda: HllSketch(12), cols=["id"]).sketch.to_bytes()
+    finally:
+        df.unpersist()

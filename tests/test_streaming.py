@@ -640,3 +640,31 @@ def test_topk_stream_non_string_group_key(spark, tmp_path):
            for r in grouped_topk(spark.createDataFrame(rows, "grp int, item_val long"),
                                  "grp", k=2, capacity=16, cols=["item_val"]).collect()}
     assert got == exp
+
+
+def test_stateful_stream_boolean_key_with_nulls_matches_batch(spark, tmp_path):
+    """A boolean key column that holds a null in one micro-batch and none
+    in the other: the running HLL per group equals the batch grouped
+    build over both files, and each key counts once."""
+    from bloomjoin_spark import grouped_sketch_estimates
+    from bloomjoin_spark.streaming.sketch_stream import stateful_sketch_stream
+
+    schema = "grp string, flag boolean"
+    src = tmp_path / "stream"
+    files = [[("a", True), ("a", False), ("b", True)],
+             [("a", True), ("a", None), ("b", None), ("b", True)]]
+    for i, rows in enumerate(files):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp_path / f"f{i}"))
+        (part,) = (tmp_path / f"f{i}").glob("*.parquet")
+        src.mkdir(exist_ok=True)
+        part.rename(src / f"batch{i}.parquet")
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+    out = stateful_sketch_stream(stream, lambda: HllSketch(12), "grp", cols=["flag"])
+    name = run_stream_to_memory(out, "q_stateful_bool", output_mode="update")
+    last = {r["grp"]: r for r in spark.table(name).orderBy("n_rows").collect()}
+    batch = grouped_sketch_estimates(
+        spark.read.parquet(str(src)), lambda: HllSketch(12), "grp", cols=["flag"]
+    )
+    exp = {r["grp"]: (r["estimate"], r["n_rows"]) for r in batch.collect()}
+    assert {k: (r["estimate"], r["n_rows"]) for k, r in last.items()} == exp
+    assert {k: round(e) for k, (e, _) in exp.items()} == {"a": 2, "b": 1}
