@@ -10,8 +10,9 @@ read a batch through the one extraction, :func:`extract` (flatten a
 token column, hash key columns by their Arrow type, reshape vectors),
 and hand it to the one ingest rule, :func:`ingest`, which owns null
 handling, the set / weighted / per-instance dispatch and the lineage
-fingerprint; :class:`PartialRows` writes every partial row and folds
-them again in the merge.
+fingerprint; :class:`PartialRows` writes every partial row, its blob
+in :func:`~.sketches.base.pack`'s frame, and folds them again in the
+merge.
 
 Every partial stage goes through :func:`partial_stage`, which narrows
 a filled cache (``coalesce``, no shuffle) to ⌈plan bytes /
@@ -77,7 +78,7 @@ from .hashing import (
     stamp_hash_format,
 )
 from .plans.sizing import size
-from .sketches.base import Sketch
+from .sketches.base import Sketch, pack
 from .sketches.bloom import BloomSketch
 
 PARTIAL_SCHEMA = (
@@ -85,6 +86,8 @@ PARTIAL_SCHEMA = (
 )
 #: the partial payload every merge folds
 _PARTIAL_COLS = [c.split(" ")[0] for c in PARTIAL_SCHEMA.split(", ")]
+#: :func:`_per_group`'s flag of a NaN floating group key
+_NAN_KEY = "__nan_key"
 
 #: bincount pre-aggregation bound for non-negative int token ids
 #: (typical LLM vocabs are ≤ a few hundred thousand)
@@ -424,7 +427,7 @@ class PartialRows:
             "n_partials": [self.n_partials[k] for k in keys],
             "n_rows": [self.n_rows[k] for k in keys],
             "fingerprint": [int(self.fingerprint[k].astype(np.int64)) for k in keys],
-            "blob": [self.sketches[k].to_bytes() for k in keys],
+            "blob": [pack(self.sketches[k]) for k in keys],
         }
         if pandas:
             kcol = {key_col: pd.Series(keys)} if key_col else {}
@@ -679,9 +682,18 @@ def _topk(where: str, group_col: str, k: int, capacity: int | None):
 
 def _per_group(partials: DataFrame, group_col: str, finish=None, cols=PARTIAL_SCHEMA):
     """Each group's partial rows folded by :func:`_merge_rows` into one
-    partial row, or into ``finish``'s rows, typed ``group_col, cols``."""
-    schema = f"`{group_col}` {dict(partials.dtypes)[group_col]}, {cols}"
-    return partials.groupBy(group_col).applyInPandas(_merge_rows(group_col, finish), schema)
+    partial row, or into ``finish``'s rows, typed ``group_col, cols``.
+    pandas reads a NaN key as null, so a floating key's NaN-ness rides
+    the ``_NAN_KEY`` flag through the fold and is put back after it."""
+    gtype = dict(partials.dtypes)[group_col]
+    schema = f"`{group_col}` {gtype}, {cols}"
+    if gtype not in ("float", "double"):
+        return partials.groupBy(group_col).applyInPandas(_merge_rows(group_col, finish), schema)
+    g = F.col(f"`{group_col}`")
+    out = partials.withColumn(_NAN_KEY, F.isnan(g)).groupBy(group_col).applyInPandas(
+        _merge_rows(group_col, finish), f"{schema}, {_NAN_KEY} boolean")
+    nan = F.lit(float("nan")).cast(gtype)
+    return out.withColumn(group_col, F.when(F.col(_NAN_KEY), nan).otherwise(g)).drop(_NAN_KEY)
 
 
 def grouped_sketch_estimates(
@@ -841,8 +853,12 @@ def _merge_rows(key: str | None, finish: Callable | None = None):
         for row in pdf.to_dict("records"):
             acc.merge(k, row)
         if finish is not None:
-            return finish(k, acc.sketches[k], acc.n_rows[k])
-        return next(acc.rows(int(pdf["partition_id"].min()), key, pandas=True))
+            out = finish(k, acc.sketches[k], acc.n_rows[k])
+        else:
+            out = next(acc.rows(int(pdf["partition_id"].min()), key, pandas=True))
+        if _NAN_KEY in pdf:
+            out[_NAN_KEY] = bool(pdf[_NAN_KEY].iloc[0])
+        return out
 
     return fn
 
@@ -1004,7 +1020,7 @@ def _resume_ids(spark: SparkSession, path: str) -> frozenset[int]:
         read = spark.read.parquet(path)
     except AnalysisException:  # no dir, or no partials in it: a fresh build
         return frozenset()
-    kind, fmt = F.substring("blob", 5, 4), foreign_hash_format(read)
+    kind, fmt = F.substring("blob", 5, 4), foreign_hash_format(read)  # the kind tag, in either frame
     rows = read.select("partition_id", kind.alias("kind"), fmt.alias("fmt")).distinct().collect()
     stale = sorted({bytes(r["kind"]) for r in rows} & set(BloomSketch.LEGACY_KINDS))
     why = hash_format_mismatch(f"checkpoint {path!r}", (r["fmt"] for r in rows))

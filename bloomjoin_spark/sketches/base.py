@@ -11,17 +11,37 @@ insertion order (``/root/reference/src/BloomFilter.cpp:85-165``).
 
 Serialization contract: ``to_bytes``/``from_bytes`` round-trips so a
 partial can ride a DataFrame ``binary`` column through the tree merge
-and the lineage checkpoint.
+and the lineage checkpoint.  ``to_bytes`` is the canonical raw frame;
+a partial row or a stream state carries :func:`pack`'s frame, which
+``from_bytes`` reads too.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 from typing import ClassVar
 
 import numpy as np
 
-_MAGIC = b"BJSK"
+_MAGIC, _PACKED = b"BJSK", b"BJSZ"
+
+
+@functools.cache
+def _zstd():
+    import pyarrow as pa
+
+    return pa.Codec("zstd", compression_level=1)
+
+
+def pack(sk: "Sketch") -> bytes:
+    """``sk``'s blob for a partial row or a stream state: the raw frame
+    with its payload zstd-1 compressed under the ``BJSZ`` magic when
+    that is shorter, else the raw frame.  Both frames share the 16-byte
+    header: magic, kind (bytes 4–7, 0-based), raw payload length."""
+    raw = sk.to_bytes()
+    packed = _PACKED + raw[4:16] + _zstd().compress(memoryview(raw)[16:], asbytes=True)
+    return packed if len(packed) < len(raw) else raw
 
 
 class Sketch:
@@ -74,11 +94,19 @@ class Sketch:
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "Sketch":
-        if buf[:4] != _MAGIC:
+        magic, kind = bytes(buf[:4]), bytes(buf[4:8])
+        if len(buf) < 16 or magic not in (_MAGIC, _PACKED):
             raise ValueError("not a sketch blob")
-        kind = bytes(buf[4:8])
         (n,) = struct.unpack("<Q", buf[8:16])
-        payload = bytes(buf[16 : 16 + n])
+        if magic == _MAGIC:
+            payload = bytes(buf[16 : 16 + n])
+        elif n > (len(buf) - 16) << 15:  # past zstd's 32768:1 ceiling (4-byte RLE block of 128 KiB)
+            raise ValueError(f"corrupt packed {kind!r} blob: {n} bytes from {len(buf)}")
+        else:
+            try:
+                payload = _zstd().decompress(memoryview(buf)[16:], decompressed_size=n, asbytes=True)
+            except (OSError, MemoryError) as e:  # a truncated or corrupt frame
+                raise ValueError(f"corrupt packed {kind!r} blob: {e}") from e
         if cls is not Sketch:
             if kind == cls.KIND:
                 return cls._from_payload(payload)

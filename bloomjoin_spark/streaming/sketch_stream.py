@@ -310,7 +310,7 @@ def stateful_sketch_stream(
     a null as float64, so such a batch's keys beyond 2^53 hash as their
     rounded double, unlike the batch build's exact bits."""
     from ..aggregate import _estimates, _item_cols
-    from ..sketches.base import Sketch
+    from ..sketches.base import Sketch, pack
 
     cols = _item_cols(cols)
     finish, out_cols = _estimates(group_col, extract)
@@ -321,7 +321,7 @@ def stateful_sketch_stream(
         n = int(state.get[1]) if state.exists else 0
         for pdf in pdf_iter:
             n += _ingest_frame(sk, pdf, cols, token_col)
-        state.update((sk.to_bytes(), n))
+        state.update((pack(sk), n))
         yield finish(key[0], sk, n)
 
     out_schema = f"`{group_col}` {dict(stream.dtypes)[group_col]}, {out_cols}"
@@ -363,6 +363,7 @@ def topk_stream(
     a null as float64, so such a batch's item and weight values beyond
     2^53 would round; ``TopKSketch`` takes items only up to 2^53."""
     from ..aggregate import _item_cols, _topk
+    from ..sketches.base import pack
     from ..sketches.topk import TopKSketch
 
     factory, finish, out_cols = _topk("topk_stream", group_col, k, capacity)
@@ -373,7 +374,7 @@ def topk_stream(
         sk = TopKSketch.from_bytes(bytes(state.get[0])) if state.exists else factory()
         for pdf in pdf_iter:
             _ingest_frame(sk, pdf, cols, token_col, weight_col)
-        state.update((sk.to_bytes(),))
+        state.update((pack(sk),))
         yield finish(key[0], sk)
 
     # the group column keeps its REAL dtype (int/bigint keys must round-

@@ -127,16 +127,20 @@ def test_checkpoint_with_legacy_bloom_partials_is_rebuilt(spark, tmp_path):
     import pyarrow.parquet as pq
     import pytest
 
+    from bloomjoin_spark.sketches.base import Sketch
+
     n = 8000
     ckpt = str(tmp_path / "legacy_ckpt")
     df = spark.range(0, n).repartition(2).select(F.col("id").alias("k"))
     factory = lambda: BloomSketch(1000, 0.01)  # noqa: E731 — dense partials
     build_sketch(df, factory, cols=["k"], checkpoint_dir=ckpt)
     pdf = spark.read.parquet(ckpt).toPandas()
-    assert {bytes(b)[4:8] for b in pdf["blob"]} == {b"BLM3"}
-    assert all(bytes(b)[4 + 4 + 8 + 29] == 0 for b in pdf["blob"])  # dense
+    # the raw frame, as the previous release wrote it
+    raw = [Sketch.from_bytes(bytes(b)).to_bytes() for b in pdf["blob"]]
+    assert {b[4:8] for b in raw} == {b"BLM3"}
+    assert all(b[4 + 4 + 8 + 29] == 0 for b in raw)  # dense
     # the same partials as the previous release tagged them (marker kept)
-    pdf["blob"] = [b"BJSKBLM2" + bytes(b)[8:] for b in pdf["blob"]]
+    pdf["blob"] = [b"BJSKBLM2" + b[8:] for b in raw]
     for f in glob.glob(os.path.join(ckpt, "*.parquet")):
         os.remove(f)
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
@@ -149,6 +153,93 @@ def test_checkpoint_with_legacy_bloom_partials_is_rebuilt(spark, tmp_path):
     assert np.array_equal(res.sketch.words, fresh.sketch.words)
     kinds = {bytes(b)[4:8] for b in spark.read.parquet(ckpt).toPandas()["blob"]}
     assert kinds == {b"BLM3"}
+
+
+def test_checkpoint_of_raw_partials_resumes(spark, tmp_path):
+    """A checkpoint dir whose partials carry the raw frame, as releases
+    before the packed frame wrote them, resumes every done partition:
+    no warning, no rebuild (its rows keep their raw blobs), and the
+    sketch equals a fresh build."""
+    import glob
+    import warnings as W
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bloomjoin_spark import HllSketch
+    from bloomjoin_spark.aggregate import _resume_ids
+    from bloomjoin_spark.sketches.base import Sketch
+
+    n, ckpt = 8000, str(tmp_path / "raw_ckpt")
+    df = spark.range(0, n).repartition(3).select(F.col("id").alias("k"))
+
+    def build():
+        return build_sketch(df, lambda: HllSketch(12), cols=["k"], checkpoint_dir=ckpt)
+
+    def blobs():
+        return sorted(bytes(b) for b in spark.read.parquet(ckpt).toPandas()["blob"])
+
+    build()
+    assert {b[:4] for b in blobs()} == {b"BJSZ"}
+    pdf = spark.read.parquet(ckpt).toPandas()
+    pdf["blob"] = [Sketch.from_bytes(bytes(b)).to_bytes() for b in pdf["blob"]]
+    for f in glob.glob(os.path.join(ckpt, "*.parquet")):
+        os.remove(f)
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                   os.path.join(ckpt, "part-raw.parquet"))
+    raw = blobs()
+    assert {b[:4] for b in raw} == {b"BJSK"}
+    assert _resume_ids(spark, ckpt) == frozenset(range(3))
+    with W.catch_warnings():
+        W.simplefilter("error", UserWarning)
+        res = build()
+    fresh = build_sketch(df, lambda: HllSketch(12), cols=["k"])
+    assert res.sketch.to_bytes() == fresh.sketch.to_bytes() and res.n_rows == n
+    assert blobs() == raw
+
+
+def test_partial_rows_ship_packed(spark):
+    """HLL and CMS partial rows carry the packed frame: the same
+    partials pack to the same bytes twice, in at most half the bytes of
+    their raw frames."""
+    from bloomjoin_spark import CmsSketch, HllSketch
+    from bloomjoin_spark.aggregate import sketch_partials
+    from bloomjoin_spark.sketches.base import Sketch
+
+    df = spark.range(0, 20_000, 1, 2).select(F.col("id").alias("k"))
+    for factory in (lambda: HllSketch(12), lambda: CmsSketch(1e-3, 1e-3)):
+        runs = [
+            sorted((r["partition_id"], bytes(r["blob"]))
+                   for r in sketch_partials(df, factory, cols=["k"]).collect())
+            for _ in range(2)
+        ]
+        assert runs[0] == runs[1]
+        blobs = [b for _, b in runs[0]]
+        assert len(blobs) == 2 and {b[:4] for b in blobs} == {b"BJSZ"}
+        raw = sum(len(Sketch.from_bytes(b).to_bytes()) for b in blobs)
+        assert 2 * sum(map(len, blobs)) <= raw
+
+
+def test_nan_group_key_stays_apart_from_null(spark, tmp_path):
+    """A NaN key of a double group column is its own group at every
+    per-group fold, as in ``groupBy``, not a second null group."""
+    from bloomjoin_spark import HllSketch, grouped_sketch_estimates, grouped_topk
+    from bloomjoin_spark.store import append_sketch_snapshot, read_sketch_store, store_estimates
+
+    rows = [(g, i) for g in (1.5, None, float("nan")) for i in range(3)]
+    df = spark.createDataFrame(rows, "g double, k long").repartition(2)
+    want = sorted((repr(r["g"]), r["count"]) for r in df.groupBy("g").count().collect())
+    assert want == [("1.5", 3), ("None", 3), ("nan", 3)]
+
+    def got(out, n="n_rows"):
+        return sorted((repr(r["g"]), r[n]) for r in out.collect())
+
+    path = str(tmp_path / "store")
+    append_sketch_snapshot(df, lambda: HllSketch(10), path, "day1", group_col="g", cols=["k"])
+    assert got(grouped_sketch_estimates(df, lambda: HllSketch(10), "g", cols=["k"])) == want
+    assert got(store_estimates(read_sketch_store(spark, path), "g")) == want
+    assert got(grouped_topk(df, "g", k=1, capacity=8, cols=["k"]), "count_est") == [
+        ("1.5", 1), ("None", 1), ("nan", 1)]
 
 
 def test_token_array_ingestion(spark):
@@ -887,7 +978,8 @@ def _lane_partials(spark, lane):
 
 
 #: sha256 of each lane's sorted partial rows: a digest moves when any
-#: partition id, partial count, row count, fingerprint or blob moves.
+#: partition id, partial count, row count, fingerprint or blob (by its
+#: raw frame) moves.
 #: ``grouped_weighted_topk`` was re-pinned when its lane moved to Arrow
 #: batches: before, a null string group key reached the sketch table as
 #: a fresh NaN per batch, so the null group wrote one partial row per
@@ -915,8 +1007,11 @@ PARTIAL_ROW_DIGESTS = {
 
 def partial_row_digests(spark, lanes=tuple(PARTIAL_ROW_DIGESTS)):
     """``{lane: sha256}`` of each lane's partial rows, sorted by (key,
-    partition_id), under seven-row Arrow batches."""
+    partition_id), under seven-row Arrow batches; a blob counts by its
+    canonical raw frame, whichever frame the row carries."""
     import hashlib
+
+    from bloomjoin_spark.sketches.base import Sketch
 
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
@@ -925,7 +1020,8 @@ def partial_row_digests(spark, lanes=tuple(PARTIAL_ROW_DIGESTS)):
         out = {}
         for lane in lanes:
             rows = sorted(
-                (tuple(r[:5]) + (bytes(r[5]),) for r in _lane_partials(spark, lane).collect()),
+                (tuple(r[:5]) + (Sketch.from_bytes(bytes(r[5])).to_bytes(),)
+                 for r in _lane_partials(spark, lane).collect()),
                 key=lambda t: (str(t[0]), t[1]),
             )
             out[lane] = hashlib.sha256(repr(rows).encode()).hexdigest()

@@ -97,11 +97,12 @@ GROUPED_ARROW_DIGESTS = {
 @pytest.mark.parametrize("case", list(GROUPED_ARROW_DIGESTS))
 def test_grouped_arrow_partials_pinned(spark, case):
     """Grouped partials over a null group, an empty and a null token
-    list and a null value, repartitioned by group, keep their bytes."""
+    list and a null value, repartitioned by group, keep their bytes (a
+    blob by its canonical raw frame)."""
     import hashlib
 
     from bloomjoin_spark.aggregate import grouped_sketch_partials
-    from bloomjoin_spark.sketches import CmsSketch, HllSketch, KllSketch
+    from bloomjoin_spark.sketches import CmsSketch, HllSketch, KllSketch, Sketch
     from bloomjoin_spark.sketches.topk import TopKSketch
 
     rows = [
@@ -123,7 +124,8 @@ def test_grouped_arrow_partials_pinned(spark, case):
     parts = grouped_sketch_partials(df, factory, "g", **kw)
     assert "MapInArrow" in parts._jdf.queryExecution().executedPlan().toString()
     got = sorted(((r[0], r["partition_id"], r["n_partials"], r["n_rows"], r["fingerprint"],
-                   bytes(r["blob"])) for r in parts.collect()), key=repr)
+                   Sketch.from_bytes(bytes(r["blob"])).to_bytes()) for r in parts.collect()),
+                 key=repr)
     assert hashlib.sha256(repr(got).encode()).hexdigest() == GROUPED_ARROW_DIGESTS[case]
 
 

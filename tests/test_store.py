@@ -402,3 +402,39 @@ def test_store_sketch_keeps_the_fanin_bound(spark, tmp_path, monkeypatch):
         assert sk.to_bytes() == build_sketch(df, lambda: HllSketch(12), cols=["id"]).sketch.to_bytes()
     finally:
         df.unpersist()
+
+
+def test_store_of_raw_and_packed_snapshots(spark, tmp_path):
+    """A store holding one snapshot in the raw frame, as releases before
+    the packed frame wrote it, and one packed snapshot merges to the
+    same sketch and per-group estimates as a fresh build."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bloomjoin_spark import build_sketch, grouped_sketch_estimates
+    from bloomjoin_spark.sketches.base import Sketch
+
+    path = str(tmp_path / "store")
+    for snap, (lo, hi) in {"day1": (0, 3000), "day2": (3000, 5000)}.items():
+        append_sketch_snapshot(_docs(spark, lo, hi), lambda: HllSketch(12), path, snap,
+                               group_col="source", cols=["doc_id"])
+    for f in glob.glob(os.path.join(path, "snapshot=day1", "*.parquet")):
+        t = pq.ParquetFile(f).read()
+        raw = [Sketch.from_bytes(b).to_bytes() for b in t["blob"].to_pylist()]
+        t = t.set_column(t.schema.get_field_index("blob"), "blob", pa.array(raw, pa.binary()))
+        pq.write_table(t, os.path.join(os.path.dirname(f), "raw-" + os.path.basename(f)))
+        os.remove(f)
+    store = read_sketch_store(spark, path)
+    magic = {(r["snapshot"], bytes(r["blob"])[:4]) for r in store.collect()}
+    assert {m for s, m in magic if s == "day1"} == {b"BJSK"}
+    assert ("day2", b"BJSZ") in magic
+
+    full = _docs(spark, 0, 5000)
+    fresh = build_sketch(full, lambda: HllSketch(12), cols=["doc_id"]).sketch
+    assert store_sketch(store).to_bytes() == fresh.to_bytes()
+    want = grouped_sketch_estimates(full, lambda: HllSketch(12), "source", cols=["doc_id"])
+    assert sorted(map(tuple, store_estimates(store, "source").collect())) == sorted(
+        map(tuple, want.collect()))

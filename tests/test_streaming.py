@@ -668,3 +668,49 @@ def test_stateful_stream_boolean_key_with_nulls_matches_batch(spark, tmp_path):
     exp = {r["grp"]: (r["estimate"], r["n_rows"]) for r in batch.collect()}
     assert {k: (r["estimate"], r["n_rows"]) for k, r in last.items()} == exp
     assert {k: round(e) for k, (e, _) in exp.items()} == {"a": 2, "b": 1}
+
+
+@pytest.mark.parametrize("op", ["sketch", "topk"])
+def test_stream_resumes_from_raw_state(spark, tmp_path, monkeypatch, op):
+    """A stream checkpoint whose state holds raw-frame blobs, as
+    releases before the packed frame wrote them, resumes: the next
+    trigger folds into the loaded state, the result equals the batch
+    build over both triggers' rows, and the state is packed from then
+    on."""
+    import glob
+    import shutil
+
+    import bloomjoin_spark.sketches.base as base
+    from bloomjoin_spark import grouped_sketch_estimates, grouped_topk
+    from bloomjoin_spark.streaming.sketch_stream import stateful_sketch_stream, topk_stream
+
+    src, ck = tmp_path / "src", str(tmp_path / "ck")
+    src.mkdir()
+    rows = spark.range(0, 4000).select(  # item i holds 2i + 1 rows: no top-k tie
+        F.lit("a").alias("grp"), "id", F.floor(F.sqrt("id")).cast("long").alias("item"))
+
+    def trigger(i, part):
+        part.coalesce(1).write.parquet(str(tmp_path / f"in{i}"))
+        for f in glob.glob(str(tmp_path / f"in{i}" / "*.parquet")):
+            shutil.copy(f, src / f"batch{i}.parquet")
+        stream = spark.readStream.schema(rows.schema).parquet(str(src))
+        out = (stateful_sketch_stream(stream, lambda: HllSketch(12), "grp", cols=["id"])
+               if op == "sketch" else topk_stream(stream, "grp", k=3, capacity=64, cols=["item"]))
+        emitted = []  # the memory sink cannot restart from a checkpoint
+        q = (out.writeStream.outputMode("update")
+             .foreachBatch(lambda batch, _: emitted.extend(map(tuple, batch.collect())))
+             .option("checkpointLocation", ck).start())
+        q.processAllAvailable()
+        q.stop()
+        state = spark.read.format("statestore").load(ck)
+        magic = {bytes(r[0])[:4] for r in state.select("value.groupState.blob").collect()}
+        return sorted(emitted), magic
+
+    monkeypatch.setattr(base, "pack", lambda sk: sk.to_bytes())
+    assert trigger(0, rows.where("id < 2000"))[1] == {b"BJSK"}
+    monkeypatch.undo()
+    got, magic = trigger(1, rows.where("id >= 2000"))
+    assert magic == {b"BJSZ"}
+    want = (grouped_sketch_estimates(rows, lambda: HllSketch(12), "grp", cols=["id"])
+            if op == "sketch" else grouped_topk(rows, "grp", k=3, capacity=64, cols=["item"]))
+    assert got == sorted(map(tuple, want.collect()))
