@@ -22,8 +22,6 @@ from .operators import (
     fd_sketch,
     grouped_spectral_mass,
     pca_project,
-    spectral_drift,
-    spectral_profile,
     bloom_join,
     contaminated_docs,
     decontaminate,
@@ -79,8 +77,6 @@ __all__ = [
     "fd_sketch",
     "grouped_spectral_mass",
     "pca_project",
-    "spectral_drift",
-    "spectral_profile",
     "format_bloom_params",
     "bloom_sizing",
     "build_sketch",

@@ -22,6 +22,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .hashing import splitmix64
 
@@ -125,3 +126,22 @@ def lookup_table(
 
     base = spark.range(0, n_y, 1, num_partitions)
     return base.mapInPandas(gen, schema=LOOKUP_SCHEMA)
+
+
+def synthesize_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Deterministic fake media table: payload = utf-8 bytes of the text
+    (an opaque blob as far as the pipeline is concerned), with declared
+    metadata derived from the id."""
+    t = F.col(text_col)
+    payload = F.encode(t, "utf-8")
+    return df.select(
+        F.col(id_col).cast("bigint").alias("media_id"),
+        payload.alias("payload"),
+        F.when(F.col(id_col) % 3 == 0, F.lit("image"))
+        .when(F.col(id_col) % 3 == 1, F.lit("audio"))
+        .otherwise(F.lit("video"))
+        .alias("modality"),
+        F.octet_length(payload).cast("int").alias("n_bytes"),
+        ((F.col(id_col) % 64) * 16 + 16).cast("int").alias("declared_width"),
+        ((F.col(id_col) % 48) * 16 + 16).cast("int").alias("declared_height"),
+    )

@@ -1,6 +1,5 @@
 from .api import (
     approx_distinct,
-    approx_topk,
     token_profile,
     approx_quantiles,
     hash_keys32,
@@ -11,7 +10,6 @@ from .api import (
 
 __all__ = [
     "approx_distinct",
-    "approx_topk",
     "token_profile",
     "approx_quantiles",
     "hash_keys32",

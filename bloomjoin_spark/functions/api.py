@@ -152,36 +152,6 @@ def _canonical_hash64(df: DataFrame, cols: list[str]):
     return parts[0] if len(parts) == 1 else F.xxhash64(*parts)
 
 
-def approx_topk(
-    df: DataFrame,
-    cols: list[str] | str | None = None,
-    token_col: str | None = None,
-    k: int = 64,
-    **kw,
-) -> list[tuple[int, int, int]]:
-    """Heavy hitters of an integer-valued column (or of all token ids
-    when ``token_col`` is given) via the mergeable SpaceSaving sketch:
-    (item, count, error) rows, count-descending.  For every row, true
-    frequency ∈ [count − error, count]; every item with true frequency
-    > 2·total/k is guaranteed present.
-
-    Items must round-trip through float64 (|item| ≤ 2^53, integral) —
-    the sketch raises otherwise, because rounded 64-bit ids conflate
-    distinct heavy hitters.  For snowflake-style / hashed 64-bit ids,
-    bucket first (``hash_keys64`` then ``pmod``) or remap to a dense
-    id space."""
-    from ..sketches import TopKSketch
-
-    res = build_sketch(
-        df,
-        lambda: TopKSketch(k),
-        cols=None if token_col else ([cols] if isinstance(cols, str) else cols),
-        token_col=token_col,
-        **kw,
-    )
-    return res.sketch.topk()
-
-
 def hash_keys64(df: DataFrame, cols: list[str] | str, out_col: str = "key_hash64") -> DataFrame:
     """Stable 64-bit composite-key row hash, computed JVM-side inside
     whole-stage codegen (canonically hashed keys —

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["boilerplate_lines", "remove_boilerplate_lines"]
+__all__ = ["remove_boilerplate_lines"]
 
 _LINE = "__bp_line"
 _POS = "__bp_pos"
@@ -43,30 +43,6 @@ def _lines(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), r"\n")).alias(_POS, _LINE),
     ).withColumn(_LH, F.xxhash64(_LINE))
-
-
-def boilerplate_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-) -> DataFrame:
-    """Lines occurring in ≥ ``min_docs`` distinct documents, with their
-    document frequency: ``(line, n_docs)``.  Deterministic: the line
-    text reported per hash is the lexicographic minimum (hash
-    collisions aside, there is exactly one)."""
-    if min_docs < 1:
-        raise ValueError(f"min_docs must be >= 1, got {min_docs}")
-    lines = _lines(df, text_col, id_col).where(F.length(_LINE) > 0)
-    return (
-        lines.groupBy(_LH)
-        .agg(
-            F.count_distinct(id_col).alias("n_docs"),
-            F.min(_LINE).alias("line"),
-        )
-        .where(F.col("n_docs") >= min_docs)
-        .select("line", "n_docs")
-    )
 
 
 def remove_boilerplate_lines(
@@ -88,6 +64,8 @@ def remove_boilerplate_lines(
     document-frequency count ambiguous, so the operator does not try to
     repair them — run ``exact_dedup`` (or assign
     ``monotonically_increasing_id()`` through a checkpoint) first."""
+    if min_docs < 1:
+        raise ValueError(f"min_docs must be >= 1, got {min_docs}")
     out_col = out_col or text_col
     lines = _lines(df, text_col, id_col)
     common = (

@@ -4,14 +4,16 @@ Every stage of a production pretraining-data pipeline exists in this
 package as an individually-oracled operator; ``prepare_corpus`` is the
 integration layer that chains them behind one configurable call with a
 FIXED stage order — the order the public pipelines (C4, CCNet, Gopher,
-RefinedWeb, Dolma) converged on:
+RefinedWeb, Dolma) converged on.  These are the 17 stage names that
+``PreparedCorpus.stages`` reports, in execution order:
 
     incremental_dedup (vs a prior corpus snapshot) → exact_dedup →
     minhash_dedup → simhash_dedup →
     ngram_jaccard_dedup → containment_dedup → embedding_dedup →
-    decontaminate →
+    decontaminate → dedup_lines_within →
     remove_boilerplate_lines → quality_filter → scrub_patterns →
-    weighted_mixture → hash_split → pack_sequences
+    group_quota → weighted_mixture → hash_split →
+    encode_documents → pack_sequences
 
 (minhash and the exact Jaccard tier are independent opt-ins; enabling
 both runs the cheap approximate pass first, then the exact join
@@ -55,7 +57,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .boilerplate import remove_boilerplate_lines
@@ -78,27 +80,6 @@ from .sampling import (
 from .text import dedup_lines_within, quality_filter, scrub_patterns
 
 __all__ = ["prepare_corpus", "PreparedCorpus"]
-
-#: the fixed stage order (also the docs for which config key enables what)
-STAGE_ORDER = (
-    "incremental_dedup",
-    "exact_dedup",
-    "minhash_dedup",
-    "simhash_dedup",
-    "ngram_jaccard_dedup",
-    "containment_dedup",
-    "embedding_dedup",
-    "decontaminate",
-    "dedup_lines_within",
-    "remove_boilerplate_lines",
-    "quality_filter",
-    "scrub_patterns",
-    "group_quota",
-    "weighted_mixture",
-    "hash_split",
-    "encode_documents",
-    "pack_sequences",
-)
 
 
 @dataclass(frozen=True)
@@ -186,7 +167,8 @@ def prepare_corpus(
     pack: Mapping | None = None,
 ) -> PreparedCorpus:
     """Run the composed corpus-preparation pipeline; stages are opted
-    in per config and always execute in ``STAGE_ORDER``.
+    in per config and always execute in the fixed order the module
+    docstring lists.
 
     Stage configs (every stage except exact dedup defaults to OFF so a
     minimal call is cheap and explicit):

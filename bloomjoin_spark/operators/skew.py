@@ -1,110 +1,16 @@
-"""Explicit skew handling for joins/aggregations on hot keys (the F0
-``source`` column holds ~50% of rows in one value — BASELINE.json:6).
+"""Salted joins for hot keys (the F0 ``source`` column holds ~50% of
+rows in one value).
 
-Two mechanisms, composable with AQE's skew-join splitting:
-
-- ``salted_join``: replicate the small side ``salts``× and spread the
-  big side's rows across salts, so one hot key occupies ``salts``
-  reducers instead of one. Result is row-identical to the plain join.
-- ``split_hot_join``: route hot keys (detected by sampling or supplied)
-  through a broadcast join and the long tail through a normal shuffle
-  join — no replication cost on the tail.
+``salted_join`` replicates the small side ``salts``× and spreads the
+big side's rows across salts, so one hot key occupies ``salts``
+reducers instead of one.  The result is row-identical to the plain
+join, and it composes with AQE's skew-join splitting.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def skewed_keys(
-    df: DataFrame, col: str, min_share: float = 0.01, sample_rows: int = 100_000
-) -> list:
-    """Keys holding ≥ min_share of the data, from ONE Spark job and no
-    prior count: each partition keeps a UNIFORM reservoir of
-    ⌈sample_rows/P⌉ rows (deterministic per-partition seed) over its
-    full column scan, weighted by partition_rows/reservoir_size so
-    unequal partition sizes don't skew shares.  A head-of-partition or
-    limit() sample would be arbitrarily biased when rows are clustered
-    or sorted by the key (the normal state after a repartition or
-    per-source ingest) — a reservoir sees every row.  The share
-    threshold applies against the total sampled weight (≈ total rows)
-    carried by a single-partition window over the (≤ sample_rows-sized)
-    aggregated counts.
-
-    Arrow-native: accepted rows are taken out of each batch with
-    ``Array.take`` (a copy, so the parent batch buffer is released) and
-    the reservoir's slot→value indirection lives in two numpy arrays;
-    the column is NEVER materialized as Python objects.  Per-partition
-    work is O(rows) vectorized accept tests plus O(per·ln(rows/per))
-    accepted-value copies."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark import TaskContext
-    from pyspark.sql import Window
-
-    keyed = df.select(col)
-    nparts = max(1, keyed.rdd.getNumPartitions())  # metadata, no job
-    per = max(16, -(-sample_rows // nparts))
-
-    def reservoir_fn(it):
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        rng = np.random.default_rng(0x5EED ^ pid)
-        chunks: list = []  # Arrow arrays of kept values (copies)
-        chunk_of = np.empty(per, dtype=np.int64)  # slot → chunk index
-        off_in = np.empty(per, dtype=np.int64)  # slot → offset in chunk
-        filled = 0
-        seen = 0
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col_arr = batch.column(0)
-            fill = min(per - filled, n)
-            if fill:
-                ci = len(chunks)
-                # take (not slice): a slice would pin the whole batch
-                # buffer in memory for the life of the reservoir
-                chunks.append(col_arr.take(pa.array(np.arange(fill))))
-                chunk_of[filled : filled + fill] = ci
-                off_in[filled : filled + fill] = np.arange(fill)
-                filled += fill
-            if fill < n:
-                # vectorized reservoir step: row at global index i (0-based)
-                # is accepted with prob per/(i+1) and replaces a uniform slot
-                idx = np.arange(seen + fill, seen + n, dtype=np.float64)
-                accept = np.nonzero(rng.random(n - fill) < per / (idx + 1.0))[0]
-                if accept.size:
-                    slots = rng.integers(0, per, size=accept.size)
-                    ci = len(chunks)
-                    chunks.append(col_arr.take(pa.array(fill + accept)))
-                    # duplicate slots within a batch: last write wins,
-                    # matching sequential replacement order
-                    chunk_of[slots] = ci
-                    off_in[slots] = np.arange(accept.size)
-            seen += n
-        if not filled:
-            return
-        starts = np.zeros(len(chunks), dtype=np.int64)
-        np.cumsum([len(c) for c in chunks[:-1]], out=starts[1:])
-        flat = pa.concat_arrays(chunks)
-        res = flat.take(pa.array(starts[chunk_of[:filled]] + off_in[:filled]))
-        w = seen / filled  # each kept row represents this many rows
-        yield pa.RecordBatch.from_arrays(
-            [res, pa.array(np.full(filled, w), pa.float64())],
-            names=["__v", "__w"],
-        )
-
-    dt = dict(df.dtypes)[col]
-    sample = keyed.mapInArrow(reservoir_fn, schema=f"__v {dt}, __w double")
-    counts = sample.groupBy("__v").agg(F.sum("__w").alias("__cnt"))
-    hot = (
-        counts.withColumn("__tot", F.sum("__cnt").over(Window.partitionBy()))
-        .filter(F.col("__cnt") >= min_share * F.col("__tot"))
-        .collect()
-    )
-    return [r["__v"] for r in hot]
 
 
 def salted_join(
@@ -131,41 +37,3 @@ def salted_join(
     spark_how = {"semi": "left_semi"}.get(how, how)
     out = salt_big.join(salt_small, on=keys + ["__salt"], how=spark_how)
     return out.drop("__salt")
-
-
-def split_hot_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    how: str = "inner",
-    hot_keys: list | None = None,
-    min_share: float = 0.01,
-) -> DataFrame:
-    """Hot keys → broadcast join; tail → normal join; union. Identical
-    result to the plain join for inner/left."""
-    if how not in ("inner", "left"):
-        raise ValueError("split_hot_join supports inner/left")
-    if hot_keys is None:
-        hot_keys = skewed_keys(big, on, min_share=min_share)
-    if not hot_keys:
-        return big.join(small, on=on, how=how)
-    is_hot = F.col(on).isin(hot_keys)
-    hot_part = big.filter(is_hot).join(
-        F.broadcast(small.filter(F.col(on).isin(hot_keys))), on=on, how=how
-    )
-    tail_part = big.filter(~is_hot | F.col(on).isNull()).join(
-        small.filter(~F.col(on).isin(hot_keys)), on=on, how=how
-    )
-    return hot_part.unionByName(tail_part)
-
-
-def aqe_skew_configs() -> dict:
-    """The AQE knobs this library expects on a real cluster (local
-    defaults are fine for tests)."""
-    return {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "5",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256MB",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    }

@@ -19,9 +19,10 @@ ladder per document, no gram arrays, no corpus explode):
 
 1. **count** — per-document DISTINCT window hashes explode and shuffle
    as **(hash, doc)** 16-byte pairs into one partial-aggregated count
-   per hash (same row-shape as ``boilerplate_lines``); hashes in
-   ``>= min_docs`` docs form the duplicated set *D*.  This is the one
-   corpus-proportional shuffle, and it moves hashes, never tokens.
+   per hash (the row shape of ``remove_boilerplate_lines``' line
+   count); hashes in ``>= min_docs`` docs form the duplicated set *D*.
+   This is the one corpus-proportional shuffle, and it moves hashes,
+   never tokens.
 2. **prefilter** — a Bloom filter over *D* (``membership_filter``:
    built in Spark, one JVM job) probes each document with a
    short-circuiting per-document ANY — a codegen
@@ -41,7 +42,7 @@ ladder per document, no gram arrays, no corpus explode):
    hash, ≈2⁻⁶⁴ per pair) can never delete an innocent span.  Cost is
    proportional to duplicated volume, not corpus size — the same
    verify-only-candidates contract as ``decontam``.  ``verify="hash"``
-   skips this (the ``boilerplate_lines`` stance: 2⁻⁶⁴ is acceptable
+   skips this (the ``remove_boilerplate_lines`` stance: 2⁻⁶⁴ is acceptable
    for dedup semantics) and saves the gram shuffle.
 5. **rewrite** — verified starts gather per doc (``collect_set`` →
    ``sort_array``), join back, and the token array is rebuilt in ONE

@@ -35,8 +35,6 @@ __all__ = [
     "fd_sketch",
     "grouped_spectral_mass",
     "pca_project",
-    "spectral_drift",
-    "spectral_profile",
 ]
 
 
@@ -140,61 +138,3 @@ def pca_project(
         return _fixed_list(m @ v.T, valid=nz)  # NULL rows stay NULL
 
     return _arrow_column(df, out_col, T.ArrayType(T.DoubleType()), project)
-
-
-def spectral_drift(
-    a: FrequentDirectionsSketch | BuildResult,
-    b: FrequentDirectionsSketch | BuildResult,
-) -> dict:
-    """Certified drift between two embedding populations from their FD
-    sketches alone (two snapshots, two sources, train vs incoming):
-    the measured distance is ``d = ‖Ga/na − Gb/nb‖₂`` on the per-row
-    normalized Gram estimates, and because each sketch certifies
-    ``0 ⪯ AᵀA − BᵀB ⪯ δ·I``, the TRUE normalized Gram distance lies in
-    ``[max(0, d − c), d + c]`` with certificate ``c = δa/na + δb/nb``
-    (triangle inequality) — a drift alarm that can be trusted without
-    any exact pass over either population.  Driver-side only: inputs
-    are two ℓ×d states."""
-    sa = a.sketch if isinstance(a, BuildResult) else a
-    sb = b.sketch if isinstance(b, BuildResult) else b
-    if sa.dim != sb.dim:
-        raise ValueError(
-            f"cannot compare sketches of different dim: {sa.dim} vs {sb.dim}"
-        )
-    if sa.n_rows == 0 or sb.n_rows == 0:
-        raise ValueError("both sketches must have ingested rows")
-    ga = sa.gram() / sa.n_rows
-    gb = sb.gram() / sb.n_rows
-    d = float(np.abs(np.linalg.eigvalsh(ga - gb)).max())
-    cert = float(
-        sa.spectral_error_bound() / sa.n_rows
-        + sb.spectral_error_bound() / sb.n_rows
-    )
-    return {
-        "spectral_distance": d,
-        "certificate": cert,
-        "true_distance_lower": max(0.0, d - cert),
-        "true_distance_upper": d + cert,
-        "n_rows_a": int(sa.n_rows),
-        "n_rows_b": int(sb.n_rows),
-    }
-
-
-def spectral_profile(result: BuildResult, k: int = 16) -> dict:
-    """Driver-side summary of a built FD sketch: top-k singular values²
-    of the sketch, cumulative mass fractions, and the certified error
-    bound — the input to 'how many PCA components before IVF training'."""
-    sk = result.sketch
-    sv2, _ = sk.directions(k)
-    total = float(sk.fro_sq)
-    cum = np.cumsum(sv2) / total if total > 0 else np.zeros_like(sv2)
-    return {
-        "n_rows": int(sk.n_rows),
-        "dim": int(sk.dim),
-        "ell": int(sk.ell),
-        "fro_sq": total,
-        "sv2": [float(v) for v in sv2],
-        "cum_mass_frac": [float(v) for v in cum],
-        "spectral_error_bound": float(sk.spectral_error_bound()),
-        "is_exact": bool(sk.is_exact),
-    }

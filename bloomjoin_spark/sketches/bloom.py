@@ -206,14 +206,6 @@ def _spark_pair(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _probe_matrix(h: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(len(h), k) uint64 positions of Spark's BloomFilterImplV2, in
-    the plain matrix form — the reference the loops below must match."""
-    base, lo = _spark_pair(h.astype(np.uint64, copy=False))
-    c = base[:, None] + np.arange(1, k + 1, dtype=np.int64)[None, :] * lo[:, None]
-    return (np.where(c < 0, ~c, c) % m).astype(np.uint64)
-
-
 class BloomSketch(Sketch):
     # BLM3: Spark's BloomFilterImplV2 bit layout (module docstring).
     # BLM2 (mode byte: dense bitmap vs sparse hash list) and BLM1
@@ -412,10 +404,6 @@ class BloomSketch(Sketch):
     # -- introspection ---------------------------------------------------
     def fill_ratio(self) -> float:
         return _popcount(self.words) / self.m
-
-    def observed_fpr(self) -> float:
-        """fpr implied by the actual fill ratio: fill^k."""
-        return self.fill_ratio() ** self.k
 
     # -- Spark interop ---------------------------------------------------
     @classmethod

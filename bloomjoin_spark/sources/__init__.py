@@ -1,7 +1,6 @@
-from .io import iceberg_session_conf, read_table, tables, token_table_ref
+from .io import iceberg_session_conf, read_table, tables
 from .layout import (
     co_located_join,
-    plan_exchange_count,
     write_bucketed,
     write_partitioned,
     write_range_sorted,
@@ -14,14 +13,12 @@ __all__ = [
     "iceberg_session_conf",
     "read_table",
     "tables",
-    "token_table_ref",
     "write_bucketed",
     "write_partitioned",
     "co_located_join",
     "write_range_sorted",
     "write_zordered",
     "zorder_col",
-    "plan_exchange_count",
     "write_bloom_indexed",
     "read_bloom_indexed",
 ]

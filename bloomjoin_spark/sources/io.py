@@ -74,13 +74,3 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         t: read_table(spark, os.path.join(sf_dir, f"{t}.parquet"))
         for t in TEST_TABLES
     }
-
-
-def token_table_ref(spark: SparkSession, ref: str | None, **gen_kwargs) -> DataFrame:
-    """The north-rule input table: a real table reference when one
-    exists, else the deterministic synthesizer (no external data)."""
-    if ref is not None:
-        return read_table(spark, ref)
-    from ..datagen import token_table
-
-    return token_table(spark, **gen_kwargs)

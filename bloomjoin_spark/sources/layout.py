@@ -32,7 +32,6 @@ __all__ = [
     "zorder_col",
     "write_partitioned",
     "co_located_join",
-    "plan_exchange_count",
 ]
 
 
@@ -184,18 +183,6 @@ def write_range_sorted(
     else:
         out = df.repartitionByRange(*keys)
     out.sortWithinPartitions(*keys).write.format(fmt).mode(mode).save(path)
-
-
-def plan_exchange_count(df: DataFrame) -> int:
-    """Number of Exchange operators (shuffle or broadcast) in the
-    optimized physical plan — the audit metric the layout helpers
-    exist to drive to zero on recurring-join paths."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "ReusedExchange" not in line
-    )
 
 
 def zorder_col(

@@ -68,3 +68,11 @@ def tagged_jobs(spark, fn):
         any(t.endswith(f"-{tag}") for t in jobs.apply(i).jobTags().mkString(" ").split())
         for i in range(jobs.size())
     )
+
+
+def n_exchanges(df):
+    """Shuffle plus broadcast exchanges in ``df``'s executed plan."""
+    from bloomjoin_spark.plans import plan_audit
+
+    a = plan_audit(df)
+    return a.n_shuffle_exchanges + a.n_broadcast_exchanges

@@ -4,7 +4,7 @@ preservation, row preservation, plan shape."""
 import pytest
 from pyspark.sql import Row, functions as F
 
-from bloomjoin_spark.operators import boilerplate_lines, remove_boilerplate_lines
+from bloomjoin_spark.operators import remove_boilerplate_lines
 
 
 def _docs(spark, rows):
@@ -14,25 +14,12 @@ def _docs(spark, rows):
     )
 
 
-def test_boilerplate_lines_counts(spark):
-    df = _docs(
-        spark,
-        [
-            (0, "cookie banner\nreal content zero"),
-            (1, "cookie banner\nreal content one"),
-            (2, "unique stuff\ncookie banner"),
-            (3, "totally original"),
-        ],
-    )
-    rows = {r["line"]: r["n_docs"] for r in boilerplate_lines(df).collect()}
-    assert rows == {"cookie banner": 3}
-
-
 def test_repeat_within_one_doc_is_not_boilerplate(spark):
     # min_docs counts DISTINCT docs — a line repeated inside a single
     # document must not be flagged
     df = _docs(spark, [(0, "chorus\nchorus\nchorus"), (1, "other")])
-    assert boilerplate_lines(df, min_docs=2).count() == 0
+    out = remove_boilerplate_lines(df, min_docs=2).collect()
+    assert {r["doc_id"]: r["text"] for r in out} == {0: "chorus\nchorus\nchorus", 1: "other"}
 
 
 def test_remove_preserves_order_and_rows(spark):
@@ -62,9 +49,8 @@ def test_doc_fully_boilerplate_keeps_empty_row(spark):
 def test_empty_lines_are_structural(spark):
     # blank lines appear in every doc but must never be counted/dropped
     df = _docs(spark, [(0, "a\n\nb"), (1, "c\n\nd")])
-    assert boilerplate_lines(df).count() == 0
     out = {r["doc_id"]: r["text"] for r in remove_boilerplate_lines(df).collect()}
-    assert out[0] == "a\n\nb"
+    assert out == {0: "a\n\nb", 1: "c\n\nd"}
 
 
 def test_out_col_leaves_original(spark):
@@ -76,9 +62,10 @@ def test_out_col_leaves_original(spark):
 
 
 def test_min_docs_validation(spark):
+    # min_docs=0 would hold for every line hash and strip every line
     df = _docs(spark, [(0, "a")])
-    with pytest.raises(ValueError):
-        boilerplate_lines(df, min_docs=0)
+    with pytest.raises(ValueError, match="min_docs"):
+        remove_boilerplate_lines(df, min_docs=0)
 
 
 def test_corpus_shuffle_is_hash_only_and_anti_join_broadcasts(spark, sf_dir):

@@ -1,18 +1,9 @@
-"""Multimodal plumbing + skew-handling tests."""
+"""Media-table synthesis + salted-join tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from bloomjoin_spark.datagen import token_table
-from bloomjoin_spark.operators import (
-    extract_features,
-    frame_sample_plan,
-    salted_join,
-    skewed_keys,
-    split_hot_join,
-    synthesize_media,
-)
-from bloomjoin_spark.operators.multimodal import decode_image
+from bloomjoin_spark.operators import salted_join, synthesize_media
 
 
 @pytest.fixture(scope="module")
@@ -32,83 +23,12 @@ class TestMultimodal:
             "declared_height": "int",
         }
 
-    def test_feature_extraction_batch_shape(self, media):
-        feats = extract_features(media, n_features=8)
-        rows = feats.limit(10).collect()
-        assert all(len(r["features"]) == 8 for r in rows)
-        assert all(0.0 <= v <= 1.0 for r in rows for v in r["features"])
-        # n_bytes measured from the payload must match the declared size
-        joined = feats.join(media, "media_id")
-        bad = joined.filter(F.col("n_bytes_measured") != F.col("n_bytes")).count()
-        assert bad == 0
-
-    def test_features_deterministic(self, media):
-        a = sorted(map(str, extract_features(media).collect()))
-        b = sorted(map(str, extract_features(media).collect()))
-        assert a == b
-
-    def test_real_decode_is_stubbed(self):
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image(b"\x89PNG fake")
-
-    def test_frame_sample_plan(self, media):
-        plan = frame_sample_plan(media, every_n=10, max_frames=4)
-        rows = plan.limit(20).collect()
-        assert all(len(r["frame_indices"]) <= 4 for r in rows)
-        for r in rows:
-            assert list(r["frame_indices"]) == sorted(set(r["frame_indices"]))
-
 
 class TestSkew:
     @pytest.fixture(scope="class")
     def skewed(self, spark):
         df = token_table(spark, 20_000, vocab=500, max_tok=8, num_partitions=8)
         return df.select("doc_id", "source").persist()
-
-    def test_skewed_keys_detects_hot_source(self, skewed):
-        hot = skewed_keys(skewed, "source", min_share=0.2)
-        assert hot == ["source_00"]
-
-    def test_skewed_keys_unbiased_on_clustered_layout(self, spark):
-        """Rows SORTED by the key within partitions (the normal state
-        after a repartition/per-source ingest): a head-of-partition
-        sampler would crown every partition-leading cold key as hot and
-        miss hot keys sitting mid-partition; the reservoir sample must
-        return exactly the truly hot key."""
-        from pyspark.sql import functions as F
-
-        df = (
-            spark.range(0, 60_000)
-            .withColumn(
-                "k",
-                F.when(F.col("id") % 2 == 0, F.lit("hot")).otherwise(
-                    F.concat(F.lit("cold_"), (F.col("id") % 3000).cast("string"))
-                ),
-            )
-            .repartition(8)
-            .sortWithinPartitions("k")  # cold_* keys lead every partition
-        )
-        hot = skewed_keys(df, "k", min_share=0.2)
-        assert hot == ["hot"]
-
-    def test_skewed_keys_is_one_job(self, spark, skewed):
-        """Hot keys + sample total come from ONE aggregation (no prior
-        count jobs).  AQE is disabled for the assertion because it
-        materializes each shuffle stage as its own job id."""
-        import time
-
-        store = spark.sparkContext._jsc.sc().statusStore()
-        prior = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            skewed.count()  # warm the cache outside the measured window
-            time.sleep(0.5)
-            b0 = store.jobsList(None).length()
-            assert skewed_keys(skewed, "source", min_share=0.2) == ["source_00"]
-            time.sleep(0.8)  # listener bus drain
-            assert store.jobsList(None).length() - b0 == 1
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prior)
 
     def test_salted_join_identical_result(self, spark, skewed):
         dim = spark.createDataFrame(
@@ -129,30 +49,3 @@ class TestSkew:
         dim = spark.createDataFrame([("source_00", "x")], "source string, v string")
         with pytest.raises(ValueError):
             salted_join(skewed, dim, on="source", how="right")
-
-    def test_split_hot_join_identical(self, spark, skewed):
-        dim = spark.createDataFrame(
-            [(f"source_{i:02d}", i) for i in range(20)],
-            "source string, src_rank int",
-        )
-        plain = skewed.join(dim, "source", "inner")
-        split = split_hot_join(skewed, dim, on="source", how="inner", min_share=0.2)
-        assert split.count() == plain.count()
-        assert split.exceptAll(plain).count() == 0
-
-
-def test_resize_images_plumbing(spark, sf_dir):
-    """Resize over binary payloads: column-pruned scan, deterministic
-    fake decode, nearest-neighbor resize, stable list schema."""
-    from bloomjoin_spark.operators import resize_images, synthesize_media
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
-    media = synthesize_media(docs, "doc_id", "text")
-    out = resize_images(media, height=4, width=6)
-    rows = out.collect()
-    assert rows, "no image-modality rows"
-    assert all(r["height"] == 4 and r["width"] == 6 for r in rows)
-    assert all(len(r["pixels"]) == 24 for r in rows)
-    # deterministic: same input → same pixels
-    again = {r["media_id"]: r["pixels"] for r in resize_images(media, 4, 6).collect()}
-    assert all(again[r["media_id"]] == r["pixels"] for r in rows)

@@ -133,9 +133,20 @@ def test_grouped_arrow_partials_pinned(spark, case):
 # BloomSketch insert: loop form ≡ the (n, k) probe-matrix form
 # ---------------------------------------------------------------------------
 
+def _probe_matrix(h: np.ndarray, k: int, m: int) -> np.ndarray:
+    """(len(h), k) uint64 positions of Spark's BloomFilterImplV2, in
+    the plain matrix form — the reference ``BloomSketch``'s insert
+    loops must match."""
+    from bloomjoin_spark.sketches.bloom import _spark_pair
+
+    base, lo = _spark_pair(h.astype(np.uint64, copy=False))
+    c = base[:, None] + np.arange(1, k + 1, dtype=np.int64)[None, :] * lo[:, None]
+    return (np.where(c < 0, ~c, c) % m).astype(np.uint64)
+
+
 @pytest.mark.parametrize("n,nh", [(5000, 3000), (100, 10)])
 def test_set_bits_matches_probe_matrix(n, nh):
-    from bloomjoin_spark.sketches.bloom import BloomSketch, _probe_matrix
+    from bloomjoin_spark.sketches.bloom import BloomSketch
 
     h = np.random.default_rng(7).integers(0, 2**63, nh, dtype=np.int64).view(
         np.uint64

@@ -3,7 +3,7 @@ reference has no scans; the Spark engine's inputs are tables/paths)."""
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, n_exchanges
 
 
 def test_read_table_path(spark):
@@ -20,15 +20,6 @@ def test_tables_dict(spark):
     t = tables(spark, SF_DIR)
     assert set(t) >= {"lineitem", "documents", "embeddings"}
     assert t["documents"].count() > 0
-
-
-def test_token_table_ref_synthesizes(spark):
-    from bloomjoin_spark.sources import token_table_ref
-
-    df = token_table_ref(spark, None, n_rows=500, vocab=50, max_tok=8,
-                         num_partitions=2)
-    assert df.count() == 500
-    assert df.columns == ["doc_id", "tokens", "n_tok", "source"]
 
 
 def test_read_table_catalog_name(spark, tmp_path):
@@ -64,7 +55,6 @@ def test_write_bucketed_join_has_no_exchange(spark):
 
     from bloomjoin_spark.sources import (
         co_located_join,
-        plan_exchange_count,
         read_table,
         write_bucketed,
     )
@@ -82,7 +72,7 @@ def test_write_bucketed_join_has_no_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = co_located_join(spark, "bj_cust_b", "bj_ord_b",
                                  on="c_custkey")
-        assert plan_exchange_count(joined) == 0
+        assert n_exchanges(joined) == 0
         # and the values are the plain-join values
         naive = cust.join(
             orders, cust.c_custkey == orders.o_custkey, "inner")
@@ -91,11 +81,11 @@ def test_write_bucketed_join_has_no_exchange(spark):
         unbucketed = cust.join(
             orders.withColumnRenamed("o_custkey", "c_custkey"),
             on="c_custkey")
-        assert plan_exchange_count(unbucketed) >= 2
+        assert n_exchanges(unbucketed) >= 2
         # aggregation on the bucket key also skips its exchange
         agg = spark.read.table("bj_ord_b").groupBy("c_custkey").agg(
             F.count("*").alias("n"))
-        assert plan_exchange_count(agg) == 0
+        assert n_exchanges(agg) == 0
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS bj_cust_b")

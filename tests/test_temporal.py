@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bloomjoin_spark.operators.temporal import asof_join, session_stats, sessionize
-from bloomjoin_spark.sources.layout import plan_exchange_count
+from conftest import n_exchanges
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -72,10 +72,10 @@ def test_session_stats_values(events):
 
 def test_sessionize_single_exchange(events):
     out = sessionize(events, "user_id", "ts", gap_sec=600)
-    assert plan_exchange_count(out) == 1
+    assert n_exchanges(out) == 1
     # the groupBy in session_stats reuses the window's hash partitioning
     st = session_stats(events, "user_id", "ts", gap_sec=600)
-    assert plan_exchange_count(st) == 1
+    assert n_exchanges(st) == 1
 
 
 def test_sessionize_rejects_bad_gap(events):
@@ -127,7 +127,7 @@ def test_asof_null_payload_fields_carry(spark, events):
 def test_asof_plan_no_join_one_exchange(spark, events):
     state = _state(spark, [(1, _ts(0), 1.0)])
     out = asof_join(events, state, on="user_id", right_cols=["v"])
-    assert plan_exchange_count(out) == 1
+    assert n_exchanges(out) == 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan  # union+window, never a join operator
 
